@@ -1,8 +1,9 @@
 """Stdlib reader for Spark's uncompressed JSON-lines event log.
 
-Groups ``SparkListenerJobStart`` / ``JobEnd`` / ``TaskEnd`` records by the job group the benchmark set, so each layer's
-jobs, task time, shuffle bytes, spill and GC come from Spark's own
-instrumentation rather than from timers in the benchmark.
+Groups ``SparkListenerJobStart`` / ``JobEnd`` / ``TaskEnd`` records by
+the job group the benchmark set, so each layer's jobs, task time,
+shuffle bytes, spill and GC come from Spark's own instrumentation rather
+than from timers in the benchmark.
 """
 
 from __future__ import annotations
@@ -114,17 +115,16 @@ def union_s(spans: list[tuple[int, int]]) -> float:
 
 
 def group_stats(
-    root: str, window_ms: tuple[int, int], alias: dict[str, str] | None = None
+    root: str, windows_ms: list[tuple[int, int]], alias: dict[str, str] | None = None
 ) -> tuple[dict[str, GroupStats], float]:
-    """Per-group totals for jobs submitted inside ``window_ms``, and the
-    union of all those jobs' spans in seconds. ``alias`` renames groups
-    (a streaming query's jobs carry its run id as their group)."""
+    """Per-group totals for jobs submitted inside any of ``windows_ms``,
+    and the union of all those jobs' spans in seconds. ``alias`` renames
+    groups (a streaming query's jobs carry its run id as their group)."""
     jobs, per_job_stage = read_jobs(root)
-    lo, hi = window_ms
     out: dict[str, GroupStats] = defaultdict(GroupStats)
     all_spans = []
     for job in jobs:
-        if not (lo <= job.start_ms <= hi) or job.end_ms is None:
+        if job.end_ms is None or not any(lo <= job.start_ms <= hi for lo, hi in windows_ms):
             continue
         all_spans.append((job.start_ms, job.end_ms))
         group = job.group or "(none)"

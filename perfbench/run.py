@@ -8,7 +8,8 @@ any timing starts. One client runs the workload as a closed loop on
 local[min(4, nproc)]:
 
 - the session plus the workload's own set-up is built three times and
-  ``setup_s`` is the median (the first build also launches the JVM);
+  ``setup_s`` is the median (the first build also launches the JVM, the
+  others stop the previous session first);
 - requests then run back to back until ``--seconds`` have passed, at
   least one; ``run_s`` is their median wall time. The first request of a
   run is the first engine work after set-up, so it includes JIT and
@@ -18,22 +19,29 @@ local[min(4, nproc)]:
   wrong output counts as failed.
 
 With ``--trace 0`` the last stdout line carries the end-to-end metrics.
-With ``--trace 1`` the session writes Spark's event log; after one cold
-request, untraced requests run for a third of ``--seconds`` and traced
-ones for the rest, every engine-layer call wrapped in a span and a job
-group (see ``spans.py``). The last line then carries the per-layer
-metrics, per traced request: ``<layer>.build_s`` (driver seconds inside
-the layer's outermost calls), ``<layer>.self_s`` (union of the spans of
-the jobs run under the layer's own group), ``<layer>.jobs``,
-``.task_s``, ``.shuffle_bytes`` and ``.spill_bytes`` from the event log,
-plus ``trace.overhead_s`` (traced minus untraced ``run_s``, both warm).
+With ``--trace 1`` the session writes Spark's event log and the last
+set-up is traced; after one cold request, untraced requests run for a
+third of ``--seconds`` and traced ones for the rest, every engine-layer
+call wrapped in a span and a job group (see ``spans.py``). The last line
+then carries the per-layer metrics, per traced request and read from the
+jobs submitted inside the requests' own windows (reset and check work
+excluded): ``<layer>.build_s`` (driver seconds inside the layer's
+outermost calls), ``<layer>.self_s`` (union of the spans of the jobs run
+under the layer's own group), ``<layer>.jobs``, ``.task_s``,
+``.shuffle_bytes`` and ``.spill_bytes`` from the event log,
+``driver.gap_s`` (request time minus the union of its jobs' spans) and
+``trace.overhead_s`` (traced minus untraced ``run_s``, both warm). The
+``setup.*`` metrics cover the traced set-up: its wall time, the session
+layer's driver seconds, and its jobs, task time and driver gap.
 
 The line before the last is a report: host stamp (nproc, memory, Spark
 version, commit, cores used), loadavg around every request with a count
 of requests where it exceeded the cores, ``peak_rss_mb`` (driver JVM
 plus this process), ``failed_frac`` and the workload-specific metrics
-(``q1_s`` … ``q5_s``, ``stream_rows_per_s``, ``trigger_s_p50``, and
-``trigger_s_p90`` once at least 100 triggers ran).
+(``q1_s`` … ``q5_s``, ``stream_rows_per_s``, ``drain_s``, and for
+``stream_scoring`` ``trigger_s_p50``; ``graph_text``'s ``cc_s``,
+``core_s`` and ``rouge_s``). ``phases`` splits
+the run's wall time: start-up, untimed checks, stop.
 """
 
 from __future__ import annotations
@@ -168,21 +176,29 @@ class Loop:
         self.errors: list[str] = []
         self.loadavg: list[tuple[float, float]] = []
         self.referenced = False
+        self.check_s = 0.0  # untimed reference and check work
+        # (start_ms, end_ms, seconds) of every timed request, so the event
+        # log can be read for the requests alone, without reset and check
+        self.windows: list[tuple[int, int, float]] = []
 
     def request(self):
         self.wl.reset(self.spark)
         before = os.getloadavg()[0]
         self.attempted += 1
+        start_ms = time.time() * 1000
         t0 = time.perf_counter()
         try:
             result = self.wl.run(self.spark)
         except Exception as exc:  # a failed request is counted, not fatal
-            dt = time.perf_counter() - t0
             self.failed += 1
             self.errors.append(f"{type(exc).__name__}: {exc}"[:300])
-            return dt, None
+            result = None
         dt = time.perf_counter() - t0
+        self.windows.append((int(start_ms), int(time.time() * 1000) + 1, dt))
+        if result is None:
+            return dt, None
         self.loadavg.append((before, os.getloadavg()[0]))
+        t1 = time.perf_counter()
         try:
             if not self.referenced:
                 # after the first request, so the timed request is the
@@ -192,6 +208,7 @@ class Loop:
             errs = self.wl.check(self.spark, result)
         except Exception as exc:
             errs = [f"check raised {type(exc).__name__}: {exc}"[:300]]
+        self.check_s += time.perf_counter() - t1
         if errs:
             self.failed += 1
             self.errors.extend(errs)
@@ -209,12 +226,16 @@ class Loop:
                 return times, results
 
 
-def layer_metrics(tracer, eventlog: str, window_ms, n: int, wall_s: float) -> dict:
+def layer_metrics(tracer, eventlog: str, windows: list[tuple[int, int, float]]) -> dict:
+    """Per-layer metrics per traced request, from the jobs submitted
+    inside the requests' own windows."""
     from eventlog import group_stats, union_s
     from spans import LAYERS
     from workloads import late_rows
 
-    groups, busy_s = group_stats(eventlog, window_ms, tracer.stream_groups)
+    n = len(windows)
+    wall_s = sum(dt for _, _, dt in windows)
+    groups, busy_s = group_stats(eventlog, [w[:2] for w in windows], tracer.stream_groups)
     build = tracer.layer_times()
     out = {}
     for layer in LAYERS:
@@ -244,6 +265,21 @@ def layer_metrics(tracer, eventlog: str, window_ms, n: int, wall_s: float) -> di
     return out
 
 
+def setup_metrics(tracer, eventlog: str, window: tuple[int, int, float]) -> dict:
+    """The traced set-up: the session layer's driver seconds, and the jobs,
+    task time and driver gap of everything it ran."""
+    from eventlog import group_stats
+
+    groups, busy_s = group_stats(eventlog, [window[:2]])
+    return {
+        "setup.wall_s": (window[2], "s"),
+        "setup.session.build_s": (tracer.layer_times().get("session", 0.0), "s"),
+        "setup.jobs": (sum(g.jobs for g in groups.values()), "count"),
+        "setup.task_s": (sum(g.task_s for g in groups.values()), "s"),
+        "setup.driver.gap_s": (window[2] - busy_s, "s"),
+    }
+
+
 def main(argv=None) -> int:
     args = parse_args(argv)
     sys.path[:0] = [HERE, ROOT]
@@ -254,7 +290,7 @@ def main(argv=None) -> int:
         print(f"perfbench: the engine is not importable from {ROOT}: {exc}", file=sys.stderr)
         return 2
     from inputs import ensure_inputs
-    from workloads import WORKLOADS
+    from workloads import WORKLOADS, fresh_dir
 
     if args.workload not in WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; one of {sorted(WORKLOADS)}",
@@ -275,26 +311,44 @@ def main(argv=None) -> int:
     t0 = time.perf_counter()
     inputs = ensure_inputs(os.path.join(cache, "inputs"), args.workload, args.seed)
     gen_s = time.perf_counter() - t0
-    eventlog = _fresh_dir(os.path.join(work, "eventlog")) if args.trace else None
+    eventlog = fresh_dir(os.path.join(work, "eventlog")) if args.trace else None
 
     wl = WORKLOADS[args.workload](inputs, work)
     spark = None
     setup_times = []
+    setup_tracer = None
     phases = {"start_s": time.perf_counter() - T_START}
     try:
-        for _ in range(SETUPS):
+        for i in range(SETUPS):
+            if args.trace and i == SETUPS - 1:
+                # the last set-up is traced: the JVM is up, as in the
+                # set-ups the median of setup_s comes from
+                from spans import Tracer
+
+                setup_tracer = Tracer(fresh_dir(os.path.join(work, "trace-setup")))
+                setup_tracer.install()
+            start_ms = time.time() * 1000
             t0 = time.perf_counter()
-            if spark is not None:
-                spark.stop()
-            spark = build_session(cores, eventlog)
-            wl.prepare(spark)
+            try:
+                # stopping the previous session is timed too: without it
+                # fraud's and headline's set-up is 0.1-0.25 s and its
+                # median moves by up to half between runs
+                if spark is not None:
+                    spark.stop()
+                spark = build_session(cores, eventlog)
+                wl.prepare(spark)
+            finally:
+                if setup_tracer is not None:
+                    setup_tracer.uninstall()
             setup_times.append(time.perf_counter() - t0)
+            setup_window = (int(start_ms), int(time.time() * 1000) + 1, setup_times[-1])
         loop = Loop(wl, spark)
 
         report = {"workload": args.workload, "seed": args.seed, "inputs_s": gen_s,
                   "host": host_stamp(cores), "sizes": wl.sizes}
         if args.trace:
-            metrics = traced_run(args, wl, spark, loop, eventlog, work, report)
+            metrics = traced_run(args, spark, loop, eventlog, work, report)
+            metrics.update(setup_metrics(setup_tracer, eventlog, setup_window))
         else:
             times, results = loop.run_for(args.seconds)
             run_s = statistics.median(times) if times else float("nan")
@@ -309,6 +363,7 @@ def main(argv=None) -> int:
         # between runs to bound; it is reported, not compared
         report["peak_rss_mb"] = peak_rss_mb()
         report["setup_s_samples"] = setup_times
+        phases["check_s"] = loop.check_s
         report["phases"] = phases
         report["failed_frac"] = loop.failed / loop.attempted
         report["errors"] = loop.errors[:10]
@@ -332,28 +387,25 @@ def main(argv=None) -> int:
     return 0
 
 
-def traced_run(args, wl, spark, loop, eventlog, work, report) -> dict:
+def traced_run(args, spark, loop, eventlog, work, report) -> dict:
     """Per-layer metrics from warm requests: one cold request first, then
     untraced and traced requests, so ``trace.overhead_s`` compares like
     with like."""
     from spans import Tracer
+    from workloads import fresh_dir
 
     loop.request()
     untraced, _ = loop.run_for(args.seconds / 3)
-    tracer = Tracer(_fresh_dir(os.path.join(work, "trace")))
+    tracer = Tracer(fresh_dir(os.path.join(work, "trace")))
     tracer.install()
     try:
-        start_ms = int(time.time() * 1000)
-        t0 = time.perf_counter()
-        before = loop.attempted
+        first = len(loop.windows)
         traced, _ = loop.run_for(args.seconds * 2 / 3)
-        wall_s = time.perf_counter() - t0
-        end_ms = int(time.time() * 1000)
     finally:
         tracer.uninstall()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    n = loop.attempted - before  # traced requests, failed ones included
-    metrics = layer_metrics(tracer, eventlog, (start_ms, end_ms), n, wall_s)
+    # traced requests, failed ones included
+    metrics = layer_metrics(tracer, eventlog, loop.windows[first:])
     overhead = statistics.median(traced) - statistics.median(untraced) if traced and untraced else 0.0
     metrics["trace.overhead_s"] = (overhead, "s")
     report["untraced_run_s_samples"] = untraced
@@ -363,12 +415,6 @@ def traced_run(args, wl, spark, loop, eventlog, work, report) -> dict:
 
 def _named(metrics: dict) -> dict:
     return {k: {"value": v, "unit": unit} for k, (v, unit) in metrics.items()}
-
-
-def _fresh_dir(path: str) -> str:
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    return path
 
 
 if __name__ == "__main__":
