@@ -87,7 +87,7 @@ def ml_prep_pipeline(spark, sf_dir: str):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from fraud_detection_project_spark.queries import QUERIES
-    from fraud_detection_project_spark.session import get_spark
+    from fraud_detection_project_spark.session import get_spark, host_stamp
 
     spark = get_spark("bench")
     workloads = {
@@ -155,13 +155,17 @@ def main() -> None:
         "first_run_queries": first_run,
         "first_run_total": round(sum(first_run.values()), 3),
         "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
+        # local[cpus] this run used: tells "honoured but bound by fixed
+        # cost" apart from "ignored" when SPARK_GRAFT_CPUS changes
+        "cpus": host_stamp()["cpus"],
         # host-contention context (VERDICT r6 item 7): this box is a
         # co-tenant VM with a documented ±50% timing band — 1/5/15-min
         # load averages let a reader judge whether a swing is noise
         "loadavg": [round(x, 2) for x in os.getloadavg()],
     }
     # Attach the measured 10x scaling decade when tools/bench_scale.py
-    # has produced one (SCALING.md is the human-readable twin).
+    # has produced one stamped with this run's host and cores
+    # (SCALING.md is the human-readable twin).
     # BENCH-artifact self-sufficiency (VERDICT r11 item 3): the driver
     # keeps only the TAIL (~2000 chars) of stdout, so embedding the
     # full per-cell decade table pushed the warm headline out of
@@ -172,28 +176,34 @@ def main() -> None:
     # .scale_data/scaling.json + SCALING.md).
     scaling = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            ".scale_data", "scaling.json")
+    decade = None
     if os.path.exists(scaling):
         try:
             with open(scaling) as f:
                 decade = json.load(f)
-            exps = decade.get("exponents", {})
-            out["scaling_exponents"] = exps
-            if exps:
-                out["scaling_max_exponent"] = max(exps.values())
-            # the three-cell overhead-corrected fit (round 13): the max
-            # CORRECTED exponent is the headline growth-law number; the
-            # per-workload dict stays in scaling.json/SCALING.md (the
-            # raw per-workload exponents already fill the size budget)
-            corr = {
-                k: v
-                for k, v in decade.get("exponents_corrected", {}).items()
-                if v is not None
-            }
-            if corr:
-                out["scaling_max_exponent_corrected"] = max(corr.values())
-            print(json.dumps({"scaling_decade": decade}), file=sys.stderr)
         except (OSError, ValueError):
             pass
+    if decade is not None and decade.get("stamp") != host_stamp():
+        # a decade measured on other cores or another machine says
+        # nothing about this run
+        out["scaling_note"] = "scaling.json is from another host or core count"
+    elif decade is not None:
+        exps = decade.get("exponents", {})
+        out["scaling_exponents"] = exps
+        if exps:
+            out["scaling_max_exponent"] = max(exps.values())
+        # the three-cell overhead-corrected fit (round 13): the max
+        # CORRECTED exponent is the headline growth-law number; the
+        # per-workload dict stays in scaling.json/SCALING.md (the
+        # raw per-workload exponents already fill the size budget)
+        corr = {
+            k: v
+            for k, v in decade.get("exponents_corrected", {}).items()
+            if v is not None
+        }
+        if corr:
+            out["scaling_max_exponent_corrected"] = max(corr.values())
+        print(json.dumps({"scaling_decade": decade}), file=sys.stderr)
     line = json.dumps(out)
     # hard guarantee: the one stdout line fits the driver's tail window
     if len(line) > 1900:

@@ -310,39 +310,19 @@ def smote(
     return df.unionByName(synth_rows.select(df.columns))
 
 
-# feature widths up to this stay a JVM column expression (codegen, no
-# Python round-trip); wider vectors switch to the Arrow gemm kernel —
-# O(dim) expression nodes bloat codegen at embedding widths (the same
-# trade measured in operators/similarity.py:hyperplane_bucket).
-_PROJ_EXPR_MAX_DIM = 64
-
-
 def _projection(df: DataFrame, features_col: str, dim: int, seed: int):
     """Seeded unit-Gaussian 1-D projection of ``features_col``.
 
-    dim ≤ 64: unrolled JVM expression (whole-stage codegen).
-    dim > 64: Arrow-batched pandas_udf — one BLAS matvec per batch,
-    expression tree stays O(1) regardless of width.
+    One JVM expression for every width: ``aggregate(zip_with(features,
+    plane, x*y), 0.0, acc+v)`` against the plane as an array literal. It
+    stays O(1) plan nodes however wide the vector is, and it sums in
+    index order, so it equals a sequential left fold ``acc += x*r``.
     """
     rng = np.random.RandomState(seed)
     r = rng.normal(size=dim)
     r = r / np.linalg.norm(r)
-    if dim <= _PROJ_EXPR_MAX_DIM:
-        return sum(
-            F.col(features_col).getItem(i).cast("double") * float(r[i])
-            for i in range(dim)
-        )
-
-    from pyspark.sql.functions import pandas_udf
-
-    def proj(vs: pd.Series) -> pd.Series:
-        res = np.full(len(vs), np.nan)
-        valid = [i for i, v in enumerate(vs) if v is not None]
-        if valid:
-            m = np.asarray([list(vs.iloc[i]) for i in valid], dtype=np.float64)
-            res[valid] = m @ r
-        return pd.Series(res)
-
-    return pandas_udf(proj, returnType="double")(
-        F.col(features_col).cast("array<double>")
+    plane = F.lit([float(x) for x in r])
+    products = F.zip_with(
+        F.col(features_col).cast("array<double>"), plane, lambda x, y: x * y
     )
+    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)

@@ -4,11 +4,12 @@ Reference: ``ColumnTransformer([('num', StandardScaler(), num),
 ('cat', OneHotEncoder(handle_unknown='ignore'), cat)])`` wrapped in a
 Pipeline, fit on train only (``transform_data.py:84-87, 125-127``).
 
-Spark shape: ``StringIndexer(handleInvalid='keep')`` + ``OneHotEncoder
-(handleInvalid='keep', dropLast=False)`` per categorical, numeric
-``VectorAssembler`` + ``StandardScaler``, final assembler → one
-``features`` vector column. ``fit`` is the only action (two
-tree-aggregates over train: indexer frequency scan + scaler moments).
+Spark shape: numeric ``VectorAssembler`` + ``StandardScaler``, then ONE
+multi-column ``StringIndexer(handleInvalid='keep')`` and ONE multi-column
+``OneHotEncoder(handleInvalid='keep', dropLast=False)`` covering every
+categorical, final assembler → one ``features`` vector column. ``fit``
+is the only action: the scaler's moments plus a single value-count pass
+for all categorical columns, not one pass per column.
 
 Parity note (SURVEY hard-list #3): sklearn standardizes with population
 std (ddof=0), MLlib with sample std (ddof=1). :func:`standardize` (the
@@ -65,19 +66,25 @@ def build_feature_pipeline(
         )
         assembled_inputs.append("__num_scaled")
 
-    for c in cat_cols:
+    if cat_cols:
+        # one multi-column indexer and one multi-column encoder: the
+        # indexer's fit counts every column's values in a single pass
+        idx_cols = [f"__{c}_idx" for c in cat_cols]
+        ohe_cols = [f"__{c}_ohe" for c in cat_cols]
         stages.append(
-            StringIndexer(inputCol=c, outputCol=f"__{c}_idx", handleInvalid="keep")
+            StringIndexer(
+                inputCols=list(cat_cols), outputCols=idx_cols, handleInvalid="keep"
+            )
         )
         stages.append(
             OneHotEncoder(
-                inputCol=f"__{c}_idx",
-                outputCol=f"__{c}_ohe",
+                inputCols=idx_cols,
+                outputCols=ohe_cols,
                 dropLast=False,
                 handleInvalid="keep",
             )
         )
-        assembled_inputs.append(f"__{c}_ohe")
+        assembled_inputs.extend(ohe_cols)
 
     stages.append(VectorAssembler(inputCols=assembled_inputs, outputCol=output_col))
     return Pipeline(stages=stages)
@@ -169,6 +176,12 @@ class NativeFeaturePrep:
     column arithmetic finished by ``array_to_vector`` (JVM, no Python).
     ``tests/test_ml.py`` asserts slot-for-slot equality with the MLlib
     pipeline's output vectors.
+
+    ``Processor`` keeps the MLlib pipeline: on the fraud job (3k rows,
+    ~180 countries) this twin measured slower, 47.0 s against 29.0 s
+    for one cold request on 4 cores, because the country column takes
+    the broadcast-join path and the transform builds a 240-slot
+    ``when`` array.
 
     Categorical values are indexed via their STRING form — the same
     cast MLlib's ``StringIndexer`` applies — so the melted vocab frame

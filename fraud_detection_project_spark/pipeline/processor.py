@@ -11,10 +11,13 @@ and ``transform_data_for_ml`` (``src/preprocessing/transform_data.py:
 - the clean ``preprocess_dataset`` shape (``processor.py:56-85``, the
   reference's dead-but-correct path) is the one code path.
 
-Spark shape: each dataset's clean→join→feature chain is ONE lazy plan;
-the first action is the ML ``Pipeline.fit`` on the train split (scaler
-stats = one tree-aggregate). Outputs stay DataFrames — at 100 TB the
-"return value" is a handle you write to Parquet, never a driver array.
+Spark shape: each dataset's clean→join→feature chain is ONE lazy plan,
+projected to the label, feature and id columns and persisted once. The
+train and test splits both read that cache, so the plan runs once per
+dataset: ``Pipeline.fit`` (scaler moments + one value-count pass for
+all categoricals), SMOTE's actions and the test write reuse it. Outputs
+stay DataFrames — at 100 TB the "return value" is a handle you write to
+Parquet, never a driver array.
 """
 
 from __future__ import annotations
@@ -92,22 +95,23 @@ class Processor:
 
         num_cols = [c for c in num_cols if c in df.columns]
         cat_cols = [c for c in cat_cols if c in df.columns]
+        has_id = id_col is not None and id_col in df.columns
 
-        if id_col is not None and id_col in df.columns:
-            tagged = id_hash_split(df, id_col, 1.0 - test_size, salt=seed)
+        # One persisted frame feeds both splits: Pipeline.fit, SMOTE's
+        # actions and the test write all read the cache instead of
+        # re-running the upstream clean→join→window plan (SURVEY.md §4
+        # 'caching': explicit cache only at reuse points; MEMORY_AND_DISK
+        # spills rather than OOMs at scale).
+        from pyspark import StorageLevel
+
+        cols = [label_col, *num_cols, *cat_cols] + ([id_col] if has_id else [])
+        base = df.select(*dict.fromkeys(cols)).persist(StorageLevel.MEMORY_AND_DISK)
+        if has_id:
+            tagged = id_hash_split(base, id_col, 1.0 - test_size, salt=seed)
             train = tagged.filter(F.col("split") == "train").drop("split")
             test = tagged.filter(F.col("split") == "test").drop("split")
         else:
-            train, test = stratified_split(df, label_col, 1.0 - test_size, seed=seed)
-
-        # Pipeline.fit makes one pass per StringIndexer plus the scaler's
-        # tree-aggregate — without this persist every pass re-runs the
-        # upstream clean→join→window plan (SURVEY.md §4 'caching':
-        # explicit cache only at reuse points; MEMORY_AND_DISK spills
-        # rather than OOMs at scale).
-        from pyspark import StorageLevel
-
-        train = train.persist(StorageLevel.MEMORY_AND_DISK)
+            train, test = stratified_split(base, label_col, 1.0 - test_size, seed=seed)
 
         pipe = build_feature_pipeline(num_cols, cat_cols)
         model = pipe.fit(train)  # fit statistics from train ONLY (M5)
@@ -115,7 +119,7 @@ class Processor:
         test_proc = model.transform(test)
         names = feature_names_out(model, train)
 
-        keep = [label_col, "features"] + ([id_col] if id_col and id_col in df.columns else [])
+        keep = [label_col, "features"] + ([id_col] if has_id else [])
         train_proc = train_proc.select(*keep)
         test_proc = test_proc.select(*keep)
 
@@ -123,7 +127,7 @@ class Processor:
             from pyspark.ml.functions import vector_to_array
 
             arr = train_proc.withColumn("__feat_arr", vector_to_array("features"))
-            if id_col is None or id_col not in df.columns:
+            if not has_id:
                 arr = arr.withColumn("__sid", F.monotonically_increasing_id())
                 sid = "__sid"
             else:

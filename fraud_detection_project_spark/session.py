@@ -13,6 +13,7 @@ foreign SparkSession (e.g. the verification driver's).
 from __future__ import annotations
 
 import os
+import platform
 
 from pyspark.sql import SparkSession
 
@@ -62,6 +63,13 @@ RUNTIME_CONFS: dict[str, str] = {
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def host_stamp() -> dict:
+    """The cores Spark runs on and the machine it runs on: a timing
+    artifact is comparable with this process's timings only when its
+    stamp is equal."""
+    return {"cpus": default_parallelism(), "host": platform.node()}
 
 
 # Sessions already configured by ensure_runtime_confs. Every query build

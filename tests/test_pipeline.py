@@ -106,6 +106,17 @@ def config_path(data_dir, tmp_path_factory):
     return str(p)
 
 
+def _clean_datasets(spark, config_path):
+    from fraud_detection_project_spark.catalog import load_csv_datasets
+    from fraud_detection_project_spark.config import load_yaml_config
+    from fraud_detection_project_spark.pipeline.processor import Processor
+
+    proc = Processor(spark, load_yaml_config(config_path))
+    return proc.clean_datasets(
+        load_csv_datasets(spark, dict(proc.config["data_paths"]))
+    )
+
+
 def test_run_pipeline_end_to_end(spark, config_path):
     from fraud_detection_project_spark.pipeline.processor import run_pipeline
 
@@ -128,16 +139,9 @@ def test_run_pipeline_end_to_end(spark, config_path):
 def test_geolocate_unknown_fallback(spark, config_path):
     """Rows whose IP falls in the unmapped gap (or is null) get
     country='Unknown' (P5, transform_data.py:38-43)."""
-    from fraud_detection_project_spark.config import load_yaml_config
-    from fraud_detection_project_spark.pipeline.processor import Processor
-
-    proc = Processor(spark, load_yaml_config(config_path))
-    raw = __import__(
-        "fraud_detection_project_spark.catalog", fromlist=["load_csv_datasets"]
-    ).load_csv_datasets(spark, dict(proc.config["data_paths"]))
-    clean = proc.clean_datasets(raw)
     from fraud_detection_project_spark.operators.joins import geolocate
 
+    clean = _clean_datasets(spark, config_path)
     merged = geolocate(clean["fraud_data"], clean["ip_to_country"])
     rows = merged.select("ip_address_int", "country").collect()
     for r in rows:
@@ -181,3 +185,87 @@ def test_eda_surface(spark, config_path):
     assert "hist_purchase_value" in panels
     total = panels["hist_purchase_value"].agg(F.sum("cnt")).first()[0]
     assert total == 400
+
+
+def test_feature_pipeline_one_indexer_matches_per_column(spark, config_path):
+    """build_feature_pipeline fits ONE multi-column StringIndexerModel and
+    ONE OneHotEncoderModel, and its vectors and feature names equal those
+    of one indexer/encoder pair per categorical column."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import (
+        OneHotEncoder,
+        OneHotEncoderModel,
+        StandardScaler,
+        StringIndexer,
+        StringIndexerModel,
+        VectorAssembler,
+    )
+
+    from fraud_detection_project_spark.config import load_yaml_config
+    from fraud_detection_project_spark.ml.prep import (
+        build_feature_pipeline,
+        feature_names_out,
+    )
+    from fraud_detection_project_spark.operators.joins import geolocate
+    from fraud_detection_project_spark.pipeline.features import engineer_fraud_features
+
+    feat = load_yaml_config(load_yaml_config(config_path)["feature_config_path"])
+    num, cat = feat["numerical"], feat["categorical"]
+    clean = _clean_datasets(spark, config_path)
+    df = (
+        engineer_fraud_features(geolocate(clean["fraud_data"], clean["ip_to_country"]))
+        .withColumn("__rid", F.monotonically_increasing_id())
+        .persist()
+    )
+    try:
+        model = build_feature_pipeline(num, cat).fit(df)
+        kinds = [type(s) for s in model.stages]
+        assert kinds.count(StringIndexerModel) == 1
+        assert kinds.count(OneHotEncoderModel) == 1
+
+        stages = [
+            VectorAssembler(inputCols=num, outputCol="__num_vec", handleInvalid="keep"),
+            StandardScaler(inputCol="__num_vec", outputCol="__num_scaled",
+                           withMean=True, withStd=True),
+        ]
+        for c in cat:
+            stages += [
+                StringIndexer(inputCol=c, outputCol=f"__{c}_idx", handleInvalid="keep"),
+                OneHotEncoder(inputCol=f"__{c}_idx", outputCol=f"__{c}_ohe",
+                              dropLast=False, handleInvalid="keep"),
+            ]
+        stages.append(
+            VectorAssembler(
+                inputCols=["__num_scaled"] + [f"__{c}_ohe" for c in cat],
+                outputCol="features",
+            )
+        )
+        ref = Pipeline(stages=stages).fit(df)
+
+        assert feature_names_out(model, df) == feature_names_out(ref, df)
+
+        def vectors(m):
+            rows = m.transform(df).select("__rid", "features").collect()
+            return {r["__rid"]: r["features"].toArray().tolist() for r in rows}
+
+        got, want = vectors(model), vectors(ref)
+        assert len(got) == df.count() > 0
+        assert got == want
+    finally:
+        df.unpersist()
+
+
+def test_split_shares_one_persisted_frame(spark, config_path):
+    """Train and test derive from one persisted frame on both split paths
+    (fraud: id_hash_split, creditcard: stratified_split), so writing the
+    test split reads the cache instead of re-running the upstream plan."""
+    from fraud_detection_project_spark.config import load_yaml_config
+    from fraud_detection_project_spark.pipeline.processor import Processor
+
+    cfg = load_yaml_config(config_path)
+    cfg["imbalance_strategy"] = "none"
+    bundles = Processor(spark, cfg).run_pipeline()
+    for name, b in bundles.items():
+        for part in ("train", "test"):
+            plan = getattr(b, part)._jdf.queryExecution().optimizedPlan().toString()
+            assert "InMemoryRelation" in plan, (name, part)

@@ -329,6 +329,14 @@ class TestDecadeMergePure:
         new = merge_payload(old, fresh, "abc")
         assert new["sf0.1"]["q_new"] == 1.5 and new["sf1"]["q_new"] == 4.5
 
+    def test_host_stamp_mismatch_discards_old(self):
+        from bench_scale import merge_payload
+
+        a = dict(self._payload(0.1, 0.1), stamp={"cpus": 32, "host": "h"})
+        b = dict(self._payload(2.0, 4.0), stamp={"cpus": 4, "host": "h"})
+        new = merge_payload(merge_payload(None, a, "abc"), b, "abc")
+        assert new["sf0.1"]["q"] == 2.0 and new["runs"] == 1
+
     def test_unknown_fingerprint_never_merges(self):
         from bench_scale import merge_payload
 

@@ -346,13 +346,15 @@ def merge_payload(old: dict | None, new: dict, fingerprint: str) -> dict:
     sf1 in run 3). Min ACROSS invocations is the same estimator with
     more repeats (best-of-3·N), so repeated runs monotonically refine
     the published table instead of re-rolling the noise. Guard: only
-    payloads carrying the identical code fingerprint merge — .scale_data
-    is gitignored (per-container), so stale-code carryover would need a
-    same-session code change, which flips the fingerprint."""
+    payloads carrying the identical code fingerprint and host stamp
+    merge — .scale_data is gitignored (per-container), so stale-code
+    carryover would need a same-session code change, which flips the
+    fingerprint."""
     if (
         not old
         or fingerprint == "unknown"  # unidentifiable code never merges
         or old.get("fingerprint") != fingerprint
+        or old.get("stamp") != new.get("stamp")  # other host or cores
     ):
         merged = dict(new)
         merged["runs"] = 1
@@ -422,7 +424,7 @@ def three_cell_fit(
 
 
 def main() -> None:
-    from fraud_detection_project_spark.session import get_spark
+    from fraud_detection_project_spark.session import get_spark, host_stamp
 
     spark = get_spark("bench-scale")
     if "--rebuild" in sys.argv and os.path.isdir(DST):
@@ -446,6 +448,7 @@ def main() -> None:
         "sf1": t_10x,
         "repeats": 3,
         "measured": time.strftime("%Y-%m-%d"),
+        "stamp": host_stamp(),
     }
     json_path = os.path.join(ROOT, ".scale_data", "scaling.json")
     old_payload = None
