@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 Implementation lives in ``fraud_detection_project_spark``; this module is
 a thin adapter.
@@ -36,16 +36,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so the driver's 50-entry CORRECTNESS window covers queries
-    that have never had a driver row first (see
-    ``queries.DRIVER_PRIORITY``), then high-value canaries, then the
-    rest in registration order.
-    """
-    return _q.driver_ordered(dict(_q.QUERIES))
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return dict(_q.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query (omitted ⇒ rows-only)."""
-    return _q.driver_ordered(dict(_q.ORACLE_SQL))
+    """DuckDB-runnable ANSI SQL oracle per query (omitted ⇒ rows-only),
+    in registration order."""
+    return dict(_q.ORACLE_SQL)

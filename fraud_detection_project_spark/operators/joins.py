@@ -64,42 +64,27 @@ def geolocate(
     upper: str = "upper_bound_ip_address_int",
     country: str = "country",
     unknown: str = "Unknown",
-    strategy: str = "broadcast",
 ) -> DataFrame:
     """The reference's ``merge_geolocation_data`` (``transform_data.py:25-47``):
     interval join against the IP→country dim; unmatched (or null-IP) rows
     get country='Unknown' (the P5 conditional projection, folded into the
     join + coalesce instead of a row-wise apply).
 
-    ``strategy``: 'broadcast' (default — right for any dim under the
-    broadcast threshold, e.g. every public IP→country table) streams the
-    fact side through a BroadcastNestedLoopJoin; 'binned' switches to
-    :func:`binned_range_join` (hash equi-join on interval bins) for dims
-    too large to broadcast. Identical semantics either way.
+    The fact side streams through a BroadcastNestedLoopJoin, which is
+    right for any dim under the broadcast threshold (e.g. every public
+    IP→country table). For dims too large to broadcast, call
+    :func:`binned_range_join` directly; its semantics are identical.
     """
-    if strategy == "broadcast":
-        out = range_join(
-            transactions,
-            ip_dim,
-            point=ip_col,
-            lower=lower,
-            upper=upper,
-            payload=[country],
-            how="left",
-            broadcast_dim=True,
-        )
-    elif strategy == "binned":
-        out = binned_range_join(
-            transactions,
-            ip_dim,
-            point=ip_col,
-            lower=lower,
-            upper=upper,
-            payload=[country],
-            how="left",
-        )
-    else:
-        raise ValueError("strategy must be 'broadcast' or 'binned'")
+    out = range_join(
+        transactions,
+        ip_dim,
+        point=ip_col,
+        lower=lower,
+        upper=upper,
+        payload=[country],
+        how="left",
+        broadcast_dim=True,
+    )
     return out.withColumn(country, F.coalesce(F.col(country), F.lit(unknown)))
 
 

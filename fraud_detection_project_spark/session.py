@@ -31,30 +31,11 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for every pandas_udf / applyInPandas / toPandas crossing.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Join strategy (round 14, guide §3.1/§5; ADVICE r13): sort-merge
-    # everywhere by default — spillable by construction. The history:
-    # round 13 set the static preferSortMergeJoin=false (SHJ from
-    # ESTIMATED stats) plus the AQE maxShuffledHashJoinLocalMapThreshold
-    # =64 MB rewrite (SHJ from MEASURED post-shuffle sizes). This
-    # round's interleaved A/Bs showed the static flag buys nothing
-    # (q21 4.21 vs 4.23 s, q7 4.33 vs 4.24 s at ~sf1, best-of-7) and
-    # it was dropped; then the ~sf10 stress decade produced the first
-    # measured FATALITY from the remaining AQE rewrite: a star-round
-    # join's LongHashedRelation build — which cannot spill — needed
-    # 128 MB with 88 MB left in the pool ("Can't acquire 134217728
-    # bytes memory to build hash relation") because a partition that
-    # MEASURES under 64 MB builds a ~2x-larger hash table, and 32
-    # concurrent build tasks share one executor pool. Measured upside:
-    # none (parity within noise at every bench scale). Measured
-    # downside: a hard OOM class SMJ's spill path does not have. So
-    # the rewrite is OFF by default; deployments with fat per-core
-    # memory can re-enable via SPARK_GRAFT_SHJ_THRESHOLD (bytes) —
-    # result-equivalence under both settings is pinned by
-    # tests/test_opt_r14.py.
+    # Join strategy: sort-merge everywhere, with AQE's shuffled-hash-join
+    # rewrite off. An SHJ hash relation cannot spill; at ~sf10 one
+    # OOMed building its table, and no gain from SHJ was measured.
     "spark.sql.join.preferSortMergeJoin": "true",
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-        "SPARK_GRAFT_SHJ_THRESHOLD", "0"
-    ),
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0",
     # reference semantics rely on to_timestamp → NULL on bad input
     # (SURVEY.md §2 F1); ANSI mode would raise instead.
     "spark.sql.ansi.enabled": "false",

@@ -388,7 +388,10 @@ class TestApproxSketches:
 
 def test_geolocate_strategies_equivalent(spark):
     from fraud_detection_project_spark.catalog import load_table
-    from fraud_detection_project_spark.operators.joins import geolocate
+    from fraud_detection_project_spark.operators.joins import (
+        binned_range_join,
+        geolocate,
+    )
     from pyspark.sql import functions as F
 
     ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
@@ -403,8 +406,15 @@ def test_geolocate_strategies_equivalent(spark):
             F.col("p_brand").alias("country"),
         )
     )
-    a = geolocate(ev, dim, strategy="broadcast").select("event_id", "country")
-    b = geolocate(ev, dim, strategy="binned").select("event_id", "country")
+    a = geolocate(ev, dim).select("event_id", "country")
+    b = binned_range_join(
+        ev,
+        dim,
+        point="ip_address_int",
+        lower="lower_bound_ip_address_int",
+        upper="upper_bound_ip_address_int",
+        payload=["country"],
+    ).select("event_id", F.coalesce("country", F.lit("Unknown")).alias("country"))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 

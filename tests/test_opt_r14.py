@@ -274,8 +274,8 @@ class TestHashedNgramKernel:
     def test_shj_threshold_off_is_result_identical(self, spark):
         """VERDICT r13 item 8: the AQE SMJ→SHJ rewrite threshold is a
         strategy-only conf — running a representative join query with
-        SPARK_GRAFT_SHJ_THRESHOLD=0 (rewrite disabled, pure sort-merge)
-        must produce identical results."""
+        the threshold at 0 (rewrite disabled, pure sort-merge) must
+        produce identical results."""
         from fraud_detection_project_spark.queries import QUERIES
 
         conf = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"

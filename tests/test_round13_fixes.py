@@ -17,10 +17,6 @@
   names-list path now requires/synthesizes explicit types so an empty
   computed literal (e.g. a smote offsets grid on a degenerate input)
   fails with a clear contract error instead of an inference crash.
-- ``_driver_coverage_rounds`` warns when it finds ZERO driver
-  artifacts (ADVICE r12 low): an installed/vendored copy whose repo
-  root holds no CORRECTNESS_r*.json would silently degrade the
-  stale-first fill to registration order.
 """
 
 from __future__ import annotations
@@ -410,41 +406,3 @@ class TestBoundedLiteralEmptyData:
 
         df = bounded_literal(spark, [(1, 2)], ["a", "b"], "tiny grid")
         assert df.columns == ["a", "b"] and df.count() == 1
-
-
-class TestCoverageRoundsWarnsWithoutArtifacts:
-    def test_zero_artifacts_warns(self, tmp_path, monkeypatch):
-        """ADVICE r12: with no CORRECTNESS_r*.json on disk the
-        stale-first fill silently degraded to registration order —
-        now it warns so a mislocated repo root is visible."""
-        import warnings
-
-        from fraud_detection_project_spark import queries as q
-
-        real_dirname = __import__("os").path.dirname
-
-        def fake_dirname(p):
-            # queries.py computes repo = dirname(dirname(__file__));
-            # redirect the OUTER call to an empty dir
-            out = real_dirname(p)
-            if out.endswith("fraud_detection_project_spark"):
-                return str(tmp_path)
-            return out
-
-        monkeypatch.setattr("os.path.dirname", fake_dirname)
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            last = q._driver_coverage_rounds()
-        assert last == {}
-        assert any("CORRECTNESS_r" in str(x.message) for x in w)
-
-    def test_with_artifacts_no_warning(self):
-        import warnings
-
-        from fraud_detection_project_spark import queries as q
-
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            last = q._driver_coverage_rounds()
-        assert last  # artifacts exist in this repo
-        assert not [x for x in w if "CORRECTNESS_r" in str(x.message)]

@@ -1,6 +1,6 @@
-"""Run-determinism probe for driver-window queries.
+"""Run-determinism probe for registered queries.
 
-The driver hashes every window query's VALUES at sf0.01; a query whose
+The driver hashes every query's VALUES at sf0.01; a query whose
 output depends on Spark's partial-aggregation order (e.g. a float mean
 rounded at a decimal its ulp straddles — the round-9
 ``dwell_time_transition_matrix`` flake) can pass verify_local one run
@@ -19,7 +19,7 @@ reps). A STABLE read is strong but not proof — a race can
 coincidentally agree; pair with repeated verify_local passes.
 
 Usage: python tools/determinism_probe.py [sf_dir] [query ...]
-       (default: the current 50-name driver window at sf0.01)
+       (default: every registered query, in registration order, at sf0.01)
 """
 
 from __future__ import annotations
@@ -67,9 +67,7 @@ def main() -> None:
     from fraud_detection_project_spark.session import get_spark
     from fraud_detection_project_spark import queries as q
 
-    names = sys.argv[2:]
-    if not names:
-        names = list(q.driver_ordered(dict(q.QUERIES)))[:50]
+    names = sys.argv[2:] or list(q.QUERIES)
 
     spark = get_spark("determinism_probe")
     failures = []
