@@ -24,7 +24,7 @@ whole-stage codegen). No Python in any hot path.
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import alnum_tokens, normalized_text
@@ -484,7 +484,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    check_every: int = 1,
     local_threshold_edges: int = 32_000_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list → one row per
@@ -494,84 +493,45 @@ def connected_components(
     This is the canonical *last* step of a near-dup pipeline: pair
     emitters (MinHash/SimHash/Jaccard/embedding) produce edges; this
     collapses them into duplicate clusters so one canonical doc per
-    cluster survives. No reference equivalent (reference has no graph
-    ops); north-star §2 scale family.
+    cluster survives.
 
-    Algorithm: alternating large-star / small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — converges
-    in O(log n) rounds vs O(diameter) for naive label propagation, and
-    every intermediate edge set stays bounded by the input neighborhood
-    sizes, so no round materializes anything bigger than the graph.
-    Per round: two shuffles (groupBy min + join), both keyed on node id.
-    ``localCheckpoint`` truncates lineage each round so the plan does
-    not grow exponentially with iterations.
+    Input edges are orientation-normalized (min, max) and checkpointed
+    once, without a dedup: both paths are duplicate-insensitive, and a
+    distinct fused onto the cached scan starves the memory pool at
+    scale. When that edge list has at most ``local_threshold_edges``
+    rows it is streamed into one task and labelled there (min-label
+    propagation with pointer jumping, vectorized numpy, exact).
 
-    Convergence test is a one-pass aggregate (count + xxhash64 sum of
-    the edge set) instead of an exceptAll anti-join — two long scans
-    replaced by one cheap fingerprint compare per round;
-    ``check_every`` > 1 fingerprints only every k-th round (worst case
-    k−1 extra no-op rounds, each round's scan saved in between).
-
-    Shuffle shape per star: the edge set is hash-repartitioned on ``u``
-    ONCE, so the min-neighbor aggregate needs no exchange and the
-    neighborhood join aligns with the aggregate's partitioning — one
-    repartition + one dedup shuffle per star instead of three full edge
-    shuffles (VERDICT r3 item 5: the q12 exponent work). Input edges
-    are orientation-normalized (min, max); NEITHER path pre-dedups
-    (round 14): the local kernel is duplicate-insensitive and
-    large_star's terminal ``distinct`` makes round 1's output the same
-    set either way — a symmetric input just carries 2x rows through
-    round 1's repartition, which is cheaper and (unlike a distinct
-    fused onto the cached scan) cannot starve the memory pool at scale.
+    Above the threshold: alternating large-star / small-star (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14),
+    O(log n) rounds, no intermediate edge set bigger than the graph.
+    Each star takes ``m(u)`` as ``min(v) OVER (PARTITION BY u)`` — a
+    window, not an aggregate joined back to the edges — so a round is
+    three exchanges: large_star's window, its terminal
+    ``repartition(u)`` + ``distinct`` (which already satisfies
+    small_star's window partitioning) and small_star's ``distinct``.
+    Each round ends in one eager DISK_ONLY ``localCheckpoint``; an
+    ``Observation`` on that checkpoint's own job yields the round's
+    fingerprint ``(count, sum(xxhash64(u, v)))``, and the loop stops
+    when two consecutive rounds give the same one — no driver action
+    beyond the checkpoint.
     """
+    size = Observation()
     e = (
         edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
-        # materialize NOW: the frame is referenced several times below
-        # (count, endgame stream / star rounds) — without this an
-        # expensive upstream plan (e.g. the jaccard pair join) would
-        # re-execute per reference. NO distinct here (round 14, guide
-        # §2.4): the canonicalized projection is NARROW, so this
-        # checkpoint costs zero shuffles, and the local endgame is
-        # duplicate-insensitive (np.minimum.at over repeated edges is
-        # idempotent; pd.factorize yields the same node set) — the
-        # dedup exchange was 2.7 s of q12's 5.15 s at ~sf1 for nothing.
-        # The distributed branch dedups below, where one exchange
-        # amortizes over O(log n) star rounds.
-        #
-        # Default MEMORY_AND_DISK deliberately (round 14, guide §5):
-        # the local endgame streams this frame into ONE task, and a
-        # DISK_ONLY level was measured to double q12's sf1 cell (the
-        # single task re-deserializes every row; 4.7 → 8.4+ s floors).
-        # The ~sf10 starvation this level once caused (map-side
-        # aggregates fused with the cache scan dying on their initial
-        # allocation while reader locks pinned the blocks) is fixed
-        # STRUCTURALLY instead: the distributed branch below no longer
-        # runs any aggregate over this cached frame — see the
-        # pre-distinct removal note.
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        # materialized once: the endgame or every star round re-reads
+        # it. Default MEMORY_AND_DISK: the local endgame streams it into
+        # one task, which is twice as slow from DISK_ONLY.
         .localCheckpoint(eager=True)
     )
 
-    # Hybrid endgame (same contract as graph.k_core, round 6): the
-    # star rounds pay ~1s of driver-synchronized fixed cost each; when
-    # the RAW canonical edge list fits one task's Arrow budget (default
-    # 32M rows ≈ 512 MB), finish locally — min-label propagation with
-    # pointer-jumping path compression, fully vectorized numpy, exact.
-    # Thresholding on the raw (pre-dedup) count is exactly the budget
-    # the stream pays — raw rows are what cross into the one task —
-    # and is conservative vs the old deduplicated count (a graph may
-    # now take the distributed path it would previously have run
-    # locally, never the reverse).
-    # Ids compact via pd.factorize in FIRST-SEEN order (hash, not
-    # sort), so the converged label is only a component representative
-    # index; the final scatter-min over original ids (see `minid`
-    # below) restores min-node-id-per-component — identical semantics
-    # to the star fixpoint. Above the threshold the O(log n)-round
-    # distributed path runs unchanged; a pytest pins both paths equal.
-    if e.count() <= local_threshold_edges:
+    # The raw (pre-dedup) row count is what the one task would receive.
+    if size.get["n"] <= local_threshold_edges:
 
         def _local_cc(batches):
             import numpy as np
@@ -586,14 +546,9 @@ def connected_components(
             us = np.concatenate(ups)
             vs = np.concatenate(vps)
             m = len(us)
-            # pd.factorize (hash-based) compacts node ids ~20x faster
-            # than np.unique(return_inverse=True) (sort-based) — at the
-            # 32M-edge ceiling the sort WAS most of the endgame's
-            # wall-clock (VERDICT r7 "What's wrong" #1). Codes come out
-            # in first-seen order, so the propagated minimum is a min
-            # INDEX (any component representative); the true min node
-            # id per component is restored by one scatter-min at the
-            # end — semantics identical to the sorted-ids variant.
+            # hash-based compaction; codes are first-seen order, so the
+            # propagated label is a representative INDEX and the min
+            # node id per component is restored by the scatter-min below
             codes, uniq = pd.factorize(np.concatenate([us, vs]))
             uniq = np.asarray(uniq, dtype=np.int64)
             ui = codes[:m]
@@ -614,81 +569,54 @@ def connected_components(
             np.minimum.at(minid, lab, uniq)
             yield pd.DataFrame({"id": uniq, "cluster_id": minid[lab]})
 
-        # coalesce(1) + mapInPandas: the checkpointed partitions stream
-        # into the one task directly — no single-bucket hash-shuffle
-        # write+read of the whole edge list (groupBy("__g") paid both).
+        # stream the checkpointed partitions into the one task, no shuffle
         return e.coalesce(1).mapInPandas(
             _local_cc, "id long, cluster_id long"
         )
 
-    # distributed path: NO pre-dedup (round 14, guide §5/§2.4). The
-    # old shape ran `e.distinct().localCheckpoint()` here, and at ~sf10
-    # (60M edges ≈ 4 GB deserialized) that was the engine's first
-    # measured scale fatality: the distinct's map-side hash aggregate
-    # is FUSED with the scan of the memory-cached checkpoint, the
-    # reader tasks' locks pin the blocks (storage cannot evict a
-    # locked block), and the aggregate dies on its INITIAL
-    # BytesToBytesMap allocation ("UNABLE_TO_ACQUIRE_MEMORY ... got
-    # 6429" — nothing to spill yet). The dedup is also REDUNDANT:
-    # large_star ends in `.distinct()`, so round 1's output is the
-    # same SET with or without it — a duplicated/symmetric input
-    # merely carries its extra rows through round 1's repartition
-    # (narrow scan + shuffle write, spillable, no aggregate over the
-    # cached blocks). Dropping it removes one exchange, one checkpoint
-    # generation, and the OOM class in one move; the dual-path
-    # duplicate/symmetric-input pytest pins result equality.
+    by_u = Window.partitionBy("u")
 
     def large_star(E: DataFrame) -> DataFrame:
-        # neighborhoods both directions; m(u) = min(N(u) ∪ {u});
-        # emit (v, m(u)) for v > u. One repartition on u feeds BOTH the
-        # aggregate (partial+final, no exchange) and the join (aligned
-        # partitioning on the join key).
-        sym = E.union(
-            E.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).repartition("u")
-        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+        # m(u) = min(N(u) ∪ {u}) over both directions; emit (v, m(u))
+        # for v > u, partitioned on the emitted source for small_star
         return (
-            sym.join(m, "u")
+            E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .select("u", "v", F.least(F.min("v").over(by_u), "u").alias("m"))
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .repartition("u")
             .distinct()
         )
 
     def small_star(E: DataFrame) -> DataFrame:
-        # input edges all point big→small; m(u) = min(N(u)); emit
-        # (x, m) for x ∈ N(u) ∪ {u}, x ≠ m
-        Ep = E.repartition("u")
-        m = Ep.groupBy("u").agg(F.min("v").alias("m"))
-        to_nbrs = (
-            Ep.join(m, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        # edges point big→small; m(u) = min(N(u)); emit (x, m) for
+        # x ∈ N(u) ∪ {u}, x ≠ m
+        star = F.array(
+            F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+            F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
         )
-        to_self = m.select(F.col("u"), F.col("m").alias("v"))
-        return to_nbrs.union(to_self).distinct()
-
-    def fingerprint(E: DataFrame) -> tuple:
-        row = E.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
+        return (
+            E.select("u", "v", F.min("v").over(by_u).alias("m"))
+            .select(F.inline(star))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
 
     prev = None
-    converged = False
-    for i in range(max_iter):
+    for _ in range(max_iter):
+        fp = Observation()
         superseded = e
-        e = small_star(large_star(e)).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
+        e = (
+            small_star(large_star(e))
+            .observe(fp, F.count(F.lit(1)).alias("n"), F.sum(F.xxhash64("u", "v")).alias("h"))
+            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
         )
         release_checkpoint(superseded)
-        if (i + 1) % max(1, check_every) == 0:
-            cur = fingerprint(e)
-            if cur == prev:
-                converged = True
-                break
-            prev = cur
-    if not converged:
+        cur = (fp.get["n"], fp.get["h"])
+        if cur == prev:
+            break
+        prev = cur
+    else:
         raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
     # stars: every edge is (node, root); roots label themselves

@@ -13,7 +13,7 @@ O(1) across iterations. No adjacency matrices, no driver-side graph.
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..lineage import release_checkpoint
@@ -48,11 +48,13 @@ def pagerank(
     rank ⋈ edges on src, both shuffle-partitioned on the same key, so
     AQE reuses the partitioning across iterations.
     """
+    size = Observation()
     e = (
         edges.select(
             F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
         )
         .distinct()
+        .observe(size, F.count(F.lit(1)).alias("n"))
         # materialize: the edge list is re-read every iteration; an
         # expensive upstream plan must not re-execute per iteration.
         # Default MEMORY_AND_DISK: the local endgame streams this into
@@ -61,7 +63,7 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
 
-    if e.count() <= local_threshold_edges:
+    if size.get["n"] <= local_threshold_edges:
 
         def _local_pr(batches):
             import numpy as np
@@ -111,13 +113,15 @@ def pagerank(
     raw = e
     e = e.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     release_checkpoint(raw)
+    n_nodes = Observation()
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
+        .observe(n_nodes, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
-    n = nodes.count()
+    n = n_nodes.get["n"]
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
 
     ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"))
@@ -370,54 +374,37 @@ def k_core(
 
     **Local path** (edge list fits one task): when the deduplicated
     both-directions edge list has <= ``local_threshold_edges`` rows
-    (default 32M rows ≈ 512 MB at 16 B/row — comfortably one
-    executor-task's Arrow group), shuffle it into a single
-    ``applyInPandas`` group and run exact Batagelj–Žaveršnik bucket
-    peeling fully vectorized in numpy (O(V+E), no Python-per-edge
-    loop). Rationale, measured round 6 at sf0.1/sf1 (2.39M directed
-    edges, 38 H-index rounds): the distributed loop's wall-clock is
-    ~1.2 s/round of pure driver-synchronization fixed cost — 44-60 s
-    regardless of data size — while a single-task peel of the same
-    graph is sub-second. Batching multiple lazy H-index sweeps per
-    checkpoint was measured WORSE (60-88 s: the recompute set expands
-    to 2-hop neighborhoods while per-stage overhead stays), so the
-    fix is to not run a driver-synchronized loop at all when the
-    graph fits one task. This is the standard endgame for iterative
-    graph algorithms (finish small residuals locally instead of
-    paying per-round latency); the threshold is an explicit,
-    documented task-memory budget, not a hidden assumption.
+    (default 32M rows ≈ 512 MB at 16 B/row), the canonical edges stream
+    into one task and exact Batagelj–Žaveršnik bucket peeling runs
+    there, vectorized in numpy (O(V+E)). A distributed round costs
+    about a second of driver-synchronized latency whatever the data
+    size, while a single-task peel of the same graph is sub-second.
 
     **Distributed path** (above threshold): H-index propagation
     (Montresor et al., "Distributed k-core decomposition") —
     initialize every estimate to the degree, then repeatedly set
     ``c(v) = H-index of neighbors' estimates`` (the largest h such
     that >= h neighbors have estimate >= h). Estimates only decrease
-    and the fixpoint is exactly the core number. Per round: ONE
-    shuffle keyed on node id (neighbor-estimate gather), the H-index
-    computed as a codegen HOF over the gathered estimate array,
-    convergence detected by a 1-row changed-count fingerprint,
-    ``localCheckpoint`` truncating lineage (same contract as
-    pagerank / connected_components). After the first full round,
-    only the FRONTIER recomputes — nodes adjacent to an estimate that
-    just dropped (exact, per Montresor's async-correctness argument).
-    Iteration shuffles are sized from the measured edge count
-    (~600k rows/partition, the measured local[32] optimum — 44 s vs
-    59 s at the default 32 partitions on 2.39M edges) rather than
-    inheriting ``spark.sql.shuffle.partitions`` sized for the scan
-    workload. The gathered array per node is its degree — a hyper-hot
-    node at 100 TB makes a wide row; cap or pre-filter such nodes
-    upstream (same call as co_occurrence_edges documents).
+    and the fixpoint is exactly the core number. The estimate frame
+    carries ``chg`` (the estimate just dropped; true for everyone
+    before round 1). Per round: ONE join of the v-keyed edge copy with
+    the estimates aliased to ``v`` (``cv``, ``dv``), ONE gather by
+    ``u`` collecting ``cv`` and ``max(dv)``, the H-index recomputed
+    only where a neighbour changed (exact, per Montresor's
+    async-correctness argument) as a codegen HOF over the sorted
+    estimate array, and one merge into the estimates, materialized by
+    an eager DISK_ONLY ``localCheckpoint``. An ``Observation`` on that
+    checkpoint's job counts the changed estimates; zero ends the loop.
+    Loop shuffles are sized from the measured edge count (~600k
+    rows/partition) by explicit ``repartition(nparts, key)``, never by
+    the session-global shuffle-partitions conf. The gathered array per
+    node is its degree — a hyper-hot node at 100 TB makes a wide row;
+    cap or pre-filter such nodes upstream (same call as
+    co_occurrence_edges documents).
     """
-    # Canonicalize BEFORE the dedup shuffle (guide §2.3 "shuffle fewer
-    # bytes"): the old shape unioned both orientations first and ran
-    # `distinct` on 2E rows; orienting each edge (least, greatest) makes
-    # the two directions map-side-collapsible, so the dedup exchange and
-    # the checkpoint materialize E rows, not 2E, and the symmetric
-    # closure is re-derived by a free narrow union afterwards. Null /
-    # self-loop semantics are unchanged: least/greatest of a
-    # null-endpoint edge yields u == v (filtered), exactly as `u != v`
-    # dropped those rows before. Same canonical-first shape as
-    # dedup.connected_components.
+    # canonical (least, greatest) before the dedup: the exchange and
+    # the checkpoint carry E rows, not 2E; the closure is a narrow union
+    size = Observation()
     canon = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -425,15 +412,12 @@ def k_core(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        # Default MEMORY_AND_DISK: the local peel streams this into one
-        # task at memory speed. The distributed branch recopies to
-        # DISK_ONLY (und/undv below) and releases this frame — the
-        # iterations never read it again.
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        # default MEMORY_AND_DISK: the local peel streams this into one
+        # task; the distributed branch recopies it to DISK_ONLY
         .localCheckpoint(eager=True)
     )
-    # cheap: post-checkpoint partition counts; × 2 = the directed count
-    # the threshold and nparts sizing are defined over
-    n_edges = 2 * canon.count()
+    n_edges = 2 * size.get["n"]  # directed count
     und = canon.union(
         canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -464,105 +448,57 @@ def k_core(
             )
             yield pd.DataFrame({"id": nodes, "core": core.astype("int32")})
 
-        # coalesce(1) + mapInPandas over the CANONICAL edges (round 13):
-        # streaming E checkpointed rows into the one task instead of the
-        # 2E-row symmetric closure halves the Arrow transfer and the
-        # fresh memory the peel task touches; the closure is derived
-        # in-kernel from the compacted codes (_peel_cores_canonical).
+        # the canonical E rows cross into the one task, not the 2E-row
+        # closure; the kernel derives the closure from compacted codes
         return canon.coalesce(1).mapInPandas(_peel, out_schema)
 
-    # Iteration shuffles are sized by EXPLICIT repartition(nparts, key)
-    # on the loop frames rather than by flipping the session-global
-    # spark.sql.shuffle.partitions conf (ADVICE r6: a concurrent query
-    # on the same SparkSession would inherit the graph-sized count).
-    # Hash-partitioned inputs with matching key and count satisfy the
-    # joins'/aggregates' clustered distribution, so no second exchange
-    # is inserted; AQE may still coalesce or broadcast small sides.
     nparts = max(4, min(4096, -(-n_edges // 600_000)))
-    # DISK_ONLY (round 14, guide §5): these two copies are above the
-    # local threshold by definition and are re-read every round — kept
-    # out of the unified pool so the rounds' joins/aggregates never
-    # compete with multi-GB cached blocks (reader locks pin cached
-    # memory; the measured ~sf10 CC failure). The narrow repartition
-    # pass that builds them reads `canon` without any fused aggregate,
-    # and `canon` is released right after — the loop never touches it.
+    # DISK_ONLY copies (und feeds the degrees, undv every round's
+    # gather), kept out of the unified pool so they never compete with
+    # the rounds' joins and aggregates
     und = und.repartition(nparts, "u").localCheckpoint(
         eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
-    # v-keyed copy, shuffled ONCE and reused by every round's two
-    # v-joins (neighbor gather + frontier expansion)
     undv = und.repartition(nparts, "v").localCheckpoint(
         eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
     release_checkpoint(canon)
     core = und.groupBy("u").agg(
-        F.count(F.lit(1)).cast("int").alias("c")
+        F.count(F.lit(1)).cast("int").alias("c"), F.lit(True).alias("chg")
     )
-    frontier = None  # None = first round, recompute everyone
-    superseded = None  # previous round's merged checkpoint
+    # H-index: with estimates sorted desc, the indicator cs[i] >= i+1
+    # is a prefix; its length is the H-index
+    cs = F.sort_array(F.collect_list("cv"), asc=False)
+    h = F.size(F.filter(F.transform(cs, lambda x, i: x >= i + F.lit(1)), lambda b: b))
+    hc = F.coalesce(F.col("h"), F.col("c"))
     for _ in range(max_iter):
-        if frontier is None:
-            base = und
-        else:
-            affected = (
-                undv.join(
-                    frontier.select(F.col("u").alias("v"))
-                    .repartition(nparts, "v"),
-                    "v",
-                    "left_semi",
-                )
-                .select("u")
-                .repartition(nparts, "u")
-                .distinct()
-            )
-            base = und.join(affected, "u", "left_semi")
-        nbc = base.repartition(nparts, "v").join(
-            core.select(F.col("u").alias("v"), F.col("c").alias("cv"))
-            .repartition(nparts, "v"),
+        nbc = undv.join(
+            core.select(
+                F.col("u").alias("v"), F.col("c").alias("cv"), F.col("chg").alias("dv")
+            ).repartition(nparts, "v"),
             "v",
         )
-        # H-index: with estimates sorted desc, the indicator
-        # cs[i] >= i+1 is a prefix; its length is the H-index
         upd = (
-            nbc.select("u", "cv")
+            nbc.select("u", "cv", "dv")
             .repartition(nparts, "u")
             .groupBy("u")
-            .agg(F.sort_array(F.collect_list("cv"), asc=False).alias("cs"))
-            .select(
-                "u",
-                F.size(
-                    F.filter(
-                        F.transform("cs", lambda x, i: x >= i + F.lit(1)),
-                        lambda b: b,
-                    )
-                ).alias("h"),
-            )
+            .agg(F.when(F.max("dv"), h).alias("h"))
         )
+        changed = Observation()
         merged = (
             core.join(upd, "u", "left")
-            .select(
-                "u",
-                F.least(
-                    F.col("c"), F.coalesce(F.col("h"), F.col("c"))
-                ).alias("c"),
-                (F.coalesce(F.col("h"), F.col("c")) < F.col("c")).alias(
-                    "chg"
-                ),
-            )
-            # per-round lineage cut; release the PREVIOUS round's
-            # merged checkpoint once this one materializes (guide §5 —
-            # max_iter generations of a nodes-sized frame otherwise
-            # accumulate in the block manager)
+            .select("u", F.least(F.col("c"), hc).alias("c"), (hc < F.col("c")).alias("chg"))
+            .observe(changed, F.sum(F.col("chg").cast("long")).alias("n"))
             .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
         )
-        if superseded is not None:
-            release_checkpoint(superseded)
-        superseded = merged
-        core = merged.select("u", "c")
-        changed = merged.agg(F.sum(F.col("chg").cast("long"))).first()[0]
-        frontier = merged.filter(F.col("chg")).select("u")
-        if not changed:
+        release_checkpoint(core)  # a no-op on round 1's degree frame
+        core = merged
+        if not changed.get["n"]:
             break
+    if max_iter > 0:
+        # the result reads only the last estimates checkpoint
+        release_checkpoint(und)
+        release_checkpoint(undv)
     return core.select(F.col("u").alias("id"), F.col("c").alias("core"))
 
 

@@ -12,6 +12,7 @@ from fraud_detection_project_spark.operators.graph import (
     co_occurrence_edges,
     triangle_count,
 )
+from tests.test_round8_fixes import _jobs
 
 
 def _edges_df(spark, pairs):
@@ -175,6 +176,44 @@ class TestKCore:
     def test_direction_and_duplicates_normalized(self, spark):
         got = self._run(spark, [(1, 2), (2, 1), (1, 2), (2, 3), (3, 1)])
         assert got == {1: 2, 2: 2, 3: 2}
+
+
+class TestDistributedLoopJobs:
+    """Job-count pins for the forced-distributed iterative loops: every
+    Spark job is one driver round trip, and round latency is what these
+    loops cost. Bounds are the counts measured on local[4]; the earlier
+    loop shapes ran 67-69 (CC) and 92 (k-core) jobs on the same graphs."""
+
+    def test_connected_components_job_count(self, spark):
+        from fraud_detection_project_spark.operators.dedup import (
+            connected_components,
+        )
+
+        edges = [(i, i + 1) for i in range(1, 12)]
+        edges += [(20, 21), (21, 22), (30, 31)]
+        df = _edges_df(spark, edges)
+        before = _jobs(spark)
+        got = dict(
+            map(tuple, connected_components(df, local_threshold_edges=0).collect())
+        )
+        jobs = _jobs(spark) - before
+        assert got == {
+            **{i: 1 for i in range(1, 13)}, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30,
+        }
+        assert jobs <= 23, jobs
+
+    def test_k_core_job_count(self, spark):
+        from fraud_detection_project_spark.operators.graph import k_core
+
+        # square of a 13-node path: core 2 everywhere, reached from the
+        # ends inwards over several H-index rounds
+        edges = [(i, i + 1) for i in range(12)] + [(i, i + 2) for i in range(11)]
+        df = _edges_df(spark, edges)
+        before = _jobs(spark)
+        got = dict(map(tuple, k_core(df, local_threshold_edges=0).collect()))
+        jobs = _jobs(spark) - before
+        assert got == {i: 2 for i in range(13)}
+        assert jobs <= 48, jobs
 
 
 class TestAdamicAdar:

@@ -353,3 +353,23 @@ class TestCheckpointRelease:
         # remain persisted; every superseded star round was released
         leaked = set(jsc.getPersistentRDDs().keys()) - before
         assert len(leaked) <= 1, f"superseded checkpoints leaked: {leaked}"
+
+    def test_kcore_distributed_loop_releases_superseded_rounds(self, spark):
+        from fraud_detection_project_spark.operators.graph import k_core
+
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        # K4 on 0-3 (core 3) with a path 3-10-11 (core 1)
+        edges = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+        edges += [(3, 10), (10, 11)]
+        out = k_core(
+            spark.createDataFrame(edges, ["src", "dst"]),
+            local_threshold_edges=0,
+        )
+        got = {(r["id"], r["core"]) for r in out.collect()}
+        assert got == {(0, 3), (1, 3), (2, 3), (3, 3), (10, 1), (11, 1)}
+        # only the FINAL round's estimates (referenced by `out`) may
+        # remain persisted; the edge copies and every superseded round
+        # were released
+        leaked = set(jsc.getPersistentRDDs().keys()) - before
+        assert len(leaked) <= 1, f"superseded checkpoints leaked: {leaked}"

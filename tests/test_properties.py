@@ -839,10 +839,11 @@ edge_lists = st.lists(
 @settings(**SETTINGS)
 def test_connected_components_matches_union_find(spark, edges):
     """The single-task CC endgame (round 8: pd.factorize compaction +
-    final min-id scatter) must label every node with the smallest node
-    id of its component — checked against a plain python union-find
-    over the same edges (self-loops, duplicates, both orientations,
-    NEGATIVE ids all in the generator's range)."""
+    final min-id scatter) and the distributed star rounds must label
+    every node with the smallest node id of its component — checked
+    against a plain python union-find over the same edges (self-loops,
+    duplicates, both orientations, NEGATIVE ids all in the generator's
+    range)."""
     from fraud_detection_project_spark.operators.dedup import (
         connected_components,
     )
@@ -851,6 +852,11 @@ def test_connected_components_matches_union_find(spark, edges):
     got = {
         r["id"]: r["cluster_id"]
         for r in connected_components(df).collect()
+    }
+    # local_threshold_edges=0 forces the distributed star rounds
+    dist = {
+        r["id"]: r["cluster_id"]
+        for r in connected_components(df, local_threshold_edges=0).collect()
     }
 
     # reference union-find
@@ -882,3 +888,22 @@ def test_connected_components_matches_union_find(spark, edges):
             want[n] = lo
 
     assert got == want
+    assert dist == want
+
+
+@given(edges=edge_lists)
+@settings(**{**SETTINGS, "max_examples": 8})
+def test_k_core_distributed_matches_brute_peel(spark, edges):
+    """The distributed H-index loop (forced by local_threshold_edges=0)
+    must give every node its exact core number — checked against the
+    dict-based peel of tests/test_graph_ops.py over the same edges
+    (self-loops, duplicates, both orientations, negative ids)."""
+    from fraud_detection_project_spark.operators.graph import k_core
+    from tests.test_graph_ops import TestKCore
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        r["id"]: r["core"]
+        for r in k_core(df, local_threshold_edges=0).collect()
+    }
+    assert got == TestKCore._brute_core(edges)
