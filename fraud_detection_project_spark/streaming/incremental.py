@@ -5,21 +5,11 @@ already proves state ⊕ delta = recompute for algebraic aggregates;
 this module runs that merge inside ``foreachBatch`` so a materialized
 aggregate table stays current over a stream with NO state store and
 NO watermark — the aggregate table IS the state, bounded by group
-cardinality, not stream length. Same atomic versioned-manifest commit
-as streaming/sketches.py and streaming/upsert.py: each micro-batch
-writes a fresh version directory and flips MANIFEST.json last, so
-readers never observe a torn table.
-
-Failure semantics (round-11 audit): ``foreachBatch`` re-delivers a
-batch after a crash between the manifest flip and the stream's
-checkpoint commit — for an ADDITIVE merge a replay double-counts, so
-the manifest records the last applied (stream identity, epoch) and a
-replayed epoch under the same identity is a no-op (the same guard
-streaming/sketches.py carries; identity-keyed because epoch ids are
-scoped to a checkpoint — ADVICE r11). Old version
-directories are garbage-collected past ``keep_versions`` — without GC
-a long-running stream's disk grows with stream LENGTH, defeating the
-"state bounded by group cardinality" contract.
+cardinality, not stream length. Versioned commits, the atomic manifest
+flip, GC of old versions (without it a long-running stream's disk
+grows with stream LENGTH) and the at-least-once replay guard (a
+replayed epoch would double-count an additive merge) are the shared
+protocol of streaming/state_store.py.
 
 Stream ≡ batch exactness is the pytest oracle
 (tests/test_streaming.py::TestStreamingAggMaintenance): any micro-
@@ -29,92 +19,20 @@ aggregation — the defining property of algebraic aggregates.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame
 
-from ..operators.incremental import aggregate_delta, merge_aggregate_state
+from ..operators.incremental import merge_aggregate_state
+from . import state_store
 
-
-def _manifest_state(manifest: str) -> dict:
-    if not os.path.exists(manifest):
-        return {"version": -1, "epoch": -1, "stream_id": None}
-    with open(manifest) as f:
-        m = json.load(f)
-    m.setdefault("epoch", -1)  # pre-epoch manifests
-    if m["epoch"] is None:
-        m["epoch"] = -1  # batch-mode commit (epoch=None) json-nulls
-    m.setdefault("stream_id", None)  # pre-identity manifests
-    return m
-
-
-def _is_replay(state: dict, epoch: int | None, stream_id: str | None) -> bool:
-    """True iff this (stream_id, epoch) was already applied — the
-    epoch-scope-aware replay guard (ADVICE r11): epoch ids are scoped
-    to a streaming checkpoint, so a restart against a NEW checkpoint
-    resets them to 0 and an epoch-only guard would silently drop real
-    batches until the fresh ids caught up. Keying on (stream identity,
-    epoch) — the checkpoint location is the identity, exactly the
-    epoch counter's scope — makes replays no-ops without turning
-    restarts into data loss (the same shape as Delta's
-    txnAppId+txnVersion idempotent writes).
-
-    Strict equality, not ``<=`` (VERDICT r12 item 1): within one
-    incarnation foreachBatch only ever re-delivers the LAST
-    uncommitted epoch, so ``epoch < last_applied`` under a MATCHING
-    identity can only mean checkpoint loss at the same path (deleted
-    checkpoint dir, kept state dir, restarted) — a new incarnation
-    whose reset-to-0 epochs must apply, not be dropped. Applying rolls
-    the manifest epoch to the new incarnation's counter, so its own
-    replays are still caught by equality."""
-    return (
-        epoch is not None
-        and epoch == state["epoch"]
-        and state["stream_id"] == stream_id
-    )
+_AGGREGATE = state_store.BASE  # MANIFEST.json, v=N
 
 
 def read_state(spark, path: str, schema: str) -> DataFrame:
     """Current aggregate table (empty frame with ``schema`` before the
     first commit)."""
-    manifest = os.path.join(path, "MANIFEST.json")
-    if not os.path.exists(manifest):
-        return spark.createDataFrame([], schema)
-    with open(manifest) as f:
-        version = json.load(f)["version"]
-    return spark.read.parquet(os.path.join(path, f"v={version}"))
-
-
-def _gc(path: str, keep_versions: int) -> None:
-    """Drop version dirs older than the newest ``keep_versions`` (the
-    committed version is always in the kept suffix: versions are
-    monotonic)."""
-    versions = sorted(
-        (d for d in os.listdir(path)
-         if d.startswith("v=") and d[2:].isdigit()
-         and os.path.isdir(os.path.join(path, d))),
-        key=lambda d: int(d[2:]),
-    )
-    for d in versions[: max(0, len(versions) - keep_versions)]:
-        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-
-
-def _commit(
-    df: DataFrame, path: str, epoch: int | None = None,
-    keep_versions: int = 2, stream_id: str | None = None,
-) -> None:
-    manifest = os.path.join(path, "MANIFEST.json")
-    version = _manifest_state(manifest)["version"] + 1
-    df.write.mode("overwrite").parquet(os.path.join(path, f"v={version}"))
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"version": version, "epoch": epoch, "stream_id": stream_id}, f
-        )
-    os.replace(tmp, manifest)
-    _gc(path, max(2, keep_versions))
+    return state_store.read(spark, path, _AGGREGATE, schema)
 
 
 def merge_aggregate_batch(
@@ -128,21 +46,14 @@ def merge_aggregate_batch(
     keep_versions: int = 2,
     stream_id: str | None = None,
 ) -> None:
-    """state' = state ⊕ agg(batch), committed atomically. When
-    ``epoch`` is given (the foreachBatch epoch id), an epoch at or
-    below the manifest's recorded epoch UNDER THE SAME ``stream_id``
-    is a NO-OP — at-least-once replays after a crash between the
-    manifest flip and the stream's checkpoint commit must not
-    double-count an additive merge, while a restart with a fresh
-    checkpoint (epochs reset to 0) must not be dropped
-    (see :func:`_is_replay`)."""
-    state = _manifest_state(os.path.join(path, "MANIFEST.json"))
-    if _is_replay(state, epoch, stream_id):
-        return
-    prev = read_state(spark, path, state_schema)
-    _commit(
-        merge_aggregate_state(prev, batch, keys, specs),
-        path, epoch=epoch, keep_versions=keep_versions, stream_id=stream_id,
+    """state' = state ⊕ agg(batch), committed atomically. ``epoch`` is
+    the foreachBatch epoch id and ``stream_id`` the stream's
+    checkpoint; a replay of the last applied pair is a no-op (see
+    :func:`.state_store._is_replay`)."""
+    state_store.apply(
+        spark, path, _AGGREGATE, state_schema,
+        lambda prev: merge_aggregate_state(prev, batch, keys, specs),
+        epoch=epoch, stream_id=stream_id, keep_versions=keep_versions,
     )
 
 
@@ -163,23 +74,9 @@ def streaming_aggregate(
     ``state_schema`` is the DDL of the state table (keys + out cols),
     needed to type the empty frame before the first commit.
     ``available_now=True`` drains the current backlog and terminates by
-    itself (awaitTermination-able) — the batch-parity/catch-up mode,
-    same as the AMS sink's."""
-    spark = stream.sparkSession
-
-    def _merge(batch: DataFrame, epoch: int) -> None:
-        # the checkpoint location IS the epoch counter's scope — use it
-        # as the replay-guard identity (ADVICE r11)
-        merge_aggregate_batch(
-            spark, batch, keys, specs, path, state_schema,
-            epoch=epoch, keep_versions=keep_versions, stream_id=checkpoint,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    itself (awaitTermination-able) — the batch-parity/catch-up mode."""
+    merge = partial(
+        merge_aggregate_batch, stream.sparkSession, keys=keys, specs=specs,
+        path=path, state_schema=state_schema, keep_versions=keep_versions,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state_store.start_sink(stream, merge, checkpoint, available_now)

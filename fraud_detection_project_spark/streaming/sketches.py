@@ -13,14 +13,12 @@ through. This is the streaming answer to "running heavy-hitters /
 rate estimates over an unbounded key domain" where exact per-key
 state would grow without bound.
 
-The persisted sketch uses the same atomic versioned-manifest contract
-as streaming/upsert.py: each micro-batch writes a new version
-directory and flips the manifest last, so readers never see a torn
-sketch. foreachBatch is AT-LEAST-ONCE: a crash between the manifest
-flip and the streaming checkpoint commit replays the same micro-batch
-under the same epoch id — the manifest therefore also records the
-last-applied epoch, and a merge with ``epoch <= last_applied`` is a
-no-op, making replays idempotent (ADVICE r5).
+The count-min, histogram and AMS sketches below are all sums over
+their key columns, so each ``merge_*_batch`` only builds its delta and
+hands it to :func:`.state_store.add`: versioned commits, an atomic
+manifest flip, GC and the at-least-once replay guard live there. The
+three sketches may share one directory (distinct manifests and
+version prefixes).
 
 Stream ≡ batch exactness (cell-wise, hence estimate-wise) is the
 pytest oracle: tests/test_streaming.py::TestStreamingCountMin.
@@ -28,126 +26,38 @@ pytest oracle: tests/test_streaming.py::TestStreamingCountMin.
 
 from __future__ import annotations
 
-import json
-import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import count_min_table
+from . import state_store
+from .state_store import Layout
 
 _SCHEMA = "depth INT, bucket BIGINT, cnt BIGINT"
+_HIST_SCHEMA = "bin INT, cnt BIGINT, lo DOUBLE, hi DOUBLE, n_bins INT"
+_AMS_SCHEMA = "j INT, z BIGINT"
+
+# Persisted-state schema version: 1 = the old layout (count-min column
+# named ``d``), 2 = current (``depth``). Recorded in every sketch
+# manifest commit; a manifest without it is read as whatever layout its
+# parquet stores.
+_STATE_SCHEMA_VERSION = 2
+_FIELDS = (("schema", _STATE_SCHEMA_VERSION),)
+_COUNT_MIN = Layout("MANIFEST.json", "v=", renames=(("d", "depth"),),
+                    fields=_FIELDS)
+_HISTOGRAM = Layout("HIST_MANIFEST.json", "hv=", fields=_FIELDS)
+_AMS = Layout("AMS_MANIFEST.json", "av=", fields=_FIELDS)
 
 
 def read_sketch(spark, path: str) -> DataFrame:
     """Current sketch state (empty frame before the first batch).
 
-    Schema tolerance (ADVICE r10): sketch state persisted before the
-    round-10 ``d`` -> ``depth`` column rename stores the OLD column
-    name — read_sketch returns the parquet's stored schema, so without
-    a rename-on-read every pre-upgrade sketch directory would make
-    ``merge_sketch_batch``'s ``unionByName("depth", ...)`` raise and
-    the state would be unreadable after upgrade. Old layouts are
-    therefore normalized here, once, at the read boundary; newly
-    committed manifests also record ``schema`` so future migrations
-    can key off an explicit version instead of column sniffing."""
-    manifest = os.path.join(path, "MANIFEST.json")
-    if not os.path.exists(manifest):
-        return spark.createDataFrame([], _SCHEMA)
-    with open(manifest) as f:
-        version = json.load(f)["version"]
-    df = spark.read.parquet(os.path.join(path, f"v={version}"))
-    if "d" in df.columns and "depth" not in df.columns:
-        df = df.withColumnRenamed("d", "depth")
-    return df
-
-
-def _manifest_state(manifest: str) -> dict:
-    if not os.path.exists(manifest):
-        return {"version": -1, "epoch": -1, "stream_id": None}
-    with open(manifest) as f:
-        m = json.load(f)
-    m.setdefault("epoch", -1)  # pre-epoch manifests
-    if m["epoch"] is None:
-        # a batch-mode commit (epoch=None) json-round-trips to null;
-        # normalize so the replay comparison below never TypeErrors on
-        # mixed batch/stream use of one sketch path (ADVICE r11)
-        m["epoch"] = -1
-    m.setdefault("stream_id", None)  # pre-identity manifests
-    return m
-
-
-def _is_replay(state: dict, epoch: int | None, stream_id: str | None) -> bool:
-    """True iff this (stream_id, epoch) was already applied.
-
-    Epoch ids are scoped to a streaming CHECKPOINT: a restart against a
-    new checkpoint resets them to 0, so an epoch-only guard would
-    silently DROP genuinely new batches until the fresh ids caught up
-    with the manifest's (ADVICE r11 — the same reason Delta keys
-    idempotent writes on txnAppId+txnVersion, not version alone). The
-    manifest therefore records the stream identity (the checkpoint
-    location — exactly the scope of the epoch counter) and a replay is
-    recognized only when the identity matches AND the epoch EQUALS the
-    last applied. Strict equality, not ``<=`` (VERDICT r12 item 1):
-    foreachBatch's at-least-once contract only ever re-delivers the
-    LAST uncommitted epoch, never an older one, so within one stream
-    incarnation the merge can never legitimately see ``epoch <
-    last_applied``. The one way that comparison arises is checkpoint
-    LOSS at the SAME path — the user deletes the checkpoint dir but
-    keeps the state dir and restarts; epochs reset to 0 while
-    ``stream_id`` still matches — and that is a NEW incarnation whose
-    batches must apply (the old ``<=`` guard silently dropped every
-    batch until the fresh ids caught up). The merge then rolls the
-    manifest epoch forward (backward, numerically) so the new
-    incarnation's own replays are still caught by equality. A legacy
-    manifest without ``stream_id`` (None) never matches a real
-    checkpoint id, so the first post-upgrade batch always applies; the
-    one-commit replay window across that upgrade boundary is
-    documented, not guarded."""
-    return (
-        epoch is not None
-        and epoch == state["epoch"]
-        and state["stream_id"] == stream_id
-    )
-
-
-# Persisted-state schema version: 1 = pre-round-10 layout (count-min
-# column named ``d``), 2 = current (``depth``). Recorded in every new
-# manifest commit; absent (pre-versioning) manifests are treated as
-# whatever layout their parquet actually stores (read_sketch sniffs).
-_STATE_SCHEMA_VERSION = 2
-
-
-def _commit_manifest(
-    manifest: str, version: int, epoch: int | None,
-    stream_id: str | None = None,
-) -> None:
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"version": version, "epoch": epoch, "stream_id": stream_id,
-             "schema": _STATE_SCHEMA_VERSION},
-            f,
-        )
-    os.replace(tmp, manifest)
-
-
-def _gc_versions(path: str, prefix: str, keep_versions: int = 2) -> None:
-    """Drop state version dirs (``{prefix}{n}``) older than the newest
-    ``keep_versions`` (round-11 audit: without GC a long-running
-    stream's version history grows with stream LENGTH — the sketch
-    itself is bounded, its directory was not). The committed version is
-    always in the kept suffix: versions are monotonic."""
-    import shutil
-
-    versions = sorted(
-        (d for d in os.listdir(path)
-         if d.startswith(prefix) and d[len(prefix):].isdigit()
-         and os.path.isdir(os.path.join(path, d))),
-        key=lambda d: int(d[len(prefix):]),
-    )
-    for d in versions[: max(0, len(versions) - max(2, keep_versions))]:
-        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+    State written before the ``d`` -> ``depth`` column rename is
+    renamed on read, so old sketch directories stay readable and
+    mergeable."""
+    return state_store.read(spark, path, _COUNT_MIN, _SCHEMA)
 
 
 def merge_sketch_batch(
@@ -161,31 +71,15 @@ def merge_sketch_batch(
     epoch: int | None = None,
     stream_id: str | None = None,
 ) -> None:
-    """state' = state ⊕ sketch(batch): cell-wise counter addition via a
-    full-outer union-agg (both sides are sketch-sized). Atomic
-    version-flip commit; when ``epoch`` is given (the foreachBatch
-    epoch id), a batch already recorded in the manifest UNDER THE SAME
-    ``stream_id`` is a NO-OP — at-least-once replays after a crash
-    between manifest flip and checkpoint commit must not double-count,
-    while a restart against a fresh checkpoint (epochs reset to 0)
-    must not be dropped (see :func:`_is_replay`)."""
-    manifest = os.path.join(path, "MANIFEST.json")
-    state = _manifest_state(manifest)
-    if _is_replay(state, epoch, stream_id):
-        return
-    delta = count_min_table(batch, key, depth=depth, width=width, seed=seed)
-    merged = (
-        read_sketch(spark, path)
-        .unionByName(delta.select(
-            F.col("depth").cast("int"), F.col("bucket"), F.col("cnt")
-        ))
-        .groupBy("depth", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
+    """state' = state ⊕ sketch(batch): cell-wise counter addition.
+    ``epoch`` is the foreachBatch epoch id and ``stream_id`` the
+    stream's checkpoint; a replay of the last applied pair is a no-op
+    (see :func:`.state_store._is_replay`)."""
+    state_store.add(
+        spark, count_min_table(batch, key, depth=depth, width=width, seed=seed),
+        ["depth", "bucket"], path, _COUNT_MIN, _SCHEMA,
+        epoch=epoch, stream_id=stream_id,
     )
-    version = state["version"] + 1
-    merged.write.mode("overwrite").parquet(os.path.join(path, f"v={version}"))
-    _commit_manifest(manifest, version, epoch, stream_id)
-    _gc_versions(path, "v=")
 
 
 def streaming_count_min(
@@ -201,40 +95,15 @@ def streaming_count_min(
     """Maintain the sketch over a stream; returns the StreamingQuery.
     ``read_sketch(spark, path)`` serves estimates at any time (probe
     with operators/sketches.py machinery). ``available_now=True``
-    drains the current backlog and terminates by itself — the
-    batch-parity/catch-up mode, same as :func:`streaming_ams_f2`."""
-    spark = stream.sparkSession
-
-    def _merge(batch: DataFrame, epoch: int) -> None:
-        # the checkpoint location IS the epoch counter's scope — use it
-        # as the replay-guard identity (ADVICE r11)
-        merge_sketch_batch(
-            spark, batch, key, path,
-            depth=depth, width=width, seed=seed, epoch=epoch,
-            stream_id=checkpoint,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_HIST_SCHEMA = "bin INT, cnt BIGINT, lo DOUBLE, hi DOUBLE, n_bins INT"
+    drains the current backlog and terminates by itself."""
+    merge = partial(merge_sketch_batch, stream.sparkSession, key=key,
+                    path=path, depth=depth, width=width, seed=seed)
+    return state_store.start_sink(stream, merge, checkpoint, available_now)
 
 
 def read_histogram(spark, path: str) -> DataFrame:
     """Current histogram-sketch state (empty before the first batch)."""
-    manifest = os.path.join(path, "HIST_MANIFEST.json")
-    if not os.path.exists(manifest):
-        return spark.createDataFrame([], _HIST_SCHEMA)
-    with open(manifest) as f:
-        version = json.load(f)["version"]
-    return spark.read.parquet(os.path.join(path, f"hv={version}"))
+    return state_store.read(spark, path, _HISTOGRAM, _HIST_SCHEMA)
 
 
 def merge_histogram_batch(
@@ -253,35 +122,15 @@ def merge_histogram_batch(
     streaming histogram is EXACT (cell-wise equal to the batch build
     over all data seen). The range must be pinned up front — quantile
     serving at any time via
-    ``operators.sketches.quantiles_from_histogram``. Atomic
-    version-flip commit; a replayed foreachBatch epoch (``epoch <=``
-    the manifest's last applied) is a NO-OP, so at-least-once replays
-    never double-count bins."""
+    ``operators.sketches.quantiles_from_histogram``. Replays are
+    no-ops, as for :func:`merge_sketch_batch`."""
     from ..operators.sketches import histogram_sketch
 
-    manifest = os.path.join(path, "HIST_MANIFEST.json")
-    state = _manifest_state(manifest)
-    if _is_replay(state, epoch, stream_id):
-        return
-    delta = histogram_sketch(batch, col, n_bins=n_bins, lo=lo, hi=hi)
-    merged = (
-        read_histogram(spark, path)
-        .unionByName(
-            delta.select(
-                F.col("bin").cast("int"),
-                F.col("cnt").cast("long"),
-                "lo", "hi",
-                F.col("n_bins").cast("int"),
-            )
-        )
-        .groupBy("bin", "lo", "hi", "n_bins")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select("bin", "cnt", "lo", "hi", "n_bins")
+    state_store.add(
+        spark, histogram_sketch(batch, col, n_bins=n_bins, lo=lo, hi=hi),
+        ["bin", "lo", "hi", "n_bins"], path, _HISTOGRAM, _HIST_SCHEMA,
+        epoch=epoch, stream_id=stream_id,
     )
-    version = state["version"] + 1
-    merged.write.mode("overwrite").parquet(os.path.join(path, f"hv={version}"))
-    _commit_manifest(manifest, version, epoch, stream_id)
-    _gc_versions(path, "hv=")
 
 
 def streaming_histogram(
@@ -296,48 +145,26 @@ def streaming_histogram(
 ):
     """Maintain a quantile-serving histogram sketch over a stream;
     state is bounded by ``n_bins`` rows forever. ``available_now=True``
-    drains the current backlog and terminates by itself — the
-    batch-parity/catch-up mode, same as :func:`streaming_ams_f2`."""
-    spark = stream.sparkSession
-
-    def _merge(batch: DataFrame, epoch: int) -> None:
-        merge_histogram_batch(
-            spark, batch, col, path, lo=lo, hi=hi, n_bins=n_bins,
-            epoch=epoch, stream_id=checkpoint,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    drains the current backlog and terminates by itself."""
+    merge = partial(merge_histogram_batch, stream.sparkSession, col=col,
+                    path=path, lo=lo, hi=hi, n_bins=n_bins)
+    return state_store.start_sink(stream, merge, checkpoint, available_now)
 
 
 # ---------------------------------------------------------------------------
-# Streaming AMS F₂ maintenance (round 7): the second-frequency-moment
-# sketch is ADD-mergeable at the atom level — each estimator's state is
-# the signed sum Z_j = Σ_u sign_j(u)·c_u, and a micro-batch contributes
+# Streaming AMS F₂ maintenance: the second-frequency-moment sketch is
+# ADD-mergeable at the atom level — each estimator's state is the
+# signed sum Z_j = Σ_u sign_j(u)·c_u, and a micro-batch contributes
 # Σ_rows sign_j(key) to it, so state' = state + delta exactly. 8 rows
 # of state forever; estimate F₂ ≈ Z_j² served via mean/median across
 # estimators (see queries.ams_f2_sketch_audit for the batch twin and
-# the sign-hash convention). Same versioned-manifest + epoch-replay
-# contract as the count-min/histogram paths above.
+# the sign-hash convention).
 # ---------------------------------------------------------------------------
-
-_AMS_SCHEMA = "j INT, z BIGINT"
 
 
 def read_ams(spark, path: str) -> DataFrame:
     """Current AMS state (empty before the first batch)."""
-    manifest = os.path.join(path, "AMS_MANIFEST.json")
-    if not os.path.exists(manifest):
-        return spark.createDataFrame([], _AMS_SCHEMA)
-    with open(manifest) as f:
-        version = json.load(f)["version"]
-    return spark.read.parquet(os.path.join(path, f"av={version}"))
+    return state_store.read(spark, path, _AMS, _AMS_SCHEMA)
 
 
 def _ams_batch_delta(batch: DataFrame, key: str, n_estimators: int) -> DataFrame:
@@ -388,24 +215,11 @@ def merge_ams_batch(
     stream_id: str | None = None,
 ) -> None:
     """state' = state + ams(batch): per-estimator signed sums add.
-    Atomic version-flip commit; a replayed foreachBatch epoch
-    (``epoch <=`` the manifest's last applied, SAME ``stream_id``) is a
-    NO-OP (see :func:`_is_replay`)."""
-    manifest = os.path.join(path, "AMS_MANIFEST.json")
-    state = _manifest_state(manifest)
-    if _is_replay(state, epoch, stream_id):
-        return
-    delta = _ams_batch_delta(batch, key, n_estimators)
-    merged = (
-        read_ams(spark, path)
-        .unionByName(delta.select(F.col("j").cast("int"), "z"))
-        .groupBy("j")
-        .agg(F.sum("z").cast("long").alias("z"))
+    Replays are no-ops, as for :func:`merge_sketch_batch`."""
+    state_store.add(
+        spark, _ams_batch_delta(batch, key, n_estimators), ["j"], path,
+        _AMS, _AMS_SCHEMA, epoch=epoch, stream_id=stream_id,
     )
-    version = state["version"] + 1
-    merged.write.mode("overwrite").parquet(os.path.join(path, f"av={version}"))
-    _commit_manifest(manifest, version, epoch, stream_id)
-    _gc_versions(path, "av=")
 
 
 def ams_f2_estimate(spark, path: str) -> DataFrame:
@@ -430,23 +244,8 @@ def streaming_ams_f2(
     available_now: bool = False,
 ):
     """Maintain the AMS F₂ sketch over a stream; serve with
-    :func:`ams_f2_estimate` at any time. ``available_now=True`` runs
-    with ``Trigger.AvailableNow`` — drains everything currently in the
-    source (still honoring ``maxFilesPerTrigger`` batching) and stops
-    by itself, so a bounded caller can just ``awaitTermination()``."""
-    spark = stream.sparkSession
-
-    def _merge(batch: DataFrame, epoch: int) -> None:
-        merge_ams_batch(
-            spark, batch, key, path,
-            n_estimators=n_estimators, epoch=epoch, stream_id=checkpoint,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    :func:`ams_f2_estimate` at any time. ``available_now=True`` drains
+    the current backlog and terminates by itself."""
+    merge = partial(merge_ams_batch, stream.sparkSession, key=key,
+                    path=path, n_estimators=n_estimators)
+    return state_store.start_sink(stream, merge, checkpoint, available_now)

@@ -17,7 +17,9 @@ built-in file sink is append-only). Each micro-batch:
    directory is unreferenced garbage, never a corrupt snapshot. This is
    exactly the miniature of a table format's commit protocol (Iceberg /
    Delta flip a metadata pointer over immutable data files), so the
-   local layout upgrades 1:1 to a cluster object store.
+   local layout upgrades 1:1 to a cluster object store. The flip and
+   the GC of old versions are streaming/state_store.py's, shared with
+   the sketch and aggregate sinks.
 
 Exactly-once story: ``foreachBatch`` re-delivers a batch after failure.
 Seed the snapshot WITH the ``seq_col`` so every row records the change
@@ -36,12 +38,11 @@ in flight (time travel is the same dial turned up).
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.merge import merge_apply
+from .state_store import gc, versions, write_atomic
 
 MANIFEST = "_MANIFEST"
 _VERSION_PREFIX = "v"
@@ -63,39 +64,13 @@ def current_version(root: str) -> str | None:
 
 
 def _commit(root: str, version: str) -> None:
-    """Atomically point the manifest at ``version``: write a unique temp
-    file, fsync it, ``os.replace`` over the manifest (atomic on POSIX —
-    readers see either the old or the new pointer, never a partial
-    write), then fsync the parent DIRECTORY so the rename itself is
-    durable — without it a power loss could persist a later GC unlink
-    but not this rename, leaving the manifest pointing at a deleted
-    version."""
-    tmp = _manifest_path(root) + f".{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        f.write(version + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(root))
-    dfd = os.open(root, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
+    """Atomically and durably point the manifest at ``version``."""
+    write_atomic(_manifest_path(root), version + "\n")
 
 
 def _gc(root: str, keep_versions: int) -> None:
-    """Drop version directories older than the newest ``keep_versions``.
-    Only unreferenced history is removed; the committed version is always
-    within the kept suffix because version numbers are monotonic."""
-    versions = sorted(
-        d
-        for d in os.listdir(root)
-        if d.startswith(_VERSION_PREFIX)
-        and d[len(_VERSION_PREFIX) :].isdigit()
-        and os.path.isdir(os.path.join(root, d))
-    )
-    for d in versions[: max(0, len(versions) - keep_versions)]:
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    """Drop version directories older than the newest ``keep_versions``."""
+    gc(root, _VERSION_PREFIX, keep_versions)
 
 
 def init_snapshot(df: DataFrame, root: str) -> str:
@@ -110,13 +85,7 @@ def init_snapshot(df: DataFrame, root: str) -> str:
 def list_versions(root: str) -> list[str]:
     """Version directories still on disk, oldest first (the committed
     one plus up to ``keep_versions - 1`` predecessors)."""
-    return sorted(
-        d
-        for d in os.listdir(root)
-        if d.startswith(_VERSION_PREFIX)
-        and d[len(_VERSION_PREFIX) :].isdigit()
-        and os.path.isdir(os.path.join(root, d))
-    )
+    return versions(root, _VERSION_PREFIX)
 
 
 def read_snapshot(
@@ -243,7 +212,7 @@ def apply_cdc_stream(
             os.path.join(snapshot_path, nxt)
         )
         _commit(snapshot_path, nxt)
-        _gc(snapshot_path, max(2, keep_versions))
+        _gc(snapshot_path, keep_versions)
 
     writer = changes_stream.writeStream.foreachBatch(merge_batch)
     if checkpoint:

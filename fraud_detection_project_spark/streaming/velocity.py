@@ -135,118 +135,3 @@ def streaming_velocity(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas form (Spark 4.x stateful API)
-# ---------------------------------------------------------------------------
-
-
-class _VelocityProcessor:
-    """StatefulProcessor computing the same exact trailing-window count
-    as :func:`streaming_velocity`, on the Spark 4.x
-    ``transformWithStateInPandas`` API (typed state handles + named
-    timers; requires the RocksDB state store provider).
-
-    Declared as a plain class and re-parented onto StatefulProcessor at
-    import time so module import works even if the API is unavailable.
-    """
-
-    def __init__(self, key_col: str, ts_col: str, out_col: str, window_seconds: int):
-        self._key = key_col
-        self._ts = ts_col
-        self._out = out_col
-        self._w = int(window_seconds)
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("ts_ns", "ts_ns array<bigint>")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import numpy as np
-        import pandas as pd
-
-        batches = [pdf for pdf in rows if len(pdf)]
-        if not batches:
-            return
-        batch = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
-        window_ns = self._w * 1_000_000_000
-
-        new_ts = batch[self._ts].values.astype("datetime64[ns]").astype("int64")
-        old_ts = np.empty(0, dtype="int64")
-        if self._state.exists():
-            val = self._state.get()
-            if val is not None and val[0] is not None:
-                old_ts = np.asarray(val[0], dtype="int64")
-
-        all_ts = np.concatenate([old_ts, new_ts])
-        all_ts.sort(kind="stable")
-        lo = np.searchsorted(all_ts, new_ts - window_ns, side="right")
-        hi = np.searchsorted(all_ts, new_ts, side="right")
-        counts = hi - lo - 1
-
-        max_ts = int(all_ts[-1])
-        keep = all_ts[all_ts > max_ts - window_ns]
-        self._state.update((keep.tolist(),))
-        # evictable once the watermark passes newest-event + W
-        self._handle.registerTimer(max_ts // 1_000_000 + self._w * 1000)
-
-        out = batch.copy()
-        out[self._out] = counts.astype("int64")
-        yield out
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # Timers accumulate (one per input batch); only honor one that is
-        # actually past the newest event + W — earlier stale timers for a
-        # since-refreshed key must not clear live state.
-        import numpy as np  # noqa: F401  (kept for symmetry with handleInputRows)
-
-        if self._state.exists():
-            val = self._state.get()
-            if val is not None and val[0]:
-                newest_ms = max(val[0]) // 1_000_000
-                if expiredTimerInfo.getExpiryTimeInMs() < newest_ms + self._w * 1000:
-                    return iter(())
-        self._state.clear()
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_velocity_tws(
-    stream: DataFrame,
-    key: str,
-    ts_col: str = "ts",
-    out_col: str = "velocity_24h",
-    window_seconds: int = 86400,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """:func:`streaming_velocity` on ``transformWithStateInPandas``
-    (Spark ≥ 4.0): typed ValueState + named timers instead of the
-    applyInPandasWithState GroupState/timeout pairing. Same exact
-    semantics and the same batch oracle; state layout and eviction rule
-    are identical. Requires
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider`` (changelog-checkpointed, so state far
-    larger than executor memory still works — the 100 TB path) and the
-    ``protobuf`` package at runtime (the TWS state-server wire protocol;
-    not bundled in this container, so tests skip — the
-    applyInPandasWithState form above is the tested equivalent).
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    proc_cls = type("VelocityProcessor", (StatefulProcessor,), dict(_VelocityProcessor.__dict__))
-    out_schema = StructType(
-        list(stream.schema.fields) + [StructField(out_col, LongType(), True)]
-    )
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key))
-        .transformWithStateInPandas(
-            statefulProcessor=proc_cls(key, ts_col, out_col, window_seconds),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="EventTime",
-        )
-    )

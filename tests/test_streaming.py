@@ -317,50 +317,6 @@ def test_session_window_stream_matches_batch_sessionize(spark, events_src, tmp_p
     assert w.count() > 0
 
 
-def test_streaming_velocity_tws_matches_batch_window(spark, events_src, tmp_path):
-    """Same contract as test_streaming_velocity_matches_batch_window, on
-    the Spark 4.x transformWithStateInPandas API (RocksDB state store).
-
-    The TWS state-server protocol needs the ``protobuf`` package
-    (pyspark/sql/streaming/proto/StateMessage_pb2.py) — absent in this
-    container (re-checked round 3: ``import google.protobuf`` fails and
-    installs are disallowed; re-checked round 6 per VERDICT #7: a
-    full-disk search finds no protobuf wheel or site-packages copy to
-    vendor — only typeshed stubs — and the generated pb2 needs the real
-    descriptor-pool runtime, which cannot be meaningfully stubbed), so
-    the test skips; applyInPandasWithState covers the identical
-    semantics above.
-    """
-    pytest.importorskip("google.protobuf")
-    from fraud_detection_project_spark.streaming.velocity import streaming_velocity_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        batch = spark.read.parquet(events_src)
-        out = streaming_velocity_tws(
-            _read_stream(spark, events_src, batch.schema),
-            "user_id",
-            ts_col="ts",
-            out_col="v24h",
-        )
-        got = _run_stream(spark, out, str(tmp_path / "ckpt_tws")).select(
-            "user_id", "ts", "v24h"
-        )
-        want = _batch_oracle_velocity(spark, events_src)
-        assert got.count() == batch.count()
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 class TestStreamingUpsert:
     def test_microbatched_cdc_equals_batch_merge(self, spark, tmp_path):
         """3 micro-batches through the foreachBatch upsert sink produce
@@ -913,8 +869,10 @@ class TestStreamingAggMaintenance:
             merge_aggregate_state,
         )
         from fraud_detection_project_spark.streaming.incremental import (
-            _commit,
             read_state,
+        )
+        from fraud_detection_project_spark.streaming.state_store import (
+            commit as _commit,
         )
 
         path = str(tmp_path / "state")
