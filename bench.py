@@ -40,7 +40,7 @@ def ml_prep_pipeline(spark, sf_dir: str):
 
     from fraud_detection_project_spark.catalog import load_table
     from fraud_detection_project_spark.ml.imbalance import undersample_majority
-    from fraud_detection_project_spark.ml.prep import NativeFeaturePrep
+    from fraud_detection_project_spark.ml.prep import build_feature_pipeline
     from fraud_detection_project_spark.ml.split import id_hash_split
     from fraud_detection_project_spark.operators.windows import rolling_count_24h
 
@@ -60,10 +60,8 @@ def ml_prep_pipeline(spark, sf_dir: str):
     # Persist the SHARED split frame, projected to what fit/transform
     # read (event_id only feeds the split hash — already applied), so
     # BOTH branches reuse one scan→shuffle→window pass. Persisting only
-    # `train` (the pre-r13 shape) made the test branch re-run the whole
-    # upstream plan — the q5 plan showed a second Scan+Exchange+Window
-    # subtree feeding the union (guide §1.2 "remove unnecessary passes",
-    # §5 caching-when-reused; plans/r13/q5_ml_prep_{before,after}.txt).
+    # `train` would make the test branch re-run the whole upstream plan:
+    # a second Scan+Exchange+Window subtree feeding the union.
     from pyspark import StorageLevel
 
     split = split.select(
@@ -72,12 +70,9 @@ def ml_prep_pipeline(spark, sf_dir: str):
     train = split.filter(F.col("split") == "train")
     test = split.filter(F.col("split") == "test")
 
-    # DataFrame-native prep twin (ml/prep.py:NativeFeaturePrep) — same
-    # semantics as the MLlib pipeline (slot-for-slot test in test_ml.py)
-    # with fit collapsed to two small aggregates instead of MLlib's
-    # per-estimator RDD passes
-    pipe = NativeFeaturePrep(["value", "txn_24h", "hour"], ["event_type"])
-    model = pipe.fit(train)
+    model = build_feature_pipeline(
+        ["value", "txn_24h", "hour"], ["event_type"]
+    ).fit(train)
     train_proc = model.transform(train)
     test_proc = model.transform(test)
     resampled = undersample_majority(train_proc.select("label", "features"), "label")
@@ -102,7 +97,7 @@ def main() -> None:
     consume(QUERIES["cleaning_chain"](spark, sf_dir))
 
     # best-of-3 per workload: this host shows ±15-30% noise from
-    # co-tenant load, and q5's wide codegen (window + grouping-sets fit)
+    # co-tenant load, and q5's wide codegen (window + prep transform)
     # JIT-compiles on its first execution — measured spread run0..run3 =
     # 11.8/1.9/1.7/1.6s, so two runs can still catch a compile tail.
     # min-of-n is the standard estimator for the machine-limited time
@@ -112,21 +107,8 @@ def main() -> None:
     first_run: dict[str, float] = {}
 
     def clear_persisted() -> None:
-        # Measurement-honesty guard (round 13): q5 persists its shared
-        # split frame INSIDE the timed pipeline; because every repeat
-        # builds a canonically identical plan, Spark's CacheManager
-        # would substitute repeat 1's cached blocks into repeats 2-3
-        # ("Asked to cache already cached data", observed), so best-of-3
-        # would time cached reads instead of the declared
-        # compute-from-parquet. Dropping persisted RDDs + cached plans
-        # BETWEEN repeats (outside the timed window) makes every repeat
-        # pay the full scan→shuffle→window compute, cache fill included
-        # — the same isolation tools/bench_scale.py applies between
-        # workloads.
-        for jrdd in list(
-            spark.sparkContext._jsc.getPersistentRDDs().values()
-        ):
-            jrdd.unpersist(False)
+        # q5 persists its split frame inside the timed pipeline; repeats
+        # must compute from parquet, not read repeat 1's cached blocks
         spark.catalog.clearCache()
 
     for name, build in workloads.items():
@@ -158,22 +140,18 @@ def main() -> None:
         # local[cpus] this run used: tells "honoured but bound by fixed
         # cost" apart from "ignored" when SPARK_GRAFT_CPUS changes
         "cpus": host_stamp()["cpus"],
-        # host-contention context (VERDICT r6 item 7): this box is a
-        # co-tenant VM with a documented ±50% timing band — 1/5/15-min
-        # load averages let a reader judge whether a swing is noise
+        # host-contention context: on a co-tenant VM with a ±50% timing
+        # band, 1/5/15-min load averages tell a swing from noise
         "loadavg": [round(x, 2) for x in os.getloadavg()],
     }
     # Attach the measured 10x scaling decade when tools/bench_scale.py
     # has produced one stamped with this run's host and cores
     # (SCALING.md is the human-readable twin).
-    # BENCH-artifact self-sufficiency (VERDICT r11 item 3): the driver
-    # keeps only the TAIL (~2000 chars) of stdout, so embedding the
-    # full per-cell decade table pushed the warm headline out of
-    # BENCH_r11.json and left an unparseable truncated line. stdout
-    # therefore carries ONE compact JSON line — headline + the decade's
-    # per-workload EXPONENTS (the number the 100 TB grade reads) — and
-    # the full per-cell decade goes to stderr (and lives whole in
-    # .scale_data/scaling.json + SCALING.md).
+    # stdout carries ONE compact JSON line — headline + the decade's
+    # per-workload exponents — because a consumer that keeps only the
+    # tail (~2000 chars) of stdout would otherwise lose the headline to
+    # a truncated line; the full per-cell decade goes to stderr (and
+    # lives whole in .scale_data/scaling.json + SCALING.md).
     scaling = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            ".scale_data", "scaling.json")
     decade = None
@@ -192,7 +170,7 @@ def main() -> None:
         out["scaling_exponents"] = exps
         if exps:
             out["scaling_max_exponent"] = max(exps.values())
-        # the three-cell overhead-corrected fit (round 13): the max
+        # the three-cell overhead-corrected fit: the max
         # CORRECTED exponent is the headline growth-law number; the
         # per-workload dict stays in scaling.json/SCALING.md (the
         # raw per-workload exponents already fill the size budget)

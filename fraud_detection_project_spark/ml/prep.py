@@ -9,7 +9,9 @@ multi-column ``StringIndexer(handleInvalid='keep')`` and ONE multi-column
 ``OneHotEncoder(handleInvalid='keep', dropLast=False)`` covering every
 categorical, final assembler → one ``features`` vector column. ``fit``
 is the only action: the scaler's moments plus a single value-count pass
-for all categorical columns, not one pass per column.
+for all categorical columns, not one pass per column. This is the only
+fitted prep: ``Processor``, ``bench.py`` q5 and ``score_stream`` (which
+takes a ``PipelineModel``) all use it.
 
 Parity note (SURVEY hard-list #3): sklearn standardizes with population
 std (ddof=0), MLlib with sample std (ddof=1). :func:`standardize` (the
@@ -30,22 +32,20 @@ from pyspark.ml.feature import (
 )
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def build_feature_pipeline(
     num_cols: Sequence[str],
     cat_cols: Sequence[str],
-    output_col: str = "features",
-    with_mean: bool = True,
-    with_std: bool = True,
 ) -> Pipeline:
     """M2+M3+M4 composed: numeric scaling + unknown-tolerant one-hot.
 
     ``handleInvalid='keep'`` on both indexer and encoder reproduces
     sklearn's ``handle_unknown='ignore'`` contract: categories unseen at
     fit time transform without error. ``dropLast=False`` matches
-    sklearn's default of keeping every category level.
+    sklearn's default of keeping every category level. Numerics are
+    centred and scaled (MLlib's sample std); the output column is
+    ``features``.
     """
     stages = []
     assembled_inputs: list[str] = []
@@ -60,8 +60,8 @@ def build_feature_pipeline(
             StandardScaler(
                 inputCol="__num_vec",
                 outputCol="__num_scaled",
-                withMean=with_mean,
-                withStd=with_std,
+                withMean=True,
+                withStd=True,
             )
         )
         assembled_inputs.append("__num_scaled")
@@ -86,16 +86,16 @@ def build_feature_pipeline(
         )
         assembled_inputs.extend(ohe_cols)
 
-    stages.append(VectorAssembler(inputCols=assembled_inputs, outputCol=output_col))
+    stages.append(VectorAssembler(inputCols=assembled_inputs, outputCol="features"))
     return Pipeline(stages=stages)
 
 
-def feature_names_out(model: PipelineModel, df: DataFrame, output_col: str = "features") -> list[str]:
+def feature_names_out(model: PipelineModel, df: DataFrame) -> list[str]:
     """M8 (``get_feature_names_out``, ``transform_data.py:128``): read the
     assembled vector's ``ml_attr`` metadata for per-slot feature names.
     """
     transformed = model.transform(df.limit(1))
-    meta = transformed.schema[output_col].metadata
+    meta = transformed.schema["features"].metadata
     attrs = meta.get("ml_attr", {}).get("attrs", {})
     named: list[tuple[int, str]] = []
     for group in attrs.values():
@@ -157,211 +157,6 @@ def one_hot_columns(
             f"{p}_{safe}", (F.col(col) == F.lit(cat)).cast("int")
         )
     return df
-
-
-class NativeFeaturePrep:
-    """DataFrame-native twin of :func:`build_feature_pipeline` — same
-    contract (M2+M3+M4: train-only fit, frequencyDesc string indexing,
-    unknown-tolerant one-hot with ``dropLast=False``, sample-std
-    scaling), built from first principles on DataFrame aggregates
-    instead of MLlib estimators.
-
-    Why it exists: MLlib's ``StandardScaler.fit`` and
-    ``StringIndexer.fit`` each cost ~1 s of RDD-path overhead per call
-    at bench scale even though both are one small aggregate. Here fit is
-    exactly TWO jobs regardless of column count: one plain agg for all
-    numeric moments, and one melted groupBy covering EVERY categorical
-    column at once (explode a per-row array of (col, value) structs →
-    count → per-column rank). Transform is pure whole-stage-codegen
-    column arithmetic finished by ``array_to_vector`` (JVM, no Python).
-    ``tests/test_ml.py`` asserts slot-for-slot equality with the MLlib
-    pipeline's output vectors.
-
-    ``Processor`` keeps the MLlib pipeline: on the fraud job (3k rows,
-    ~180 countries) this twin measured slower, 47.0 s against 29.0 s
-    for one cold request on 4 cores, because the country column takes
-    the broadcast-join path and the transform builds a 240-slot
-    ``when`` array.
-
-    Categorical values are indexed via their STRING form — the same
-    cast MLlib's ``StringIndexer`` applies — so the melted vocab frame
-    has one schema for all columns. Indexing uses a literal CASE chain
-    (fine for low-cardinality dims); above ``max_case_categories`` the
-    model falls back to a broadcast-joined mapping table so a
-    high-cardinality vocab never builds a giant expression tree.
-
-    ``max_categories`` bounds the driver-side vocab collection: only
-    the top-``max_categories`` values per column (count desc, value
-    asc — frequencyDesc order) are collected; overflow values index to
-    the unseen bucket, the same slot ``handleInvalid='keep'`` already
-    reserves. Without the cap an unexpectedly high-cardinality column
-    is a driver OOM at scale (VERDICT r3).
-    """
-
-    def __init__(
-        self,
-        num_cols: Sequence[str],
-        cat_cols: Sequence[str],
-        output_col: str = "features",
-        with_mean: bool = True,
-        with_std: bool = True,
-        max_case_categories: int = 64,
-        max_categories: int = 10_000,
-    ) -> None:
-        self.num_cols = list(num_cols)
-        self.cat_cols = list(cat_cols)
-        self.output_col = output_col
-        self.with_mean = with_mean
-        self.with_std = with_std
-        self.max_case_categories = max_case_categories
-        self.max_categories = max_categories
-
-    def fit(self, df: DataFrame) -> "NativeFeaturePrepModel":
-        moments: dict = {}
-        vocabs: dict[str, list] = {c: [] for c in self.cat_cols}
-        num_aggs = []
-        for c in self.num_cols:
-            num_aggs.append(F.avg(c).alias(f"m_{c}"))
-            num_aggs.append(F.stddev_samp(c).alias(f"s_{c}"))
-
-        if not self.cat_cols:
-            if self.num_cols:
-                row = df.agg(*num_aggs).first()
-                moments = {
-                    c: (row[f"m_{c}"], row[f"s_{c}"]) for c in self.num_cols
-                }
-            return NativeFeaturePrepModel(self, moments, vocabs)
-
-        # ONE job / one shuffle for the whole fit: GROUPING SETS over
-        # (()) ∪ ((c) for each categorical). The global () row carries
-        # the numeric moments; each (c) row carries one category's
-        # count. grouping_id() tells the sets apart (bit=1 ⟺ column
-        # aggregated-over), so a real null category value is not
-        # confused with "column not in this set". StringIndexer
-        # frequencyDesc order: count desc, string value asc; a
-        # per-set rank caps the driver collect at max_categories rows
-        # per column (overflow → unseen bucket).
-        cats = [F.col(c).cast("string").alias(f"__cat_{c}") for c in self.cat_cols]
-        cat_names = [f"__cat_{c}" for c in self.cat_cols]
-        proj = df.select(*df.columns, *cats)
-        all_mask = (1 << len(cat_names)) - 1
-        masks = {
-            c: all_mask & ~(1 << (len(cat_names) - 1 - i))
-            for i, c in enumerate(self.cat_cols)
-        }
-        gs = proj.groupingSets(
-            [[]] + [[n] for n in cat_names], *[F.col(n) for n in cat_names]
-        ).agg(
-            F.grouping_id().alias("__gid"),
-            F.count(F.lit(1)).alias("__n"),
-            *num_aggs,
-        )
-        val = F.lit(None).cast("string")
-        for c in self.cat_cols:
-            val = F.when(F.col("__gid") == F.lit(masks[c]), F.col(f"__cat_{c}")).otherwise(val)
-        w = Window.partitionBy("__gid").orderBy(F.desc("__n"), F.asc("__v"))
-        rows = (
-            gs.withColumn("__v", val)
-            .filter(
-                (F.col("__gid") == F.lit(all_mask)) | F.col("__v").isNotNull()
-            )
-            .withColumn("__rk", F.row_number().over(w))
-            .filter(
-                (F.col("__gid") == F.lit(all_mask))
-                | (F.col("__rk") <= F.lit(int(self.max_categories)))
-            )
-            .collect()
-        )
-        gid_to_col = {m: c for c, m in masks.items()}
-        vocab_rows = {c: [] for c in self.cat_cols}
-        for r in rows:
-            if r["__gid"] == all_mask:
-                moments = {
-                    c: (r[f"m_{c}"], r[f"s_{c}"]) for c in self.num_cols
-                }
-            else:
-                vocab_rows[gid_to_col[r["__gid"]]].append(
-                    (-r["__n"], r["__v"], r["__rk"])
-                )
-        for c in self.cat_cols:
-            vocabs[c] = [v for _, v, _ in sorted(vocab_rows[c])]
-        return NativeFeaturePrepModel(self, moments, vocabs)
-
-
-class NativeFeaturePrepModel:
-    def __init__(self, prep: NativeFeaturePrep, moments: dict, vocabs: dict) -> None:
-        self.prep = prep
-        self.moments = moments
-        self.vocabs = vocabs
-
-    def _scaled(self, c: str):
-        mean, std = self.moments[c]
-        # VectorAssembler(handleInvalid="keep") turns null into NaN
-        x = F.coalesce(F.col(c).cast("double"), F.lit(float("nan")))
-        if self.prep.with_mean:
-            x = x - F.lit(float(mean))
-        if self.prep.with_std:
-            # std==0/None zeroes only real inputs: MLlib emits NaN for a
-            # null (NaN) value even under a 0.0 multiplier, so NaN must
-            # stay NaN for slot parity on constant train columns
-            x = F.when(
-                F.lit(std is not None and std > 0),
-                x / F.lit(float(std) if std else 1.0),
-            ).otherwise(F.when(F.isnan(x), x).otherwise(F.lit(0.0)))
-        return x
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        from pyspark.ml.functions import array_to_vector
-
-        slots = [self._scaled(c) for c in self.prep.num_cols]
-        for c in self.prep.cat_cols:
-            vocab = self.vocabs[c]
-            k = len(vocab)
-            # index on the STRING form — the StringIndexer cast — which
-            # is also what fit() collected
-            cs = F.col(c).cast("string")
-            if k <= self.prep.max_case_categories:
-                idx = F.lit(k)  # unseen / null / overflow -> keep bucket
-                for j in range(k - 1, -1, -1):
-                    idx = F.when(cs == F.lit(vocab[j]), F.lit(j)).otherwise(idx)
-            else:
-                mapping = df.sparkSession.createDataFrame(
-                    [(v, j) for j, v in enumerate(vocab)],
-                    f"__catval_{c} string, __idx_{c} int",
-                )
-                df = df.withColumn(f"__catval_{c}", cs).join(
-                    F.broadcast(mapping), on=f"__catval_{c}", how="left"
-                )
-                idx = F.coalesce(F.col(f"__idx_{c}"), F.lit(k))
-            # dropLast=False + handleInvalid=keep on BOTH stages: the
-            # indexer reserves slot k for unseen, and the encoder adds
-            # its own (never-reached) invalid slot k+1 — k+2 total,
-            # matching the MLlib pipeline vector slot-for-slot
-            slots.extend(
-                [
-                    F.when(idx == F.lit(j), F.lit(1.0)).otherwise(F.lit(0.0))
-                    for j in range(k + 2)
-                ]
-            )
-        out = df.withColumn(
-            self.prep.output_col, array_to_vector(F.array(*slots))
-        )
-        return out.drop(
-            *[
-                c
-                for c in out.columns
-                if c.startswith("__idx_") or c.startswith("__catval_")
-            ]
-        )
-
-    def feature_names_out(self) -> list[str]:
-        names = [f"{c}_scaled" for c in self.prep.num_cols]
-        for c in self.prep.cat_cols:
-            names += [f"{c}_{v}" for v in self.vocabs[c]] + [
-                f"{c}__unseen",
-                f"{c}__invalid",
-            ]
-        return names
 
 
 def winsorize(

@@ -57,7 +57,6 @@ def velocity_features(
     keys: dict[str, str],
     window_seconds: int = 86400,
     tick: int = 1,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """The reference's three velocity features in one pass
     (``transform_data.py:59-65``): ``{out_col: key_col}`` e.g.
@@ -67,15 +66,9 @@ def velocity_features(
     Each key is its own shuffle; they are independent, so AQE pipelines
     them. (The global pre-sort the reference does is unnecessary — each
     window spec carries its own ordering.)
-
-    ``skew_safe=True`` routes every key through
-    :func:`rolling_count_sliced` — same results, partitions bounded by
-    (key, time-slice) instead of a key's whole history. Use it when an
-    entity key can be hot (one device/IP with a large share of events).
     """
-    fn = rolling_count_sliced if skew_safe else rolling_count_24h
     for out_col, key in keys.items():
-        df = fn(
+        df = rolling_count_24h(
             df, key, time_col, out_col, window_seconds=window_seconds, tick=tick
         )
     return df

@@ -4,6 +4,7 @@ unknown-category tolerance, imbalance invariants (SURVEY.md §5.4)."""
 from __future__ import annotations
 
 import math
+import statistics
 
 import pytest
 from pyspark.sql import Row
@@ -102,12 +103,63 @@ class TestPipeline:
         assert len(names) == 5
         assert any("num" in n for n in names)
 
-    def test_unknown_category_tolerated(self, labeled, spark):
-        pipe = build_feature_pipeline(["num"], ["cat"])
-        model = pipe.fit(labeled)
-        unseen = spark.createDataFrame([Row(id=1, label=0, f=[0.0], cat="ZZZ", num=1.0)])
-        row = model.transform(unseen).select("features").first()[0]
-        assert row is not None  # no exception — sklearn handle_unknown='ignore'
+    def test_unknown_category_tolerated(self, spark):
+        """Exact slot layout of the fitted prep: one scaled numeric, then
+        a k+2-wide categorical block — k frequencyDesc levels, the
+        indexer's ``keep`` slot (index k, fired by unseen AND null
+        categories) and the encoder's never-reached ``keep`` slot.
+        A null numeric stays NaN; a constant train column (std 0)
+        scales real values to 0.0 and keeps NaN as NaN."""
+        schema = "id long, x double, cat string"
+        nan = float("nan")
+        # frequencyDesc, ties by value: a(4) b(2) c(2) -> a=0, b=1, c=2
+        train = [
+            (1, 10.0, "a"), (2, 12.0, "b"), (3, 14.0, "a"), (4, 9.0, "c"),
+            (5, 11.0, "b"), (6, 13.0, "a"), (7, 8.5, "c"), (8, 10.5, "a"),
+        ]
+        xs = [x for _, x, _ in train]
+        mean, std = statistics.mean(xs), statistics.stdev(xs)  # sample std
+        cases = [
+            (
+                train,
+                # an unseen category, a null numeric, a null category
+                [(9, 20.0, "zz"), (10, None, "a"), (11, 7.0, None)],
+                {
+                    9: [(20.0 - mean) / std, 0.0, 0.0, 0.0, 1.0, 0.0],
+                    10: [nan, 1.0, 0.0, 0.0, 0.0, 0.0],
+                    11: [(7.0 - mean) / std, 0.0, 0.0, 0.0, 1.0, 0.0],
+                },
+            ),
+            (
+                # constant train column: a=0, b=1, k=2
+                [(1, 5.0, "a"), (2, 5.0, "b"), (3, 5.0, "a")],
+                [(4, 5.0, "a"), (5, None, "b"), (6, 7.0, None)],
+                {
+                    4: [0.0, 1.0, 0.0, 0.0, 0.0],
+                    5: [nan, 0.0, 1.0, 0.0, 0.0],
+                    6: [0.0, 0.0, 0.0, 1.0, 0.0],
+                },
+            ),
+        ]
+        for train_rows, test_rows, want in cases:
+            model = build_feature_pipeline(["x"], ["cat"]).fit(
+                spark.createDataFrame(train_rows, schema)
+            )
+            got = {
+                r["id"]: list(r["features"].toArray())
+                for r in model.transform(spark.createDataFrame(test_rows, schema))
+                .select("id", "features")
+                .collect()
+            }
+            assert got.keys() == want.keys()
+            for k, vec in want.items():
+                assert len(got[k]) == len(vec), (k, got[k])
+                if math.isnan(vec[0]):
+                    assert math.isnan(got[k][0]), (k, got[k])
+                else:
+                    assert got[k][0] == pytest.approx(vec[0], rel=1e-12), (k, got[k])
+                # one-hot slots are exact
+                assert got[k][1:] == vec[1:], (k, got[k])
 
     def test_one_hot_columns(self, spark):
         df = spark.createDataFrame([Row(c="x"), Row(c="y"), Row(c="zzz")])
@@ -296,150 +348,6 @@ class TestClustering:
         ]
         # probing the single trained cell containing the blob → full recall
         assert set(approx) == set(exact)
-
-
-class TestNativeFeaturePrep:
-    def test_matches_mllib_pipeline_slot_for_slot(self, spark):
-        from fraud_detection_project_spark.ml.prep import (
-            NativeFeaturePrep,
-            build_feature_pipeline,
-        )
-
-        train = spark.createDataFrame(
-            [
-                (1, 10.0, "a"), (2, 12.0, "b"), (3, 14.0, "a"), (4, 9.0, "c"),
-                (5, 11.0, "b"), (6, 13.0, "a"), (7, 8.5, "c"), (8, 10.5, "a"),
-            ],
-            "id long, x double, cat string",
-        )
-        # test split carries an UNSEEN category and a null numeric
-        test = spark.createDataFrame(
-            [(9, 20.0, "zz"), (10, None, "a"), (11, 7.0, None)],
-            "id long, x double, cat string",
-        )
-
-        mllib = build_feature_pipeline(["x"], ["cat"]).fit(train)
-        native = NativeFeaturePrep(["x"], ["cat"]).fit(train)
-
-        for df in (train, test):
-            got = {
-                r["id"]: list(r["features"].toArray())
-                for r in native.transform(df).select("id", "features").collect()
-            }
-            want = {
-                r["id"]: list(r["features"].toArray())
-                for r in mllib.transform(df).select("id", "features").collect()
-            }
-            assert got.keys() == want.keys()
-            for k in want:
-                assert len(got[k]) == len(want[k]), (k, got[k], want[k])
-                for a, b in zip(got[k], want[k]):
-                    if b != b:  # NaN slot
-                        assert a != a
-                    else:
-                        assert abs(a - b) <= 1e-9 * max(1.0, abs(b)), (k, got[k], want[k])
-
-    def test_constant_train_column_null_test_parity(self, spark):
-        """std==0 edge: a constant train column must zero real values but
-        keep null-as-NaN test values NaN, exactly as MLlib's NaN·0.0
-        multiplier does (ADVICE r2: prep.py std==0 branch)."""
-        from fraud_detection_project_spark.ml.prep import (
-            NativeFeaturePrep,
-            build_feature_pipeline,
-        )
-
-        train = spark.createDataFrame(
-            [(1, 5.0, "a"), (2, 5.0, "b"), (3, 5.0, "a")],
-            "id long, x double, cat string",
-        )
-        test = spark.createDataFrame(
-            [(4, 5.0, "a"), (5, None, "b"), (6, 7.0, None)],
-            "id long, x double, cat string",
-        )
-        mllib = build_feature_pipeline(["x"], ["cat"]).fit(train)
-        native = NativeFeaturePrep(["x"], ["cat"]).fit(train)
-        for df in (train, test):
-            got = {
-                r["id"]: list(r["features"].toArray())
-                for r in native.transform(df).select("id", "features").collect()
-            }
-            want = {
-                r["id"]: list(r["features"].toArray())
-                for r in mllib.transform(df).select("id", "features").collect()
-            }
-            assert got.keys() == want.keys()
-            for k in want:
-                for a, b in zip(got[k], want[k]):
-                    if b != b:
-                        assert a != a, (k, got[k], want[k])
-                    else:
-                        assert abs(a - b) <= 1e-12, (k, got[k], want[k])
-
-    def test_feature_names_match_mllib_metadata(self, spark):
-        from fraud_detection_project_spark.ml.prep import (
-            NativeFeaturePrep,
-            build_feature_pipeline,
-            feature_names_out,
-        )
-
-        train = spark.createDataFrame(
-            [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "a")],
-            "id long, x double, cat string",
-        )
-        native = NativeFeaturePrep(["x"], ["cat"]).fit(train)
-        assert len(native.feature_names_out()) == len(
-            feature_names_out(build_feature_pipeline(["x"], ["cat"]).fit(train), train)
-        )
-
-    def test_high_cardinality_broadcast_path(self, spark):
-        from fraud_detection_project_spark.ml.prep import NativeFeaturePrep
-
-        rows = [(i, float(i % 7), f"c{i % 100}") for i in range(400)]
-        df = spark.createDataFrame(rows, "id long, x double, cat string")
-        prep = NativeFeaturePrep(["x"], ["cat"], max_case_categories=16)
-        out = prep.fit(df).transform(df)
-        vec = out.select("features").first()["features"].toArray()
-        assert len(vec) == 1 + 100 + 2  # scaled x + 100 cats + unseen + invalid slots
-        assert abs(sum(vec[1:]) - 1.0) < 1e-12  # exactly one indicator fires
-
-    def test_max_categories_cap_overflow_to_unseen(self, spark):
-        """max_categories bounds the driver vocab collect (VERDICT r3):
-        values past the cap (frequencyDesc order) index to the unseen
-        bucket, the handleInvalid='keep' slot."""
-        from fraud_detection_project_spark.ml.prep import NativeFeaturePrep
-
-        # freq: a x4, b x3, c x2, d x1 — cap at 2 keeps [a, b]
-        rows = (
-            [(i, 1.0, "a") for i in range(4)]
-            + [(10 + i, 1.0, "b") for i in range(3)]
-            + [(20 + i, 1.0, "c") for i in range(2)]
-            + [(30, 1.0, "d")]
-        )
-        df = spark.createDataFrame(rows, "id long, x double, cat string")
-        m = NativeFeaturePrep([], ["cat"], max_categories=2).fit(df)
-        assert m.vocabs["cat"] == ["a", "b"]
-        got = {
-            r["id"]: list(r["features"].toArray())
-            for r in m.transform(df).select("id", "features").collect()
-        }
-        # slots: [a, b, unseen(k=2), invalid] — c/d rows fire unseen
-        assert got[0] == [1.0, 0.0, 0.0, 0.0]
-        assert got[10] == [0.0, 1.0, 0.0, 0.0]
-        assert got[20] == [0.0, 0.0, 1.0, 0.0]
-        assert got[30] == [0.0, 0.0, 1.0, 0.0]
-
-    def test_fit_is_single_vocab_job_multi_column(self, spark):
-        """Two categorical columns fit in ONE melted pass and match the
-        per-column frequencyDesc order."""
-        from fraud_detection_project_spark.ml.prep import NativeFeaturePrep
-
-        df = spark.createDataFrame(
-            [(1, "a", "x"), (2, "a", "y"), (3, "b", "y"), (4, "b", "y"), (5, "b", "z")],
-            "id long, c1 string, c2 string",
-        )
-        m = NativeFeaturePrep([], ["c1", "c2"]).fit(df)
-        assert m.vocabs["c1"] == ["b", "a"]
-        assert m.vocabs["c2"] == ["y", "x", "z"]
 
 
 class TestPrepEncoders:

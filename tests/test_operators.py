@@ -220,21 +220,6 @@ class TestRollingCountSliced:
                 df, "k", "t", "c", window_seconds=86400, slice_seconds=3600
             )
 
-    def test_velocity_features_skew_safe(self, spark):
-        from fraud_detection_project_spark.operators.windows import (
-            velocity_features,
-        )
-
-        df = self._mk_skewed(spark).withColumn("k2", F.col("id") % 3)
-        keys = {"v_k": "k", "v_k2": "k2"}
-        a = velocity_features(df, "t", keys, window_seconds=86400).collect()
-        b = velocity_features(
-            df, "t", keys, window_seconds=86400, skew_safe=True
-        ).collect()
-        ka = sorted((r["id"], r["v_k"], r["v_k2"]) for r in a)
-        kb = sorted((r["id"], r["v_k"], r["v_k2"]) for r in b)
-        assert ka == kb
-
 
 class TestCleaning:
     def test_handle_missing_drop(self, spark):

@@ -564,28 +564,6 @@ class TestStreamingZscore:
         assert n_scored > 0
 
 
-def test_native_prep_scores_stream(spark, events_src, tmp_path):
-    """NativeFeaturePrep's transform is pure column arithmetic + one
-    broadcast — no state, no shuffle — so a batch-fitted model drops
-    straight into a streaming plan (same contract as the MLlib scorer
-    in streaming/scoring.py, minus the JVM estimator overhead)."""
-    from fraud_detection_project_spark.ml.prep import NativeFeaturePrep
-
-    batch = spark.read.parquet(events_src)
-    model = NativeFeaturePrep(["value"], ["event_type"]).fit(batch)
-
-    scored = model.transform(
-        _read_stream(spark, events_src, batch.schema)
-    ).select("event_id", "features")
-    assert scored.isStreaming
-    got = _run_stream(spark, scored, str(tmp_path / "ck_np"))
-
-    want = model.transform(batch).select("event_id", "features")
-    assert got.count() == want.count()
-    pairs = got.alias("g").join(want.alias("w"), "event_id")
-    assert pairs.filter(F.col("g.features") != F.col("w.features")).count() == 0
-
-
 def test_streaming_decontamination_matches_batch_operator(spark, tmp_path):
     """The stateless streaming contamination score (append mode, no
     state) agrees with both its own batch form and the batch
