@@ -280,16 +280,15 @@ class Catalog:
 
 
 def load_csv_datasets(
-    spark: SparkSession,
-    dataset_paths: dict[str, str],
-    schemas: dict[str, T.StructType] | None = None,
+    spark: SparkSession, dataset_paths: dict[str, str]
 ) -> dict[str, DataFrame | None]:
     """Multi-dataset CSV loader (reference S1/S3, ``load_data.py:19-55``).
 
     Iterates the *passed* dict (the reference's intended-but-buggy
     behavior — it iterated a nonexistent global instead, SURVEY.md
     defects). Missing file → ``None`` entry, matching ``load_data.py:50-53``.
-    Explicit schema per dataset when provided; header inference otherwise.
+    Column types come from header inference, as in the reference's
+    ``pd.read_csv``.
     """
     ensure_runtime_confs(spark)
     out: dict[str, DataFrame | None] = {}
@@ -297,45 +296,5 @@ def load_csv_datasets(
         if not os.path.exists(path):
             out[name] = None
             continue
-        reader = spark.read.option("header", True)
-        if schemas and name in schemas:
-            reader = reader.schema(schemas[name])
-        else:
-            reader = reader.option("inferSchema", True)
-        out[name] = reader.csv(path)
+        out[name] = spark.read.option("header", True).option("inferSchema", True).csv(path)
     return out
-
-
-def read_json_robust(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    corrupt_col: str = "_corrupt_record",
-):
-    """JSON-lines ingestion that survives bad input: PERMISSIVE mode
-    parses what it can, routes unparseable lines into ``corrupt_col``
-    whole, and never fails the job — the only viable contract for
-    100 TB of third-party feed data (FAILFAST dies on byte one,
-    DROPMALFORMED silently loses data; quarantining keeps evidence).
-
-    Returns (clean_df, corrupt_df): clean rows without the quarantine
-    column, and quarantined raw lines for the dead-letter sink. Schema
-    is explicit (never inferSchema — an extra full scan at scale, and
-    feed drift would silently change types).
-    """
-    from pyspark.sql import functions as F
-
-    full_schema = f"{schema}, {corrupt_col} STRING"
-    df = (
-        spark.read.schema(full_schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-        # Spark refuses to answer queries that touch ONLY the corrupt
-        # column straight off the scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-        # — cache the parsed frame so both outputs read one parse
-        .cache()
-    )
-    corrupt = df.filter(F.col(corrupt_col).isNotNull()).select(corrupt_col)
-    clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    return clean, corrupt

@@ -153,8 +153,7 @@ def bounded_literal(spark, data, schema, reason: str) -> DataFrame:
 
 
 def release_checkpoint(df: DataFrame) -> None:
-    """Best-effort unpersist of a SUPERSEDED ``localCheckpoint``-ed
-    frame's blocks (optimization guide §5).
+    """Unpersist a SUPERSEDED ``localCheckpoint``-ed frame's blocks.
 
     The iterative graph operators (connected_components' star rounds,
     k_core's H-index rounds, page_rank's power iterations) truncate
@@ -170,15 +169,15 @@ def release_checkpoint(df: DataFrame) -> None:
     any later action on a released frame fails — never release a frame
     that still feeds a live plan.
 
-    No-op (never raises) when the frame is not a materialized
-    checkpoint or the py4j internals shift under a future Spark.
+    No-op when the frame's analyzed plan is not a ``LogicalRDD`` (not a
+    materialized checkpoint, e.g. k_core's round-1 degree aggregate).
+    A py4j failure propagates: if a Spark upgrade moves ``analyzed()``
+    or ``LogicalRDD.rdd()``, the loops must fail loudly rather than
+    silently stop freeing their rounds.
     """
-    try:
-        logical = df._jdf.queryExecution().analyzed()
-        if logical.getClass().getName().endswith("LogicalRDD"):
-            logical.rdd().unpersist(False)
-    except Exception:
-        pass
+    logical = df._jdf.queryExecution().analyzed()
+    if logical.getClass().getName().endswith("LogicalRDD"):
+        logical.rdd().unpersist(False)
 
 
 def is_bounded_ckpt_scan(plan_line: str) -> bool:

@@ -5,7 +5,7 @@ the reference's intended API (``Processor.preprocess_dataset``,
 
 from .split import id_hash_split, stratified_split
 from .prep import build_feature_pipeline, feature_names_out, standardize
-from .imbalance import undersample_majority, oversample_minority_naive, smote
+from .imbalance import undersample_majority, smote
 from .evaluate import (auc_roc, auc_roc_binned, average_precision, binary_metrics,
                        calibration_bins, log_loss)
 from .drift import ks_two_sample, psi
@@ -18,7 +18,6 @@ __all__ = [
     "feature_names_out",
     "standardize",
     "undersample_majority",
-    "oversample_minority_naive",
     "smote",
     "auc_roc",
     "auc_roc_binned",

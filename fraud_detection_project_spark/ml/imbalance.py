@@ -57,13 +57,10 @@ def undersample_exact(
     label_col: str,
     order_cols: list[str],
     seed: int = 42,
-    n_target: int | None = None,
-    n_salt: int = 32,
 ) -> DataFrame:
     """M7 exact variant mirroring ``RandomUnderSampler``
-    (``transform_data.py:107``): every class keeps EXACTLY
-    ``min(class_count, n_target)`` rows (default ``n_target`` = the
-    minority count), not just the Bernoulli expectation.
+    (``transform_data.py:107``): every class keeps EXACTLY the minority
+    count of rows, not just the Bernoulli expectation.
 
     Selection order is a seeded ``xxhash64`` over ``order_cols`` —
     uniform and deterministic for a fixed (seed, key set), independent
@@ -72,20 +69,19 @@ def undersample_exact(
 
     Scale design — no single-partition-per-class sort, no driver action:
 
-    1. salt = pmod(hash, n_salt): rank windows partition by
-       (label, salt), so a 100-TB majority class spreads over
-       ``n_salt`` tasks instead of one;
+    1. salt = pmod(hash, 32): rank windows partition by (label, salt),
+       so a 100-TB majority class spreads over 32 tasks instead of one;
     2. per-(label, salt) row counts are a tiny aggregate; a running sum
        over salt order turns local ranks into a global rank within the
        deterministic (salt, hash) total order;
-    3. ``n_target`` (when defaulted) is a one-row broadcast aggregate
-       joined in — never ``.collect()``-ed.
+    3. the minority count is a one-row broadcast aggregate joined in —
+       never ``.collect()``-ed.
     """
     from pyspark.sql import Window
 
     h = F.xxhash64(*[F.col(c) for c in order_cols], F.lit(seed))
     salted = df.withColumn("__h", h).withColumn(
-        "__salt", F.pmod(F.col("__h"), F.lit(n_salt)).cast("int")
+        "__salt", F.pmod(F.col("__h"), F.lit(32)).cast("int")
     )
 
     local_rank = (
@@ -108,38 +104,14 @@ def undersample_exact(
         "__off", F.coalesce(F.sum("__cnt").over(off_w), F.lit(0))
     ).select(label_col, "__salt", "__off")
 
-    if n_target is None:
-        per_class = salted.groupBy(label_col).agg(F.count(F.lit(1)).alias("__n"))
-        n_min = per_class.agg(F.min("__n").alias("__n_keep"))
-        keep_df = F.broadcast(n_min)
-        cond_join = ranked.join(F.broadcast(offsets), [label_col, "__salt"]).crossJoin(
-            keep_df
-        )
-    else:
-        cond_join = ranked.join(F.broadcast(offsets), [label_col, "__salt"]).withColumn(
-            "__n_keep", F.lit(int(n_target))
-        )
+    per_class = salted.groupBy(label_col).agg(F.count(F.lit(1)).alias("__n"))
+    n_min = per_class.agg(F.min("__n").alias("__n_keep"))
+    cond_join = ranked.join(F.broadcast(offsets), [label_col, "__salt"]).crossJoin(
+        F.broadcast(n_min)
+    )
 
     kept = cond_join.filter(F.col("__rn") + F.col("__off") < F.col("__n_keep"))
     return kept.drop("__h", "__salt", "__rn", "__off", "__n_keep")
-
-
-def oversample_minority_naive(
-    df: DataFrame, label_col: str, seed: int = 42
-) -> DataFrame:
-    """Tier-1 oversampler: resample minority rows with replacement up to
-    ~the majority count (no synthesis)."""
-    counts = class_counts(df, label_col)
-    n_maj = max(counts.values())
-    out = df
-    for label, n in counts.items():
-        if n < n_maj:
-            extra = (
-                df.filter(F.col(label_col) == F.lit(label))
-                .sample(withReplacement=True, fraction=(n_maj - n) / n, seed=seed)
-            )
-            out = out.unionByName(extra)
-    return out
 
 
 def smote(
@@ -149,20 +121,16 @@ def smote(
     id_col: str,
     k: int = 5,
     seed: int = 42,
-    bucket_width: float | None = None,
-    target_count: int | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """M6: distributed SMOTE (``SMOTE(random_state=42)``,
     ``transform_data.py:23,107``). ``features_col`` is array<numeric>.
 
-    Synthesizes ``target_count - n_min`` minority rows (default: up to
-    the majority count) and unions them with the input. Synthetic rows
-    carry ``id_col = -1``. Deterministic for a fixed (seed, id set).
+    Synthesizes minority rows up to the majority count and unions them
+    with the input. Synthetic rows carry ``id_col = -1``. Deterministic
+    for a fixed (seed, id set).
 
-    When ``dim`` is not given, the feature width rides along in the
-    SAME class-count aggregate — no separate ``.first()`` driver job
-    (VERDICT r7 item 5).
+    The feature width rides along in the SAME class-count aggregate —
+    no separate ``.first()`` job.
     """
     # F.size(NULL array) is -1 under non-ANSI semantics, so size() is
     # guarded with a when(): an all-null class must yield __d = NULL
@@ -178,16 +146,14 @@ def smote(
     counts = {r[0]: r["__n"] for r in stats0}
     minority_label = min(counts, key=counts.get)
     n_min = counts[minority_label]
-    n_target = target_count if target_count is not None else max(counts.values())
-    needed = n_target - n_min
+    needed = max(counts.values()) - n_min
     if needed <= 0:
         return df
 
-    if dim is None:
-        dims = [r["__d"] for r in stats0 if r["__d"] is not None]
-        if not dims:
-            raise ValueError(f"{features_col} has no non-null vectors")
-        dim = max(dims)
+    dims = [r["__d"] for r in stats0 if r["__d"] is not None]
+    if not dims:
+        raise ValueError(f"{features_col} has no non-null vectors")
+    dim = max(dims)
     minority = df.filter(F.col(label_col) == F.lit(minority_label)).select(
         F.col(id_col).cast("long").alias("__id"),
         F.col(features_col).cast("array<double>").alias("__feat"),
@@ -197,16 +163,13 @@ def smote(
     # per-group pandas memory regardless of input scale. The projection
     # spread is estimated with one cheap agg (≈6σ covers the mass).
     proj_col = _projection(minority, "__feat", dim, seed)
-    if bucket_width is None:
-        TARGET_BUCKET = 4096
-        stats = minority.select(
-            F.stddev_samp(proj_col).alias("sd"), F.count(F.lit(1)).alias("n")
-        ).first()
-        sd = stats["sd"] or 1.0
-        n_buckets = max(1, int(np.ceil((stats["n"] or 1) / TARGET_BUCKET)))
-        width = max(6.0 * sd / n_buckets, 1e-9)
-    else:
-        width = bucket_width
+    TARGET_BUCKET = 4096
+    stats = minority.select(
+        F.stddev_samp(proj_col).alias("sd"), F.count(F.lit(1)).alias("n")
+    ).first()
+    sd = stats["sd"] or 1.0
+    n_buckets = max(1, int(np.ceil((stats["n"] or 1) / TARGET_BUCKET)))
+    width = max(6.0 * sd / n_buckets, 1e-9)
 
     # deterministic per-row synthesis quota: distribute `needed` across
     # minority rows by (bucket, id) rank — base + 1 for the first

@@ -104,43 +104,29 @@ def feature_names_out(model: PipelineModel, df: DataFrame) -> list[str]:
     return [n for _, n in sorted(named)]
 
 
-def standardize(
-    df: DataFrame,
-    cols: Sequence[str],
-    ddof: int = 0,
-    suffix: str = "_scaled",
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Pure-DataFrame z-scoring: ``(x - mean) / std``.
+def standardize(df: DataFrame, cols: Sequence[str], ddof: int = 0) -> DataFrame:
+    """Pure-DataFrame z-scoring into ``{col}_scaled``: ``(x - mean) / std``
+    with the moments fitted on ``df``.
 
     ``ddof=0`` is sklearn's convention (``transform_data.py:85``),
-    ``ddof=1`` MLlib's. Train-only-fit contract: pass ``stats`` computed
-    on the train split (via :func:`standardize_stats`) to transform any
-    other frame with the same moments. One tree-aggregate + a broadcast
-    join — no per-column passes.
+    ``ddof=1`` MLlib's. One tree-aggregate + a broadcast join — no
+    per-column passes. Zero-variance columns scale to 0.0.
     """
-    if stats is None:
-        stats = standardize_stats(df, cols, ddof)
-    out = df.crossJoin(F.broadcast(stats))
+    std_fn = F.stddev_pop if ddof == 0 else F.stddev_samp
+    aggs = []
+    for c in cols:
+        aggs.append(F.avg(c).alias(f"__mean_{c}"))
+        aggs.append(std_fn(c).alias(f"__std_{c}"))
+    out = df.crossJoin(F.broadcast(df.select(*aggs)))
     for c in cols:
         out = out.withColumn(
-            c + suffix,
+            c + "_scaled",
             F.when(
                 F.col(f"__std_{c}") > 0,
                 (F.col(c) - F.col(f"__mean_{c}")) / F.col(f"__std_{c}"),
             ).otherwise(F.lit(0.0)),
         )
     return out.drop(*[f"__mean_{c}" for c in cols], *[f"__std_{c}" for c in cols])
-
-
-def standardize_stats(df: DataFrame, cols: Sequence[str], ddof: int = 0) -> DataFrame:
-    """Single-row frame of per-column mean/std (the scaler's fit step)."""
-    std_fn = F.stddev_pop if ddof == 0 else F.stddev_samp
-    aggs = []
-    for c in cols:
-        aggs.append(F.avg(c).alias(f"__mean_{c}"))
-        aggs.append(std_fn(c).alias(f"__std_{c}"))
-    return df.select(*aggs)
 
 
 def one_hot_columns(
@@ -200,10 +186,10 @@ def target_encode(
     train: DataFrame,
     cat_col: str,
     target_col: str,
-    out_col: str | None = None,
     smoothing: float = 10.0,
 ):
-    """Mean target encoding with additive smoothing, train-only fit:
+    """Mean target encoding into ``{cat_col}_te`` with additive
+    smoothing, train-only fit:
     ``enc(c) = (sum_c + prior·m) / (n_c + m)`` where ``prior`` is the
     global target mean and ``m`` the smoothing mass — the standard
     high-cardinality categorical encoder (one-hot explodes at 10⁶
@@ -215,7 +201,7 @@ def target_encode(
     contract of the one-hot path). Fit is one groupBy over train; no
     driver collection.
     """
-    out_col = out_col or f"{cat_col}_te"
+    out_col = f"{cat_col}_te"
     prior_df = train.agg(
         F.avg(target_col).alias("__prior"), F.count(target_col).alias("__n")
     )
@@ -248,26 +234,26 @@ def target_encode(
     return enc.drop("__prior"), transform
 
 
-def robust_scale(
-    df: DataFrame,
-    cols: Sequence[str],
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Median/IQR scaling (sklearn ``RobustScaler`` parity):
-    ``(x - median) / (q3 - q1)`` per column — the outlier-insensitive
-    alternative to z-scoring (mean and σ are both unbounded under a
-    single corrupt value; median and IQR are 25%-breakdown robust).
+def robust_scale(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """Median/IQR scaling (sklearn ``RobustScaler`` parity) into
+    ``{col}_scaled``: ``(x - median) / (q3 - q1)`` per column, fitted on
+    ``df`` — the outlier-insensitive alternative to z-scoring (mean and
+    σ are both unbounded under a single corrupt value; median and IQR
+    are 25%-breakdown robust).
 
-    ``stats`` carries a fitted one-row frame (from
-    :func:`robust_scale_stats`) for the train-only-fit contract;
-    omitted, it is fitted on ``df`` itself. Zero-IQR columns scale to
-    0.0 (matching the zero-variance convention in :func:`standardize`).
-    One aggregate pass; the clip is codegen arithmetic off a broadcast
-    one-row join.
+    Zero-IQR columns scale to 0.0 (matching the zero-variance convention
+    in :func:`standardize`); NULLs stay NULL. One aggregate pass; the
+    scaling is codegen arithmetic off a broadcast one-row join.
     """
-    if stats is None:
-        stats = robust_scale_stats(df, cols)
-    out = df.crossJoin(F.broadcast(stats))
+    aggs = []
+    for c in cols:
+        aggs += [
+            F.percentile(c, F.lit(0.5)).alias(f"__med_{c}"),
+            (
+                F.percentile(c, F.lit(0.75)) - F.percentile(c, F.lit(0.25))
+            ).alias(f"__iqr_{c}"),
+        ]
+    out = df.crossJoin(F.broadcast(df.agg(*aggs)))
     for c in cols:
         iqr = F.col(f"__iqr_{c}")
         scaled = F.when(
@@ -279,53 +265,22 @@ def robust_scale(
     )
 
 
-def robust_scale_stats(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """One-row (median, IQR) frame per column — the fit half."""
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.percentile(c, F.lit(0.5)).alias(f"__med_{c}"),
-            (
-                F.percentile(c, F.lit(0.75)) - F.percentile(c, F.lit(0.25))
-            ).alias(f"__iqr_{c}"),
-        ]
-    return df.agg(*aggs)
-
-
-def quantile_discretize(
-    df: DataFrame,
-    col: str,
-    n_bins: int = 4,
-    stats: DataFrame | None = None,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Equal-frequency binning (MLlib ``QuantileDiscretizer`` with
-    EXACT boundaries instead of its approximate sketch): fit the
-    ``n_bins - 1`` interior percentile boundaries, assign
-    ``bin = #{boundaries < x}`` ∈ [0, n_bins). Fit is one aggregate; the
-    assignment is a fold over the tiny boundary array off a broadcast
-    one-row join — no per-row UDF, no window. ``stats`` (from
-    :func:`quantile_discretize_stats`) carries a train-fitted boundary
-    frame for the train-only-fit contract. NULLs pass through as NULL.
+def quantile_discretize(df: DataFrame, col: str, n_bins: int = 4) -> DataFrame:
+    """Equal-frequency binning into ``{col}_bin`` (MLlib
+    ``QuantileDiscretizer`` with EXACT boundaries instead of its
+    approximate sketch): fit the ``n_bins - 1`` interior percentile
+    boundaries on ``df``, assign ``bin = #{boundaries < x}`` ∈
+    [0, n_bins). Fit is one aggregate; the assignment is a fold over the
+    tiny boundary array off a broadcast one-row join — no per-row UDF,
+    no window. NULLs pass through as NULL.
     """
-    out_col = out_col or f"{col}_bin"
-    if stats is None:
-        stats = quantile_discretize_stats(df, col, n_bins)
-    out = df.crossJoin(F.broadcast(stats))
+    fracs = [i / n_bins for i in range(1, n_bins)]
+    bounds = df.agg(
+        F.array(*[F.percentile(col, F.lit(f)) for f in fracs]).alias(f"__bnds_{col}")
+    )
+    out = df.crossJoin(F.broadcast(bounds))
     bnds = F.col(f"__bnds_{col}")
     bin_ = F.size(F.filter(bnds, lambda b: b < F.col(col)))
     return out.withColumn(
-        out_col, F.when(F.col(col).isNotNull(), bin_).cast("int")
+        f"{col}_bin", F.when(F.col(col).isNotNull(), bin_).cast("int")
     ).drop(f"__bnds_{col}")
-
-
-def quantile_discretize_stats(
-    df: DataFrame, col: str, n_bins: int = 4
-) -> DataFrame:
-    """One-row frame with the interior exact-percentile boundaries."""
-    fracs = [i / n_bins for i in range(1, n_bins)]
-    return df.agg(
-        F.array(
-            *[F.percentile(col, F.lit(f)) for f in fracs]
-        ).alias(f"__bnds_{col}")
-    )

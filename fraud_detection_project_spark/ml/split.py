@@ -30,18 +30,17 @@ def id_hash_split(
     id_col: str,
     train_fraction: float = 0.8,
     salt: int = 0,
-    split_col: str = "split",
 ) -> DataFrame:
     """Deterministic split: ``(id*K + salt) mod 100 < train_pct``.
 
-    Adds ``split_col`` ∈ {'train','test'}. Stratification is implicit:
+    Adds ``split`` ∈ {'train','test'}. Stratification is implicit:
     the hash is independent of any feature, so every stratum lands
     ~train_fraction in expectation.
     """
     pct = int(round(train_fraction * 100))
     bucket = F.pmod(F.col(id_col).cast("long") * F.lit(_KNUTH) + F.lit(salt), F.lit(100))
     return df.withColumn(
-        split_col, F.when(bucket < pct, F.lit("train")).otherwise(F.lit("test"))
+        "split", F.when(bucket < pct, F.lit("train")).otherwise(F.lit("test"))
     )
 
 
@@ -69,7 +68,6 @@ def kfold_assign(
     id_col: str,
     k: int = 5,
     seed: int = 42,
-    fold_col: str = "fold",
 ) -> DataFrame:
     """Deterministic k-fold assignment: ``fold = pmod(xxhash64(id, seed), k)``.
 
@@ -81,40 +79,8 @@ def kfold_assign(
     is 100 TB and sklearn's KFold would build k index arrays).
     """
     return df.withColumn(
-        fold_col,
+        "fold",
         F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(k)).cast("int"),
-    )
-
-
-def weighted_sample(
-    df: DataFrame,
-    weight_col: str,
-    k: int,
-    id_cols: Sequence[str],
-    seed: int = 42,
-) -> DataFrame:
-    """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis
-    exponential keys): each row draws ``u = hash-uniform(id, seed)`` and
-    scores ``key = ln(u) / w``; the top-k keys are the sample, with
-    inclusion probability proportional to weight — the distributed
-    analogue of ``np.random.choice(..., replace=False, p=w)``.
-
-    Scale: one narrow projection + TakeOrderedAndProject (k rows per
-    partition cross the wire). Deterministic for a fixed (seed,
-    ``id_cols``) — every executor derives the same keys, no RNG state.
-    Rows with NULL or non-positive weight are excluded (standard
-    contract). ``id_cols`` must uniquely identify rows.
-    """
-    # uniform in (0, 1]: 63-bit positive hash scaled; +1 avoids ln(0)
-    h = F.abs(F.xxhash64(*[F.col(c) for c in id_cols], F.lit(seed)))
-    u = (h.cast("double") + F.lit(1.0)) / F.lit(float(2**63))
-    key = F.log(u) / F.col(weight_col)
-    return (
-        df.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
-        .withColumn("__wkey", key)
-        .orderBy(F.desc("__wkey"), *id_cols)
-        .limit(k)
-        .drop("__wkey")
     )
 
 
@@ -130,16 +96,14 @@ _HASH_PRIME = 999983
 def sample_negatives(
     anchors: DataFrame,
     pool: DataFrame,
-    anchor_id: str = "anchor_id",
-    pool_id: str = "pool_id",
     k: int = 5,
     n_buckets: int | None = None,
     probe_buckets: int = 8,
     seed: int = 0,
 ) -> DataFrame:
-    """Deterministic contrastive negative sampling: for every anchor,
-    ``k`` pseudo-random negatives from ``pool``, WITHOUT an
-    anchors×pool product.
+    """Deterministic contrastive negative sampling: for every
+    ``anchor_id`` of ``anchors``, ``k`` pseudo-random negatives from the
+    ``pool_id`` column of ``pool``, WITHOUT an anchors×pool product.
 
     The contrastive-training staple (in-batch/global negatives for
     embedding models, DPO rejected-pair mining). A naive implementation
@@ -184,8 +148,8 @@ def sample_negatives(
     from pyspark.sql import Window
 
     P = _HASH_PRIME
-    a = anchors.select(F.col(anchor_id).cast("long").alias("__aid")).distinct()
-    p = pool.select(F.col(pool_id).cast("long").alias("__pid")).distinct()
+    a = anchors.select(F.col("anchor_id").cast("long").alias("__aid")).distinct()
+    p = pool.select(F.col("pool_id").cast("long").alias("__pid")).distinct()
     if n_buckets is None:
         target = max(8 * k, 2 * probe_buckets)
         pool_n = p.count()
@@ -217,8 +181,8 @@ def sample_negatives(
         cands.withColumn("neg_rank", F.row_number().over(w))
         .filter(F.col("neg_rank") <= k)
         .select(
-            F.col("__aid").alias(anchor_id),
-            F.col("__pid").alias(pool_id),
+            F.col("__aid").alias("anchor_id"),
+            F.col("__pid").alias("pool_id"),
             "neg_rank",
         )
     )

@@ -52,13 +52,10 @@ def convert_time_columns(df: DataFrame, time_columns: Sequence[str]) -> DataFram
     return df
 
 
-def remove_duplicates(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """A6 (``clean_data.py:37-42``): full-row (or keyed) distinct.
-
-    Hash-aggregate shuffle on all columns; at scale prefer a keyed subset
-    so the shuffle key is narrow.
-    """
-    return df.dropDuplicates(list(subset)) if subset else df.dropDuplicates()
+def remove_duplicates(df: DataFrame) -> DataFrame:
+    """A6 (``clean_data.py:37-42``): full-row distinct, one hash-aggregate
+    shuffle on all columns."""
+    return df.dropDuplicates()
 
 
 def convert_ip_to_int_column(

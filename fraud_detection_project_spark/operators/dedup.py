@@ -30,15 +30,16 @@ from pyspark.sql import functions as F
 from ..functions.text import alnum_tokens, normalized_text
 from ..lineage import release_checkpoint
 
-def spread_input(df: DataFrame, min_factor: int = 2) -> DataFrame:
-    """Round-robin repartition when the input arrives under-partitioned
-    (e.g. one compacted parquet file): heavy per-row text kernels would
-    otherwise run single-threaded regardless of cluster size. No-op when
-    the scan already has enough splits — the common case at scale.
-    (Measured: the sf0.1 documents table is one file; shingling it
-    single-threaded costs 4x the balanced run.)"""
+def spread_input(df: DataFrame) -> DataFrame:
+    """Round-robin repartition when the input has at most half as many
+    splits as the default parallelism (e.g. one compacted parquet file):
+    heavy per-row text kernels would otherwise run single-threaded
+    regardless of cluster size. No-op when the scan already has enough
+    splits — the common case at scale. (Measured: the sf0.1 documents
+    table is one file; shingling it single-threaded costs 4x the
+    balanced run.)"""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * min_factor <= target:
+    if df.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target)
     return df
 
@@ -75,11 +76,9 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     return pandas_udf(shingle, returnType="array<string>")(alnum_tokens(col))
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup by normalized content: one row per distinct text with
-    the smallest id as survivor + the duplicate count.
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact dedup by normalized ``text``: one row per distinct text with
+    the smallest ``doc_id`` as survivor + the duplicate count.
 
     The shuffle key is the xxhash64 fingerprint (8 bytes), not the text
     — at 100 TB this is the difference between shuffling hashes and
@@ -87,22 +86,21 @@ def exact_dedup(
     10¹¹ docs ≈ 0.3 expected; acceptable for dedup, and a collision only
     merges two unrelated docs, never loses both.)
     """
-    fp = F.xxhash64(normalized_text(text_col))
+    fp = F.xxhash64(normalized_text("text"))
     return (
-        df.select(F.col(id_col), fp.alias("fingerprint"))
+        df.select("doc_id", fp.alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
 
 
-def minhash_signature(
-    col: Column | str, num_hashes: int = 64, shingle_n: int = 3, seed: int = 42
-) -> Column:
-    """MinHash signature as array<long>: h_i = min over shingles of
-    ``x·a_i + b_i`` in wrapping 64-bit arithmetic, x = xxhash64(shingle).
+def minhash_signature(col: Column | str, num_hashes: int = 64) -> Column:
+    """MinHash signature as array<long>: h_i = min over word 3-gram
+    shingles of ``x·a_i + b_i`` in wrapping 64-bit arithmetic,
+    x = xxhash64(shingle), with coefficients drawn from seed 42.
 
     Odd ``a_i`` makes each map a bijection of Z/2⁶⁴ (the standard cheap
     permutation family for MinHash). One base string-hash pass +
@@ -111,12 +109,12 @@ def minhash_signature(
     """
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     coeffs = [
         (rng.randrange(0, 1 << 63) | 1, rng.randrange(0, 1 << 63))  # odd a → bijection
         for _ in range(num_hashes)
     ]
-    base = F.transform(word_shingles(col, shingle_n), lambda s: F.xxhash64(s))
+    base = F.transform(word_shingles(col, 3), lambda s: F.xxhash64(s))
     # String hashing stays JVM-side (one xxhash64 pass over shingles);
     # the num_hashes×shingles multiply-add/min fold crosses to numpy via
     # Arrow. A pure column form exists (aggregate + zip_with updating all
@@ -158,16 +156,13 @@ def _minhash_fold_udf(coeffs: list[tuple[int, int]]):
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
-    seed: int = 42,
 ) -> DataFrame:
-    """MinHash LSH candidate pairs: ``(id_a, id_b, sig_agreement)`` for
-    documents sharing ≥1 band bucket. ``sig_agreement`` (fraction of
-    matching signature slots) estimates Jaccard similarity.
+    """MinHash LSH candidate pairs: ``(id_a, id_b, sig_agreement)`` over
+    ``doc_id`` for documents whose ``text`` shares ≥1 band bucket.
+    ``sig_agreement`` (fraction of matching signature slots) estimates
+    Jaccard similarity.
 
     Plan shape: signature (narrow) → explode bands (×bands) → shuffle on
     (band_idx, band_hash) → within-bucket self-join → distinct pairs.
@@ -176,8 +171,8 @@ def minhash_lsh_pairs(
     """
     rows_per_band = num_hashes // bands
     sig = spread_input(df).select(
-        F.col(id_col).alias("id"),
-        minhash_signature(text_col, num_hashes, shingle_n, seed).alias("sig"),
+        F.col("doc_id").alias("id"),
+        minhash_signature("text", num_hashes).alias("sig"),
     )
     banded = sig.select(
         "id",
@@ -275,13 +270,9 @@ def simhash(col: Column | str) -> Column:
     return _simhash_fold_udf()(tok_hashes)
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs: Hamming(a,b) ≤ max_hamming.
+def simhash_near_dup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs of ``doc_id`` over ``text``:
+    Hamming(a,b) ≤ max_hamming.
 
     Blocking: split the 64-bit hash into ``max_hamming+1`` 16-bit chunks
     — by pigeonhole, any pair within the Hamming budget agrees on at
@@ -290,7 +281,7 @@ def simhash_near_dup_pairs(
     """
     n_chunks = max(max_hamming + 1, 4)
     chunk_bits = 64 // n_chunks
-    sh = spread_input(df).select(F.col(id_col).alias("id"), simhash(text_col).alias("sh"))
+    sh = spread_input(df).select(F.col("doc_id").alias("id"), simhash("text").alias("sh"))
     mask = (1 << chunk_bits) - 1
     chunks = sh.select(
         "id",
@@ -333,24 +324,22 @@ def _shingle_pair_common(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int,
     max_shingle_df: int,
 ) -> DataFrame:
     """Shared inverted-index pair stage of :func:`ngram_jaccard_pairs` /
     :func:`ngram_containment_pairs`: ``(id_a, id_b, n_a, n_b, common)``
-    with ``id_a < id_b`` — common distinct shingles per candidate pair,
-    hot shingles (document frequency > ``max_shingle_df``) dropped.
+    with ``id_a < id_b`` — common distinct word 3-gram shingles per
+    candidate pair, hot shingles (document frequency >
+    ``max_shingle_df``) dropped.
 
     Shingles fold to ``xxhash64`` BEFORE the inverted index
-    materializes (round 13, guide §2.3 "narrower types"): downstream
-    only ever compares shingles for EQUALITY, so every stage carries
-    8-byte longs instead of ~24-byte 3-word strings — measured −29%
-    on the whole pair stage at sf0.1. A 2⁻⁶⁴ per-pair collision is
-    accepted, exactly as in exact_dedup / ngram_contamination / the
-    hashed ROUGE grams.
+    materializes: downstream only ever compares shingles for EQUALITY,
+    so every stage carries 8-byte longs instead of ~24-byte 3-word
+    strings — measured −29% on the whole pair stage at sf0.1. A 2⁻⁶⁴
+    per-pair collision is accepted, exactly as in exact_dedup /
+    ngram_contamination / the hashed ROUGE grams.
 
-    Pair-candidate shape (round 13, guide §2.4 "remove shuffles
-    outright"; hot-shingle guard hardened round 14, ADVICE r13): ONE
+    Pair-candidate shape (no self-join shuffle): ONE
     ``groupBy(shingle)`` gathers each shingle's posting list as a
     sorted array of (id, n_sh) structs; candidate pairs expand INSIDE
     the array via codegen-planned array functions (the
@@ -359,11 +348,11 @@ def _shingle_pair_common(
 
     Stop-shingle guard: hot shingles (document frequency >
     ``max_shingle_df``) are pruned BEFORE the posting-list
-    aggregation. The round-13 shape filtered ``size(__docs)`` AFTER
-    ``collect_list``, which meant a shingle present in millions of
-    docs still materialized its whole posting list in ONE aggregation
-    buffer — unbounded memory at the 100 TB design point. The guard
-    is now the constant-memory count-aggregate form: a
+    aggregation. Filtering ``size(__docs)`` AFTER ``collect_list``
+    would let a shingle present in millions of docs materialize its
+    whole posting list in ONE aggregation buffer — unbounded memory at
+    the 100 TB design point. The guard is the constant-memory
+    count-aggregate form: a
     map-side-combined ``groupBy(shingle).count()`` (shuffles one
     (shingle, partial-count) row per shingle per task, never a list)
     names the tiny over-threshold set, and a ``left_anti`` join drops
@@ -380,7 +369,7 @@ def _shingle_pair_common(
     """
     sh = spread_input(df).select(
         F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(text_col, shingle_n)).alias("shingles"),
+        F.array_distinct(word_shingles(text_col, 3)).alias("shingles"),
     ).withColumn("n_sh", F.size("shingles"))
     # materialize the inverted index once: the shingle kernel must not
     # re-run when a caller's plan references the returned frame more
@@ -394,7 +383,7 @@ def _shingle_pair_common(
     # stop-shingle skew guard (a shingle shared by d docs contributes
     # d² candidate pairs): prune hot shingles BEFORE collecting any
     # posting list, so no aggregation buffer ever exceeds
-    # max_shingle_df entries (see docstring — ADVICE r13). The count
+    # max_shingle_df entries (see docstring). The count
     # aggregate is map-side combined; the hot set is tiny, so AQE
     # turns the anti-join into a broadcast.
     hot = (
@@ -437,11 +426,10 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int = 1000,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs above ``threshold``.
+    """Exact word 3-gram Jaccard similarity for pairs above ``threshold``.
 
     Inverted-index plan (see :func:`_shingle_pair_common` for the
     shared pair stage and its scale/skew contract): per-shingle
@@ -449,7 +437,7 @@ def ngram_jaccard_pairs(
     per pair → Jaccard = common / (|A| + |B| − common).
 
     The returned frame is ``localCheckpoint(eager=False)``-materialized
-    on first action (ADVICE r13): checkpoint blocks are executor-local
+    on first action: checkpoint blocks are executor-local
     and unreplicated, so on a real cluster an executor loss AFTER
     materialization fails downstream actions of this frame (lineage is
     truncated — no recompute) and blocks are retained until the frame
@@ -459,9 +447,7 @@ def ngram_jaccard_pairs(
     stage. Callers needing fault-tolerant recompute should re-derive
     from the inputs rather than hold this frame across long jobs.
     """
-    common = _shingle_pair_common(
-        df, text_col, id_col, shingle_n, max_shingle_df
-    )
+    common = _shingle_pair_common(df, text_col, id_col, max_shingle_df)
     jac = F.col("common").cast("double") / (
         F.col("n_a") + F.col("n_b") - F.col("common")
     ).cast("double")
@@ -469,7 +455,7 @@ def ngram_jaccard_pairs(
     # graph consumers reference it twice (symmetrize unions / edge
     # closures re-read the plan per branch), which re-ran the whole
     # posting+expand+agg stage per reference. Measured at ~sf1
-    # (round 13, interleaved best-of-4): pagerank-over-pairs 4.88 →
+    # (interleaved best-of-4): pagerank-over-pairs 4.88 →
     # 4.11 s, pairs→CC 4.47 → 3.96 s (single-consumer paths also win:
     # the pair stage completes as its own bounded job). Lazy, so the
     # first action pays the compute inside its own timed window —
@@ -483,7 +469,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
     local_threshold_edges: int = 32_000_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list → one row per
@@ -514,7 +499,7 @@ def connected_components(
     ``Observation`` on that checkpoint's own job yields the round's
     fingerprint ``(count, sum(xxhash64(u, v)))``, and the loop stops
     when two consecutive rounds give the same one — no driver action
-    beyond the checkpoint.
+    beyond the checkpoint. No fixpoint within 25 rounds raises.
     """
     size = Observation()
     e = (
@@ -603,7 +588,7 @@ def connected_components(
         )
 
     prev = None
-    for _ in range(max_iter):
+    for _ in range(25):
         fp = Observation()
         superseded = e
         e = (
@@ -617,7 +602,7 @@ def connected_components(
             break
         prev = cur
     else:
-        raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
+        raise RuntimeError("connected_components: no convergence in 25 rounds")
 
     # stars: every edge is (node, root); roots label themselves
     return (
@@ -690,15 +675,14 @@ def ngram_contamination(
     corpus: DataFrame,
     probes: DataFrame,
     n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark decontamination: which corpus documents share at least
-    one word ``n``-gram with any probe (benchmark/eval) document — the
-    standard 13-gram collision test run before training-set release.
+    one word ``n``-gram of their ``text`` with any probe (benchmark/eval)
+    document — the standard 13-gram collision test run before
+    training-set release.
 
     Returns one row per contaminated corpus doc:
-    ``(id_col, n_hit_ngrams, n_probe_docs)`` — distinct colliding
+    ``(doc_id, n_hit_ngrams, n_probe_docs)`` — distinct colliding
     shingles and distinct probe docs hit.
 
     Scale design (100 TB corpus, benchmark ≪ corpus): both sides
@@ -706,7 +690,7 @@ def ngram_contamination(
     (:func:`word_shingles`; short docs fall back to their whole text);
     shingles fold to ``xxhash64`` BEFORE the join so the probe side's
     distinct (hash, probe_id) set is benchmark-sized. The join is
-    HINT-FREE (round-10 census): AQE broadcasts the probe side while
+    HINT-FREE: AQE broadcasts the probe side while
     its MEASURED size is small — the benchmark-≪-corpus contract, under
     which the corpus is never shuffled — and degrades to a shuffle join
     on the 8-byte hash key if a caller feeds a corpus-sized probe set,
@@ -716,9 +700,9 @@ def ngram_contamination(
     """
     def shingled(df: DataFrame, out_id: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias(out_id),
+            F.col("doc_id").alias(out_id),
             F.explode(
-                F.array_distinct(word_shingles(text_col, n))
+                F.array_distinct(word_shingles("text", n))
             ).alias("__sh"),
         ).select(out_id, F.xxhash64("__sh").alias("__h"))
 
@@ -726,9 +710,9 @@ def ngram_contamination(
     # array_distinct per doc, and the final count_distinct absorbs the
     # ~2⁻⁶⁴ in-doc hash-collision case — no dedup pass needed
     probe_sh = shingled(probes, "__probe_id")
-    corpus_sh = shingled(spread_input(corpus), id_col)
+    corpus_sh = shingled(spread_input(corpus), "doc_id")
     hits = corpus_sh.join(probe_sh, "__h")
-    return hits.groupBy(id_col).agg(
+    return hits.groupBy("doc_id").agg(
         F.count_distinct("__h").alias("n_hit_ngrams"),
         F.count_distinct("__probe_id").alias("n_probe_docs"),
     )
@@ -737,12 +721,10 @@ def ngram_contamination(
 def substring_contamination(
     corpus: DataFrame,
     probes: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact-substring decontamination: which corpus documents contain
-    any of the literal ``probes`` inside their NORMALIZED text →
-    ``(id_col, probe)`` one row per (doc, probe) hit.
+    any of the literal ``probes`` inside their NORMALIZED ``text`` →
+    ``(doc_id, probe)`` one row per (doc, probe) hit.
 
     The companion of :func:`ngram_contamination` for probes shorter
     than the n-gram window (a leaked answer key, a canary string, a
@@ -755,33 +737,25 @@ def substring_contamination(
     Probes normalize with the same lowercase/strip pipeline as the
     corpus so punctuation variants still collide.
     """
-    from ..functions.text import normalized_text
-
     probe_arr = F.array(
         *[F.lit(p) for p in sorted(probes)]
     )
-    norm = normalized_text(text_col)
+    norm = normalized_text("text")
     return (
         corpus.select(
-            F.col(id_col),
+            "doc_id",
             F.filter(
                 probe_arr, lambda p: F.contains(norm, p)
             ).alias("__hits"),
         )
         .filter(F.size("__hits") > 0)
-        .select(F.col(id_col), F.explode("__hits").alias("probe"))
+        .select("doc_id", F.explode("__hits").alias("probe"))
     )
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_df: int = 1000,
-) -> DataFrame:
-    """Asymmetric n-gram CONTAINMENT for pairs: ``common / |A|`` and
+def ngram_containment_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Asymmetric word 3-gram CONTAINMENT for ``doc_id`` pairs over
+    ``text``: ``common / |A|`` and
     ``common / |B|`` — the quote/subset detector Jaccard misses when
     sizes differ (a 50-shingle doc fully inside a 5000-shingle doc has
     Jaccard ≈ 0.01 but containment 1.0; Broder's resemblance-vs-
@@ -793,13 +767,12 @@ def ngram_containment_pairs(
     lists behind the constant-memory stop-shingle pre-prune, in-array
     pair expansion, pair counts aggregated on (id_a, id_b). Candidate
     space is bounded by shared-shingle collisions, never the corpus
-    product. The returned frame is lazily ``localCheckpoint``-ed with
+    product; shingles in more than 1000 docs are pruned. The returned
+    frame is lazily ``localCheckpoint``-ed with
     the same executor-loss/retention trade documented on
     :func:`ngram_jaccard_pairs`.
     """
-    common = _shingle_pair_common(
-        df, text_col, id_col, shingle_n, max_shingle_df
-    )
+    common = _shingle_pair_common(df, "text", "doc_id", 1000)
     cont_a = F.col("common") / F.col("n_a")
     cont_b = F.col("common") / F.col("n_b")
     # same lazy pair-frame materialization as ngram_jaccard_pairs

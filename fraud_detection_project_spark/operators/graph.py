@@ -19,22 +19,23 @@ from pyspark.sql import functions as F
 from ..lineage import release_checkpoint
 
 
+_DAMPING = 0.85
+
+
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
     n_iter: int = 10,
     local_threshold_edges: int = 32_000_000,
 ) -> DataFrame:
-    """PageRank over a directed edge list → (id, rank), ranks summing to
-    ~1. Fixed ``n_iter`` power iterations (the production norm — rank
-    ordering stabilizes long before values converge).
+    """PageRank over a directed ``(src, dst)`` edge list → (id, rank),
+    ranks summing to ~1, damping 0.85. Fixed ``n_iter`` power iterations
+    (the production norm — rank ordering stabilizes long before values
+    converge).
 
     Dangling nodes (no out-edges) redistribute their mass uniformly, the
     standard correction — without it rank mass drains and totals drift.
 
-    Hybrid endgame (same contract as ``k_core``, round 6): each
+    Hybrid endgame (same contract as ``k_core``): each
     distributed iteration costs a join + shuffle + checkpoint of pure
     driver-synchronized latency; when the deduplicated edge list fits
     one task's Arrow budget (default 32M rows ≈ 512 MB) the power
@@ -51,7 +52,7 @@ def pagerank(
     size = Observation()
     e = (
         edges.select(
-            F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
+            F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
         )
         .distinct()
         .observe(size, F.count(F.lit(1)).alias("n"))
@@ -93,17 +94,16 @@ def pagerank(
                     di, weights=r[si] / outdeg[si], minlength=m
                 )
                 dm = r[dangling].sum()
-                r = (1.0 - damping) / m + damping * (contrib + dm / m)
+                r = (1.0 - _DAMPING) / m + _DAMPING * (contrib + dm / m)
             yield pd.DataFrame({"id": ids, "rank": r})
 
         # coalesce(1) + mapInPandas: stream checkpointed partitions into
         # the one task — no single-bucket shuffle of the edge list.
         return e.coalesce(1).mapInPandas(_local_pr, "id long, rank double")
 
-    # Distributed branch (round 14, guide §5): the edge frame is above
-    # the local threshold, i.e. too big to sit deserialized in the
-    # unified pool while n_iter rounds of joins and aggregates run over
-    # it — reader locks pin cached blocks and a partial aggregate fused
+    # Distributed branch: the edge frame is above the local threshold,
+    # i.e. too big to sit deserialized in the unified pool while n_iter
+    # rounds of joins and aggregates run over it — reader locks pin cached blocks and a partial aggregate fused
     # onto the cached scan can die on its initial allocation (the
     # measured ~sf10 CC failure). Recopy it to DISK_ONLY with a NARROW
     # pass (scan + write, no aggregate, nothing to starve) and release
@@ -145,15 +145,15 @@ def pagerank(
             .select(
                 "id",
                 (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
+                    F.lit((1.0 - _DAMPING) / n)
+                    + F.lit(_DAMPING)
                     * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dm") / n)
                 ).alias("rank"),
             )
             # per-iteration lineage cut; the PREVIOUS iteration's rank
             # checkpoint feeds nothing once this one materializes —
             # release it instead of letting n_iter generations pile up
-            # in the block manager (guide §5)
+            # in the block manager
             .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
         )
         if superseded is not None:
@@ -210,12 +210,11 @@ def co_occurrence_edges(
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Count triangles in an undirected graph given as an edge list
-    (direction, duplicates, and self-loops are normalized away first).
-    Returns one row: ``n_triangles, n_nodes, n_edges``.
+def _triangles(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Degree-ordered triangle listing over an undirected ``(src, dst)``
+    edge list (direction, duplicates, and self-loops are normalized away
+    first) → ``(und, deg, tri)``: the canonical edges, ``(node, deg)``,
+    and one ``(a, b, apex)`` row per triangle.
 
     Degree-ordered orientation (Suri & Vassilvitskii's MR-friendly
     scheme): each edge is directed from its lower-(degree, id) endpoint
@@ -224,15 +223,14 @@ def triangle_count(
     candidates total, the optimal join-based bound, with NO skew blowup
     on hot nodes (a node with degree d has out-degree ≤ √(2m) after
     orientation). Each triangle is produced by exactly one wedge (at
-    its lowest-rank vertex), so the final semi-check is a plain count:
+    its lowest-rank vertex), so the closing check is a plain join:
     wedges ⋈ oriented-edges on the closing pair.
 
-    Three shuffles total: degree agg, wedge self-join on the apex, and
-    the closing-edge hash join.
+    Three shuffles: degree agg, wedge self-join on the apex, and the
+    closing-edge hash join.
     """
-    u, v = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
     und = (
-        edges.select(u.alias("u"), v.alias("v"))
+        edges.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
@@ -269,55 +267,40 @@ def triangle_count(
             oriented.alias("e2"),
             (F.col("e1.s") == F.col("e2.s")) & rank_lt,
         )
-        .select(F.col("e1.d").alias("a"), F.col("e2.d").alias("b"))
+        .select(
+            F.col("e1.s").alias("apex"),
+            F.col("e1.d").alias("a"),
+            F.col("e2.d").alias("b"),
+        )
     )
-    closing = oriented.select(
-        F.col("s").alias("a"), F.col("d").alias("b")
-    )
-    tri = wedges.join(closing, ["a", "b"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
+    closing = oriented.select(F.col("s").alias("a"), F.col("d").alias("b"))
+    return und, deg, wedges.join(closing, ["a", "b"])
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Count triangles in an undirected ``(src, dst)`` graph → one row:
+    ``n_triangles, n_nodes, n_edges`` (see :func:`_triangles`)."""
+    und, deg, tri = _triangles(edges)
     return (
-        tri.crossJoin(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
+        tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+        .crossJoin(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
         .crossJoin(und.agg(F.count(F.lit(1)).alias("n_edges")))
     )
 
 
-def _peel_cores_numpy(us, vs):
-    """Exact Batagelj–Žaveršnik bucket peeling over a DISTINCT,
-    BOTH-DIRECTIONS, self-loop-free edge array — vectorized numpy, no
-    per-edge Python loop. Returns ``(node_ids, core_numbers)`` with
-    node ids in first-seen order.
-
-    Repeatedly peel every node whose residual degree <= k (cascading),
-    then raise k to the minimum surviving degree. Each node is peeled
-    exactly once and each edge's adjacency slice is gathered exactly
-    once (CSR multi-range gather), so total work is O(V + E) plus a
-    ``subtract.at`` scatter per cascade round.
-    """
-    import numpy as np
-    import pandas as pd
-
-    # hash-based id compaction (pd.factorize) — ~20x cheaper than the
-    # sort-based np.unique(return_inverse=True); peeling is indifferent
-    # to node indexing order (returned node ids are first-seen order,
-    # not sorted).
-    codes, uniq = pd.factorize(np.concatenate([us, vs]))
-    nodes = np.asarray(uniq)
-    ui = codes[: len(us)]
-    vi = codes[len(us):]
-    return nodes, _peel_codes(ui, vi, len(nodes))
-
-
 def _peel_cores_canonical(cu, cv):
-    """:func:`_peel_cores_numpy` fed the CANONICAL (u < v, distinct)
-    edge array instead of the symmetric closure. The id compaction runs
-    over 2E endpoint values instead of 4E and the symmetric index
-    arrays are derived by concatenating the already-compacted codes —
-    half the fresh memory the task touches (round 13: the measured
-    in-worker cost of this kernel is dominated by first-touch page
-    faults on freshly allocated buffers, so bytes into the worker are
-    the lever, guide §4.1 "you control how many columns cross")."""
+    """Exact Batagelj–Žaveršnik bucket peeling over the CANONICAL
+    (u < v, distinct, self-loop-free) edge arrays — vectorized numpy, no
+    per-edge Python loop. Returns ``(node_ids, core_numbers)`` with node
+    ids in first-seen order.
+
+    The id compaction (``pd.factorize``, hash-based — ~20x cheaper than
+    the sort-based ``np.unique(return_inverse=True)``) runs over the 2E
+    endpoint values, and the symmetric index arrays are derived by
+    concatenating the already-compacted codes: the in-worker cost of
+    this kernel is dominated by first-touch page faults on freshly
+    allocated buffers, so bytes into the worker are the lever.
+    """
     import numpy as np
     import pandas as pd
 
@@ -331,8 +314,12 @@ def _peel_cores_canonical(cu, cv):
 
 
 def _peel_codes(ui, vi, n):
-    """Bucket peeling over compacted 0..n-1 node codes (see
-    :func:`_peel_cores_numpy` for the algorithm contract)."""
+    """Bucket peeling over compacted 0..n-1 node codes, both directions
+    present. Repeatedly peel every node whose residual degree <= k
+    (cascading), then raise k to the minimum surviving degree. Each node
+    is peeled exactly once and each edge's adjacency slice is gathered
+    exactly once (CSR multi-range gather), so total work is O(V + E)
+    plus a ``subtract.at`` scatter per cascade round."""
     import numpy as np
 
     deg0 = np.bincount(ui, minlength=n)
@@ -364,13 +351,11 @@ def _peel_codes(ui, vi, n):
 
 def k_core(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 100,
     local_threshold_edges: int = 32_000_000,
 ) -> DataFrame:
-    """Exact k-core decomposition → ``(id, core)`` per node. Hybrid
-    execution, chosen by the MEASURED directed-edge count:
+    """Exact k-core decomposition of an undirected ``(src, dst)`` edge
+    list → ``(id, core)`` per node. Hybrid execution, chosen by the
+    MEASURED directed-edge count:
 
     **Local path** (edge list fits one task): when the deduplicated
     both-directions edge list has <= ``local_threshold_edges`` rows
@@ -395,6 +380,8 @@ def k_core(
     estimate array, and one merge into the estimates, materialized by
     an eager DISK_ONLY ``localCheckpoint``. An ``Observation`` on that
     checkpoint's job counts the changed estimates; zero ends the loop.
+    Estimates are non-negative integers that only fall, so the loop
+    ends within 2E+1 rounds; a path of N nodes needs about N/2 of them.
     Loop shuffles are sized from the measured edge count (~600k
     rows/partition) by explicit ``repartition(nparts, key)``, never by
     the session-global shuffle-partitions conf. The gathered array per
@@ -407,8 +394,8 @@ def k_core(
     size = Observation()
     canon = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least("src", "dst").alias("u"),
+            F.greatest("src", "dst").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -471,7 +458,7 @@ def k_core(
     cs = F.sort_array(F.collect_list("cv"), asc=False)
     h = F.size(F.filter(F.transform(cs, lambda x, i: x >= i + F.lit(1)), lambda b: b))
     hc = F.coalesce(F.col("h"), F.col("c"))
-    for _ in range(max_iter):
+    while True:
         nbc = undv.join(
             core.select(
                 F.col("u").alias("v"), F.col("c").alias("cv"), F.col("chg").alias("dv")
@@ -495,10 +482,9 @@ def k_core(
         core = merged
         if not changed.get["n"]:
             break
-    if max_iter > 0:
-        # the result reads only the last estimates checkpoint
-        release_checkpoint(und)
-        release_checkpoint(undv)
+    # the result reads only the last estimates checkpoint
+    release_checkpoint(und)
+    release_checkpoint(undv)
     return core.select(F.col("u").alias("id"), F.col("c").alias("core"))
 
 
@@ -551,16 +537,10 @@ def adamic_adar(
     )
 
 
-def bfs_min_hops(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-) -> DataFrame:
-    """Multi-source breadth-first search → ``(node, hop)`` with ``hop``
-    = the MINIMUM number of edges from any seed, limited to
+def bfs_min_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
+    """Multi-source breadth-first search over directed ``(src, dst)``
+    edges from the ``node`` column of ``seeds`` → ``(node, hop)`` with
+    ``hop`` = the MINIMUM number of edges from any seed, limited to
     ``max_hops``. Seeds get hop 0; unreachable nodes are absent.
 
     Level-synchronous frontier expansion — the scalable BFS shape: each
@@ -572,17 +552,15 @@ def bfs_min_hops(
     driver-side but bounded by ``max_hops`` levels, and the early-exit
     ``isEmpty`` probe touches only the (already materialized) frontier.
     """
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    frontier = (
-        seeds.select(F.col(node).alias(node)).distinct().localCheckpoint()
-    )
+    e = edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))
+    frontier = seeds.select("node").distinct().localCheckpoint()
     visited = frontier.withColumn("hop", F.lit(0)).localCheckpoint()
     for h in range(1, max_hops + 1):
         nxt = (
-            frontier.join(e, frontier[node] == e["__s"])
-            .select(F.col("__d").alias(node))
+            frontier.join(e, frontier["node"] == e["__s"])
+            .select(F.col("__d").alias("node"))
             .distinct()
-            .join(visited.select(node), node, "left_anti")
+            .join(visited.select("node"), "node", "left_anti")
             .localCheckpoint()
         )
         if nxt.isEmpty():
@@ -594,77 +572,27 @@ def bfs_min_hops(
         # the superseded visited/frontier checkpoints (including the
         # hop-0 seed frontier at h == 1) feed nothing once the new
         # visited materializes — release instead of letting max_hops
-        # generations accumulate (guide §5)
+        # generations accumulate
         release_checkpoint(old_visited)
         release_checkpoint(old_frontier)
         frontier = nxt
-    return visited.select(node, F.col("hop").cast("long").alias("hop"))
+    return visited.select("node", F.col("hop").cast("long").alias("hop"))
 
 
-def clustering_coefficient(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation and local clustering coefficient
     ``2·T(v) / (deg(v)·(deg(v)−1))`` — the node-level refinement of
-    :func:`triangle_count` (same degree-ordered orientation, so the
-    wedge join stays O(m^1.5) with no hub blowup). Each closed wedge
-    credits ALL THREE corners via a 3-way explode of the triangle's
-    node array — one extra bounded shuffle (3 rows per triangle) over
-    the global count. Degree-1 nodes report coefficient 0.0.
+    :func:`triangle_count` (same degree-ordered listing, so the wedge
+    join stays O(m^1.5) with no hub blowup). Each closed wedge credits
+    ALL THREE corners via a 3-way explode of the triangle's node array —
+    one extra bounded shuffle (3 rows per triangle) over the global
+    count. Degree-1 nodes report coefficient 0.0.
 
     Returns ``(node, deg, triangles, coeff)``.
     """
-    u, v = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    und = (
-        edges.select(u.alias("u"), v.alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionAll(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    e = (
-        und.join(
-            deg.select(F.col("node").alias("u"), F.col("deg").alias("ud")),
-            "u",
-        )
-        .join(
-            deg.select(F.col("node").alias("v"), F.col("deg").alias("vd")),
-            "v",
-        )
-    )
-    low_first = (F.col("ud") < F.col("vd")) | (
-        (F.col("ud") == F.col("vd")) & (F.col("u") < F.col("v"))
-    )
-    oriented = e.select(
-        F.when(low_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(low_first, F.col("v")).otherwise(F.col("u")).alias("d"),
-        F.when(low_first, F.col("vd")).otherwise(F.col("ud")).alias("dd"),
-    )
-    rank_lt = (F.col("e1.dd") < F.col("e2.dd")) | (
-        (F.col("e1.dd") == F.col("e2.dd")) & (F.col("e1.d") < F.col("e2.d"))
-    )
-    wedges = (
-        oriented.alias("e1")
-        .join(
-            oriented.alias("e2"),
-            (F.col("e1.s") == F.col("e2.s")) & rank_lt,
-        )
-        .select(
-            F.col("e1.s").alias("apex"),
-            F.col("e1.d").alias("a"),
-            F.col("e2.d").alias("b"),
-        )
-    )
-    closing = oriented.select(F.col("s").alias("a"), F.col("d").alias("b"))
+    _, deg, tri = _triangles(edges)
     tri_nodes = (
-        wedges.join(closing, ["a", "b"])
-        .select(
-            F.explode(F.array("apex", "a", "b")).alias("node")
-        )
+        tri.select(F.explode(F.array("apex", "a", "b")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )

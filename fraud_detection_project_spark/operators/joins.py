@@ -28,32 +28,18 @@ def range_join(
     lower: str,
     upper: str,
     payload: Sequence[str],
-    how: str = "left",
-    broadcast_dim: bool = True,
-    assume_disjoint: bool = True,
 ) -> DataFrame:
     """Left interval join: fact rows matched to dim rows where
     ``lower <= point <= upper``.
 
-    With ``broadcast_dim`` the plan is a BroadcastNestedLoopJoin — the
-    fact side streams through unshuffled. If intervals may overlap,
-    ``assume_disjoint=False`` keeps only the match with the greatest
-    lower bound (merge_asof's greatest-lower-bound semantics,
-    ``transform_data.py:30-36``).
+    The dim is broadcast, so the plan is a BroadcastNestedLoopJoin and the
+    fact side streams through unshuffled. Intervals are assumed disjoint
+    (the reference's IP table), so each fact row matches at most once.
     """
     point_col = F.col(point) if isinstance(point, str) else point
-    dim_sel = dim.select(lower, upper, *payload)
-    right = F.broadcast(dim_sel) if broadcast_dim else dim_sel
+    right = F.broadcast(dim.select(lower, upper, *payload))
     cond = (point_col >= F.col(lower)) & (point_col <= F.col(upper))
-    joined = fact.join(right, cond, how)
-    if not assume_disjoint:
-        w = Window.partitionBy(*[fact[c] for c in fact.columns]).orderBy(
-            F.col(lower).desc_nulls_last()
-        )
-        joined = joined.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") == 1
-        ).drop("__rn")
-    return joined.drop(lower, upper)
+    return fact.join(right, cond, "left").drop(lower, upper)
 
 
 def geolocate(
@@ -63,7 +49,6 @@ def geolocate(
     lower: str = "lower_bound_ip_address_int",
     upper: str = "upper_bound_ip_address_int",
     country: str = "country",
-    unknown: str = "Unknown",
 ) -> DataFrame:
     """The reference's ``merge_geolocation_data`` (``transform_data.py:25-47``):
     interval join against the IP→country dim; unmatched (or null-IP) rows
@@ -76,16 +61,9 @@ def geolocate(
     :func:`binned_range_join` directly; its semantics are identical.
     """
     out = range_join(
-        transactions,
-        ip_dim,
-        point=ip_col,
-        lower=lower,
-        upper=upper,
-        payload=[country],
-        how="left",
-        broadcast_dim=True,
+        transactions, ip_dim, point=ip_col, lower=lower, upper=upper, payload=[country]
     )
-    return out.withColumn(country, F.coalesce(F.col(country), F.lit(unknown)))
+    return out.withColumn(country, F.coalesce(F.col(country), F.lit("Unknown")))
 
 
 def as_of_join(
@@ -114,8 +92,8 @@ def as_of_join(
     lcols = left.columns
     # tag: right rows sort before left rows at equal timestamps so exact
     # matches are visible to the left row (merge_asof allow_exact_matches).
-    # The payload travels as ONE struct column so the carry is ROW-ATOMIC
-    # (VERDICT r6 item 5 / ADVICE r6): a struct of NULL fields is itself
+    # The payload travels as ONE struct column so the carry is ROW-ATOMIC:
+    # a struct of NULL fields is itself
     # non-NULL, so last(ignorenulls) carries the matched right row whole —
     # a NULL payload field can never backfill from an older right row,
     # matching pandas merge_asof exactly.
@@ -146,7 +124,7 @@ def as_of_join(
     # arg_min and the engine-wide max_by rule for same-timestamp
     # carries. Without this, two right rows at the same (k, t) have no
     # defined order and last() carries whichever duplicate the shuffle
-    # ordered last (round-5 VERDICT #1).
+    # ordered last.
     if direction == "backward":
         w = (
             Window.partitionBy("__k")

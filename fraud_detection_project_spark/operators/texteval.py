@@ -243,92 +243,82 @@ def ngram_counts(
     )
 
 
-def rouge_n(
-    pairs: DataFrame,
-    docs: DataFrame,
-    n: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cand_col: str = "cand_id",
-    ref_col: str = "ref_id",
-) -> DataFrame:
-    """Clipped-count ROUGE-N for every row of ``pairs``.
+def rouge_n(pairs: DataFrame, docs: DataFrame, n: int = 1) -> DataFrame:
+    """Clipped-count ROUGE-N for every ``(cand_id, ref_id)`` row of
+    ``pairs`` over the ``(doc_id, text)`` rows of ``docs``.
 
-    Returns ``(cand_col, ref_col, overlap, cand_total, ref_total,
+    Returns ``(cand_id, ref_id, overlap, cand_total, ref_total,
     precision, recall, f1)`` — one row per input pair, metrics NULL when
     the corresponding side has no n-grams (doc shorter than ``n``).
     """
     participant = (
-        pairs.select(F.col(cand_col).alias(id_col))
-        .union(pairs.select(F.col(ref_col).alias(id_col)))
+        pairs.select(F.col("cand_id").alias("doc_id"))
+        .union(pairs.select(F.col("ref_id").alias("doc_id")))
         .distinct()
     )
     # grams only ever meet an EQUALITY join below — hash them to 64-bit
     # keys (2⁻⁶⁴ per-pair collision accepted, oracle-checked by
-    # rouge2_adjacent_docs). Since round 14 the hashed count frame is
-    # produced by the doc-local mapInArrow kernel — no tokenize regex,
-    # no gram exchange (guide §4.2; 15× on the ~sf1 bigram pass).
+    # rouge2_adjacent_docs). The hashed count frame is produced by the
+    # doc-local mapInArrow kernel — no tokenize regex, no gram exchange
+    # (15× on the ~sf1 bigram pass).
     # counts feeds THREE consumers (cand grams, ref grams, totals) and
     # the pair key two — checkpoint both so the corpus tokenizes ONCE
     # (the bm25/tfidf compacted-relation precedent; un-checkpointed,
     # the kernel pipeline re-executed per consumer and dominated the
     # sf1 decade at 3× cost)
     counts = ngram_counts(
-        docs.join(participant, id_col, "left_semi"), id_col, text_col, n,
+        docs.join(participant, "doc_id", "left_semi"), "doc_id", "text", n,
         hashed=True,
     ).localCheckpoint(eager=False)
-    totals = counts.groupBy(id_col).agg(F.sum("c").alias("total"))
+    totals = counts.groupBy("doc_id").agg(F.sum("c").alias("total"))
 
     # a duplicated (cand, ref) row would fan out BOTH gram frames, so
     # the clipped overlap join inflates quadratically per duplicate
     # while the totals join inflates linearly — silently wrong metrics;
-    # dedup the pair key up front (ADVICE r4)
-    p = pairs.select(cand_col, ref_col).distinct().localCheckpoint(
+    # dedup the pair key up front
+    p = pairs.select("cand_id", "ref_id").distinct().localCheckpoint(
         eager=False
     )
-    # Overlap-join shape (VERDICT r11 item 5 — the suite's largest
-    # decade exponent lived here): pair keys are attached to ONE gram
-    # frame only. The old plan built a second pair-expanded frame
-    # (rgrams = p ⋈ counts on ref) and joined the two on
-    # (cand, ref, gram), so the big shuffle carried the corpus' grams
-    # pair-expanded TWICE plus paid an extra join stage to build
-    # rgrams. Joining the pair-tagged cand grams straight against the
-    # compact per-doc counts on (ref, gram) is result-identical —
-    # counts is unique per (doc, gram), so the ref-side lookup yields
-    # exactly rgrams' rows — while the ref side of the shuffle now
-    # carries each doc's grams ONCE regardless of how many pairs share
-    # the doc, and one whole shuffle stage disappears.
+    # Overlap-join shape: pair keys are attached to ONE gram frame only.
+    # Building a second pair-expanded frame (rgrams = p ⋈ counts on ref)
+    # and joining the two on (cand, ref, gram) would make the big
+    # shuffle carry the corpus' grams pair-expanded TWICE plus an extra
+    # join stage. Joining the pair-tagged cand grams straight against
+    # the compact per-doc counts on (ref, gram) is result-identical —
+    # counts is unique per (doc, gram) — while the ref side of the
+    # shuffle carries each doc's grams ONCE regardless of how many
+    # pairs share the doc.
     cgrams = p.join(
-        counts.withColumnRenamed(id_col, cand_col), cand_col
-    ).select(cand_col, ref_col, "gram", F.col("c").alias("c_cand"))
+        counts.withColumnRenamed("doc_id", "cand_id"), "cand_id"
+    ).select("cand_id", "ref_id", "gram", F.col("c").alias("c_cand"))
     overlap = (
         cgrams.join(
             counts.select(
-                F.col(id_col).alias(ref_col),
+                F.col("doc_id").alias("ref_id"),
                 "gram",
                 F.col("c").alias("c_ref"),
             ),
-            [ref_col, "gram"],
+            ["ref_id", "gram"],
         )
-        .groupBy(cand_col, ref_col)
+        .groupBy("cand_id", "ref_id")
         .agg(F.sum(F.least("c_cand", "c_ref")).alias("overlap"))
     )
     out = (
         p.join(
-            totals.withColumnRenamed(id_col, cand_col).withColumnRenamed(
+            totals.withColumnRenamed("doc_id", "cand_id").withColumnRenamed(
                 "total", "cand_total"
             ),
-            cand_col,
+            "cand_id",
             "left",
         )
         .join(
-            totals.withColumnRenamed(id_col, ref_col).withColumnRenamed(
+            totals.withColumnRenamed("doc_id", "ref_id").withColumnRenamed(
                 "total", "ref_total"
             ),
-            ref_col,
+            "ref_id",
             "left",
         )
-        .join(overlap, [cand_col, ref_col], "left")
+        .join(overlap, ["cand_id", "ref_id"], "left")
         .withColumn(
             "overlap",
             F.when(
@@ -346,8 +336,8 @@ def rouge_n(
         F.when(prec.isNotNull() & rec.isNotNull(), F.lit(0.0))
     )
     return out.select(
-        cand_col,
-        ref_col,
+        "cand_id",
+        "ref_id",
         "overlap",
         "cand_total",
         "ref_total",

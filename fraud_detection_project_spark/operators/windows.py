@@ -30,21 +30,18 @@ def rolling_count_24h(
     out_col: str,
     window_seconds: int = 86400,
     tick: int = 1,
-    closed: str = "right",
 ) -> DataFrame:
     """Trailing-window event count per key, excluding the current row.
 
     ``time_col`` must be (castable to) an integer epoch in units of
     ``tick``-per-second... i.e. pass seconds with tick=1, microseconds
-    with tick=1_000_000. ``closed='right'`` reproduces the pandas
-    semantics of the reference; ``closed='both'`` is the plain
-    ``[t-W, t]`` frame.
+    with tick=1_000_000. The frame is the reference's pandas
+    ``closed='right'`` window ``(t-W, t]``.
     """
     keys = [key] if isinstance(key, str) else list(key)
     t = (F.col(time_col) if isinstance(time_col, str) else time_col).cast("long")
     width = window_seconds * tick
-    low = -(width - 1) if closed == "right" else -width
-    w = Window.partitionBy(*keys).orderBy(t).rangeBetween(low, 0)
+    w = Window.partitionBy(*keys).orderBy(t).rangeBetween(-(width - 1), 0)
     cnt = F.count(F.lit(1)).over(w) - F.lit(1)
     # the reference's fillna(0) (transform_data.py:65): unreachable for
     # non-null keys, but preserved for null-key rows.
@@ -81,8 +78,6 @@ def rolling_count_sliced(
     out_col: str,
     window_seconds: int = 86400,
     tick: int = 1,
-    closed: str = "right",
-    slice_seconds: int | None = None,
 ) -> DataFrame:
     """Skew-hardened twin of :func:`rolling_count_24h` — identical
     semantics, bounded partitions.
@@ -90,13 +85,13 @@ def rolling_count_sliced(
     The plain form partitions the window by key alone, so one hot entity
     (a device with millions of events — the reference workload of
     ``transform_data.py:59-65`` at 100×) pins its entire history to a
-    single task. This form partitions by ``(key, time_slice)`` with
-    ``slice >= window``, replicating each event once into the next slice
-    so every probe still sees its full trailing window:
+    single task. This form partitions by ``(key, time_slice)`` with the
+    slice as wide as the window, replicating each event once into the
+    next slice so every probe still sees its full trailing window:
 
     - slice s's partition holds slice s's events (probes) plus slice
-      s-1's events (context); the trailing window of width W <= S can
-      only reach into the previous slice, so the count is exact;
+      s-1's events (context); the trailing window of width W can only
+      reach into the previous slice, so the count is exact;
     - context rows are dropped after the window pass;
     - a hot key's work now spreads over its time slices — the per-task
       bound is 2 slices of one key's events, regardless of history
@@ -109,12 +104,8 @@ def rolling_count_sliced(
     keys = [key] if isinstance(key, str) else list(key)
     t = (F.col(time_col) if isinstance(time_col, str) else time_col).cast("long")
     width = window_seconds * tick
-    slice_width = (slice_seconds or window_seconds) * tick
-    if slice_width < width:
-        raise ValueError("slice_seconds must be >= window_seconds")
-    low = -(width - 1) if closed == "right" else -width
 
-    slice_id = F.floor(t / F.lit(slice_width))
+    slice_id = F.floor(t / F.lit(width))
     probes = df.withColumn("__slice", slice_id).withColumn(
         "__probe", F.lit(True)
     )
@@ -123,7 +114,7 @@ def rolling_count_sliced(
     )
     both = probes.unionByName(context)
 
-    w = Window.partitionBy(*keys, "__slice").orderBy(t).rangeBetween(low, 0)
+    w = Window.partitionBy(*keys, "__slice").orderBy(t).rangeBetween(-(width - 1), 0)
     cnt = F.count(F.lit(1)).over(w) - F.lit(1)
     return (
         both.withColumn(out_col, F.coalesce(cnt, F.lit(0)).cast("long"))
@@ -137,12 +128,11 @@ def sessionize(
     key: str | Sequence[str],
     time_col: str | Column,
     gap_seconds: int,
-    session_col: str = "session_id",
     tick: int = 1,
 ) -> DataFrame:
     """Gaps-and-islands sessionization: consecutive same-key events
     closer than ``gap_seconds`` share a session; a longer gap starts a
-    new one. ``session_col`` is the 0-based per-key session ordinal.
+    new one. ``session_id`` is the 0-based per-key session ordinal.
 
     One window shuffle on the key (lag + running sum over the same
     ordering — a single Sort+Window stage). The streaming equivalent is
@@ -155,7 +145,7 @@ def sessionize(
     gap = F.lit(gap_seconds * tick)
     new_session = (t - F.lag(t).over(w) > gap).cast("int")
     return df.withColumn(
-        session_col,
+        "session_id",
         F.sum(F.coalesce(new_session, F.lit(0))).over(
             w.rowsBetween(Window.unboundedPreceding, 0)
         ),
@@ -169,12 +159,11 @@ def ewma_bounded(
     value: str,
     alpha: float = 0.3,
     n: int = 20,
-    out_col: str = "ewma",
     precision: int | None = 6,
 ):
     """Exponentially weighted moving average over the trailing ``n``
-    rows per key (NULL values excluded from both numerator and
-    normalization):
+    rows per key, as column ``ewma`` (NULL values excluded from both
+    numerator and normalization):
 
         ewma_t = Σ_{j=0..n-1} (1-α)^j · x_{t-j}  /  Σ_{j} (1-α)^j
 
@@ -214,4 +203,4 @@ def ewma_bounded(
     out = num / den
     if precision is not None:
         out = F.round(out, precision)
-    return df.filter(F.col(value).isNotNull()).withColumn(out_col, out)
+    return df.filter(F.col(value).isNotNull()).withColumn("ewma", out)

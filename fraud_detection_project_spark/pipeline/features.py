@@ -12,52 +12,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.time import (
-    day_of_week,
-    hour_of_day,
-    time_since_hours,
-    time_since_seconds,
-    to_timestamp_coerce,
-)
+from ..functions.time import day_of_week, hour_of_day, time_since_hours, time_since_seconds
 from ..operators.windows import velocity_features
 
-DEFAULT_VELOCITY_KEYS = {
+VELOCITY_KEYS = {
     "user_transactions_24h": "user_id",
     "device_transactions_24h": "device_id",
     "ip_transactions_24h": "ip_address",
 }
 
 
-def engineer_fraud_features(
-    df: DataFrame,
-    purchase_time: str = "purchase_time",
-    signup_time: str = "signup_time",
-    velocity_keys: dict[str, str] | None = None,
-) -> DataFrame:
-    """``engineer_fraud_features`` (``transform_data.py:49-67``):
+def engineer_fraud_features(df: DataFrame) -> DataFrame:
+    """``engineer_fraud_features`` (``transform_data.py:49-67``) over a
+    cleaned frame whose ``purchase_time`` and ``signup_time`` are already
+    timestamps (``clean_transactions`` coerces them):
 
     - ``hour_of_day``  (F2, ``.dt.hour``)
     - ``day_of_week``  (F3, Monday=0 — pandas ``.dt.dayofweek`` parity)
     - ``time_since_signup_seconds``/``_hours`` (F4/F5)
     - three trailing-24h same-entity counts (W1), pandas
-      ``closed='right'`` boundary semantics.
+      ``closed='right'`` boundary semantics, for the key columns present.
 
     The reference's global pre-sort (``transform_data.py:59``) is not
     needed: each window spec carries its own intra-partition ordering.
     """
-    df = df.withColumn(purchase_time, to_timestamp_coerce(purchase_time)).withColumn(
-        signup_time, to_timestamp_coerce(signup_time)
-    )
     df = (
-        df.withColumn("hour_of_day", hour_of_day(purchase_time))
-        .withColumn("day_of_week", day_of_week(purchase_time))
+        df.withColumn("hour_of_day", hour_of_day("purchase_time"))
+        .withColumn("day_of_week", day_of_week("purchase_time"))
         .withColumn(
-            "time_since_signup_seconds", time_since_seconds(purchase_time, signup_time)
+            "time_since_signup_seconds", time_since_seconds("purchase_time", "signup_time")
         )
         .withColumn(
-            "time_since_signup_hours", time_since_hours(purchase_time, signup_time)
+            "time_since_signup_hours", time_since_hours("purchase_time", "signup_time")
         )
     )
-    keys = velocity_keys if velocity_keys is not None else DEFAULT_VELOCITY_KEYS
-    keys = {out: k for out, k in keys.items() if k in df.columns}
-    return velocity_features(df, F.unix_timestamp(F.col(purchase_time)), keys)
+    keys = {out: k for out, k in VELOCITY_KEYS.items() if k in df.columns}
+    return velocity_features(df, F.unix_timestamp(F.col("purchase_time")), keys)

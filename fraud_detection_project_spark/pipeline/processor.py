@@ -60,9 +60,9 @@ class TrainTestBundle:
     feature_names: list[str] = field(default_factory=list)
     label_col: str = "label"
 
-    def write(self, base_path: str, mode: str = "overwrite") -> None:
-        self.train.write.mode(mode).parquet(f"{base_path}/train")
-        self.test.write.mode(mode).parquet(f"{base_path}/test")
+    def write(self, base_path: str) -> None:
+        self.train.write.mode("overwrite").parquet(f"{base_path}/train")
+        self.test.write.mode("overwrite").parquet(f"{base_path}/test")
 
 
 class Processor:
@@ -75,7 +75,7 @@ class Processor:
         )
 
     # -- E3 ---------------------------------------------------------------
-    def perform_eda(self, df: DataFrame, df_name: str = "") -> dict[str, DataFrame]:
+    def perform_eda(self, df: DataFrame) -> dict[str, DataFrame]:
         return perform_eda(df)
 
     # -- E2 (the intended, reusable block: processor.py:56-85) ------------
@@ -145,11 +145,11 @@ class Processor:
                 F.col(label_col),
                 array_to_vector("__feat_arr").alias("features"),
             )
-        elif strategy in ("undersample", "random_under", "rus"):
+        elif strategy == "undersample":
             train_res = undersample_majority(train_proc, label_col, seed=seed).select(
                 label_col, "features"
             )
-        elif strategy in ("none", "off"):
+        elif strategy == "none":
             train_res = train_proc.select(label_col, "features")
         else:
             raise ValueError(f"unknown imbalance_strategy: {strategy}")

@@ -62,21 +62,20 @@ def host_stamp() -> dict:
 _ENSURED: "weakref.WeakSet[SparkSession]" = None  # type: ignore[assignment]
 
 
-def ensure_runtime_confs(spark: SparkSession, force: bool = False) -> SparkSession:
+def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply engine-required runtime confs to an existing session.
 
     Idempotent; used by every entry point so the engine works on a
     SparkSession it did not build. Applied once per session object and
     memoized — nothing in the engine mutates RUNTIME_CONFS keys after
-    start-up; pass ``force=True`` after deliberately changing one of
-    them out-of-band.
+    start-up.
     """
     global _ENSURED
     if _ENSURED is None:
         import weakref
 
         _ENSURED = weakref.WeakSet()
-    if not force and spark in _ENSURED:
+    if spark in _ENSURED:
         return spark
     for k, v in RUNTIME_CONFS.items():
         try:

@@ -15,7 +15,7 @@ a streaming plan and runs inside each micro-batch's narrow stage. Only
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame
@@ -34,18 +34,3 @@ def score_stream(
     """
     out = model.transform(stream)
     return out.select(*select) if select else out
-
-
-def foreach_batch_scorer(
-    model: PipelineModel,
-    sink: Callable[[DataFrame, int], None],
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` wrapper for sinks that need batch-only APIs
-    (e.g. arbitrary writers, upserts): scores each micro-batch with the
-    fitted model, then hands the scored *batch* DataFrame to ``sink``.
-    """
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        sink(model.transform(batch_df), epoch_id)
-
-    return _apply

@@ -108,13 +108,11 @@ def streaming_velocity(
     key: str,
     ts_col: str = "ts",
     out_col: str = "velocity_24h",
-    window_seconds: int = 86400,
-    watermark: str = "1 hour",
 ) -> DataFrame:
-    """Per-event trailing-``window_seconds`` same-key event count
-    (excluding the event itself) over a streaming DataFrame. All input
-    columns pass through, plus ``out_col`` — so this composes with
-    further enrichment/scoring stages downstream.
+    """Per-event trailing-24h same-key event count (excluding the event
+    itself) over a streaming DataFrame with a 1-hour watermark on
+    ``ts_col``. All input columns pass through, plus ``out_col`` — so
+    this composes with further enrichment/scoring stages downstream.
 
     Batch oracle: ``rolling_count_24h(df, key, ts, out_col)`` — tests
     assert the streamed output equals the batch window on the same data.
@@ -123,9 +121,9 @@ def streaming_velocity(
         list(stream.schema.fields) + [StructField(out_col, LongType(), True)]
     )
     state_schema = StructType([StructField("ts_ns", ArrayType(LongType()), True)])
-    func = _velocity_func_factory(key, ts_col, out_col, window_seconds)
+    func = _velocity_func_factory(key, ts_col, out_col, 86400)
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark(ts_col, "1 hour")
         .groupBy(F.col(key))
         .applyInPandasWithState(
             func,

@@ -173,6 +173,19 @@ class TestKCore:
         }
         assert dist == self._brute_core(edges)
 
+    def test_distributed_long_path_runs_to_fixpoint(self, spark):
+        """H-index estimates fall one hop per round, so a path of N nodes
+        needs about N/2 rounds; a 211-node path needs 106. The
+        distributed loop must run to its fixpoint, not stop at a round
+        budget with interior nodes still at core 2."""
+        from fraud_detection_project_spark.operators.graph import k_core
+
+        df = _edges_df(spark, [(i, i + 1) for i in range(210)])
+        local = dict(map(tuple, k_core(df).collect()))
+        assert local == {i: 1 for i in range(211)}
+        dist = dict(map(tuple, k_core(df, local_threshold_edges=0).collect()))
+        assert dist == local
+
     def test_direction_and_duplicates_normalized(self, spark):
         got = self._run(spark, [(1, 2), (2, 1), (1, 2), (2, 3), (3, 1)])
         assert got == {1: 2, 2: 2, 3: 2}

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from fraud_detection_project_spark.ml.imbalance import (
     class_counts,
-    oversample_minority_naive,
     smote,
     undersample_majority,
 )
@@ -21,9 +20,9 @@ from fraud_detection_project_spark.ml.prep import (
     feature_names_out,
     one_hot_columns,
     standardize,
-    standardize_stats,
 )
 from fraud_detection_project_spark.ml.split import id_hash_split, stratified_split
+from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -74,15 +73,12 @@ class TestStandardize:
         assert abs(vals[0] + 1.0 / sd) < 1e-9
         assert abs(vals[1]) < 1e-9
 
-    def test_train_only_fit(self, spark):
-        train = spark.createDataFrame([Row(x=0.0), Row(x=10.0)])
-        test = spark.createDataFrame([Row(x=5.0), Row(x=20.0)])
-        stats = standardize_stats(train, ["x"], ddof=0)
-        out = sorted(
-            r["x_scaled"] for r in standardize(test, ["x"], stats=stats).collect()
-        )
-        assert abs(out[0] - 0.0) < 1e-9  # 5 == train mean
-        assert abs(out[1] - 3.0) < 1e-9  # (20-5)/5
+    def test_ddof1_matches_sample(self, spark):
+        df = spark.createDataFrame([Row(x=0.0), Row(x=10.0), Row(x=5.0), Row(x=25.0)])
+        out = sorted(r["x_scaled"] for r in standardize(df, ["x"], ddof=1).collect())
+        sd = statistics.stdev([0.0, 10.0, 5.0, 25.0])  # sample std, MLlib's ddof
+        assert out[0] == pytest.approx(-10.0 / sd, abs=1e-9)  # mean is 10
+        assert out[3] == pytest.approx(15.0 / sd, abs=1e-9)
 
     def test_zero_variance_column(self, spark):
         df = spark.createDataFrame([Row(x=4.0), Row(x=4.0)])
@@ -203,18 +199,28 @@ class TestImbalance:
         assert ids_c != ids_a
 
     def test_undersample_exact_n_target(self, labeled):
+        """The keep target is the smallest class count, broadcast to
+        every class: with a third class of 50 rows, all three keep 50."""
         from fraud_detection_project_spark.ml.imbalance import undersample_exact
 
-        out = undersample_exact(
-            labeled, "label", order_cols=["id"], seed=42, n_target=50
+        third = (
+            labeled.limit(50)
+            .withColumn("id", F.col("id") + 10_000)
+            .withColumn("label", F.lit(2).cast("long"))
         )
-        assert class_counts(out, "label") == {0: 50, 1: 50}
+        out = undersample_exact(
+            labeled.unionByName(third), "label", order_cols=["id"], seed=42
+        )
+        assert class_counts(out, "label") == {0: 50, 1: 50, 2: 50}
 
-    def test_oversample_naive(self, labeled):
-        out = oversample_minority_naive(labeled, "label", seed=42)
-        c = class_counts(out, "label")
-        assert c[0] == 900
-        assert 700 <= c[1] <= 1100
+    def test_smote_keeps_every_input_row(self, labeled):
+        """Oversampling only adds rows: every input row survives
+        unchanged and every added row is a minority-class synthetic."""
+        out = smote(labeled, "label", "f", "id", k=3, seed=42)
+        assert labeled.exceptAll(out).count() == 0
+        added = out.exceptAll(labeled)
+        assert added.count() == 800
+        assert added.filter((F.col("label") != 1) | (F.col("id") != -1)).count() == 0
 
     def test_smote_balances_exactly(self, labeled):
         out = smote(labeled, "label", "f", "id", k=3, seed=42)
@@ -402,22 +408,17 @@ class TestPrepEncoders:
 
 
 class TestRobustScale:
-    def test_robust_scale_train_only_fit_and_zero_iqr(self, spark):
-        from fraud_detection_project_spark.ml.prep import (
-            robust_scale,
-            robust_scale_stats,
-        )
+    def test_robust_scale_median_iqr_and_zero_iqr(self, spark):
+        from fraud_detection_project_spark.ml.prep import robust_scale
 
-        train = spark.createDataFrame(
-            [(float(v),) for v in range(1, 101)], "x double"
+        df = spark.createDataFrame(
+            [(float(v),) for v in range(1, 101)] + [(None,)], "x double"
         )
-        stats = robust_scale_stats(train, ["x"])
-        test = spark.createDataFrame([(50.5,), (100.5,), (None,)], "x double")
-        got = [r["x_scaled"] for r in robust_scale(test, ["x"], stats=stats).collect()]
-        # median 50.5, IQR = 75.25 - 25.75 = 49.5
-        assert abs(got[0] - 0.0) < 1e-9
-        assert abs(got[1] - (50.0 / 49.5)) < 1e-9
-        assert got[2] is None  # NULL passthrough
+        got = {r["x"]: r["x_scaled"] for r in robust_scale(df, ["x"]).collect()}
+        # median 50.5, IQR = 75.25 - 25.75 = 49.5; NULL is not counted
+        assert abs(got[1.0] - (-49.5 / 49.5)) < 1e-9
+        assert abs(got[100.0] - (49.5 / 49.5)) < 1e-9
+        assert got[None] is None  # NULL passthrough
 
         const = spark.createDataFrame([(7.0,), (7.0,), (None,)], "x double")
         out = [r["x_scaled"] for r in robust_scale(const, ["x"]).collect()]
@@ -451,76 +452,79 @@ class TestKFold:
 
 
 class TestQuantileDiscretize:
-    def test_balanced_bins_train_only_fit_nulls(self, spark):
-        from fraud_detection_project_spark.ml.prep import (
-            quantile_discretize,
-            quantile_discretize_stats,
-        )
+    def test_balanced_bins_and_nulls(self, spark):
+        from fraud_detection_project_spark.ml.prep import quantile_discretize
 
-        train = spark.createDataFrame(
-            [(float(v),) for v in range(1000)], "x double"
+        df = spark.createDataFrame(
+            [(float(v),) for v in range(1000)] + [(None,)], "x double"
         )
-        out = quantile_discretize(train, "x", n_bins=4)
+        out = quantile_discretize(df, "x", n_bins=4)
         sizes = {
             r["x_bin"]: r["count"]
             for r in out.groupBy("x_bin").count().collect()
         }
-        assert set(sizes) == {0, 1, 2, 3}
-        assert all(200 <= n <= 300 for n in sizes.values())  # ~250 each
-
-        # train-fitted boundaries applied to unseen data + NULLs
-        stats = quantile_discretize_stats(train, "x", 4)
-        test = spark.createDataFrame(
-            [(-5.0,), (999999.0,), (None,)], "x double"
-        )
-        got = [
-            r["x_bin"]
-            for r in quantile_discretize(test, "x", 4, stats=stats).collect()
-        ]
-        assert got[0] == 0 and got[1] == 3 and got[2] is None
+        # boundaries 249.75 / 499.5 / 749.25: exactly 250 per bin, and
+        # the NULL row passes through as a NULL bin
+        assert sizes == {0: 250, 1: 250, 2: 250, 3: 250, None: 1}
 
 
 class TestWeightedSample:
-    def test_exact_k_subset_deterministic(self, spark):
-        from fraud_detection_project_spark.ml.split import weighted_sample
+    """Efraimidis-Spirakis weighted sampling without replacement, as the
+    ``weighted_reservoir_orders`` (top-20 orders by ``ln(u) / price``) and
+    ``stratified_weighted_sample`` (top-5 events per type) queries run it."""
 
-        df = spark.createDataFrame(
-            [(i, float(1 + i % 5)) for i in range(500)], "id long, w double"
+    @staticmethod
+    def _write(tmp_path, name, table):
+        import pyarrow.parquet as pq
+
+        pq.write_table(table, str(tmp_path / f"{name}.parquet"))
+        return str(tmp_path)
+
+    def test_exact_k_subset_deterministic(self, spark, tmp_path):
+        from fraud_detection_project_spark.catalog import load_table
+        from fraud_detection_project_spark.queries import QUERIES
+
+        q = QUERIES["weighted_reservoir_orders"]
+        a = [tuple(r) for r in q(spark, SF_SMOKE).collect()]
+        # the same orders spread over seven files: the sample must not move
+        load_table(spark, SF_SMOKE, "orders").repartition(7).write.parquet(
+            str(tmp_path / "orders.parquet")
         )
-        a = sorted(r["id"] for r in weighted_sample(df, "w", 50, ["id"]).collect())
-        b = sorted(
-            r["id"]
-            for r in weighted_sample(df.repartition(7), "w", 50, ["id"]).collect()
-        )
-        assert a == b and len(a) == 50          # layout-independent, exact k
-        assert len(set(a)) == 50                 # without replacement
-        c = sorted(
-            r["id"] for r in weighted_sample(df, "w", 50, ["id"], seed=7).collect()
-        )
-        assert c != a                            # seed moves the sample
+        b = [tuple(r) for r in q(spark, str(tmp_path)).collect()]
+        assert a == b and len(a) == 20              # layout-independent, exact k
+        assert len({r[0] for r in a}) == 20         # without replacement
 
-    def test_weight_bias(self, spark):
-        """Across many seeds, heavy items are sampled ~proportionally
-        more often than light ones (deterministic per seed, so this
-        loop is reproducible, not flaky)."""
-        from fraud_detection_project_spark.ml.split import weighted_sample
+    def test_weight_bias(self, spark, tmp_path):
+        """Heavy orders are 10/110 of the rows but half the weight mass,
+        so they take far more than their ~1.8 uniform share of 20 draws."""
+        import pyarrow as pa
 
-        rows = [(i, 10.0 if i < 10 else 1.0) for i in range(110)]
-        df = spark.createDataFrame(rows, "id long, w double")
-        heavy_hits = 0
-        trials, k = 20, 10
-        for s in range(trials):
-            got = {r["id"] for r in weighted_sample(df, "w", k, ["id"], seed=s).collect()}
-            heavy_hits += sum(1 for i in got if i < 10)
-        # heavy items are 10/110 of rows but 100/200 of mass; with k=10
-        # draws they should dominate clearly over the uniform baseline
-        assert heavy_hits > trials * k * 0.25    # ≫ uniform's ~0.09
+        from fraud_detection_project_spark.queries import QUERIES
 
-    def test_zero_and_null_weights_excluded(self, spark):
-        from fraud_detection_project_spark.ml.split import weighted_sample
+        keys = list(range(1, 111))
+        sf = self._write(tmp_path, "orders", pa.table({
+            "o_orderkey": pa.array(keys, pa.int64()),
+            "o_totalprice": pa.array([10.0 if k <= 10 else 1.0 for k in keys]),
+        }))
+        got = [r["o_orderkey"] for r in QUERIES["weighted_reservoir_orders"](spark, sf).collect()]
+        assert len(got) == 20
+        assert sum(1 for k in got if k <= 10) >= 6
 
-        df = spark.createDataFrame(
-            [(1, 0.0), (2, None), (3, 2.0)], "id long, w double"
-        )
-        got = [r["id"] for r in weighted_sample(df, "w", 3, ["id"]).collect()]
-        assert got == [3]
+    def test_zero_and_null_weights_excluded(self, spark, tmp_path):
+        import pyarrow as pa
+
+        from fraud_detection_project_spark.queries import QUERIES
+
+        sf = self._write(tmp_path, "events", pa.table({
+            "event_id": pa.array([1, 2, 3, 4, 5], pa.int64()),
+            "ts": pa.array([0] * 5, pa.int64()),
+            "user_id": pa.array([1] * 5, pa.int64()),
+            "event_type": ["view", "view", "view", "buy", "buy"],
+            "value": pa.array([0.0, None, 2.0, -1.0, 3.0], pa.float64()),
+            "props": pa.array([None] * 5, pa.string()),
+        }))
+        got = [
+            (r["event_type"], r["event_id"])
+            for r in QUERIES["stratified_weighted_sample"](spark, sf).collect()
+        ]
+        assert got == [("buy", 5), ("view", 3)]

@@ -209,16 +209,25 @@ class TestRollingCountSliced:
             df, "k", "t", "c", window_seconds=86400, tick=1
         ).count() == df.count()
 
-    def test_slice_narrower_than_window_rejected(self, spark):
+    def test_window_reaches_into_previous_slice_only(self, spark):
+        """The slice is as wide as the window, so a probe's trailing
+        window reaches back across one slice boundary and never two."""
         from fraud_detection_project_spark.operators.windows import (
             rolling_count_sliced,
         )
 
-        df = spark.createDataFrame([Row(id=1, k="u", t=0)])
-        with pytest.raises(ValueError):
-            rolling_count_sliced(
-                df, "k", "t", "c", window_seconds=86400, slice_seconds=3600
-            )
+        W = 86400
+        df = spark.createDataFrame(
+            [Row(id=1, k="u", t=W - 1),           # slice 0
+             Row(id=2, k="u", t=2 * W - 2),       # slice 1, 86399s after id=1
+             Row(id=3, k="u", t=2 * W - 1),       # slice 1, exactly 24h after id=1
+             Row(id=4, k="u", t=2 * W)],          # slice 2
+        )
+        out = rolling_count_sliced(df, "k", "t", "c", window_seconds=W, tick=1)
+        got = {r["id"]: r["c"] for r in out.collect()}
+        assert got == {1: 0, 2: 1, 3: 1, 4: 2}
+        plain = rolling_count_24h(df, "k", "t", "c", window_seconds=W, tick=1)
+        assert got == {r["id"]: r["c"] for r in plain.collect()}
 
 
 class TestCleaning:
@@ -280,7 +289,7 @@ class TestBinnedRangeJoin:
                 "p_brand",
             )
         )
-        want = range_join(ev, dim, "value", "lo", "hi", ["p_brand"], how="left")
+        want = range_join(ev, dim, "value", "lo", "hi", ["p_brand"])
         for bw in (None, 1.0, 7.3, 1000.0):
             got = binned_range_join(
                 ev, dim, "value", "lo", "hi", ["p_brand"], how="left", bin_width=bw

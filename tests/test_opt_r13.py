@@ -63,16 +63,21 @@ def test_load_table_memo_invalidates_on_rewrite(spark, tmp_path):
     assert again.count() == 1 and n1 > 1
 
 
-def test_ensure_runtime_confs_memoized_but_forceable(spark):
+def test_ensure_runtime_confs_memoized_per_session(spark):
     ensure_runtime_confs(spark)
     key = "spark.sql.session.timeZone"
     spark.conf.set(key, "America/New_York")
-    # memoized: a plain call no longer rewrites confs ...
-    ensure_runtime_confs(spark)
-    assert spark.conf.get(key) == "America/New_York"
-    # ... but force=True restores the engine contract
-    ensure_runtime_confs(spark, force=True)
-    assert spark.conf.get(key) == RUNTIME_CONFS[key]
+    try:
+        # memoized: a second call on the same session rewrites nothing ...
+        ensure_runtime_confs(spark)
+        assert spark.conf.get(key) == "America/New_York"
+        # ... while a session object it has not seen gets the contract
+        other = spark.newSession()
+        other.conf.set(key, "America/New_York")
+        ensure_runtime_confs(other)
+        assert other.conf.get(key) == RUNTIME_CONFS[key]
+    finally:
+        spark.conf.set(key, RUNTIME_CONFS[key])
 
 
 def test_bench_q5_single_events_scan_and_result(spark, monkeypatch):
@@ -253,7 +258,7 @@ def test_shingle_pair_common_matches_self_join_shape(spark):
         )
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    new = _shingle_pair_common(docs, "text", "doc_id", 3, max_df)
+    new = _shingle_pair_common(docs, "text", "doc_id", max_df)
     cols = ["id_a", "id_b", "n_a", "n_b", "common"]
     assert sorted(map(tuple, old.select(cols).collect())) == sorted(
         map(tuple, new.select(cols).collect())

@@ -330,6 +330,19 @@ class TestCheckpointRelease:
         # not a checkpoint — must not raise, must not touch anything
         release_checkpoint(spark.range(5).filter(F.col("id") > 1))
 
+    def test_release_checkpoint_propagates_py4j_failure(self):
+        """A moved py4j internal must fail the loop loudly, not leave
+        every round's checkpoint pinned in the block manager."""
+        from fraud_detection_project_spark.lineage import release_checkpoint
+
+        class _MovedInternals:
+            @property
+            def _jdf(self):
+                raise AttributeError("queryExecution moved")
+
+        with pytest.raises(AttributeError, match="queryExecution moved"):
+            release_checkpoint(_MovedInternals())
+
     def test_cc_distributed_loop_releases_superseded_rounds(self, spark):
         from fraud_detection_project_spark.operators.dedup import (
             connected_components,

@@ -780,22 +780,22 @@ def test_interval_union_sweep_matches_point_cover(spark, iv):
 @settings(max_examples=200, deadline=None)
 def test_bz_peel_kernel_matches_brute_force(raw_edges):
     """The vectorized Batagelj-Zaversnik kernel behind k_core's local
-    path (operators/graph.py:_peel_cores_numpy) is pure numpy — drive
-    it directly against the textbook dict-based peel on random
-    multigraph inputs (self-loops and duplicates stripped the same way
-    the operator does)."""
+    path (operators/graph.py:_peel_cores_canonical) is pure numpy —
+    drive it directly against the textbook dict-based peel on random
+    multigraph inputs, fed the canonical (u < v, distinct) edges the
+    operator streams into its one task."""
     import numpy as np
 
     from fraud_detection_project_spark.operators.graph import (
-        _peel_cores_numpy,
+        _peel_cores_canonical,
     )
 
-    und = {(a, b) for a, b in raw_edges if a != b}
-    und |= {(b, a) for a, b in und}
-    if not und:
+    canon = sorted({(min(a, b), max(a, b)) for a, b in raw_edges if a != b})
+    if not canon:
         return
-    us = np.array([a for a, _ in sorted(und)], dtype=np.int64)
-    vs = np.array([b for _, b in sorted(und)], dtype=np.int64)
+    und = set(canon) | {(b, a) for a, b in canon}
+    cu = np.array([a for a, _ in canon], dtype=np.int64)
+    cv = np.array([b for _, b in canon], dtype=np.int64)
 
     # brute: repeated min-degree peel
     from collections import defaultdict
@@ -821,7 +821,7 @@ def test_bz_peel_kernel_matches_brute_force(raw_edges):
                     if deg[u] <= k:
                         peel.append(u)
 
-    ids, got = _peel_cores_numpy(us, vs)
+    ids, got = _peel_cores_canonical(cu, cv)
     assert {int(i): int(c) for i, c in zip(ids, got)} == core
 
 

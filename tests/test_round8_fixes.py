@@ -205,8 +205,9 @@ class TestLazyDimInference:
         df = spark.createDataFrame(rows, "id long, y int, f array<double>")
         before = _jobs(spark)
         smote(df, "y", "f", "id", k=2)
-        jobs_inferred = _jobs(spark) - before
-        before = _jobs(spark)
-        smote(df, "y", "f", "id", k=2, dim=4)
-        jobs_explicit = _jobs(spark) - before
-        assert jobs_inferred == jobs_explicit
+        # the width rides in the class-count aggregate, so the build is
+        # its three collects (class counts + width, projection spread,
+        # bucket counts) at two jobs each under AQE: 6 on local[4], the
+        # count measured when the width could still be passed in; a
+        # separate width probe would add jobs
+        assert _jobs(spark) - before <= 6

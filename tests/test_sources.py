@@ -204,26 +204,6 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     assert merged.filter(F.col("risk_score") == 0.5).count() == 50
 
 
-def test_json_robust_quarantines_corrupt_lines(spark, tmp_path):
-    from fraud_detection_project_spark.catalog import read_json_robust
-
-    p = tmp_path / "feed.jsonl"
-    p.write_text(
-        '{"id": 1, "v": 2.5}\n'
-        "this is not json\n"
-        '{"id": 2, "v": null}\n'
-        '{"id": 3, "v": "not-a-number"}\n'
-        '{"id": 4, "v": 9.0}\n'
-    )
-    clean, corrupt = read_json_robust(spark, str(p), "id LONG, v DOUBLE")
-    rows = {r["id"]: r["v"] for r in clean.collect()}
-    bad = [r["_corrupt_record"] for r in corrupt.collect()]
-    assert rows == {1: 2.5, 2: None, 4: 9.0}
-    assert len(bad) == 2
-    assert any("not json" in b for b in bad)
-    assert any("not-a-number" in b for b in bad)
-
-
 def test_multi_format_roundtrip(spark, tmp_path):
     """Source-format breadth: the same frame survives parquet, ORC,
     JSON-lines, and headered CSV round-trips value-exact (CSV/JSON ride
