@@ -186,8 +186,8 @@ def _parquet_ts_unit(path: str, col: str = "ts") -> str:
 # spark.read.parquet ≈ 200 ms + four analysis round-trips for the
 # withColumn chain ≈ 250 ms, measured on local[32]) and the bench/verify
 # harnesses rebuild every query from scratch — dozens of identical
-# loads per run, all inside the timed region (guide §5 driver work,
-# §7.3 planning overhead). A DataFrame is an immutable lazy plan, so
+# loads per run, all inside the timed region (driver work and planning
+# overhead). A DataFrame is an immutable lazy plan, so
 # returning the same object is semantically identical: every action
 # still scans parquet; nothing is materialized by the memo. Keyed on
 # the session object (weak — a stopped session's plans die with it)

@@ -46,7 +46,7 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     """Sub-word-ish token count: splits runs of letters, digits, and
     individual punctuation (a cheap, deterministic BPE stand-in).
 
-    ``regexp_count`` (round 14, guide §1.2 per-task work): counting
+    ``regexp_count``: counting
     matches in one regex pass instead of materializing the match array
     just to take its size. Values identical, including the legacy
     ``size(NULL) = -1`` convention on NULL text (pinned by
@@ -60,7 +60,7 @@ def bpe_ish_token_count(col: Column | str) -> Column:
 def punct_ratio(col: Column | str) -> Column:
     """Fraction of characters that are neither alphanumeric nor whitespace.
 
-    One ``regexp_count`` pass (round 14): the old form REWROTE the
+    One ``regexp_count`` pass: the old form REWROTE the
     string (``regexp_replace`` + length diff) just to count the
     non-matching characters. Same values on every input, NULL included.
     """
@@ -70,10 +70,10 @@ def punct_ratio(col: Column | str) -> Column:
     return F.when(n > 0, punct.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    """Fraction of whitespace tokens that are stopwords of ``lang``."""
+def stopword_ratio(col: Column | str) -> Column:
+    """Fraction of whitespace tokens that are English stopwords."""
     toks = tokens(col)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
+    sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
     return F.when(F.size(toks) > 0, hits.cast("double") / F.size(toks).cast("double")).otherwise(
         F.lit(0.0)
@@ -86,7 +86,7 @@ def mean_word_length(col: Column | str) -> Column:
     return F.when(F.size(toks) > 0, total / F.size(toks).cast("double")).otherwise(F.lit(0.0))
 
 
-def quality_score(col: Column | str, lang: str = "en") -> Column:
+def quality_score(col: Column | str) -> Column:
     """Composite [0,1] document-quality heuristic: length band, low punct
     density, healthy stopword presence, sane mean word length.
     """
@@ -95,7 +95,7 @@ def quality_score(col: Column | str, lang: str = "en") -> Column:
         F.least(wc / F.lit(10.0), F.lit(1.0))
     )
     punct_ok = F.lit(1.0) - F.least(punct_ratio(col) * F.lit(4.0), F.lit(1.0))
-    sw_ok = F.least(stopword_ratio(col, lang) * F.lit(5.0), F.lit(1.0))
+    sw_ok = F.least(stopword_ratio(col) * F.lit(5.0), F.lit(1.0))
     mwl = mean_word_length(col)
     mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
     return (length_ok * 0.3 + punct_ok * 0.3 + sw_ok * 0.2 + mwl_ok * 0.2).alias("quality")
@@ -107,7 +107,7 @@ def alnum_tokens(col: Column | str) -> Column:
     pass. Empty / all-separator text → empty array; NULL → NULL (both
     propagate through ``split``/``array_remove`` natively).
 
-    Cost note (round 13, guide §1.2 "per-task work"): the composed
+    Cost note: the composed
     form ran TWO Java-regex passes over every document — a
     ``regexp_replace`` rewriting the whole string (Pattern + an output
     StringBuffer per row) and then a ``split``. A single ``split`` on

@@ -15,13 +15,12 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def to_timestamp_coerce(col: Column | str, fmt: str | None = None) -> Column:
+def to_timestamp_coerce(col: Column | str) -> Column:
     """``pd.to_datetime(errors='coerce')`` equivalent: invalid → NULL.
 
     Uses try_to_timestamp so behavior is NULL-on-failure even under ANSI.
     """
-    c = _c(col)
-    return F.try_to_timestamp(c, F.lit(fmt)) if fmt else F.try_to_timestamp(c)
+    return F.try_to_timestamp(_c(col))
 
 
 def epoch_seconds(col: Column | str) -> Column:

@@ -1,4 +1,4 @@
-"""Checkpoint source-lineage registry (VERDICT r10 item 3).
+"""Checkpoint source-lineage registry.
 
 ``localCheckpoint`` materializes a frame and truncates its lineage: the
 physical plan afterwards shows only ``Scan ExistingRDD[...]`` with no
@@ -19,8 +19,7 @@ reason. ``tools/plan_audit.py`` consults the registry when it walks a
 BroadcastExchange subtree: a registered scan is bounded, an
 unregistered one is an offence — and because the nonce name only ever
 enters a plan through these helpers, an unregistered scan cannot pass
-by colliding with a registered frame's user-visible column names
-(VERDICT r11 item 4).
+by colliding with a registered frame's user-visible column names.
 
 The tag is an ASSERTION the author makes; the census verifies the hint
 sits over a tagged frame, and the reason string is the audit trail. A
@@ -45,7 +44,7 @@ _SCAN_RE = re.compile(r"Scan ExistingRDD[^\[]*\[([^\]]*)\]")
 
 _ID_RE = re.compile(r"#\d+L?")
 
-# Registration-nonce column (VERDICT r11 item 4): a session-unique
+# Registration-nonce column: a session-unique
 # column BAKED INTO the materialized frame itself. The nonce name only
 # ever enters a plan through this module's registration helpers, so a
 # scan signature containing it proves the frame passed through a
@@ -119,8 +118,8 @@ def bounded_literal(spark, data, schema, reason: str) -> DataFrame:
     despite being bounded by construction. Building the frame HERE lets
     the nonce column ride inside the literal rows themselves (a
     post-hoc ``withColumn`` on an existing frame cannot reach the scan
-    node, which is why the registration-by-name ``register_bounded``
-    predecessor had the collision hole VERDICT r11 item 4 closed).
+    node, which is why a registration by column names alone would let
+    an unregistered frame collide with a registered one).
 
     ``data``: list of row tuples; ``schema``: DDL string or list of
     column names (same forms ``createDataFrame`` takes). When ``data``
@@ -129,7 +128,7 @@ def bounded_literal(spark, data, schema, reason: str) -> DataFrame:
     list leaves column types to row-based inference, which PySpark
     cannot do from zero rows (the failure would surface as an opaque
     "can not infer schema from empty dataset"; rejected here with the
-    actual contract instead — ADVICE r12)."""
+    actual contract instead)."""
     if not reason or not reason.strip():
         raise ValueError("bounded_literal requires a non-empty reason")
     if not data and not isinstance(schema, str):

@@ -100,17 +100,17 @@ def apply_calibration(
     lo: float,
     hi: float,
     n_bins: int = 100,
-    out_col: str = "calibrated",
 ) -> DataFrame:
     """Map raw scores through a fitted isotonic mapping: same bin
     arithmetic as the fit, broadcast join on the bin id (mapping is
-    ≤ n_bins rows — never a shuffle of the scored frame)."""
+    ≤ n_bins rows — never a shuffle of the scored frame); the result
+    lands in ``calibrated``."""
     bin_w = (hi - lo) / n_bins
     key = F.least(
         F.greatest(F.floor((F.col(score) - F.lit(lo)) / F.lit(bin_w)), F.lit(0)),
         F.lit(n_bins - 1),
     ).cast("long")
-    m = mapping.select("bin", F.col("calibrated").alias(out_col))
+    m = mapping.select("bin", "calibrated")
     return scored.withColumn("__bin", key).join(
         F.broadcast(m), F.col("__bin") == m["bin"], "left"
     ).drop("bin", "__bin")

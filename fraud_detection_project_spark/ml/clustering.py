@@ -25,13 +25,12 @@ def kmeans_fit(
     k: int = 8,
     vec_col: str = "embedding",
     seed: int = 42,
-    max_iter: int = 20,
 ) -> KMeansModel:
     """Fit k-means on an ``array<float>`` column. Deterministic for a
     fixed seed + partitioning (k-means|| init is seeded)."""
     vec = df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias(_FEATURES))
     return KMeans(
-        k=k, seed=seed, maxIter=max_iter, featuresCol=_FEATURES, predictionCol="cluster"
+        k=k, seed=seed, maxIter=20, featuresCol=_FEATURES, predictionCol="cluster"
     ).fit(vec.filter(F.col(_FEATURES).isNotNull()))
 
 
@@ -51,6 +50,5 @@ def kmeans_assign(
 
 
 def kmeans_centroids(model: KMeansModel) -> list[list[float]]:
-    """Learned centroids as plain lists — drop-in for
-    :func:`operators.similarity.ivf_topk`'s ``centroids`` parameter."""
+    """Learned centroids as plain lists, indexed by ``cluster`` id."""
     return [[float(x) for x in c] for c in model.clusterCenters()]

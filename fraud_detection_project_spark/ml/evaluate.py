@@ -44,7 +44,6 @@ def binary_metrics(
     score: str | Column,
     label: str | Column,
     threshold: float,
-    precision: int = 6,
 ) -> DataFrame:
     """Confusion matrix + precision/recall/F1/accuracy at ``threshold``.
 
@@ -71,13 +70,13 @@ def binary_metrics(
         "fp",
         "fn",
         "tn",
-        F.round(prec, precision).alias("precision"),
-        F.round(rec, precision).alias("recall"),
+        F.round(prec, 6).alias("precision"),
+        F.round(rec, 6).alias("recall"),
         F.round(
-            2 * prec * rec / F.nullif(prec + rec, F.lit(0.0)), precision
+            2 * prec * rec / F.nullif(prec + rec, F.lit(0.0)), 6
         ).alias("f1"),
         F.round(
-            (tp_c + tn_c) / (tp_c + fp_c + fn_c + tn_c), precision
+            (tp_c + tn_c) / (tp_c + fp_c + fn_c + tn_c), 6
         ).alias("accuracy"),
     )
 
@@ -92,8 +91,8 @@ def _pair_count_auc(per_score: DataFrame, precision: int) -> DataFrame:
     ``roc_auc_score``. The cumulation runs through
     ``partitioned_prefix_sum`` (range-partitioned two-phase scan), so
     even a CONTINUOUS score — where |distinct scores| ≈ n and the old
-    ``Window.orderBy`` form funneled everything through one task
-    (VERDICT r6 item 3) — stays fully parallel; ``score_key`` is the
+    ``Window.orderBy`` form funneled everything through one task —
+    stays fully parallel; ``score_key`` is the
     groupBy key, hence already a unique total order.
     """
     from ..operators.indexing import partitioned_prefix_sum
@@ -167,7 +166,6 @@ def average_precision(
     df: DataFrame,
     score: str | Column,
     label: str | Column,
-    precision: int = 6,
 ) -> DataFrame:
     """Exact average precision (area under the precision-recall curve,
     sklearn's ``average_precision_score`` step interpolation):
@@ -178,7 +176,7 @@ def average_precision(
     contract as auc_roc: collapse to distinct scores first (hash agg
     with map-side partials), then range-partitioned prefix sums over
     the aggregated frame (``partitioned_prefix_sum`` — no single-task
-    ordered window even for continuous scores, VERDICT r6 item 3).
+    ordered window even for continuous scores).
     The DESCENDING cumulations fall out of ascending ones via the
     complement identity ``sum(key >= s) = total − sum(key < s)``.
     """
@@ -210,7 +208,7 @@ def average_precision(
         F.round(
             F.sum(F.col("pos_s") * F.col("tp") / F.col("pp"))
             / F.sum("pos_s"),
-            precision,
+            6,
         ).alias("average_precision"),
         F.sum("pos_s").cast("long").alias("n_pos"),
         (F.sum("pos_s") + F.sum("neg_s")).cast("long").alias("n"),
@@ -221,16 +219,14 @@ def log_loss(
     df: DataFrame,
     prob: str | Column,
     label: str | Column,
-    eps: float = 1e-15,
-    precision: int = 6,
 ) -> DataFrame:
     """Mean cross-entropy ``-avg(y·ln p + (1-y)·ln(1-p))`` with p
-    clipped to [eps, 1-eps] (sklearn's contract). One scan."""
+    clipped to [1e-15, 1 - 1e-15] (sklearn's contract). One scan."""
     p, y = _as_col(prob), _as_col(label).cast("double")
-    pc = F.least(F.greatest(p, F.lit(eps)), F.lit(1.0 - eps))
+    pc = F.least(F.greatest(p, F.lit(1e-15)), F.lit(1.0 - 1e-15))
     term = -(y * F.log(pc) + (1 - y) * F.log(1 - pc))
     return df.filter(p.isNotNull() & y.isNotNull()).agg(
-        F.round(F.avg(term), precision).alias("log_loss"),
+        F.round(F.avg(term), 6).alias("log_loss"),
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -242,7 +238,6 @@ def calibration_bins(
     lo: float,
     hi: float,
     n_bins: int = 10,
-    precision: int = 6,
 ) -> DataFrame:
     """Reliability-diagram aggregates: fixed-width bins over the raw
     score (deterministic bin edges — no quantile pass), per bin the
@@ -260,8 +255,8 @@ def calibration_bins(
         .groupBy(key.cast("long").alias("bin"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(s), precision).alias("mean_score"),
-            F.round(F.avg(y), precision).alias("frac_pos"),
+            F.round(F.avg(s), 6).alias("mean_score"),
+            F.round(F.avg(y), 6).alias("frac_pos"),
         )
         .orderBy("bin")
     )
@@ -271,7 +266,6 @@ def cohens_kappa(
     df: DataFrame,
     rater_a: str | Column,
     rater_b: str | Column,
-    precision: int = 6,
 ) -> DataFrame:
     """Cohen's κ — chance-corrected agreement between two categorical
     raters (Cohen 1960): ``κ = (p_o − p_e) / (1 − p_e)`` with observed
@@ -314,9 +308,9 @@ def cohens_kappa(
         base.crossJoin(F.broadcast(chance))
         .select(
             F.col("n").cast("long").alias("n"),
-            F.round(po, precision).alias("po"),
-            F.round(pe, precision).alias("pe"),
-            F.round(kappa, precision).alias("kappa"),
+            F.round(po, 6).alias("po"),
+            F.round(pe, 6).alias("pe"),
+            F.round(kappa, 6).alias("kappa"),
         )
     )
 
@@ -348,7 +342,6 @@ def poisson_bootstrap_mean_ci(
     lo_rank: int | None = None,
     hi_rank: int | None = None,
     seed: int = 0,
-    precision: int = 6,
 ) -> DataFrame:
     """Per-group bootstrap confidence interval for the mean via the
     POISSON bootstrap (Chamandy et al. 2012, "Estimating Uncertainty
@@ -379,7 +372,7 @@ def poisson_bootstrap_mean_ci(
     # default ranks bracket the 2.5%/97.5% quantiles from the outside
     # without degenerating to the extreme order statistics: ceil on the
     # upper rank (NOT round(·)+1, which hits R itself for R=50 — the
-    # 100th percentile; ADVICE r4) and floor-with-min-1 on the lower
+    # 100th percentile) and floor-with-min-1 on the lower
     if lo_rank is None:
         lo_rank = max(1, int(math.floor(0.025 * n_replicates)))
     if hi_rank is None:
@@ -431,8 +424,8 @@ def poisson_bootstrap_mean_ci(
     overall = base.groupBy(*group_cols).agg(F.avg("__v").alias("__mean"))
     return overall.join(ci, group_cols).select(
         *group_cols,
-        F.round("__mean", precision).alias("mean_value"),
-        F.round("__lo", precision).alias("ci_lo"),
-        F.round("__hi", precision).alias("ci_hi"),
+        F.round("__mean", 6).alias("mean_value"),
+        F.round("__lo", 6).alias("ci_lo"),
+        F.round("__hi", 6).alias("ci_hi"),
         F.lit(n_replicates).cast("long").alias("n_replicates"),
     )

@@ -5,9 +5,9 @@ stops; this module adds the serving side — applying a fitted linear /
 logistic model to a DataFrame — and the leakage-safe cousin of the
 target encoder used during feature engineering.
 
-- ``score_linear``       w·x + b over an ``array<float>`` column, with
-                         optional logistic link — a pure columnar
-                         expression (functions/vectors.py:dot), no UDF
+- ``score_linear``       σ(w·x + b) over an ``array<float>`` column — a
+                         pure columnar expression
+                         (functions/vectors.py:dot), no UDF
 - ``loo_target_encode``  leave-one-out target encoding
                          ``(Σ_group y − y) / (n_group − 1)``
 
@@ -43,36 +43,23 @@ def score_linear(
     vec_col: str | Column,
     weights: Sequence[float],
     intercept: float = 0.0,
-    link: str = "logistic",
-    out_col: str = "score",
-    precision: int | None = 6,
 ) -> DataFrame:
-    """Append ``out_col = link(w·x + b)`` for a fixed weight vector.
+    """Append ``score = σ(w·x + b)`` for a fixed weight vector.
 
-    ``link`` is ``'logistic'`` (σ) or ``'identity'``. The weights are
-    embedded as a literal array, so the expression is map-only and
-    whole-stage-codegen eligible; rounding (default 6 dp) makes the
-    output stable across engines despite summation-order differences.
+    The weights are embedded as a literal array, so the expression is
+    map-only and whole-stage-codegen eligible; rounding to 6 dp makes
+    the output stable across engines despite summation-order
+    differences.
     """
     w = F.array(*[F.lit(float(x)) for x in weights])
     z = dot(vec_col, w) + F.lit(float(intercept))
-    if link == "logistic":
-        scored = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    elif link == "identity":
-        scored = z
-    else:
-        raise ValueError(f"unknown link: {link!r}")
-    if precision is not None:
-        scored = F.round(scored, precision)
-    return df.withColumn(out_col, scored)
+    return df.withColumn("score", F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6))
 
 
 def loo_target_encode(
     df: DataFrame,
     keys: Sequence[str],
     target: str | Column,
-    out_col: str = "loo_enc",
-    precision: int | None = 6,
 ) -> DataFrame:
     """Leave-one-out target encoding: each row's key is encoded by the
     mean target of the OTHER rows sharing it —
@@ -80,7 +67,8 @@ def loo_target_encode(
     leaks into its feature (the flaw of naive target encoding that
     inflates offline metrics). Groups of size 1 fall back to the global
     target mean; rows with a NULL target get a NULL encoding (they
-    contribute nothing to any group sum either).
+    contribute nothing to any group sum either). The encoding lands in
+    ``loo_enc``, rounded to 6 dp.
 
     One window shuffle on ``keys`` plus a 1-row global-mean aggregate
     joined in by broadcast crossJoin.
@@ -92,11 +80,9 @@ def loo_target_encode(
         F.count(y).over(w) > 1,
         (F.sum(y).over(w) - y) / (F.count(y).over(w) - 1),
     ).otherwise(F.col("_global_mean"))
-    loo = F.when(y.isNotNull(), loo)
-    if precision is not None:
-        loo = F.round(loo, precision)
+    loo = F.round(F.when(y.isNotNull(), loo), 6)
     return (
         df.crossJoin(F.broadcast(gmean))
-        .withColumn(out_col, loo)
+        .withColumn("loo_enc", loo)
         .drop("_global_mean")
     )

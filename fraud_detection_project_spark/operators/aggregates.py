@@ -33,15 +33,9 @@ def value_counts(df: DataFrame, col: str, count_col: str = "cnt") -> DataFrame:
     )
 
 
-def count_distinct(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
-    """A4 (``transform_data.py:46``). ``approx=True`` swaps in HyperLogLog
-    (constant memory — the right call at 100 TB where exact distinct is a
-    full shuffle of the key).
-    """
-    agg = (
-        F.approx_count_distinct(col) if approx else F.countDistinct(col)
-    ).alias("n_distinct")
-    return df.select(agg)
+def count_distinct(df: DataFrame, col: str) -> DataFrame:
+    """A4 (``transform_data.py:46``): exact distinct count."""
+    return df.select(F.countDistinct(col).alias("n_distinct"))
 
 
 def numeric_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -102,7 +96,6 @@ def mad_outliers(
     value_col: str,
     by: Sequence[str] | None = None,
     n_sigmas: float = 3.0,
-    out_col: str = "is_outlier",
 ) -> DataFrame:
     """Robust outlier flag via Median Absolute Deviation:
     ``|x − median| > n_sigmas · 1.4826 · MAD`` (1.4826 makes MAD a
@@ -113,7 +106,8 @@ def mad_outliers(
 
     Two aggregate passes (median, then median of absolute deviations),
     optionally per ``by`` group — each a |groups|-row broadcast; the
-    flag itself is codegen arithmetic. NULLs flag as NULL.
+    flag itself is codegen arithmetic, in ``is_outlier``. NULLs flag as
+    NULL.
     """
     gb = list(by) if by else []
     med_agg = df.groupBy(*gb).agg(
@@ -136,7 +130,7 @@ def mad_outliers(
         F.abs(F.col(value_col) - F.col("__med"))
         > F.lit(float(n_sigmas) * 1.4826) * F.col("__mad"),
     )
-    return out.withColumn(out_col, flag).drop("__med", "__mad")
+    return out.withColumn("is_outlier", flag).drop("__med", "__mad")
 
 
 def entropy_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:

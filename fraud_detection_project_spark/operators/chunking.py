@@ -16,8 +16,7 @@ and a tokenized training set:
   as the cumsum contract so a SQL oracle reproduces it bit-for-bit.
   The cumulative sum runs as a range-partitioned two-phase scan
   (``partitioned_prefix_sum``) — NOT an unpartitioned window — so no
-  task ever sees more than one range slice of the corpus (VERDICT r4
-  "What's wrong" #1).
+  task ever sees more than one range slice of the corpus.
 """
 
 from __future__ import annotations
@@ -33,16 +32,14 @@ def chunk_documents(
     df: DataFrame,
     chunk_size: int = 64,
     overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """One row per (doc, chunk): (id_col, chunk_idx, n_tokens,
+    """One row per (doc, chunk): (doc_id, chunk_idx, n_tokens,
     chunk_text). Stride = chunk_size - overlap; the final partial chunk
     is kept (min 1 token). Empty/whitespace docs yield zero chunks."""
     stride = chunk_size - overlap
     if stride <= 0:
         raise ValueError("overlap must be smaller than chunk_size")
-    toks = alnum_tokens(text_col)
+    toks = alnum_tokens("text")
     n = F.size(toks)
     # chunk starts: 0, stride, 2*stride, ... while start < n
     n_chunks = F.when(n <= 0, F.lit(0)).otherwise(
@@ -57,10 +54,10 @@ def chunk_documents(
     # sequence in Spark, not empty — zero-chunk docs must be filtered,
     # not exploded
     staged = df.select(
-        F.col(id_col), toks.alias("__toks"), n_chunks.alias("__nc")
+        F.col("doc_id"), toks.alias("__toks"), n_chunks.alias("__nc")
     ).filter(F.col("__nc") > 0)
     out = staged.select(
-        id_col,
+        "doc_id",
         "__toks",
         F.explode(F.sequence(F.lit(0), F.col("__nc") - 1)).alias("chunk_idx"),
     )
@@ -68,7 +65,7 @@ def chunk_documents(
         F.col("__toks"), F.col("chunk_idx") * stride + 1, chunk_size
     )
     return out.select(
-        id_col,
+        "doc_id",
         "chunk_idx",
         F.size(chunk).alias("n_tokens"),
         F.concat_ws(" ", chunk).alias("chunk_text"),

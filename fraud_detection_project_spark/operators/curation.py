@@ -64,7 +64,6 @@ def remove_boilerplate_lines(
     df: DataFrame,
     lines: Column,
     min_docs: int = 2,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """CCNet/RefinedWeb-style boilerplate removal: drop every line that
     occurs in >= ``min_docs`` distinct documents (nav bars, cookie
@@ -91,8 +90,8 @@ def remove_boilerplate_lines(
     size, same trade as exact_dedup_docs).
     """
     tagged = df.withColumn("__lines", lines)
-    # materialize the narrow (id, pos, hash) index once (round 13,
-    # guide §1.2): it feeds BOTH the frequency pass and the removal
+    # materialize the narrow (id, pos, hash) index once: it feeds
+    # BOTH the frequency pass and the removal
     # semi-join — un-materialized, the chunk/tokenize kernel (split +
     # slice + array_join over the whole corpus) executed in each
     # consumer, three times per run counting the final `tagged` join
@@ -103,20 +102,20 @@ def remove_boilerplate_lines(
     # the text arrays themselves would materialize a full corpus copy.
     exploded = (
         tagged.select(
-            id_col, F.posexplode("__lines").alias("__pos", "__line")
+            "doc_id", F.posexplode("__lines").alias("__pos", "__line")
         )
-        .select(id_col, "__pos", F.xxhash64("__line").alias("__h"))
+        .select("doc_id", "__pos", F.xxhash64("__line").alias("__h"))
         .localCheckpoint(eager=True)
     )
     common = (
         exploded.groupBy("__h")
-        .agg(F.count_distinct(id_col).alias("__nd"))
+        .agg(F.count_distinct("doc_id").alias("__nd"))
         .filter(F.col("__nd") >= int(min_docs))
         .select("__h")
     )
     removals = (
         exploded.join(common, "__h", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("__pos").alias("__rm"))
     )
     kept = F.when(F.col("__rm").isNull(), F.col("__lines")).otherwise(
@@ -126,7 +125,7 @@ def remove_boilerplate_lines(
         )
     )
     return (
-        tagged.join(removals, id_col, "left")
+        tagged.join(removals, "doc_id", "left")
         .withColumn("kept_lines", kept)
         .withColumn(
             "n_removed",

@@ -49,8 +49,8 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     Documents shorter than n words yield their whole text as the single
     shingle (so they can still exact-match).
 
-    Tokenization stays JVM-side (``alnum_tokens``, one regex pass —
-    round 13: feeding the kernel the token ARRAY instead of the
+    Tokenization stays JVM-side (``alnum_tokens``, one regex pass:
+    feeding the kernel the token ARRAY instead of the
     normalized string drops the 10×-slower regexp_replace pass AND the
     in-kernel re-split, see functions/text.py); the sliding join
     crosses to an Arrow-batched kernel — the column form

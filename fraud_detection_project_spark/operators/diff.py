@@ -31,18 +31,15 @@ def diff_rows(
     left: DataFrame,
     right: DataFrame,
     keys: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Per-key diff stream: one row per key present on either side with
     ``diff_status`` ∈ {only_left, only_right, differing, equal} and the
     per-column equality bitmap (``eq_<col>`` booleans, NULL-safe — two
-    NULLs compare equal, the semantics reconciliation needs).
-
-    ``compare_cols`` defaults to every shared non-key column.
+    NULLs compare equal, the semantics reconciliation needs) over every
+    shared non-key column.
     """
-    if compare_cols is None:
-        shared = [c for c in left.columns if c in set(right.columns)]
-        compare_cols = [c for c in shared if c not in set(keys)]
+    shared = [c for c in left.columns if c in set(right.columns)]
+    compare_cols = [c for c in shared if c not in set(keys)]
     # presence markers, NOT key-nullness: a row whose key is genuinely
     # NULL must still read as present on its side (the null-safe join
     # aligns NULL keys, so key-nullness would misclassify those rows)
@@ -91,15 +88,11 @@ def make_changeset(
     left: DataFrame,
     right: DataFrame,
     keys: Sequence[str],
-    seq: int = 1,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    delete_op: str = "D",
-    upsert_op: str = "U",
 ) -> DataFrame:
     """The CDC changeset that transforms ``left`` into ``right``:
     right-only keys become inserts, left-only keys deletes, differing
-    keys updates; equal keys emit nothing. Closes the algebra with
+    keys updates (``op`` 'U' for inserts and updates, 'D' for deletes,
+    all at ``seq`` 1); equal keys emit nothing. Closes the algebra with
     MERGE — ``merge_apply(left, make_changeset(left, right, k)) ≡
     right`` (property-tested) — which is exactly snapshot
     reconciliation-repair: diff two replicas, ship the minimal
@@ -131,9 +124,9 @@ def make_changeset(
         cond = c if cond is None else (cond & c)
     joined = l.join(r, cond, "full_outer")
     op = (
-        F.when(~in_right, F.lit(delete_op))
-        .when(~in_left, F.lit(upsert_op))
-        .when(~all_eq, F.lit(upsert_op))
+        F.when(~in_right, F.lit("D"))
+        .when(~in_left, F.lit("U"))
+        .when(~all_eq, F.lit("U"))
     )  # equal → NULL → filtered out
     return (
         joined.select(
@@ -144,10 +137,10 @@ def make_changeset(
                 for k in keys
             ],
             *[F.col(f"r.{c}").alias(c) for c in compare_cols],
-            op.alias(op_col),
+            op.alias("op"),
         )
-        .filter(F.col(op_col).isNotNull())
-        .withColumn(seq_col, F.lit(seq).cast("long"))
+        .filter(F.col("op").isNotNull())
+        .withColumn("seq", F.lit(1).cast("long"))
     )
 
 
@@ -155,11 +148,10 @@ def diff_summary(
     left: DataFrame,
     right: DataFrame,
     keys: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """One-row reconciliation summary:
     ``(n_only_left, n_only_right, n_differing, n_equal)``."""
-    d = diff_rows(left, right, keys, compare_cols)
+    d = diff_rows(left, right, keys)
     s = F.col("diff_status")
     return d.agg(
         F.count(F.when(s == ONLY_LEFT, 1)).alias("n_only_left"),

@@ -169,7 +169,7 @@ def co_occurrence_edges(
     src < dst for every pair of distinct items sharing a group (parts
     in the same order, entities in the same session).
 
-    Shape (round 13): ONE ``groupBy(group)`` shuffle gathers each
+    Shape: ONE ``groupBy(group)`` shuffle gathers each
     group's distinct item set (``collect_set`` dedups in-agg with
     map-side partials), pairs expand INSIDE the sorted array via
     codegen-planned array functions, then one ``distinct`` dedups

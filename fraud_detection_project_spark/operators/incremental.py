@@ -83,13 +83,11 @@ def moment_partials(
     )
 
 
-def merge_moments(
-    partials: DataFrame, keys: list[str], precision: int = 6
-) -> DataFrame:
+def merge_moments(partials: DataFrame, keys: list[str]) -> DataFrame:
     """Combine ``moment_partials`` shards (component-wise sums over any
     extra sharding columns NOT in ``keys``) and finalize to
-    ``(n, mean, var_pop, std_pop)``. Merge-then-finalize is exact —
-    identical to a single global pass."""
+    ``(n, mean, var_pop, std_pop)``, rounded to 6 dp. Merge-then-finalize
+    is exact — identical to a single global pass."""
     merged = partials.groupBy(*keys).agg(
         F.sum("n").alias("n"),
         F.sum("s1").alias("s1"),
@@ -100,7 +98,7 @@ def merge_moments(
     return merged.select(
         *keys,
         F.col("n").cast("long").alias("n"),
-        F.round(mean, precision).alias("mean"),
-        F.round(var, precision).alias("var_pop"),
-        F.round(F.sqrt(F.greatest(var, F.lit(0.0))), precision).alias("std_pop"),
+        F.round(mean, 6).alias("mean"),
+        F.round(var, 6).alias("var_pop"),
+        F.round(F.sqrt(F.greatest(var, F.lit(0.0))), 6).alias("std_pop"),
     )

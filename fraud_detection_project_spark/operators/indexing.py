@@ -94,7 +94,7 @@ def partitioned_prefix_sum(
        parallel, and the only driver traffic is |partitions| sums.
 
     Replaces the ``Window.orderBy(...)`` running sum that funnels the
-    whole dataset through ONE task (VERDICT r4 "What's wrong" #1/#3).
+    whole dataset through ONE task.
     Integral value columns accumulate as int64, everything else as
     float64.
 
@@ -110,7 +110,7 @@ def partitioned_prefix_sum(
     ocols = [out_col] if isinstance(out_col, str) else list(out_col)
     if len(vcols) != len(ocols):
         raise ValueError("value_col and out_col lengths differ")
-    # ADVICE r7: schema.add on a colliding name creates a duplicate
+    # schema.add on a colliding name creates a duplicate
     # field and the pandas kernel silently overwrites the input column.
     if len(set(ocols)) != len(ocols):
         raise ValueError(f"out_col names must be distinct: {ocols}")
@@ -174,11 +174,10 @@ def partitioned_prefix_extreme(
     order_cols: Sequence[str],
     value_col: str,
     out_col: str = "cummax",
-    minimum: bool = False,
     exclusive: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """``MAX/MIN(value) OVER (ORDER BY order_cols ROWS UNBOUNDED
+    """``MAX(value) OVER (ORDER BY order_cols ROWS UNBOUNDED
     PRECEDING [AND 1 PRECEDING])`` with NO single-partition stage —
     the prefix-extreme sibling of :func:`partitioned_prefix_sum`
     (same two-phase layout: range-partition + sort, per-partition
@@ -188,7 +187,7 @@ def partitioned_prefix_extreme(
     the shape skyline/dominance queries need.  Emits float64.
 
     NULL values contribute nothing to the running extreme and INHERIT
-    it (SQL MAX() OVER semantics — ADVICE r6): the inclusive extreme is
+    it (SQL MAX() OVER semantics): the inclusive extreme is
     forward-filled inside each Arrow batch and the cross-batch carry is
     always the last non-NaN inclusive extreme, so a batch ending on a
     NULL can no longer drop the running extreme.  Rows before the first
@@ -204,17 +203,15 @@ def partitioned_prefix_extreme(
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
     )
-    agg = F.min(value_col) if minimum else F.max(value_col)
     pext = sorted(
         (r["__pid"], r["e"])
-        for r in rp.groupBy("__pid").agg(agg.alias("e")).collect()
+        for r in rp.groupBy("__pid").agg(F.max(value_col).alias("e")).collect()
     )
-    neutral = math.inf if minimum else -math.inf
-    offsets, acc = {}, neutral
+    offsets, acc = {}, -math.inf
     for pid, e in pext:
         offsets[pid] = acc  # extreme of all PRECEDING partitions
         if e is not None:
-            acc = min(acc, e) if minimum else max(acc, e)
+            acc = max(acc, e)
 
     out_schema = rp.drop("__pid").schema.add(out_col, "double")
     cols = [f.name for f in out_schema.fields]
@@ -228,13 +225,11 @@ def partitioned_prefix_extreme(
             start = carried.get(pid, offsets[pid])
             pdf = pdf.drop(columns="__pid")
             v = pdf[value_col].astype("float64")
-            inc = v.cummin() if minimum else v.cummax()
-            # pandas cummax/cummin leaves NaN at null positions and
-            # (via clip) a trailing NaN would poison the batch carry —
-            # forward-fill the inclusive extreme, seeding NULL-prefix
-            # rows with the carried start (ADVICE r6)
-            inc = inc.ffill().fillna(start)
-            inc = inc.clip(upper=start) if minimum else inc.clip(lower=start)
+            # pandas cummax leaves NaN at null positions and (via clip)
+            # a trailing NaN would poison the batch carry — forward-fill
+            # the inclusive extreme, seeding NULL-prefix rows with the
+            # carried start
+            inc = v.cummax().ffill().fillna(start).clip(lower=start)
             if exclusive:
                 run = inc.shift(1)
                 run.iloc[0] = start

@@ -247,8 +247,8 @@ def interval_overlap_join(
     references). Dedup runs on two ``monotonically_increasing_id`` row
     ids attached before binning, so genuinely duplicate input rows keep
     their full cross-product multiplicity — exactly what the naive
-    cross-join-with-predicate yields (ADVICE r3: deduping on column
-    VALUES collapsed duplicate rows). Cost: one shuffle join on the bin
+    cross-join-with-predicate yields (deduping on column VALUES would
+    collapse duplicate rows). Cost: one shuffle join on the bin
     key — the same trick as binned_range_join, generalized from
     point∈interval to interval∩interval.
     """

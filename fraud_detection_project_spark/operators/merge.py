@@ -27,10 +27,7 @@ Scale design (100 TB base, much smaller changeset):
     changeset against the base's key column only, a column-pruned scan
     that shuffles 8-byte keys, not rows.
 - deletes are rows, not tombstone scans: a change row with
-  ``op = delete_op`` drops the key in the same single pass. For
-  out-of-order/at-least-once delivery, ``keep_tombstones=True`` retains
-  deletes as (key, seq, op) rows so the seq guard survives deletion and
-  batch application commutes — see :func:`merge_apply`.
+  ``op = 'D'`` drops the key in the same single pass.
 """
 
 from __future__ import annotations
@@ -43,7 +40,6 @@ def latest_changes(
     changes: DataFrame,
     keys: list[str],
     seq_col: str,
-    op_col: str = "op",
 ) -> DataFrame:
     """Compact a changeset to the latest change per key (seq max wins).
 
@@ -65,64 +61,29 @@ def merge_apply(
     changes: DataFrame,
     keys: list[str],
     seq_col: str,
-    op_col: str = "op",
-    delete_op: str = "D",
     broadcast_changes: bool = False,
-    keep_tombstones: bool = False,
 ) -> DataFrame:
-    """Upserted snapshot: latest change per key wins; ``delete_op`` rows
+    """Upserted snapshot: latest change per key wins; ``op = 'D'`` rows
     drop the key; unmatched change keys insert; untouched base rows pass
     through. Result schema = base schema.
 
     ``changes`` must carry every base column that is not a key (the
-    replacement payload) plus ``seq_col`` and ``op_col``.
+    replacement payload) plus ``seq_col`` and ``op``.
 
-    Ordering guarantees — two tiers:
-
-    - default (``keep_tombstones=False``): if the base carries
-      ``seq_col``, a change only applies when ``change.seq >= base.seq``,
-      so REPLAYING the latest batch (foreachBatch's failure semantics —
-      monotonic redelivery) is a no-op. This does NOT extend to
-      arbitrary batch orders: a delete removes the row *and its recorded
-      seq*, so a stale update replayed after the delete sees no base row
-      and would resurrect the key as an insert.
-    - ``keep_tombstones=True``: deletes are retained as rows (keys +
-      ``seq_col`` + ``op_col`` = ``delete_op``, remaining payload NULL)
-      so the seq guard survives deletion and applying batches in ANY
-      order converges to the same snapshot. Requires the base schema to
-      carry BOTH ``seq_col`` and ``op_col`` (live rows: op NULL/'U').
-      Readers take the live view with ``op IS NULL OR op != delete_op``;
-      tombstones are garbage-collected by age out-of-band, exactly as
-      table formats compact deletion vectors.
+    If the base carries ``seq_col``, a change only applies when
+    ``change.seq >= base.seq``, so REPLAYING the latest batch
+    (foreachBatch's failure semantics — monotonic redelivery) is a
+    no-op. This does NOT extend to arbitrary batch orders: a delete
+    removes the row *and its recorded seq*, so a stale update replayed
+    after the delete sees no base row and would resurrect the key as an
+    insert.
     """
     payload_cols = [c for c in base.columns if c not in keys]
     guard_seq = seq_col in base.columns
-    if keep_tombstones and (not guard_seq or op_col not in base.columns):
-        raise ValueError(
-            "keep_tombstones=True requires the base to carry "
-            f"{seq_col!r} and {op_col!r} columns"
-        )
-    base_types = {f.name: f.dataType for f in base.schema.fields}
-    latest = latest_changes(changes, keys, seq_col, op_col)
-
-    def strip_tombstones(df: DataFrame) -> DataFrame:
-        # a tombstone is keys + seq + op; every other payload column is
-        # nulled so the snapshot is a pure function of the changeset
-        dead = F.col(op_col) == F.lit(delete_op)
-        return df.select(
-            *keys,
-            *[
-                F.when(dead, F.lit(None).cast(base_types[p])).otherwise(
-                    F.col(p)
-                ).alias(p)
-                if p not in (seq_col, op_col)
-                else F.col(p)
-                for p in payload_cols
-            ],
-        )
+    latest = latest_changes(changes, keys, seq_col)
 
     def apply_side(joined: DataFrame) -> DataFrame:
-        changed = F.col(f"c.{op_col}").isNotNull()
+        changed = F.col("c.op").isNotNull()
         if guard_seq:
             changed = changed & (
                 F.col(f"b.{seq_col}").isNull()
@@ -136,14 +97,10 @@ def merge_apply(
             ],
             # effective op: a guard-failing (stale) change is a no-op,
             # including stale deletes
-            F.when(changed, F.col(f"c.{op_col}")).alias("_op"),
+            F.when(changed, F.col("c.op")).alias("_op"),
         )
-        if keep_tombstones:
-            # op_col is a payload column here, so the effective op
-            # already flows into the row; just normalize the payload
-            return strip_tombstones(merged.drop("_op"))
         return merged.filter(
-            F.col("_op").isNull() | (F.col("_op") != F.lit(delete_op))
+            F.col("_op").isNull() | (F.col("_op") != F.lit("D"))
         ).drop("_op")
 
     if not broadcast_changes:
@@ -159,9 +116,9 @@ def merge_apply(
     # struct cannot hash-aggregate) executed once per consumer. The
     # measured q10 plan showed both subtrees in full. Checkpoint so the
     # compaction runs once and both consumers read the materialized rows
-    # (guide §1.2 "don't compute things you throw away"; same pattern as
-    # the bm25/rouge compacted relations). Lazy: the first action pays
-    # the materialization inside its own timed window. Registered,
+    # (same pattern as the bm25/rouge compacted relations). Lazy: the
+    # first action pays the materialization inside its own timed
+    # window. Registered,
     # because the checkpoint truncates the lineage the census used to
     # read the bounding aggregate from: the boundedness claim is the
     # SAME author assertion the F.broadcast hint below already makes.
@@ -182,15 +139,9 @@ def merge_apply(
     upserted = apply_side(b.join(F.broadcast(c), on=keys, how="left_outer"))
     # (2) inserts — anti-join the compacted changeset against the base's
     # key column only (column-pruned scan, shuffles keys not rows).
-    # With tombstones, a delete for a never-seen key also inserts (as a
-    # tombstone) so later stale updates for that key stay no-ops.
-    inserts = latest if keep_tombstones else latest.filter(
-        F.col(op_col) != F.lit(delete_op)
-    )
     inserts = (
-        inserts.join(base.select(*keys), on=keys, how="left_anti")
+        latest.filter(F.col("op") != F.lit("D"))
+        .join(base.select(*keys), on=keys, how="left_anti")
         .select(*keys, *payload_cols)
     )
-    if keep_tombstones:
-        inserts = strip_tombstones(inserts)
     return upserted.unionByName(inserts)

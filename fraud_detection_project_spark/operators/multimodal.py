@@ -44,15 +44,15 @@ MEDIA_META = T.StructType(
     ]
 )
 
-# name → decoder(bytes, mime) -> np.ndarray; installed by the host env.
-_DECODERS: dict[str, Callable[[bytes, str], np.ndarray]] = {}
+# name → decoder(bytes) -> np.ndarray; installed by the host env.
+_DECODERS: dict[str, Callable[[bytes], np.ndarray]] = {}
 
 
-def register_decoder(name: str, fn: Callable[[bytes, str], np.ndarray]) -> None:
+def register_decoder(name: str, fn: Callable[[bytes], np.ndarray]) -> None:
     _DECODERS[name] = fn
 
 
-def _fake_decode(payload: bytes, mime: str) -> np.ndarray:
+def _fake_decode(payload: bytes) -> np.ndarray:
     """Deterministic stand-in decoder: 8×8 'pixels' derived from the
     payload bytes — stable across runs, so downstream feature tests can
     assert exact values. Replaced by register_decoder in a real env."""
@@ -76,9 +76,10 @@ def _decoder(name: str | None, strict: bool):
 # --- real stdlib codecs ------------------------------------------------
 
 
-def wav_bytes(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
-    """Encode int16 PCM mono samples as a minimal RIFF/WAVE payload
-    (44-byte header + frames) using only the stdlib ``wave`` module.
+def wav_bytes(samples: np.ndarray) -> bytes:
+    """Encode int16 PCM mono samples at 8 kHz as a minimal RIFF/WAVE
+    payload (44-byte header + frames) using only the stdlib ``wave``
+    module.
     The synthesis half of the WAV round-trip used by tests/oracles."""
     import io
     import wave
@@ -87,12 +88,12 @@ def wav_bytes(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
-        w.setframerate(sample_rate)
+        w.setframerate(8000)
         w.writeframes(np.asarray(samples, dtype="<i2").tobytes())
     return buf.getvalue()
 
 
-def decode_wav(payload: bytes, mime: str = "audio/wav") -> np.ndarray:
+def decode_wav(payload: bytes) -> np.ndarray:
     """REAL WAV decode, stdlib only: RIFF PCM via ``wave``. Returns
     float64 samples, shape (n_frames,) mono or (n_frames, n_channels).
     Supports 8-bit unsigned and 16/32-bit signed PCM."""
@@ -124,7 +125,7 @@ def ppm_bytes(pixels: np.ndarray) -> bytes:
     return magic + f"\n{w} {h}\n255\n".encode() + a.tobytes()
 
 
-def decode_pnm(payload: bytes, mime: str = "image/x-portable-pixmap") -> np.ndarray:
+def decode_pnm(payload: bytes) -> np.ndarray:
     """REAL binary PNM decode, hand-parsed: P6 RGB → (h, w, 3), P5
     gray → (h, w), float64. Handles whitespace/comment-tolerant headers
     and 8-bit maxval (the overwhelmingly common case)."""
@@ -154,12 +155,12 @@ def decode_pnm(payload: bytes, mime: str = "image/x-portable-pixmap") -> np.ndar
     return arr.reshape(h, w, 3) if rgb else arr.reshape(h, w)
 
 
-def decode_auto(payload: bytes, mime: str = "") -> np.ndarray:
+def decode_auto(payload: bytes) -> np.ndarray:
     """Magic-byte sniffing decoder: RIFF/WAVE → wav, P5/P6 → pnm."""
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload, mime)
+        return decode_wav(payload)
     if payload[:2] in (b"P5", b"P6"):
-        return decode_pnm(payload, mime)
+        return decode_pnm(payload)
     raise ValueError("unrecognized media payload (no registered codec)")
 
 
@@ -184,25 +185,21 @@ def attach_media_meta(
     ).withColumn("payload_bytes", F.length(F.col(payload_col)).cast("long"))
 
 
-def media_repartition(
-    df: DataFrame, payload_col: str, target_partition_bytes: int = 128 * 1024 * 1024
-) -> DataFrame:
-    """Repartition so each partition holds ~target bytes of payload.
+def media_repartition(df: DataFrame, payload_col: str) -> DataFrame:
+    """Repartition so each partition holds ~128 MiB of payload.
     Row-count partitioning under-splits large media; this sizes by the
     actual byte column."""
     total = df.select(F.sum(F.length(payload_col)).alias("b")).first()["b"] or 0
-    n = max(1, int(total // target_partition_bytes) + 1)
+    n = max(1, int(total // (128 * 1024 * 1024)) + 1)
     return df.repartition(n)
 
 
 def extract_features(
     df: DataFrame,
     payload_col: str = "payload",
-    mime_col: str | None = None,
     id_col: str = "media_id",
     decoder: str | None = None,
     strict: bool = False,
-    batch_size_hint: int = 64,
 ) -> DataFrame:
     """Decode + feature-extract via ``mapInPandas``: per Arrow batch,
     decode each payload and emit (id, n_bytes, mean_intensity,
@@ -219,15 +216,12 @@ def extract_features(
             T.StructField("feat", T.ArrayType(T.DoubleType())),
         ]
     )
-    has_mime = mime_col is not None
-
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, nb, mean_i, std_i, feats = [], [], [], [], []
             for i in range(len(pdf)):
                 payload = pdf[payload_col].iloc[i]
-                mime = pdf[mime_col].iloc[i] if has_mime else "application/octet-stream"
-                pixels = dec(bytes(payload), mime)
+                pixels = dec(bytes(payload))
                 ids.append(pdf[id_col].iloc[i])
                 nb.append(len(payload))
                 mean_i.append(float(pixels.mean()))
@@ -244,8 +238,7 @@ def extract_features(
                 }
             )
 
-    cols = [id_col, payload_col] + ([mime_col] if has_mime else [])
-    return df.select(*cols).mapInPandas(kernel, out_schema)
+    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
 
 
 def frame_sample(
@@ -253,14 +246,12 @@ def frame_sample(
     payload_col: str = "payload",
     id_col: str = "media_id",
     every_n: int = 4,
-    strict: bool = False,
 ) -> DataFrame:
     """Video-style frame sampling stub: emits one row per sampled
     'frame' (here: 8-byte stripe of the fake decode) with frame_idx.
     Real decoder replaces the kernel body; the explode-shaped output
     contract (id, frame_idx, frame_feat) is what downstream code binds
     to."""
-    dec = _decoder(None, strict)
     out_schema = T.StructType(
         [
             T.StructField(id_col, df.schema[id_col].dataType),
@@ -273,7 +264,7 @@ def frame_sample(
         for pdf in batches:
             ids, idxs, feats = [], [], []
             for i in range(len(pdf)):
-                pixels = dec(bytes(pdf[payload_col].iloc[i]), "video/fake")
+                pixels = _fake_decode(bytes(pdf[payload_col].iloc[i]))
                 for fi in range(0, pixels.shape[0], every_n):
                     ids.append(pdf[id_col].iloc[i])
                     idxs.append(fi)

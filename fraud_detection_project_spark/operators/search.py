@@ -38,22 +38,19 @@ from ..functions.text import alnum_tokens
 def bm25_search(
     docs: DataFrame,
     terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
     top_k: int = 20,
 ) -> DataFrame:
     """Top-k documents by BM25 (Robertson/Sparck-Jones, the Lucene
     ``ln(1 + (N - df + 0.5)/(df + 0.5))`` idf variant) for a bag of
-    query terms. Returns (id_col, bm25) ordered by score desc, id asc.
+    query terms, with k1 = 1.2 and b = 0.75. Returns (doc_id, bm25)
+    ordered by score desc, id asc.
     """
     from .dedup import spread_input
 
     toked = spread_input(docs).select(
-        F.col(id_col), alnum_tokens(text_col).alias("toks")
+        F.col("doc_id"), alnum_tokens("text").alias("toks")
     )
-    # ONE tokenization pass (round 13, guide §1.2): the old shape
+    # ONE tokenization pass: the old shape
     # tokenized the corpus twice — a full pass for the one-row
     # (n, avgdl) stats aggregate and a second full pass for tf.
     # Measured at sf0.1 the two passes cost 1.56s + 2.57s while this
@@ -66,7 +63,7 @@ def bm25_search(
     # stats as a one-row rollup, tf by exploding the tiny hit arrays.
     per_doc = (
         toked.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size("toks").alias("dl"),
             F.filter("toks", lambda t: t.isin(terms)).alias("qtoks"),
         )
@@ -78,9 +75,9 @@ def bm25_search(
     # (filter-before-explode ≡ explode-then-isin: same (doc, term) rows)
     tf = (
         per_doc.select(
-            F.col(id_col), F.col("dl"), F.explode("qtoks").alias("term")
+            F.col("doc_id"), F.col("dl"), F.explode("qtoks").alias("term")
         )
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
     )
     # |matching docs| × |terms| rows — checkpoint kills lineage so the
@@ -89,8 +86,8 @@ def bm25_search(
     # df_ is ≤ |query terms| rows (tf is literal-IN-pruned to the
     # query's term bag upstream), so broadcasting it is the right plan
     # at any scale — bounded_checkpoint materializes the tiny frame and
-    # registers the boundedness claim for the census (round 11: the
-    # census fails closed on unregistered checkpoint broadcasts, and
+    # registers the boundedness claim for the census (the census
+    # fails closed on unregistered checkpoint broadcasts, and
     # the groupBy('term') key alone cannot prove the literal pruning
     # once the checkpoint truncates lineage)
     from ..lineage import bounded_checkpoint
@@ -107,6 +104,7 @@ def bm25_search(
     idf = F.log(
         F.lit(1.0) + (F.col("n") - F.col("qdf") + 0.5) / (F.col("qdf") + 0.5)
     )
+    k1, b = 1.2, 0.75
     score = idf * (F.col("tf") * (k1 + 1.0)) / (
         F.col("tf")
         + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
@@ -115,18 +113,14 @@ def bm25_search(
     scored = (
         tf.join(F.broadcast(df_), "term")
         .crossJoin(F.broadcast(stats))
-        .select(F.col(id_col), score.alias("s"))
-        .groupBy(id_col)
+        .select(F.col("doc_id"), score.alias("s"))
+        .groupBy("doc_id")
         .agg(F.round(F.sum("s"), 4).alias("bm25"))
     )
-    return scored.orderBy(F.desc("bm25"), F.asc(id_col)).limit(top_k)
+    return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(top_k)
 
 
-def tfidf_weights(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_weights(docs: DataFrame) -> DataFrame:
     """Per-(doc, term) TF-IDF weights over the whole vocabulary — the
     sparse-feature twin of :func:`bm25_search` (which scores a fixed
     query term set; this weights every term for downstream vectorizers /
@@ -146,30 +140,29 @@ def tfidf_weights(
     from .dedup import spread_input
 
     toked = spread_input(docs).select(
-        F.col(id_col), alnum_tokens(text_col).alias("toks")
+        F.col("doc_id"), alnum_tokens("text").alias("toks")
     )
     n_docs = toked.agg(F.count(F.lit(1)).alias("n"))
 
     tf = (
-        toked.select(F.col(id_col), F.explode("toks").alias("term"))
-        .groupBy(id_col, "term")
+        toked.select(F.col("doc_id"), F.explode("toks").alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     tf = tf.localCheckpoint(eager=True)
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
     idf = F.log((F.col("n") + 1.0) / (F.col("df") + 1.0)) + 1.0
-    # df_ joins HINT-FREE (census, round 11): unlike bm25's query-term
-    # df, this is the FULL vocabulary's document frequencies — |vocab|
-    # grows with the corpus (Heaps), so a forced broadcast OOMs the
-    # driver at 100 TB. AQE broadcasts while measured-small; at scale
-    # the term join correctly shuffles (same retirement class as r10's
-    # DSIR vocab stats).
+    # df_ joins HINT-FREE (census): unlike bm25's query-term df, this
+    # is the FULL vocabulary's document frequencies — |vocab| grows
+    # with the corpus (Heaps), so a forced broadcast OOMs the driver at
+    # 100 TB. AQE broadcasts while measured-small; at scale the term
+    # join correctly shuffles.
     return (
         tf.join(df_, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "term",
             "tf",
             F.round(idf, 6).alias("idf"),
@@ -181,8 +174,6 @@ def tfidf_weights(
 def feature_hash_vectors(
     docs: DataFrame,
     dim: int = 1024,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Hashing-trick sparse vectors (HashingVectorizer): term →
     ``pmod(xxhash64(term), dim)`` bucket, weight = term count summed per
@@ -201,23 +192,21 @@ def feature_hash_vectors(
     from .dedup import spread_input
 
     toked = spread_input(docs).select(
-        F.col(id_col), alnum_tokens(text_col).alias("toks")
+        F.col("doc_id"), alnum_tokens("text").alias("toks")
     )
     return (
-        toked.select(F.col(id_col), F.explode("toks").alias("term"))
+        toked.select(F.col("doc_id"), F.explode("toks").alias("term"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.pmod(F.xxhash64("term"), F.lit(dim)).alias("bucket"),
         )
-        .groupBy(id_col, "bucket")
+        .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("weight"))
     )
 
 
 def build_vocabulary(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 2,
     max_df_frac: float = 0.5,
     max_vocab: int | None = None,
@@ -239,11 +228,11 @@ def build_vocabulary(
     from .dedup import spread_input
 
     toked = spread_input(docs).select(
-        F.col(id_col), alnum_tokens(text_col).alias("toks")
+        F.col("doc_id"), alnum_tokens("text").alias("toks")
     )
     n_docs = toked.agg(F.count(F.lit(1)).alias("n"))
     df_ = (
-        toked.select(F.col(id_col), F.explode(F.array_distinct("toks")).alias("term"))
+        toked.select(F.col("doc_id"), F.explode(F.array_distinct("toks")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .crossJoin(F.broadcast(n_docs))
@@ -265,8 +254,6 @@ def build_vocabulary(
 
 def pmi_term_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 2,
     max_df_frac: float = 0.5,
     min_pair_df: int = 2,
@@ -291,8 +278,8 @@ def pmi_term_pairs(
     from .dedup import spread_input
 
     toked = spread_input(docs).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(alnum_tokens(text_col))).alias(
+        F.col("doc_id").alias("doc"),
+        F.explode(F.array_distinct(alnum_tokens("text"))).alias(
             "term"
         ),
     )
@@ -307,7 +294,7 @@ def pmi_term_pairs(
         )
         .localCheckpoint(eager=False)
     )
-    # term_df joins HINT-FREE (census, round 11): the df-band keeps up
+    # term_df joins HINT-FREE (census): the df-band keeps up
     # to Σdf/min_df ≈ N/min_df terms — linear in the corpus under the
     # absolute min_df floor, so a forced broadcast is a 100 TB driver
     # OOM. AQE broadcasts while measured-small, shuffles beyond.
@@ -349,7 +336,6 @@ def pmi_term_pairs(
 
 def bigram_lm_topk(
     docs: DataFrame,
-    text_col: str = "text",
     min_count: int = 2,
     top_k: int = 50,
 ) -> DataFrame:
@@ -367,7 +353,7 @@ def bigram_lm_topk(
     positional self-join. Two shuffles total: bigram count, context
     window sum over the counts frame (bounded by distinct bigrams).
     """
-    toked = docs.select(alnum_tokens(text_col).alias("toks")).filter(
+    toked = docs.select(alnum_tokens("text").alias("toks")).filter(
         F.size("toks") >= 2
     )
     big = toked.select(
@@ -396,83 +382,61 @@ def bigram_lm_topk(
 
 def lm_perplexity(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: float = 0.1,
-    lm_docs: DataFrame | None = None,
-    precision: int | None = 6,
 ) -> DataFrame:
     """Per-document bigram-LM perplexity — the CCNet-style quality
-    filter: documents whose word sequences are improbable under a
-    reference language model (boilerplate, gibberish, wrong-language
+    filter: documents whose word sequences are improbable under the
+    corpus's own language model (boilerplate, gibberish, wrong-language
     residue) surface with high perplexity. Returns
-    ``(doc_id, n_bigrams, ppl)`` for every doc with ≥ 2 tokens, where
+    ``(doc_id, n_bigrams, ppl)`` for every doc with ≥ 2 tokens, ppl
+    rounded to 6 dp, where
 
         ppl = exp( − mean_bigrams ln P(w2 | w1) )
         P(w2 | w1) = (c(w1 w2) + k) / (c(w1 ·) + k·V)     (add-k)
 
-    The LM trains on ``lm_docs`` (default: ``docs`` itself — the
-    self-perplexity used for outlier screening); ``V`` is the distinct
-    token count of the training corpus, and unseen bigrams/contexts
-    smooth to k/(k·V) = 1/V.
+    The LM trains on ``docs`` itself (the self-perplexity used for
+    outlier screening); ``V`` is the distinct token count of the
+    corpus.
 
-    Scale design: one tokenize pass per corpus; bigram counts and
-    context sums aggregate to the distinct-bigram frame (vocabulary-
-    bounded, ≪ corpus); scoring joins doc-bigrams to the counts frame
-    on the bigram key — at 100 TB prune the LM to a top-V table and
-    broadcast it (unseen mass is already defined by the smoothing), at
-    which point scoring is map-only. The V scalar and any 1-row stats
-    ride along as broadcast crossJoins, never a driver collect.
+    Scale design: one tokenize pass; bigram counts and context sums
+    aggregate to the distinct-bigram frame (vocabulary-bounded,
+    ≪ corpus); scoring joins doc-bigrams to the counts frame on the
+    bigram key. The V scalar rides along as a broadcast crossJoin,
+    never a driver collect.
     """
-    src = lm_docs if lm_docs is not None else docs
-
-    def _valid_toked(frame: DataFrame, *extra):
-        return frame.select(
-            *extra, alnum_tokens(text_col).alias("toks")
-        ).filter(
-            (F.size("toks") >= 2) & (F.element_at("toks", 1) != F.lit(""))
-        )
-
-    lm_toked = _valid_toked(src)
-
-    def _bigrams(toked: DataFrame, *keep):
-        return toked.select(
-            *keep,
-            F.explode(
-                F.arrays_zip(
-                    F.slice("toks", 1, F.size("toks") - 1).alias("w1"),
-                    F.slice("toks", 2, F.size("toks") - 1).alias("w2"),
-                )
-            ).alias("bg"),
-        ).select(*keep, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-
-    cnt = _bigrams(lm_toked).groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("c")
+    toked = docs.select(
+        F.col("doc_id"), alnum_tokens("text").alias("toks")
+    ).filter(
+        (F.size("toks") >= 2) & (F.element_at("toks", 1) != F.lit(""))
     )
+    doc_bg = toked.select(
+        "doc_id",
+        F.explode(
+            F.arrays_zip(
+                F.slice("toks", 1, F.size("toks") - 1).alias("w1"),
+                F.slice("toks", 2, F.size("toks") - 1).alias("w2"),
+            )
+        ).alias("bg"),
+    ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+
+    cnt = doc_bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     ctx = cnt.groupBy("w1").agg(F.sum("c").alias("c1"))
-    voc = lm_toked.select(F.explode("toks").alias("t")).agg(
+    voc = toked.select(F.explode("toks").alias("t")).agg(
         F.countDistinct("t").alias("v")
     )
-
-    doc_bg = _bigrams(_valid_toked(docs, F.col(id_col)), id_col)
     scored = (
-        doc_bg.join(cnt, ["w1", "w2"], "left")
-        .join(ctx, ["w1"], "left")
+        doc_bg.join(cnt, ["w1", "w2"])
+        .join(ctx, ["w1"])
         .crossJoin(F.broadcast(voc))
         .select(
-            id_col,
+            "doc_id",
             F.log(
-                (F.coalesce(F.col("c"), F.lit(0)) + F.lit(float(k)))
-                / (
-                    F.coalesce(F.col("c1"), F.lit(0))
-                    + F.lit(float(k)) * F.col("v")
-                )
+                (F.col("c") + F.lit(float(k)))
+                / (F.col("c1") + F.lit(float(k)) * F.col("v"))
             ).alias("logp"),
         )
     )
-    ppl = F.exp(-F.avg("logp"))
-    if precision is not None:
-        ppl = F.round(ppl, precision)
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"), ppl.alias("ppl")
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        F.round(F.exp(-F.avg("logp")), 6).alias("ppl"),
     )

@@ -43,18 +43,16 @@ def cosine_topk(
     df: DataFrame,
     query: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k by cosine similarity to ``query``. Deterministic
-    tiebreak on id. Plan: narrow map + TakeOrderedAndProject (no global
+    """Exact top-k ``vec_id`` by cosine similarity of ``embedding`` to
+    ``query``. Deterministic tiebreak on id. Plan: narrow map + TakeOrderedAndProject (no global
     sort; k rows per partition → k rows total)."""
     q = _query_lit(query)
-    sim = cosine_similarity(F.col(vec_col), q)
+    sim = cosine_similarity(F.col("embedding"), q)
     return (
-        df.select(F.col(id_col), sim.alias("cosine_sim"))
+        df.select(F.col("vec_id"), sim.alias("cosine_sim"))
         .filter(F.col("cosine_sim").isNotNull())
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
+        .orderBy(F.desc("cosine_sim"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -66,10 +64,10 @@ def _matrix_lit(m: "np.ndarray") -> Column:
 
 
 def hyperplane_bucket(
-    vec_col: Column | str, dim: int | None, bits: int = 16, seed: int = 42
+    vec_col: Column | str, dim: int | None, bits: int = 16
 ) -> Column:
     """Sign-random-projection bucket id: bit i = sign(v · r_i) for
-    ``bits`` seeded Gaussian hyperplanes.
+    ``bits`` Gaussian hyperplanes drawn with seed 42.
 
     Arrow-batched gemm kernel: the batch's vectors multiply the plane
     matrix in one BLAS call, signs pack into the bucket int. A pure
@@ -78,14 +76,14 @@ def hyperplane_bucket(
     scale, and this bucket pass fronts every LSH operator.
 
     ``dim=None`` derives the dimensionality lazily from the first
-    non-null vector each worker sees (VERDICT r7 item 5: no extra
-    driver job). The plane draw depends only on (seed, bits, dim), so
+    non-null vector each worker sees (no extra driver job). The plane
+    draw depends only on (bits, dim), so
     every worker rebuilds the IDENTICAL matrix — bit-equal to passing
     the true ``dim`` explicitly."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    planes = None if dim is None else np.random.RandomState(seed).normal(
+    planes = None if dim is None else np.random.RandomState(42).normal(
         size=(bits, dim)
     )
     weights = (np.uint64(1) << np.arange(bits, dtype=np.uint64)).astype(np.int64)
@@ -97,12 +95,12 @@ def hyperplane_bucket(
         if valid:
             m = np.asarray([list(vs.iloc[i]) for i in valid], dtype=np.float64)
             if planes is None:
-                planes = np.random.RandomState(seed).normal(
+                planes = np.random.RandomState(42).normal(
                     size=(bits, m.shape[1])
                 )
             if m.shape[1] != planes.shape[1]:
-                # Ragged corpora must fail loudly on BOTH dim paths
-                # (ADVICE r8): with lazy dim, different workers would
+                # Ragged corpora must fail loudly on BOTH dim paths:
+                # with lazy dim, different workers would
                 # otherwise derive different plane matrices from their
                 # first batch and emit incomparable buckets silently.
                 raise ValueError(
@@ -123,19 +121,16 @@ def ann_topk_lsh(
     df: DataFrame,
     query: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     bits: int = 12,
     probe_hamming: int = 2,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: candidates share a hyperplane bucket within
     ``probe_hamming`` bits of the query's bucket, then exact cosine
     re-rank. Recall/cost dial: more probe bits or fewer bucket bits →
     more candidates."""
     dim = len(query)
-    bucket = hyperplane_bucket(vec_col, dim, bits, seed)
-    rng = np.random.RandomState(seed)
+    bucket = hyperplane_bucket("embedding", dim, bits)
+    rng = np.random.RandomState(42)
     planes = rng.normal(size=(bits, dim))
     qbucket = 0
     for i in range(bits):
@@ -145,16 +140,13 @@ def ann_topk_lsh(
     cand = df.withColumn("__bucket", bucket).filter(
         F.bit_count(F.col("__bucket").bitwiseXOR(F.lit(qbucket))) <= probe_hamming
     )
-    return cosine_topk(cand, query, k, vec_col, id_col)
+    return cosine_topk(cand, query, k)
 
 
 def cosine_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     bits: int = 12,
-    seed: int = 42,
     dim: int | None = None,
     bucket_col: str | None = None,
 ) -> DataFrame:
@@ -179,11 +171,11 @@ def cosine_near_dup_pairs(
         bucket = F.col(bucket_col)
     else:
         # dim=None resolves lazily inside the bucket kernel — no
-        # .first() driver job on the default path (VERDICT r7 item 5).
-        bucket = hyperplane_bucket(vec_col, dim, bits, seed)
+        # .first() driver job on the default path.
+        bucket = hyperplane_bucket("embedding", dim, bits)
     bucketed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
         bucket.alias("bucket"),
     ).filter(F.col("v").isNotNull())
 
@@ -219,12 +211,8 @@ def ivf_topk(
     df: DataFrame,
     query: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_centroids: int = 16,
     nprobe: int = 4,
-    seed: int = 42,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize rows to seeded sample centroids
     (one assignment pass, computed as column arithmetic against
@@ -235,23 +223,20 @@ def ivf_topk(
     ``n_centroids`` rows — because IVF recall depends far more on
     ``nprobe`` than on centroid quality. At scale the assignment column
     is precomputed and the table is partitioned by cell → probing is
-    partition pruning. Pass ``centroids`` (e.g. from
-    ``ml.clustering.kmeans_centroids``) to reuse trained cells instead
-    of the seeded sample.
+    partition pruning.
     """
-    if centroids is None:
-        # deterministic seeded sample via hash order: ONE
-        # TakeOrderedAndProject job, n_centroids rows to the driver
-        # (rdd.takeSample would run a count job + a sample job and pull
-        # through the RDD path)
-        sample = (
-            df.select(id_col, vec_col)
-            .filter(F.col(vec_col).isNotNull())
-            .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
-            .limit(n_centroids)
-            .collect()
-        )
-        centroids = [list(map(float, r[vec_col])) for r in sample]
+    # deterministic seeded sample via hash order: ONE
+    # TakeOrderedAndProject job, n_centroids rows to the driver
+    # (rdd.takeSample would run a count job + a sample job and pull
+    # through the RDD path)
+    sample = (
+        df.select("vec_id", "embedding")
+        .filter(F.col("embedding").isNotNull())
+        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(42)))
+        .limit(n_centroids)
+        .collect()
+    )
+    centroids = [list(map(float, r["embedding"])) for r in sample]
 
     # squared distance to every centroid via higher-order functions over
     # one constant centroid matrix (O(1) expression nodes — see
@@ -260,7 +245,7 @@ def ivf_topk(
         _matrix_lit(np.asarray(centroids)),
         lambda cv: F.aggregate(
             F.zip_with(
-                F.col(vec_col),
+                F.col("embedding"),
                 cv,
                 lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
             ),
@@ -277,14 +262,12 @@ def ivf_topk(
     )
     probed = order[:nprobe]
     cand = df.withColumn("__cell", assign).filter(F.col("__cell").isin(probed))
-    return cosine_topk(cand, query, k, vec_col, id_col)
+    return cosine_topk(cand, query, k)
 
 
 def cosine_all_pairs_exact(
     df: DataFrame,
     threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     block_rows: int = 4096,
 ) -> DataFrame:
     """Exact all-pairs cosine similarity ≥ threshold — distributed
@@ -315,7 +298,7 @@ def cosine_all_pairs_exact(
     import pandas as pd
 
     src = df.select(
-        F.col(id_col).cast("long").alias("__id"), F.col(vec_col).alias("__v")
+        F.col("vec_id").cast("long").alias("__id"), F.col("embedding").alias("__v")
     ).filter(F.col("__v").isNotNull())
 
     n = src.count()
@@ -401,11 +384,7 @@ def cosine_all_pairs_exact(
     return pairs.repartition(min(n_pairs, 2048)).mapInPandas(kernel, out_schema)
 
 
-def quantize_int8(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization — the storage-side
     compression step of an embedding pipeline (4× smaller than float32,
     8× smaller than float64; ANN distance kernels then run on int8).
@@ -415,7 +394,7 @@ def quantize_int8(
     so the rounding rule is engine-independent (banker's vs half-away
     ties can differ between numpy/JVM/SQL; floor cannot).
 
-    Output: (id_col, scale, q array<tinyint>, sum_q, n_sat, max_err) —
+    Output: (vec_id, scale, q array<tinyint>, sum_q, n_sat, max_err) —
     the trailing three are quality telemetry (saturated-lane count and
     worst reconstruction error) computed in the same Arrow pass for
     free. One narrow mapInPandas-style projection, no shuffle; all math
@@ -456,9 +435,9 @@ def quantize_int8(
             "struct<scale: double, q: array<tinyint>, sum_q: bigint,"
             " n_sat: bigint, max_err: double>"
         ),
-    )(F.col(vec_col))
-    return df.select(F.col(id_col), packed.alias("_z")).select(
-        id_col, "_z.scale", "_z.q", "_z.sum_q", "_z.n_sat", "_z.max_err"
+    )(F.col("embedding"))
+    return df.select(F.col("vec_id"), packed.alias("_z")).select(
+        "vec_id", "_z.scale", "_z.q", "_z.sum_q", "_z.n_sat", "_z.max_err"
     )
 
 
@@ -466,11 +445,9 @@ def random_project(
     df: DataFrame,
     dim: int,
     out_dim: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Johnson-Lindenstrauss Gaussian random projection:
-    ``y = R x / sqrt(out_dim)`` with R ~ N(0,1)^(out_dim x dim), seeded.
+    ``y = R x / sqrt(out_dim)`` with R ~ N(0,1)^(out_dim x dim), seed 42.
 
     The JL lemma makes this the standard dimensionality crusher in
     front of ANN / clustering at scale: pairwise distances survive to
@@ -481,13 +458,13 @@ def random_project(
     Arrow-batched gemm kernel (same shape as hyperplane_bucket: one
     BLAS call per batch against the broadcast-by-closure plane matrix);
     a narrow projection, no shuffle. ``dim`` is explicit so no driver
-    job runs to sniff the width. Replaces ``vec_col`` with the
+    job runs to sniff the width. Replaces ``embedding`` with the
     projected array<double>, other columns pass through.
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     planes = rng.normal(size=(out_dim, dim)) / np.sqrt(out_dim)
 
     def kernel(vs):
@@ -500,17 +477,14 @@ def random_project(
                 res[i] = [float(t) for t in y[j]]
         return pd.Series(res)
 
-    proj = pandas_udf(kernel, returnType="array<double>")(F.col(vec_col))
-    return df.withColumn(vec_col, proj)
+    proj = pandas_udf(kernel, returnType="array<double>")(F.col("embedding"))
+    return df.withColumn("embedding", proj)
 
 
 def semantic_dedup(
     df: DataFrame,
     k: int = 32,
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic near-duplicate removal
     over an embedding column. Cluster with seeded k-means, find exact
@@ -529,15 +503,13 @@ def semantic_dedup(
     from ..ml.clustering import kmeans_assign, kmeans_fit
     from .dedup import connected_components
 
-    model = kmeans_fit(df, k=k, vec_col=vec_col, seed=seed)
-    assigned = kmeans_assign(df, model, vec_col=vec_col).select(
-        F.col(id_col), F.col(vec_col), F.col("cluster")
+    model = kmeans_fit(df, k=k)
+    assigned = kmeans_assign(df, model).select(
+        F.col("vec_id"), F.col("embedding"), F.col("cluster")
     )
     pairs = cosine_near_dup_pairs(
         assigned,
         threshold=threshold,
-        vec_col=vec_col,
-        id_col=id_col,
         bucket_col="cluster",
     )
     cc = connected_components(pairs, src="id_a", dst="id_b")
@@ -545,7 +517,7 @@ def semantic_dedup(
         F.col("id"), (F.col("id") == F.col("cluster_id")).alias("__keep_dup")
     )
     return (
-        assigned.select(F.col(id_col).alias("id"), "cluster")
+        assigned.select(F.col("vec_id").alias("id"), "cluster")
         .join(reps, "id", "left")
         .select(
             "id",

@@ -44,8 +44,7 @@ def count_min_table(
     collision inflation. One grouped aggregation; the post-partial-agg
     shuffle is bounded by depth*width rows per task.
 
-    ``weight`` (round 14, guide §1.2 "don't compute things twice"):
-    build from PRE-AGGREGATED ``(key, weight)`` rows instead of raw
+    ``weight``: build from PRE-AGGREGATED ``(key, weight)`` rows instead of raw
     rows — each key adds ``weight`` to its buckets, so
     ``count_min_table(exact_counts, k, weight="cnt")`` is value-
     identical to ``count_min_table(raw, k)`` (same longs: summing a
@@ -83,31 +82,29 @@ def count_min_estimate(
     df: DataFrame,
     key: str,
     probes: DataFrame | None = None,
-    depth: int = 4,
     width: int = 1024,
-    seed: int = 42,
 ) -> DataFrame:
     """Per-key count-min estimates: ``(key, cms_est)``.
 
     ``probes`` defaults to the distinct keys of ``df`` (full
     self-audit); pass a small frame to probe specific keys. The
-    finished sketch (<= depth*width rows) broadcasts to the probe side,
+    finished sketch (<= 4*width rows) broadcasts to the probe side,
     so probing costs no extra full-data shuffle. Guarantee:
     ``cms_est >= true count`` always; overestimate is collision mass,
-    E[excess] <= n/width per row, minimized over ``depth`` rows.
+    E[excess] <= n/width per row, minimized over the 4 hash rows.
     """
-    tbl = count_min_table(df, key, depth=depth, width=width, seed=seed)
+    tbl = count_min_table(df, key, width=width)
     keys = probes if probes is not None else df.select(key).distinct()
     k = F.col(key)
     coords = F.array(
         *[
             F.struct(
                 F.lit(d).alias("depth"),
-                F.pmod(F.xxhash64(k, F.lit(seed + d)), F.lit(width)).alias(
+                F.pmod(F.xxhash64(k, F.lit(42 + d)), F.lit(width)).alias(
                     "bucket"
                 ),
             )
-            for d in range(depth)
+            for d in range(4)
         ]
     )
     probed = keys.select(key, F.explode(coords).alias("r")).select(
@@ -126,7 +123,6 @@ def hash_filter_semijoin(
     dim: DataFrame,
     dim_key: str,
     num_buckets: int = 1 << 20,
-    seed: int = 7,
 ) -> DataFrame:
     """Prune ``fact`` to rows whose key *might* exist in ``dim`` —
     a one-hash bloom filter realized as a broadcast semi-join on
@@ -140,7 +136,7 @@ def hash_filter_semijoin(
     so the fact table is filtered in place with no shuffle — run it
     before a shuffle join or aggregation to cut the exchanged volume.
     """
-    bucket_of = lambda c: F.pmod(F.xxhash64(F.col(c), F.lit(seed)), F.lit(num_buckets))  # noqa: E731
+    bucket_of = lambda c: F.pmod(F.xxhash64(F.col(c), F.lit(7)), F.lit(num_buckets))  # noqa: E731
     dim_buckets = dim.select(bucket_of(dim_key).alias("__hf_bucket")).distinct()
     return fact.join(
         F.broadcast(dim_buckets),
@@ -154,9 +150,7 @@ def count_min_inner_product(
     key_a: str,
     df_b: DataFrame,
     key_b: str,
-    depth: int = 4,
     width: int = 1 << 18,
-    seed: int = 42,
 ) -> DataFrame:
     """Equi-join cardinality estimate WITHOUT running the join — the
     classic count-min inner product (Cormode & Muthukrishnan §4.2):
@@ -164,18 +158,18 @@ def count_min_inner_product(
         |A ⋈_k B| = Σ_k f_A(k)·f_B(k)  ≈  min_d Σ_b cntA[d,b]·cntB[d,b]
 
     Always >= the true size (collisions only add mass); expected excess
-    <= |A|·|B| / width per row, minimized over ``depth`` rows. This is
+    <= |A|·|B| / width per row, minimized over the 4 hash rows. This is
     the planning primitive for choosing join strategies (broadcast vs
     shuffle vs skew-salt) when the optimizer's NDV stats are stale or
     the join key is derived: two independent single-pass sketches meet
     in a sketch-sized join, never touching the data again.
 
     Returns one row ``(join_size_est)``. Each sketch build is bounded by
-    depth*width rows post-partial-agg; the meeting join is sketch ⋈
+    4*width rows post-partial-agg; the meeting join is sketch ⋈
     sketch on (depth, bucket).
     """
-    ta = count_min_table(df_a, key_a, depth=depth, width=width, seed=seed)
-    tb = count_min_table(df_b, key_b, depth=depth, width=width, seed=seed)
+    ta = count_min_table(df_a, key_a, width=width)
+    tb = count_min_table(df_b, key_b, width=width)
     prod = (
         ta.join(
             tb.select(
@@ -187,10 +181,10 @@ def count_min_inner_product(
         .agg(F.sum(F.col("cnt") * F.col("cnt_b")).alias("ip"))
     )
     # a depth-row whose buckets never intersect has inner product 0 —
-    # it just produces NO row out of the join, so fewer than ``depth``
-    # rows here means the tightest row already proves the join is empty
+    # it just produces NO row out of the join, so fewer than 4 rows
+    # here means the tightest row already proves the join is empty
     return prod.agg(
-        F.when(F.count(F.lit(1)) < depth, F.lit(0))
+        F.when(F.count(F.lit(1)) < 4, F.lit(0))
         .otherwise(F.min("ip"))
         .alias("join_size_est")
     )
@@ -310,7 +304,7 @@ def misra_gries(
     dict carried across batches — peak memory O(k + distinct-per-Arrow-
     batch): each batch's value_counts is ingested whole before the
     compress step, so the ~10k-row Arrow batch bounds the transient,
-    not k alone — ADVICE r6), then the
+    not k alone), then the
     Agarwal-et-al mergeable-summary merge: sum counters per item, rank
     the merged multiset, subtract the (k+1)-th largest merged value
     from all, keep positives.  The merge is pure DataFrame ops — the
@@ -386,7 +380,7 @@ def sketch_key_expr(df, col: str):
     bit-exact ``cast('long')`` path the audit oracles replicate;
     everything else pre-hashes through ``pmod(xxhash64(col), 999983)``
     so the downstream modular arithmetic never sees NULL (a raw
-    ``cast('long')`` of a string is NULL — ADVICE r6/r7 hazard class)
+    ``cast('long')`` of a string is NULL)
     or a negative operand."""
     from pyspark.sql import functions as F
 
@@ -419,11 +413,10 @@ def bloom_semi_join(
     probe_col: str,
     build: "DataFrame",
     build_col: str,
-    bits_per_key: int = 32,
 ) -> "DataFrame":
     """Bloom-filter semi-join: keep probe rows whose key *may* appear
     in the build side — no false negatives ever; false-positive rate
-    ≈ (1 − e^{−kn/m})^k with k=3 and m = ``bits_per_key``·n sized from
+    ≈ (1 − e^{−kn/m})^k with k=3 and m = 32·n sized from
     the MEASURED build cardinality, so the rate is scale-free.  The
     "bitmap" is relational: the distinct set of hash positions
     (3·n_build longs, shuffled like any semi-join build side, never
@@ -437,7 +430,7 @@ def bloom_semi_join(
     into the prime field) before the affine family — a raw
     ``cast('long')`` of a string is NULL, which would make every probe
     position NULL and silently return EMPTY, violating the
-    no-false-negative guarantee (ADVICE r6). Integral keys keep the
+    no-false-negative guarantee. Integral keys keep the
     bit-exact affine path the audit oracle replicates."""
     from pyspark.sql import functions as F
 
@@ -445,7 +438,7 @@ def bloom_semi_join(
 
     bkeys = build.select(_key_expr(build, build_col).alias("__k")).distinct()
     mrow = bkeys.agg(
-        (F.count(F.lit(1)) * bits_per_key).cast("long").alias("__m")
+        (F.count(F.lit(1)) * 32).cast("long").alias("__m")
     )
     set_pos = (
         bkeys.crossJoin(F.broadcast(mrow))

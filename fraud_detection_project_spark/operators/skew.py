@@ -60,20 +60,18 @@ def salted_join_hot_keys(
     dim: DataFrame,
     key: str,
     hot_keys: Sequence,
-    how: str = "inner",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Equi-join where ``hot_keys`` of ``key`` are pathologically
     frequent on the fact side: hot fact rows get a random salt and the
     hot dim rows are replicated across every salt value, so the hot
-    keys' rows spread over ``salt_buckets`` reducers instead of one.
-    Cold keys join normally. Result = salted-hot ∪ cold.
+    keys' rows spread over 16 reducers instead of one. Cold keys join
+    normally (inner). Result = salted-hot ∪ cold.
     """
     hot_lit = F.array(*[F.lit(k) for k in hot_keys])
     is_hot = F.array_contains(hot_lit, F.col(key))
 
     fact_hot = fact.filter(is_hot).withColumn(
-        "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
+        "__salt", (F.rand(seed=42) * 16).cast("int")
     )
     fact_cold = fact.filter(~is_hot)
 
@@ -81,7 +79,7 @@ def salted_join_hot_keys(
         dim.filter(is_hot)
         .crossJoin(
             F.broadcast(
-                fact.sparkSession.range(salt_buckets).select(
+                fact.sparkSession.range(16).select(
                     F.col("id").cast("int").alias("__salt")
                 )
             )
@@ -89,8 +87,8 @@ def salted_join_hot_keys(
     )
     dim_cold = dim.filter(~is_hot)
 
-    joined_hot = fact_hot.join(dim_hot, [key, "__salt"], how).drop("__salt")
-    joined_cold = fact_cold.join(dim_cold, [key], how)
+    joined_hot = fact_hot.join(dim_hot, [key, "__salt"], "inner").drop("__salt")
+    joined_cold = fact_cold.join(dim_cold, [key], "inner")
     return joined_hot.unionByName(joined_cold)
 
 
@@ -124,15 +122,13 @@ def advise_join_strategy(
     fact_key: str,
     dim: DataFrame,
     dim_key: str,
-    broadcast_threshold_rows: int = 100_000,
-    skew_ratio_threshold: float = 20.0,
 ) -> DataFrame:
     """Measurement-driven join-strategy recommendation — the decision
     procedure this module's operators exist to feed:
 
-    1. ``dim`` small enough → **broadcast** (no fact shuffle at all);
+    1. ``dim`` at most 100k rows → **broadcast** (no fact shuffle);
     2. else if the fact key distribution is skewed
-       (:func:`skew_report` ratio >= threshold) → **shuffle+salt**
+       (:func:`skew_report` ratio >= 20) → **shuffle+salt**
        (:func:`salted_join_hot_keys` / AQE skew join);
     3. else plain **shuffle** hash join.
 
@@ -154,11 +150,11 @@ def advise_join_strategy(
             F.col("dim_rows").cast("long").alias("dim_rows"),
             "skew_ratio",
             F.when(
-                F.col("dim_rows") <= broadcast_threshold_rows,
+                F.col("dim_rows") <= 100_000,
                 F.lit("broadcast"),
             )
             .when(
-                F.col("skew_ratio") >= skew_ratio_threshold,
+                F.col("skew_ratio") >= 20.0,
                 F.lit("shuffle+salt"),
             )
             .otherwise(F.lit("shuffle"))

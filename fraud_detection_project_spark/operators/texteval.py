@@ -45,10 +45,10 @@ def _hashed_ngram_counts_kernel(
     docs: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """``(id_col, gram, c)`` for the HASHED path, computed doc-locally in
-    one ``mapInArrow`` kernel — zero shuffles (round 14, guide §4.2).
+    one ``mapInArrow`` kernel — zero shuffles.
 
-    The round-13 shape tokenized with a Java-regex ``split`` (measured
-    this round at ~3 s per ~sf1 corpus pass — the dominant term), then
+    The previous shape tokenized with a Java-regex ``split`` (measured
+    at ~3 s per ~sf1 corpus pass — the dominant term), then
     exploded every gram through a ``groupBy(id, gram)`` exchange. This
     kernel does the whole stage batch-at-a-time in native code: RE2
     tokenize (``pyarrow.compute.split_pattern_regex``, ~5× the Java
@@ -63,8 +63,8 @@ def _hashed_ngram_counts_kernel(
     as equality-join keys inside :func:`rouge_n`, never surfaced in any
     result — so replacing ``xxhash64(slice)`` with the blake2b-derived
     combine changes no observable value; a 2⁻⁶⁴-class cross-gram
-    collision is accepted exactly as for ``xxhash64`` grams (round 13)
-    and every other hashed-key operator in the engine.
+    collision is accepted exactly as for ``xxhash64`` grams and every
+    other hashed-key operator in the engine.
 
     Tokenization is token-identical to the JVM expression
     (``array_remove(split(lower(text), '[^a-z0-9]+'), '')``): both
@@ -199,16 +199,16 @@ def ngram_counts(
     ``hashed=True`` folds each gram to an engine-internal 64-bit key —
     the right mode when grams are only ever compared for EQUALITY
     downstream (the ROUGE overlap join); a 2⁻⁶⁴ per-pair collision is
-    accepted, as in exact_dedup / ngram_contamination. Since round 14
-    the hashed path runs entirely inside one ``mapInArrow`` kernel
-    (:func:`_hashed_ngram_counts_kernel`, guide §4.2): no Java-regex
+    accepted, as in exact_dedup / ngram_contamination. The hashed path
+    runs entirely inside one ``mapInArrow`` kernel
+    (:func:`_hashed_ngram_counts_kernel`): no Java-regex
     tokenize, no gram explode, no ``groupBy`` exchange — measured 15×
     on the ~sf1 bigram pass with structurally identical output.
     """
     if hashed:
         return _hashed_ngram_counts_kernel(docs, id_col, text_col, n)
-    # single-regex-pass tokenize (round 13, see functions/text.py
-    # alnum_tokens: 10× over the regexp_replace pipeline, provably
+    # single-regex-pass tokenize (see functions/text.py alnum_tokens:
+    # 10× over the regexp_replace pipeline, provably
     # token-identical). One convention difference vs alnum_tokens: the
     # oracle expression split(trim(...), '\s+') yields [''] — not [] —
     # for all-separator text. That case is observable ONLY at n == 1

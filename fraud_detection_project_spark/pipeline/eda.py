@@ -9,28 +9,26 @@ combine then one shuffle on the grouping key.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import histogram, numeric_profile, rate_by, value_counts
 
 
-def resolve_label_column(df: DataFrame, candidates: Sequence[str] = ("class", "Class")) -> str | None:
+# the reference's panels: fraud rate per dim, 50-bin histograms
+DIMS = ("source", "browser", "sex")
+NUMERIC_COLS = ("purchase_value", "Amount")
+
+
+def resolve_label_column(df: DataFrame) -> str | None:
     """Reference's target-column probing (``processor.py:25-28``)."""
-    for c in candidates:
+    for c in ("class", "Class"):
         if c in df.columns:
             return c
     return None
 
 
-def perform_eda(
-    df: DataFrame,
-    dims: Sequence[str] = ("source", "browser", "sex"),
-    numeric_cols: Sequence[str] = ("purchase_value", "Amount"),
-    bins: int = 50,
-) -> dict[str, DataFrame]:
+def perform_eda(df: DataFrame) -> dict[str, DataFrame]:
     """One dict of lazy aggregate plans per EDA panel:
 
     - ``summary``            A3 ``df.describe()`` (``processor.py:23``)
@@ -42,18 +40,18 @@ def perform_eda(
     label = resolve_label_column(df)
     if label is not None:
         out["label_distribution"] = value_counts(df, label)
-        for d in dims:
+        for d in DIMS:
             if d in df.columns:
                 out[f"fraud_rate_by_{d}"] = rate_by(df, d, label, rate_col="fraud_rate")
-        for c in numeric_cols:
+        for c in NUMERIC_COLS:
             if c in df.columns:
                 # histplot's auto-range: one cheap min/max agg per column
                 lohi = df.select(F.min(c).alias("lo"), F.max(c).alias("hi")).first()
                 if lohi["lo"] is not None and lohi["hi"] > lohi["lo"]:
                     out[f"hist_{c}"] = histogram(
-                        df, c, bins=bins, lo=float(lohi["lo"]), hi=float(lohi["hi"]), by=label
+                        df, c, bins=50, lo=float(lohi["lo"]), hi=float(lohi["hi"]), by=label
                     )
-    numeric_present = [c for c in numeric_cols if c in df.columns]
+    numeric_present = [c for c in NUMERIC_COLS if c in df.columns]
     if numeric_present:
         out["numeric_profile"] = numeric_profile(df, numeric_present)
     return out

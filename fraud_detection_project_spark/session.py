@@ -57,8 +57,8 @@ def host_stamp() -> dict:
 # calls it, and each of the 8 conf.set calls is a py4j round trip
 # (~25 ms total per call measured on local[32]) — pure driver-side
 # overhead inside the timed region of every bench/verify run
-# (optimization guide §5: the driver should do almost no work per
-# query). The set holds weak refs so a stopped session never pins.
+# (the driver should do almost no work per query). The set holds weak
+# refs so a stopped session never pins.
 _ENSURED: "weakref.WeakSet[SparkSession]" = None  # type: ignore[assignment]
 
 

@@ -29,8 +29,6 @@ def write_bucketed(
     bucket_cols: Sequence[str],
     num_buckets: int,
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-    format: str = "parquet",
 ) -> None:
     """Persist ``df`` as a bucketed (and optionally sorted) table.
 
@@ -40,7 +38,7 @@ def write_bucketed(
     partitions); both sides of a co-located join MUST use the same
     bucket count and key.
     """
-    writer = df.write.format(format).mode(mode).bucketBy(num_buckets, *bucket_cols)
+    writer = df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
@@ -50,8 +48,6 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: Sequence[str],
-    mode: str = "overwrite",
-    format: str = "parquet",
     sort_cols: Sequence[str] | None = None,
     max_records_per_file: int | None = None,
 ) -> None:
@@ -72,7 +68,7 @@ def write_partitioned(
     """
     if sort_cols:
         df = df.sortWithinPartitions(*partition_cols, *sort_cols)
-    w = df.write.format(format).mode(mode)
+    w = df.write.format("parquet").mode("overwrite")
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.partitionBy(*partition_cols).save(path)

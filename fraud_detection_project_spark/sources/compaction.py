@@ -49,8 +49,8 @@ def compact_parquet(
 
     ``dst`` must not equal or live inside ``src``: the overwrite sink
     truncates ``dst`` before the lazy scan of ``src`` runs, so
-    compaction-in-place here would destroy the data being compacted
-    (ADVICE r3). In-place compaction goes through a temp dir + atomic
+    compaction-in-place here would destroy the data being compacted.
+    In-place compaction goes through a temp dir + atomic
     swap — the streaming/upsert.py pattern."""
     real_src = os.path.realpath(src)
     real_dst = os.path.realpath(dst)

@@ -23,11 +23,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def interleave_bits(x: Column, y: Column, bits: int = 16) -> Column:
-    """Morton code of two non-negative ints already in [0, 2^bits):
+def interleave_bits(x: Column, y: Column) -> Column:
+    """Morton code of two non-negative ints already in [0, 2^16):
     bit i of x → bit 2i, bit i of y → bit 2i+1."""
     parts = []
-    for i in range(bits):
+    for i in range(16):
         parts.append(F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i))
         parts.append(
             F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1)
@@ -39,14 +39,13 @@ def zorder_by(
     df: DataFrame,
     col1: str,
     col2: str,
-    bits: int = 16,
     num_files: int | None = None,
 ) -> DataFrame:
     """Return ``df`` re-ordered along the Z-curve of (col1, col2), ready
     to write: each output partition (→ parquet file) covers a compact
     range of the Morton code, so min/max stats are tight in both dims.
 
-    Normalization is linear min→max into ``bits`` levels via one
+    Normalization is linear min→max into 2^16 levels via one
     broadcast one-row aggregate — rank-based (quantile) normalization
     would equalize cell populations under skew at the cost of a
     pre-pass; linear is the right default for roughly uniform keys.
@@ -58,7 +57,7 @@ def zorder_by(
         F.max(col2).alias("mx2"),
     )
 
-    lvl = (1 << bits) - 1
+    lvl = (1 << 16) - 1
 
     def norm(c: str, mn: str, mx: str) -> Column:
         span = F.col(mx) - F.col(mn)
@@ -68,7 +67,7 @@ def zorder_by(
         ).otherwise(F.lit(0.0))
         return F.least(F.floor(scaled).cast("long"), F.lit(lvl))
 
-    z = interleave_bits(norm(col1, "mn1", "mx1"), norm(col2, "mn2", "mx2"), bits)
+    z = interleave_bits(norm(col1, "mn1", "mx1"), norm(col2, "mn2", "mx2"))
     out = df.crossJoin(F.broadcast(stats)).withColumn("__z", z).drop(
         "mn1", "mx1", "mn2", "mx2"
     )

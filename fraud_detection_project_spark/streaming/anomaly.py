@@ -28,7 +28,6 @@ def expanding_zscore(
     ts_col: str,
     val_col: str,
     id_col: str,
-    out_col: str = "zscore",
     round_dp: int = 4,
 ) -> DataFrame:
     """Batch twin: z = (x − mean(prior)) / stddev_samp(prior) over the
@@ -53,7 +52,7 @@ def expanding_zscore(
         (n_prior >= 2) & (std_p > 0),
         round_floor(raw, round_dp),
     )
-    return df.select(id_col, key, val_col, z.alias(out_col))
+    return df.select(id_col, key, val_col, z.alias("zscore"))
 
 
 def _zscore_func_factory(ts_col: str, val_col: str, id_col: str, round_dp: int):

@@ -32,15 +32,13 @@ from pyspark.sql import functions as F
 from ..operators.dedup import word_shingles
 
 
-def probe_shingle_hashes(
-    probes: DataFrame, n: int = 13, text_col: str = "text"
-) -> list[int]:
+def probe_shingle_hashes(probes: DataFrame, n: int = 13) -> list[int]:
     """Distinct xxhash64 shingle hashes of the probe (benchmark) set.
     A driver-side collect, bounded by the benchmark size — the same
     contract as broadcasting a query literal (similarity.py)."""
     rows = (
         probes.select(
-            F.explode(F.array_distinct(word_shingles(text_col, n))).alias("s")
+            F.explode(F.array_distinct(word_shingles("text", n))).alias("s")
         )
         .select(F.xxhash64("s").alias("h"))
         .distinct()
@@ -53,23 +51,21 @@ def contamination_scores(
     docs: DataFrame,
     probe_hashes: list[int],
     n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "n_hit_ngrams",
 ) -> DataFrame:
     """Per-document contaminated-shingle count against the probe hash
     set, as a pure stateless projection (works identically on a
     streaming or batch frame): n-gram shingle → xxhash64 (HOF transform,
-    JVM-side) → array_intersect with the probe literal → size. Docs
-    with ``out_col > 0`` are contaminated."""
+    JVM-side) → array_intersect with the probe literal → size, as
+    ``(doc_id, n_hit_ngrams)``. Docs with ``n_hit_ngrams > 0`` are
+    contaminated."""
     hashes = F.transform(
-        F.array_distinct(word_shingles(text_col, n)),
+        F.array_distinct(word_shingles("text", n)),
         lambda s: F.xxhash64(s),
     )
     probe = F.lit([int(h) for h in probe_hashes]).cast("array<bigint>")
     return docs.select(
-        F.col(id_col),
-        F.size(F.array_intersect(hashes, probe)).alias(out_col),
+        F.col("doc_id"),
+        F.size(F.array_intersect(hashes, probe)).alias("n_hit_ngrams"),
     )
 
 
@@ -79,7 +75,6 @@ def hash_filter_gate(
     dim: DataFrame,
     dim_key: str,
     num_buckets: int = 1 << 20,
-    seed: int = 7,
 ) -> DataFrame:
     """Streaming ingestion gate: keep only stream rows whose key MIGHT
     exist in a static dimension — the stream-side twin of
@@ -91,10 +86,8 @@ def hash_filter_gate(
     Use in front of an expensive stateful stage (join, dedup,
     aggregation) to cut its input volume.
     Stream ≡ batch on the same rows (pytest oracle)."""
-    from pyspark.sql import functions as F
-
     from ..operators.sketches import hash_filter_semijoin
 
     return hash_filter_semijoin(
-        stream, stream_key, dim, dim_key, num_buckets=num_buckets, seed=seed
+        stream, stream_key, dim, dim_key, num_buckets=num_buckets
     )

@@ -20,13 +20,12 @@ def dedup_stream(
     stream: DataFrame,
     keys: Sequence[str],
     ts_col: str = "ts",
-    watermark: str = "1 hour",
 ) -> DataFrame:
-    """Keyed dedup over a stream (or, transparently, a batch frame —
-    the batch form is the test oracle for duplicates within the
-    watermark horizon)."""
+    """Keyed dedup over a stream under a 1-hour watermark on ``ts_col``
+    (or, transparently, a batch frame — the batch form is the test
+    oracle for duplicates within the watermark horizon)."""
     if not stream.isStreaming:
         return stream.dropDuplicates(list(keys))
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return stream.withWatermark(ts_col, "1 hour").dropDuplicatesWithinWatermark(
         list(keys)
     )

@@ -31,10 +31,9 @@ def page_hinkley_batch(
     val_col: str,
     id_col: str,
     lam: float,
-    delta: float = 0.0,
 ) -> DataFrame:
     """Batch twin: per (ts, id)-ordered event within each key, the
-    Page-Hinkley cumulative deviation ``m_t = Σ_{i≤t}(x_i − x̄_i − δ)``
+    Page-Hinkley cumulative deviation ``m_t = Σ_{i≤t}(x_i − x̄_i)``
     (x̄_i the running mean INCLUDING x_i), its running minimum, the PH
     statistic ``m_t − min_{i≤t} m_i``, and the alarm flag vs ``lam``.
     All windows are partitioned by the key — no global ordering
@@ -47,7 +46,7 @@ def page_hinkley_batch(
     cm = F.avg(val_col).over(w)
     with_dev = df.select(
         key, ts_col, id_col, val_col,
-        (F.col(val_col) - cm - F.lit(delta)).alias("__dev"),
+        (F.col(val_col) - cm).alias("__dev"),
     )
     with_m = with_dev.select(
         key, ts_col, id_col, F.sum("__dev").over(w).alias("m")
@@ -65,7 +64,6 @@ def page_hinkley_batch(
 
 def _ph_func_factory(
     key_col: str, ts_col: str, val_col: str, id_col: str, lam: float,
-    delta: float,
 ):
     import pandas as pd
 
@@ -93,7 +91,7 @@ def _ph_func_factory(
             # as Σx/n (window AVG), not a Welford update
             n += 1
             s += x
-            m += x - s / n - delta
+            m += x - s / n
             if m < mmin:
                 mmin = m
             ph = m - mmin
@@ -121,7 +119,6 @@ def streaming_page_hinkley(
     val_col: str = "value",
     id_col: str = "event_id",
     lam: float = 500.0,
-    delta: float = 0.0,
 ) -> DataFrame:
     """Stateful streaming form: (id_col, key, m, ph, alarm) per event.
     Equivalent to :func:`page_hinkley_batch` when events arrive in
@@ -140,7 +137,7 @@ def streaming_page_hinkley(
         .filter(F.col(val_col).isNotNull())
         .groupBy(key)
         .applyInPandasWithState(
-            _ph_func_factory(key, ts_col, val_col, id_col, lam, delta),
+            _ph_func_factory(key, ts_col, val_col, id_col, lam),
             outputStructType=out_schema,
             stateStructType=state_schema,
             outputMode="append",

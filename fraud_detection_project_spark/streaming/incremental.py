@@ -42,18 +42,18 @@ def merge_aggregate_batch(
     specs: dict[str, tuple[str, str]],
     path: str,
     state_schema: str,
-    epoch: int | None = None,
-    keep_versions: int = 2,
-    stream_id: str | None = None,
+    *,
+    epoch: int | None,
+    stream_id: str | None,
 ) -> None:
     """state' = state ⊕ agg(batch), committed atomically. ``epoch`` is
     the foreachBatch epoch id and ``stream_id`` the stream's
-    checkpoint; a replay of the last applied pair is a no-op (see
-    :func:`.state_store._is_replay`)."""
+    checkpoint (both None for a batch-mode merge); a replay of the last
+    applied pair is a no-op (see :func:`.state_store._is_replay`)."""
     state_store.apply(
         spark, path, _AGGREGATE, state_schema,
         lambda prev: merge_aggregate_state(prev, batch, keys, specs),
-        epoch=epoch, stream_id=stream_id, keep_versions=keep_versions,
+        epoch=epoch, stream_id=stream_id,
     )
 
 
@@ -64,7 +64,6 @@ def streaming_aggregate(
     path: str,
     checkpoint: str,
     state_schema: str,
-    keep_versions: int = 2,
     available_now: bool = False,
 ):
     """Maintain ``groupBy(keys).agg(specs)`` over a stream; returns the
@@ -77,6 +76,6 @@ def streaming_aggregate(
     itself (awaitTermination-able) — the batch-parity/catch-up mode."""
     merge = partial(
         merge_aggregate_batch, stream.sparkSession, keys=keys, specs=specs,
-        path=path, state_schema=state_schema, keep_versions=keep_versions,
+        path=path, state_schema=state_schema,
     )
     return state_store.start_sink(stream, merge, checkpoint, available_now)

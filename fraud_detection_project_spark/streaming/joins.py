@@ -26,36 +26,26 @@ def interval_join_streams(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     lower: str = "0 seconds",
     upper: str = "1 hour",
-    watermark: str = "1 hour",
-    how: str = "inner",
 ) -> DataFrame:
-    """Join ``left`` and ``right`` on ``key`` where
-    ``right_ts ∈ [left_ts + lower, left_ts + upper]``.
+    """Inner-join ``left`` and ``right`` on ``key`` where
+    ``r.ts ∈ [l.ts + lower, l.ts + upper]``.
 
     Column names are prefixed ``l_`` / ``r_`` in the output (both sides
     commonly share a schema). ``lower``/``upper`` are interval strings
-    (negative lower looks backward). Outer joins additionally require
-    the watermark to emit null-padded rows once a side expires.
+    (negative lower looks backward). A streaming side gets a 1-hour
+    watermark on its ``ts``.
     """
     l = left.select([F.col(c).alias(f"l_{c}") for c in left.columns])
     r = right.select([F.col(c).alias(f"r_{c}") for c in right.columns])
     if l.isStreaming:
-        l = l.withWatermark(f"l_{left_ts}", watermark)
+        l = l.withWatermark("l_ts", "1 hour")
     if r.isStreaming:
-        r = r.withWatermark(f"r_{right_ts}", watermark)
+        r = r.withWatermark("r_ts", "1 hour")
     cond = (
         (F.col(f"l_{key}") == F.col(f"r_{key}"))
-        & (
-            F.col(f"r_{right_ts}")
-            >= F.expr(f"l_{left_ts} + interval {lower}")
-        )
-        & (
-            F.col(f"r_{right_ts}")
-            <= F.expr(f"l_{left_ts} + interval {upper}")
-        )
+        & (F.col("r_ts") >= F.expr(f"l_ts + interval {lower}"))
+        & (F.col("r_ts") <= F.expr(f"l_ts + interval {upper}"))
     )
-    return l.join(r, cond, how)
+    return l.join(r, cond)

@@ -82,17 +82,13 @@ def _lateness_func_factory(key_col: str):
 def late_event_audit(
     stream_df: DataFrame,
     key_col: str = "user_id",
-    ts_col: str = "ts",
-    arr_col: str = "arr",
-    id_col: str = "event_id",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Per-event lateness against the per-key running-max event time.
 
-    ``stream_df`` must carry a timestamp event-time column ``ts_col``,
-    a timestamp ARRIVAL column ``arr_col`` (what the watermark tracks —
-    arrival order is the order the auditor replays), a unique
-    ``id_col`` for deterministic tie-breaking, and the key.
+    ``stream_df`` must carry a timestamp event-time column ``ts``, a
+    timestamp ARRIVAL column ``arr`` (what the 1-hour watermark tracks
+    — arrival order is the order the auditor replays), a unique
+    ``event_id`` for deterministic tie-breaking, and the key.
     """
     out_schema = StructType(
         [
@@ -104,13 +100,13 @@ def late_event_audit(
     )
     state_schema = StructType([StructField("max_ts_us", LongType())])
     prepared = (
-        stream_df.withWatermark(arr_col, watermark)
+        stream_df.withWatermark("arr", "1 hour")
         .select(
             F.col(key_col),
-            F.col(id_col).cast("long").alias("event_id"),
-            F.unix_micros(F.col(ts_col)).alias("ts_us"),
-            F.unix_micros(F.col(arr_col)).alias("arr_us"),
-            F.col(arr_col),
+            F.col("event_id").cast("long").alias("event_id"),
+            F.unix_micros(F.col("ts")).alias("ts_us"),
+            F.unix_micros(F.col("arr")).alias("arr_us"),
+            F.col("arr"),
         )
     )
     return prepared.groupBy(key_col).applyInPandasWithState(
@@ -125,9 +121,6 @@ def late_event_audit(
 def batch_lateness_oracle(
     df: DataFrame,
     key_col: str = "user_id",
-    ts_col: str = "ts",
-    arr_col: str = "arr",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Batch twin: lateness via one per-key window in arrival order —
     the same shape as the registered ``event_lateness_profile``."""
@@ -135,14 +128,14 @@ def batch_lateness_oracle(
 
     w = (
         Window.partitionBy(key_col)
-        .orderBy(F.unix_micros(F.col(arr_col)), F.col(id_col))
+        .orderBy(F.unix_micros(F.col("arr")), F.col("event_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     base = df.select(
         F.col(key_col),
-        F.col(id_col).cast("long").alias("event_id"),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        F.col(arr_col),
+        F.col("event_id").cast("long").alias("event_id"),
+        F.unix_micros(F.col("ts")).alias("ts_us"),
+        F.col("arr"),
     )
     return base.withColumn(
         "prior_max", F.max("ts_us").over(w)

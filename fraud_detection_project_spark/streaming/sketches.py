@@ -65,18 +65,18 @@ def merge_sketch_batch(
     batch: DataFrame,
     key: str,
     path: str,
-    depth: int = 4,
     width: int = 1024,
-    seed: int = 42,
-    epoch: int | None = None,
-    stream_id: str | None = None,
+    *,
+    epoch: int | None,
+    stream_id: str | None,
 ) -> None:
-    """state' = state ⊕ sketch(batch): cell-wise counter addition.
-    ``epoch`` is the foreachBatch epoch id and ``stream_id`` the
-    stream's checkpoint; a replay of the last applied pair is a no-op
-    (see :func:`.state_store._is_replay`)."""
+    """state' = state ⊕ sketch(batch): cell-wise counter addition over
+    4 hash rows. ``epoch`` is the foreachBatch epoch id and
+    ``stream_id`` the stream's checkpoint (both None for a batch-mode
+    merge); a replay of the last applied pair is a no-op (see
+    :func:`.state_store._is_replay`)."""
     state_store.add(
-        spark, count_min_table(batch, key, depth=depth, width=width, seed=seed),
+        spark, count_min_table(batch, key, width=width),
         ["depth", "bucket"], path, _COUNT_MIN, _SCHEMA,
         epoch=epoch, stream_id=stream_id,
     )
@@ -87,9 +87,7 @@ def streaming_count_min(
     key: str,
     path: str,
     checkpoint: str,
-    depth: int = 4,
     width: int = 1024,
-    seed: int = 42,
     available_now: bool = False,
 ):
     """Maintain the sketch over a stream; returns the StreamingQuery.
@@ -97,7 +95,7 @@ def streaming_count_min(
     with operators/sketches.py machinery). ``available_now=True``
     drains the current backlog and terminates by itself."""
     merge = partial(merge_sketch_batch, stream.sparkSession, key=key,
-                    path=path, depth=depth, width=width, seed=seed)
+                    path=path, width=width)
     return state_store.start_sink(stream, merge, checkpoint, available_now)
 
 
@@ -114,8 +112,9 @@ def merge_histogram_batch(
     lo: float,
     hi: float,
     n_bins: int = 256,
-    epoch: int | None = None,
-    stream_id: str | None = None,
+    *,
+    epoch: int | None,
+    stream_id: str | None,
 ) -> None:
     """state' = state ⊕ histogram(batch): bin counts add — the same
     sum-mergeability contract as the count-min path above, so the
@@ -170,7 +169,7 @@ def read_ams(spark, path: str) -> DataFrame:
 def _ams_batch_delta(batch: DataFrame, key: str, n_estimators: int) -> DataFrame:
     """Per-estimator signed-sum delta for one micro-batch.
 
-    Sign-hash hygiene (ADVICE r7): ``cast('long')`` on a non-integral
+    Sign-hash hygiene: ``cast('long')`` on a non-integral
     key yields NULL, the ``when`` condition is NULL, and every row
     would take ``otherwise(-1)`` — Z_j = −batch_count and the F₂
     estimate silently becomes n². Keys therefore enter through the
@@ -211,8 +210,9 @@ def merge_ams_batch(
     key: str,
     path: str,
     n_estimators: int = 8,
-    epoch: int | None = None,
-    stream_id: str | None = None,
+    *,
+    epoch: int | None,
+    stream_id: str | None,
 ) -> None:
     """state' = state + ams(batch): per-estimator signed sums add.
     Replays are no-ops, as for :func:`merge_sketch_batch`."""

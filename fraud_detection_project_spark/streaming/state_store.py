@@ -4,8 +4,8 @@ A sink's state is a run of immutable version directories
 (``{prefix}{n}/``, parquet) plus one manifest naming the current
 version. A commit writes the next version, flips the manifest
 atomically and durably (unique temp file, fsync, ``os.replace``, fsync
-of the directory), and only then drops versions older than the newest
-``keep_versions``. Readers resolve the manifest, so they never see a
+of the directory), and only then drops all but the newest two
+versions. Readers resolve the manifest, so they never see a
 torn state; a crash leaves at worst an unreferenced version directory,
 which the next commit overwrites. Without the directory fsync a power
 loss could persist a later GC unlink but not the rename, leaving the
@@ -75,12 +75,11 @@ def versions(path: str, prefix: str) -> list[str]:
     )
 
 
-def gc(path: str, prefix: str, keep_versions: int) -> None:
-    """Drop version directories older than the newest ``keep_versions``
-    (at least 2: the committed one and its predecessor for readers in
-    flight). Versions are monotonic, so the committed one is always
-    kept."""
-    for d in versions(path, prefix)[: -max(2, keep_versions)]:
+def gc(path: str, prefix: str) -> None:
+    """Drop every version directory but the newest two: the committed
+    one and its predecessor for readers in flight. Versions are
+    monotonic, so the committed one is always kept."""
+    for d in versions(path, prefix)[:-2]:
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
 
@@ -131,7 +130,7 @@ def read(spark, path: str, layout: Layout, schema: str) -> DataFrame:
 
 def commit(
     df: DataFrame, path: str, layout: Layout = BASE, epoch: int | None = None,
-    stream_id: str | None = None, keep_versions: int = 2,
+    stream_id: str | None = None,
 ) -> None:
     """Write ``df`` as the next version, flip the manifest to it, GC."""
     version = manifest_state(path, layout)["version"] + 1
@@ -143,20 +142,20 @@ def commit(
         json.dumps({"version": version, "epoch": epoch,
                     "stream_id": stream_id, **dict(layout.fields)}),
     )
-    gc(path, layout.prefix, keep_versions)
+    gc(path, layout.prefix)
 
 
 def apply(
     spark, path: str, layout: Layout, schema: str,
     step: Callable[[DataFrame], DataFrame], epoch: int | None = None,
-    stream_id: str | None = None, keep_versions: int = 2,
+    stream_id: str | None = None,
 ) -> None:
     """Commit ``step(current state)`` as the next version, unless
     ``(stream_id, epoch)`` was the last one applied."""
     if _is_replay(manifest_state(path, layout), epoch, stream_id):
         return
     commit(step(read(spark, path, layout, schema)), path, layout,
-           epoch=epoch, stream_id=stream_id, keep_versions=keep_versions)
+           epoch=epoch, stream_id=stream_id)
 
 
 def add(

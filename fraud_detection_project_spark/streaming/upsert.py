@@ -24,15 +24,14 @@ built-in file sink is append-only). Each micro-batch:
 Exactly-once story: ``foreachBatch`` re-delivers a batch after failure.
 Seed the snapshot WITH the ``seq_col`` so every row records the change
 that produced it: ``merge_apply``'s seq guard then makes a replayed
-batch a no-op past the recorded seq (and with ``keep_tombstones=True``
-in the batch operator, arbitrary-order redelivery also converges).
+batch a no-op past the recorded seq.
 
 Scale: the snapshot rewrite is proportional to the snapshot, not the
 stream; with a partitioned base only partitions containing changed keys
 need rewriting (dynamic overwrite) — the batch operator's broadcast
 path already avoids shuffling the base. Old versions are garbage
-collected after commit, keeping ``keep_versions`` behind for readers
-in flight (time travel is the same dial turned up).
+collected after commit, keeping the previous version behind for
+readers in flight.
 """
 
 from __future__ import annotations
@@ -68,9 +67,9 @@ def _commit(root: str, version: str) -> None:
     write_atomic(_manifest_path(root), version + "\n")
 
 
-def _gc(root: str, keep_versions: int) -> None:
-    """Drop version directories older than the newest ``keep_versions``."""
-    gc(root, _VERSION_PREFIX, keep_versions)
+def _gc(root: str) -> None:
+    """Drop every version directory but the newest two."""
+    gc(root, _VERSION_PREFIX)
 
 
 def init_snapshot(df: DataFrame, root: str) -> str:
@@ -84,7 +83,7 @@ def init_snapshot(df: DataFrame, root: str) -> str:
 
 def list_versions(root: str) -> list[str]:
     """Version directories still on disk, oldest first (the committed
-    one plus up to ``keep_versions - 1`` predecessors)."""
+    one plus, after a sink commit, its predecessor)."""
     return versions(root, _VERSION_PREFIX)
 
 
@@ -93,8 +92,8 @@ def read_snapshot(
 ) -> DataFrame:
     """The committed snapshot (resolves the manifest pointer), or —
     time travel — a retained historical ``version`` (int number or
-    directory name). History depth is the sink's ``keep_versions``
-    dial; asking for a GC'd version raises with what IS available."""
+    directory name). The sink keeps two versions; asking for a GC'd
+    version raises with what IS available."""
     if version is None:
         v = current_version(root)
         if v is None:
@@ -110,8 +109,7 @@ def read_snapshot(
         if not os.path.isdir(os.path.join(root, v)):
             raise FileNotFoundError(
                 f"version {v!r} not retained at {root!r} "
-                f"(available: {list_versions(root)}; raise keep_versions "
-                "on apply_cdc_stream for deeper history)"
+                f"(available: {list_versions(root)})"
             )
     return spark.read.parquet(os.path.join(root, v))
 
@@ -121,8 +119,6 @@ def plan_batch_merge(
     batch: DataFrame,
     keys: list[str],
     seq_col: str,
-    op_col: str = "op",
-    delete_op: str = "D",
     broadcast_threshold_rows: int = 2_000_000,
 ) -> DataFrame:
     """The merged snapshot for one micro-batch, with the join shape
@@ -143,17 +139,16 @@ def plan_batch_merge(
     above it, the full-outer sort-merge shape shuffles the base once
     instead of OOMing the driver.
 
-    Probe cost (ADVICE r11 → ADVICE r12 → measured, round 13): the
-    probe went through three designs. A bounded
+    Probe cost: the probe went through three designs. A bounded
     ``limit(threshold+1).count()`` looked cheaper than a full
     ``count()`` (foreachBatch does not persist the batch, so any probe
     recomputes it from source), but its physical plan is per-partition
     LocalLimit + a single-partition shuffle for GlobalLimit — each
     partition can emit up to threshold+1 ROWS, so the probe work is
-    O(partitions × threshold) in materialized rows (ADVICE r12). A
+    O(partitions × threshold) in materialized rows. A
     plain ``count()`` instead prunes to ZERO columns (parquet serves
     it near-metadata-speed) and shuffles only one partial count per
-    partition. Measured on local[32], warm best-of-3 (round 13):
+    partition. Measured on local[32], warm best-of-3:
     100k-row batch — count 0.19s vs limit-probe 0.22s; 2.1M-row
     backlog — count 0.48s vs limit-probe 1.31s; end-to-end
     (probe + one aggregate pass standing in for the merge) —
@@ -164,8 +159,7 @@ def plan_batch_merge(
     probe = batch.count()
     small = probe <= broadcast_threshold_rows
     return merge_apply(
-        base, batch, keys=keys, seq_col=seq_col, op_col=op_col,
-        delete_op=delete_op, broadcast_changes=small,
+        base, batch, keys=keys, seq_col=seq_col, broadcast_changes=small,
     )
 
 
@@ -175,22 +169,15 @@ def apply_cdc_stream(
     snapshot_path: str,
     keys: list[str],
     seq_col: str,
-    op_col: str = "op",
-    delete_op: str = "D",
     checkpoint: str | None = None,
-    available_now: bool = True,
-    keep_versions: int = 2,
-    broadcast_threshold_rows: int = 2_000_000,
 ):
     """Run the change stream into the versioned snapshot at
-    ``snapshot_path`` (a root seeded by :func:`init_snapshot`).
+    ``snapshot_path`` (a root seeded by :func:`init_snapshot`), draining
+    what is there (``availableNow``) and stopping.
 
-    Returns the StreamingQuery. ``available_now=True`` drains what's
-    there and stops — the batch-parity test mode; ``False`` runs
-    continuously. ``keep_versions`` controls how much history survives
-    GC (min 2: current + previous for in-flight readers).
-    ``broadcast_threshold_rows`` bounds the batch size that may take
-    the broadcast merge shape — see :func:`plan_batch_merge`.
+    Returns the StreamingQuery. GC keeps two versions: current +
+    previous for in-flight readers. Each batch's merge shape is picked
+    by :func:`plan_batch_merge`.
     """
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
@@ -201,25 +188,18 @@ def apply_cdc_stream(
                 "seed with init_snapshot()"
             )
         base = spark.read.parquet(os.path.join(snapshot_path, cur))
-        merged = plan_batch_merge(
-            base, batch, keys=keys, seq_col=seq_col, op_col=op_col,
-            delete_op=delete_op,
-            broadcast_threshold_rows=broadcast_threshold_rows,
-        )
+        merged = plan_batch_merge(base, batch, keys=keys, seq_col=seq_col)
         nxt = f"{_VERSION_PREFIX}{int(cur[len(_VERSION_PREFIX):]) + 1:0{_VERSION_DIGITS}d}"
         # overwrite handles a replayed batch whose version dir half-exists
         merged.write.mode("overwrite").parquet(
             os.path.join(snapshot_path, nxt)
         )
         _commit(snapshot_path, nxt)
-        _gc(snapshot_path, keep_versions)
+        _gc(snapshot_path)
 
     writer = changes_stream.writeStream.foreachBatch(merge_batch)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
     return q

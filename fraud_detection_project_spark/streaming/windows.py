@@ -19,23 +19,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _watermarked(df: DataFrame) -> DataFrame:
+    """A streaming frame gets a 1-hour watermark on ``ts``; a batch
+    frame passes through (same plan shape otherwise)."""
+    return df.withWatermark("ts", "1 hour") if df.isStreaming else df
+
+
 def tumbling_event_counts(
     stream: DataFrame,
     keys: Sequence[str],
-    ts_col: str = "ts",
     window: str = "1 hour",
-    watermark: str = "1 hour",
 ) -> DataFrame:
-    """Per-key event counts in non-overlapping time buckets.
+    """Per-key event counts in non-overlapping ``ts`` buckets.
 
     Works on both streaming and batch frames (same plan shape either
     way) — the batch form is the oracle for the streaming form in tests.
     """
-    df = stream
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
     return (
-        df.groupBy(F.window(F.col(ts_col), window).alias("win"), *keys)
+        _watermarked(stream)
+        .groupBy(F.window(F.col("ts"), window).alias("win"), *keys)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),
@@ -53,10 +55,8 @@ def tumbling_event_counts(
 def sliding_event_counts(
     stream: DataFrame,
     keys: Sequence[str],
-    ts_col: str = "ts",
     window: str = "24 hours",
     slide: str = "1 hour",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Per-key counts over overlapping windows — the incremental
     approximation of W1 (``transform_data.py:59-65``): the trailing-24h
@@ -67,11 +67,9 @@ def sliding_event_counts(
     For *exact* per-event trailing counts (no discretization) use
     :func:`fraud_detection_project_spark.streaming.velocity.streaming_velocity`.
     """
-    df = stream
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
     return (
-        df.groupBy(F.window(F.col(ts_col), window, slide).alias("win"), *keys)
+        _watermarked(stream)
+        .groupBy(F.window(F.col("ts"), window, slide).alias("win"), *keys)
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("win_start"),
@@ -85,9 +83,7 @@ def sliding_event_counts(
 def session_event_counts(
     stream: DataFrame,
     keys: Sequence[str],
-    ts_col: str = "ts",
     gap: str = "30 minutes",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Per-key session aggregation with a dynamic-length session window
     (``F.session_window``): a session closes after ``gap`` of silence.
@@ -95,11 +91,9 @@ def session_event_counts(
     evicts closed sessions. Batch oracle:
     ``operators.windows.sessionize`` + groupBy(key, session_id).
     """
-    df = stream
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
     return (
-        df.groupBy(F.session_window(F.col(ts_col), gap).alias("win"), *keys)
+        _watermarked(stream)
+        .groupBy(F.session_window(F.col("ts"), gap).alias("win"), *keys)
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("win_start"),

@@ -608,8 +608,8 @@ class TestRandomProject:
         )
 
         df = self._vecs(spark, n=5, dim=32)
-        a = random_project(df, dim=32, out_dim=8, seed=1).collect()
-        b = random_project(df, dim=32, out_dim=8, seed=1).collect()
+        a = random_project(df, dim=32, out_dim=8).collect()
+        b = random_project(df, dim=32, out_dim=8).collect()
         assert all(len(r["embedding"]) == 8 for r in a)
         assert [r["embedding"] for r in sorted(a, key=lambda r: r["vec_id"])] == [
             r["embedding"] for r in sorted(b, key=lambda r: r["vec_id"])
@@ -626,7 +626,7 @@ class TestRandomProject:
         orig = {r["vec_id"]: np.array(r["embedding"]) for r in df.collect()}
         proj = {
             r["vec_id"]: np.array(r["embedding"])
-            for r in random_project(df, dim=32, out_dim=16, seed=42).collect()
+            for r in random_project(df, dim=32, out_dim=16).collect()
         }
         ratios = []
         ids = sorted(orig)

@@ -339,21 +339,20 @@ class TestClustering:
         b = kmeans_centroids(kmeans_fit(emb, k=3, seed=42))
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
-    def test_ivf_with_trained_centroids(self, emb):
-        from fraud_detection_project_spark.ml.clustering import kmeans_centroids, kmeans_fit
-        from fraud_detection_project_spark.operators.similarity import cosine_topk, ivf_topk
+    def test_assign_picks_nearest_trained_centroid(self, emb):
+        import numpy as np
+
+        from fraud_detection_project_spark.ml.clustering import (
+            kmeans_assign,
+            kmeans_centroids,
+            kmeans_fit,
+        )
 
         model = kmeans_fit(emb, k=3, seed=42)
-        query = [10.0, 0.0, 0.0, 0.0]
-        exact = [r["vec_id"] for r in cosine_topk(emb, query, 10).collect()]
-        approx = [
-            r["vec_id"]
-            for r in ivf_topk(
-                emb, query, 10, nprobe=1, centroids=kmeans_centroids(model)
-            ).collect()
-        ]
-        # probing the single trained cell containing the blob → full recall
-        assert set(approx) == set(exact)
+        cents = np.asarray(kmeans_centroids(model))
+        for r in kmeans_assign(emb, model).collect():
+            d = ((cents - np.asarray(r["embedding"])) ** 2).sum(axis=1)
+            assert r["cluster"] == int(np.argmin(d))
 
 
 class TestPrepEncoders:
@@ -509,6 +508,25 @@ class TestWeightedSample:
         got = [r["o_orderkey"] for r in QUERIES["weighted_reservoir_orders"](spark, sf).collect()]
         assert len(got) == 20
         assert sum(1 for k in got if k <= 10) >= 6
+
+    def test_reservoir_orders_skip_non_positive_prices(self, spark, tmp_path):
+        """An order priced -1.0 would key above every valid order
+        (ln(u) < 0, so every valid key is negative) and a 0.0 or NULL
+        price has no key: all three stay out of the sample."""
+        import pyarrow as pa
+
+        from fraud_detection_project_spark.queries import QUERIES
+
+        keys = list(range(1, 101))
+        prices = [float(k) for k in keys[:97]] + [-1.0, 0.0, None]
+        sf = self._write(tmp_path, "orders", pa.table({
+            "o_orderkey": pa.array(keys, pa.int64()),
+            "o_totalprice": pa.array(prices, pa.float64()),
+        }))
+        got = QUERIES["weighted_reservoir_orders"](spark, sf).collect()
+        assert len(got) == 20
+        assert not {r["o_orderkey"] for r in got} & {98, 99, 100}
+        assert all(r["es_key"] < 0 for r in got)
 
     def test_zero_and_null_weights_excluded(self, spark, tmp_path):
         import pyarrow as pa

@@ -1,12 +1,16 @@
-"""Option budget for the layers perfbench traces.
+"""Option budget for every engine module.
 
-A defaulted parameter that no caller outside ``tests/`` passes is a setting
-with one value in use: it only adds branches nobody runs. This test reads the
-traced layers from ``perfbench/spans.py``, collects the arguments passed at
-every call site in the package, ``tools/``, ``perfbench/`` and ``bench.py``
-(matched by function name), and fails on any public function or method of a
-traced module with a defaulted parameter no such call passes, unless the
-setting is in ``KEPT`` with its reason.
+A defaulted parameter that no caller passes is a setting with one value
+in use: it only adds branches nobody runs. This test collects the
+arguments passed at every call site (matched by function name; a
+``functools.partial(f, *a, **kw)`` binding counts as a call to ``f`` with
+those arguments) and fails on any public function or method of a module
+under the package with a defaulted parameter no caller passes, unless
+the setting is in ``KEPT`` with its reason.
+
+The callers of a function are the call sites in the package,
+``tools/``, ``perfbench/`` and ``bench.py``; for a public entry point
+that only ``tests/`` calls, the test call sites count instead.
 """
 
 import ast
@@ -28,41 +32,49 @@ KEPT = {
         "property tests check the binning law at chosen widths",
     ("operators.windows", "ewma_bounded", "precision"):
         "tests compare unrounded values; forced rounding would loosen them",
+    ("operators.indexing", "partitioned_prefix_sum", "num_partitions"):
+        "property tests move the carry across 1-8 range partitions on inputs "
+        "too small to get them by default",
+    ("operators.indexing", "partitioned_prefix_extreme", "num_partitions"):
+        "tests put NULL runs on range-partition boundaries of a 400-row input",
+    ("operators.similarity", "cosine_all_pairs_exact", "block_rows"):
+        "tests split a small frame into several blocks, the cross-block path "
+        "production runs above 4096 rows",
+    ("streaming.anomaly", "expanding_zscore", "round_dp"):
+        "the stream-vs-batch test rounds both at 6 dp, so Welford and two-pass "
+        "moments cannot straddle a rounding step",
+    ("streaming.upsert", "plan_batch_merge", "broadcast_threshold_rows"):
+        "tests reach the sort-merge shape, which production takes above 2M "
+        "change rows",
 }
 
 
-def _traced_layers():
-    tree = ast.parse((ROOT / "perfbench" / "spans.py").read_text())
-    for node in tree.body:
-        if isinstance(node, ast.Assign) and any(
-                isinstance(t, ast.Name) and t.id == "LAYERS" for t in node.targets):
-            return ast.literal_eval(node.value)
-    raise AssertionError("perfbench/spans.py defines no LAYERS")
+def _modules():
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        if path.name != "__init__.py":
+            yield ".".join(path.relative_to(ROOT / PKG).with_suffix("").parts), path
 
 
-def _caller_files():
-    yield from (ROOT / PKG).rglob("*.py")
-    yield from (ROOT / "tools").rglob("*.py")
-    yield from (ROOT / "perfbench").rglob("*.py")
-    yield ROOT / "bench.py"
+def _name(f):
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
 
 
-def _calls_by_name():
+def _calls_by_name(paths):
     """name -> list of (n_positional, keyword names, has *args, has **kwargs)."""
     calls = {}
-    for path in _caller_files():
+    for path in paths:
         for node in ast.walk(ast.parse(path.read_text())):
             if not isinstance(node, ast.Call):
                 continue
-            f = node.func
-            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            name, args = _name(node.func), node.args
+            if name == "partial" and args:
+                name, args = _name(args[0]), args[1:]
             if name is None:
                 continue
-            star = any(isinstance(a, ast.Starred) for a in node.args)
             calls.setdefault(name, []).append((
-                len(node.args),
+                len(args),
                 {k.arg for k in node.keywords if k.arg is not None},
-                star,
+                any(isinstance(a, ast.Starred) for a in args),
                 any(k.arg is None for k in node.keywords),
             ))
     return calls
@@ -81,10 +93,16 @@ def _defaulted(fn, is_method):
 
 
 def unpassed_settings():
-    calls = _calls_by_name()
+    engine = _calls_by_name([
+        *(ROOT / PKG).rglob("*.py"),
+        *(ROOT / "tools").rglob("*.py"),
+        *(ROOT / "perfbench").rglob("*.py"),
+        ROOT / "bench.py",
+    ])
+    tests = _calls_by_name((ROOT / "tests").rglob("*.py"))
     hits = set()
-    for layer in _traced_layers():
-        tree = ast.parse((ROOT / PKG / (layer.replace(".", "/") + ".py")).read_text())
+    for module, path in _modules():
+        tree = ast.parse(path.read_text())
         defs = [(n, False) for n in tree.body if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
         for cls in tree.body:
             if isinstance(cls, ast.ClassDef) and not cls.name.startswith("_"):
@@ -93,12 +111,13 @@ def unpassed_settings():
         for fn, is_method in defs:
             if fn.name.startswith("_"):
                 continue
+            callers = engine.get(fn.name) or tests.get(fn.name, ())
             for param, pos in _defaulted(fn, is_method):
                 passed = any(
                     param in kws or kwstar or (pos is not None and (star or n_pos > pos))
-                    for n_pos, kws, star, kwstar in calls.get(fn.name, ()))
+                    for n_pos, kws, star, kwstar in callers)
                 if not passed:
-                    hits.add((layer, fn.name, param))
+                    hits.add((module, fn.name, param))
     return hits
 
 

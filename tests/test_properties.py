@@ -629,7 +629,7 @@ class TestMomentsProperties:
             [(s, "g", v) for s, v in data], "shard int, g string, x double"
         )
         got = merge_moments(
-            moment_partials(df, ["shard", "g"], "x"), ["g"], precision=6
+            moment_partials(df, ["shard", "g"], "x"), ["g"]
         ).first()
         vals = [v for _, v in data]
         assert got["n"] == len(vals)

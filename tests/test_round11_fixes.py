@@ -219,8 +219,8 @@ class TestSketchSchemaMigration:
         assert "depth" in st.columns and "d" not in st.columns
 
         batch = spark.createDataFrame([("u1",), ("u2",)], "k STRING")
-        merge_sketch_batch(spark, batch, "k", path, depth=2, width=8,
-                           epoch=1)
+        merge_sketch_batch(spark, batch, "k", path, width=8,
+                           epoch=1, stream_id=None)
         merged = read_sketch(spark, path)
         assert "depth" in merged.columns
         # the old counters survived the merge (cell (0,7) still >= 3)
@@ -232,8 +232,8 @@ class TestSketchSchemaMigration:
 
         path = str(tmp_path / "sketch2")
         batch = spark.createDataFrame([("u1",)], "k STRING")
-        sk.merge_sketch_batch(spark, batch, "k", path, depth=2, width=8,
-                              epoch=0)
+        sk.merge_sketch_batch(spark, batch, "k", path, width=8,
+                              epoch=0, stream_id=None)
         with open(os.path.join(path, "MANIFEST.json")) as f:
             m = json.load(f)
         assert m["schema"] == sk._STATE_SCHEMA_VERSION
@@ -245,11 +245,11 @@ class TestSketchSchemaMigration:
 
         path = str(tmp_path / "sketch3")
         batch = spark.createDataFrame([("a",), ("a",), ("b",)], "k STRING")
-        merge_sketch_batch(spark, batch, "k", path, depth=2, width=8,
-                           epoch=0)
+        merge_sketch_batch(spark, batch, "k", path, width=8,
+                           epoch=0, stream_id=None)
         st = read_sketch(spark, path)
         assert set(st.columns) == {"depth", "bucket", "cnt"}
-        assert st.agg({"cnt": "sum"}).collect()[0][0] == 6  # 3 rows × 2 depths
+        assert st.agg({"cnt": "sum"}).collect()[0][0] == 12  # 3 rows × 4 depths
 
 
 class TestFingerprintDiffPure:
@@ -452,9 +452,9 @@ class TestStreamStateReplayAndGc:
         path = str(tmp_path / "agg")
         b = self._batch(spark)
         merge_aggregate_batch(spark, b, ["k"], self.SPECS, path,
-                              self.SCHEMA, epoch=0)
+                              self.SCHEMA, epoch=0, stream_id=None)
         merge_aggregate_batch(spark, b, ["k"], self.SPECS, path,
-                              self.SCHEMA, epoch=0)  # crash replay
+                              self.SCHEMA, epoch=0, stream_id=None)  # crash replay
         got = {r["k"]: (r["n"], r["total"])
                for r in read_state(spark, path, self.SCHEMA).collect()}
         assert got == {"a": (2, 3.0), "b": (1, 3.0)}  # counted ONCE
@@ -467,9 +467,9 @@ class TestStreamStateReplayAndGc:
         path = str(tmp_path / "agg2")
         b = self._batch(spark)
         merge_aggregate_batch(spark, b, ["k"], self.SPECS, path,
-                              self.SCHEMA, epoch=0)
+                              self.SCHEMA, epoch=0, stream_id=None)
         merge_aggregate_batch(spark, b, ["k"], self.SPECS, path,
-                              self.SCHEMA, epoch=1)
+                              self.SCHEMA, epoch=1, stream_id=None)
         got = {r["k"]: r["n"]
                for r in read_state(spark, path, self.SCHEMA).collect()}
         assert got == {"a": 4, "b": 2}
@@ -485,7 +485,7 @@ class TestStreamStateReplayAndGc:
         b = self._batch(spark)
         for e in range(5):
             merge_aggregate_batch(spark, b, ["k"], self.SPECS, path,
-                                  self.SCHEMA, epoch=e, keep_versions=2)
+                                  self.SCHEMA, epoch=e, stream_id=None)
         dirs = sorted(d for d in os.listdir(path) if d.startswith("v="))
         assert dirs == ["v=3", "v=4"]  # only the kept suffix survives
         assert read_state(spark, path, self.SCHEMA).count() == 2
@@ -500,8 +500,8 @@ class TestStreamStateReplayAndGc:
         path = str(tmp_path / "cm")
         b = spark.createDataFrame([(1,), (2,), (2,)], "uid BIGINT")
         for e in range(4):
-            merge_sketch_batch(spark, b, "uid", path, depth=2, width=8,
-                               epoch=e)
+            merge_sketch_batch(spark, b, "uid", path, width=8,
+                               epoch=e, stream_id=None)
         dirs = sorted(d for d in os.listdir(path) if d.startswith("v="))
         assert dirs == ["v=2", "v=3"]
         assert read_sketch(spark, path).count() > 0

@@ -145,7 +145,9 @@ class TestNullEpochManifest:
 
         b = spark.createDataFrame([(i % 5,) for i in range(20)], "k long")
         path = str(tmp_path / "cms")
-        merge_sketch_batch(spark, b, "k", path, width=64)  # batch: epoch null
+        # batch: epoch null
+        merge_sketch_batch(spark, b, "k", path, width=64, epoch=None,
+                           stream_id=None)
         before = sum(_sketch_totals(spark, path).values())
         merge_sketch_batch(spark, b, "k", path, width=64, epoch=0,
                            stream_id="ckpt")
@@ -154,14 +156,16 @@ class TestNullEpochManifest:
         hb = spark.createDataFrame([(float(i % 4),) for i in range(20)],
                                    "v double")
         hpath = str(tmp_path / "hist")
-        merge_histogram_batch(spark, hb, "v", hpath, lo=0.0, hi=4.0, n_bins=8)
+        merge_histogram_batch(spark, hb, "v", hpath, lo=0.0, hi=4.0, n_bins=8,
+                              epoch=None, stream_id=None)
         merge_histogram_batch(spark, hb, "v", hpath, lo=0.0, hi=4.0, n_bins=8,
                               epoch=0, stream_id="ckpt")
         total = sum(r["cnt"] for r in read_histogram(spark, hpath).collect())
         assert total == 40
 
         apath = str(tmp_path / "ams")
-        merge_ams_batch(spark, b, "k", apath, n_estimators=4)
+        merge_ams_batch(spark, b, "k", apath, n_estimators=4, epoch=None,
+                        stream_id=None)
         merge_ams_batch(spark, b, "k", apath, n_estimators=4, epoch=0,
                         stream_id="ckpt")
         zs = {r["j"]: r["z"] for r in read_ams(spark, apath).collect()}
@@ -177,7 +181,8 @@ class TestNullEpochManifest:
         specs = {"n": ("v", "count")}
         b = spark.createDataFrame([("a", 1.0)], "g STRING, v DOUBLE")
         path = str(tmp_path / "agg")
-        merge_aggregate_batch(spark, b, ["g"], specs, path, schema)  # null
+        merge_aggregate_batch(spark, b, ["g"], specs, path, schema,  # null
+                              epoch=None, stream_id=None)
         merge_aggregate_batch(spark, b, ["g"], specs, path, schema,
                               epoch=0, stream_id="ckpt")
         got = {r["g"]: r["n"] for r in read_state(spark, path, schema).collect()}

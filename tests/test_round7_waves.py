@@ -1315,8 +1315,8 @@ def test_prefix_extreme_matches_window(spark):
 
 
 def test_prefix_extreme_null_rows_inherit_running_extreme(spark):
-    """ADVICE r6: NULL values must INHERIT the running extreme (SQL
-    MAX() OVER semantics) instead of emitting NULL, and a partition
+    """NULL values must INHERIT the running extreme (SQL MAX() OVER
+    semantics) instead of emitting NULL, and a partition
     whose tail rows are NULL must still carry the extreme into the next
     range partition. NULL-prefix rows (before any value) emit NULL."""
     import random
@@ -1336,20 +1336,16 @@ def test_prefix_extreme_null_rows_inherit_running_extreme(spark):
     for i in range(75, 85):
         rows[i] = (i, None)
     df = spark.createDataFrame(rows, "k long, v double")
-    for minimum in (False, True):
-        got = (
-            partitioned_prefix_extreme(
-                df, ["k"], "v", "m", minimum=minimum, num_partitions=5
-            )
-            .orderBy("k")
-            .collect()
-        )
-        run = None
-        pick = min if minimum else max
-        for (k, v), r in zip(sorted(rows, key=lambda t: t[0]), got):
-            if v is not None:
-                run = v if run is None else pick(run, v)
-            assert r["m"] == run, (k, v, run, r["m"], minimum)
+    got = (
+        partitioned_prefix_extreme(df, ["k"], "v", "m", num_partitions=5)
+        .orderBy("k")
+        .collect()
+    )
+    run = None
+    for (k, v), r in zip(sorted(rows, key=lambda t: t[0]), got):
+        if v is not None:
+            run = v if run is None else max(run, v)
+        assert r["m"] == run, (k, v, run, r["m"])
 
 
 def test_skyline_matches_bruteforce(spark):

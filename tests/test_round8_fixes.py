@@ -77,8 +77,8 @@ class TestAmsSignHash:
             [(f"u{i % 23}",) for i in range(80)], "k string"
         )
         path = str(tmp_path / "ams_state")
-        merge_ams_batch(spark, b1, "k", path, epoch=0)
-        merge_ams_batch(spark, b2, "k", path, epoch=1)
+        merge_ams_batch(spark, b1, "k", path, epoch=0, stream_id=None)
+        merge_ams_batch(spark, b2, "k", path, epoch=1, stream_id=None)
         got = {r["j"]: r["z"] for r in read_ams(spark, path).collect()}
         want = {
             r["j"]: r["z"]

@@ -24,7 +24,7 @@ class TestCountMin:
         n = sum(counts.values())
         got = {
             r["user_id"]: r["cms_est"]
-            for r in count_min_estimate(df, "user_id", depth=4, width=64).collect()
+            for r in count_min_estimate(df, "user_id", width=64).collect()
         }
         assert set(got) == set(counts)
         for k, exact in counts.items():
@@ -41,7 +41,7 @@ class TestCountMin:
         got = {
             r["user_id"]: r["cms_est"]
             for r in count_min_estimate(
-                df, "user_id", depth=4, width=65536
+                df, "user_id", width=65536
             ).collect()
         }
         assert got == counts

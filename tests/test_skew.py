@@ -133,32 +133,32 @@ def test_aqe_splits_skewed_join_partition(spark):
 
 
 class TestJoinAdvisor:
-    def _advise(self, spark, fact_keys, dim_n, **kw):
+    # one row past the 100k-row broadcast limit
+    BIG_DIM = 100_001
+
+    def _advise(self, spark, fact_keys, dim_n):
         from fraud_detection_project_spark.operators.skew import (
             advise_join_strategy,
         )
 
         fact = spark.createDataFrame([(k,) for k in fact_keys], "k long")
-        dim = spark.createDataFrame([(i,) for i in range(dim_n)], "d long")
-        return advise_join_strategy(fact, "k", dim, "d", **kw).first()
+        dim = spark.range(dim_n).withColumnRenamed("id", "d")
+        return advise_join_strategy(fact, "k", dim, "d").first()
 
     def test_small_dim_broadcasts(self, spark):
-        got = self._advise(spark, list(range(100)), 10,
-                           broadcast_threshold_rows=50)
+        got = self._advise(spark, list(range(100)), 100_000)
         assert got["recommendation"] == "broadcast"
-        assert got["fact_rows"] == 100 and got["dim_rows"] == 10
+        assert got["fact_rows"] == 100 and got["dim_rows"] == 100_000
 
     def test_skewed_fact_salts(self, spark):
         # one hot key with 500 rows over 50 keys -> ratio >> 20
         keys = [0] * 500 + list(range(1, 50))
-        got = self._advise(spark, keys, 1000,
-                           broadcast_threshold_rows=10)
+        got = self._advise(spark, keys, self.BIG_DIM)
         assert got["recommendation"] == "shuffle+salt"
         assert got["skew_ratio"] > 20
 
     def test_uniform_big_dim_shuffles(self, spark):
-        got = self._advise(spark, list(range(200)), 1000,
-                           broadcast_threshold_rows=10)
+        got = self._advise(spark, list(range(200)), self.BIG_DIM)
         assert got["recommendation"] == "shuffle"
 
 

@@ -16,7 +16,7 @@ def _merge_sketch(spark, path, epoch):
     )
 
     b = spark.createDataFrame([(i % 7,) for i in range(30)], "k long")
-    merge_sketch_batch(spark, b, "k", path, depth=2, width=16, epoch=epoch,
+    merge_sketch_batch(spark, b, "k", path, width=16, epoch=epoch,
                        stream_id="ckpt")
 
 
@@ -97,7 +97,7 @@ def test_sketch_sinks_share_one_directory(spark, tmp_path):
     path = str(tmp_path / "shared")
     for epoch in range(3):
         b = spark.createDataFrame(rows[epoch * 30:(epoch + 1) * 30], schema)
-        merge_sketch_batch(spark, b, "k", path, depth=3, width=16,
+        merge_sketch_batch(spark, b, "k", path, width=16,
                            epoch=epoch, stream_id="ckpt")
         merge_histogram_batch(spark, b, "v", path, lo=0.0, hi=6.0, n_bins=8,
                               epoch=epoch, stream_id="ckpt")
@@ -113,7 +113,7 @@ def test_sketch_sinks_share_one_directory(spark, tmp_path):
     cm = read_sketch(spark, path)
     assert cm.dtypes == [("depth", "int"), ("bucket", "bigint"),
                          ("cnt", "bigint")]
-    want_cm = count_min_table(every, "k", depth=3, width=16)
+    want_cm = count_min_table(every, "k", width=16)
     assert sorted(map(tuple, cm.collect())) == sorted(
         (r["depth"], r["bucket"], r["cnt"]) for r in want_cm.collect()
     )
@@ -131,7 +131,8 @@ def test_sketch_sinks_share_one_directory(spark, tmp_path):
     ams = read_ams(spark, path)
     assert ams.dtypes == [("j", "int"), ("z", "bigint")]
     one_batch = str(tmp_path / "ams_one_batch")
-    merge_ams_batch(spark, every, "k", one_batch, n_estimators=4)
+    merge_ams_batch(spark, every, "k", one_batch, n_estimators=4, epoch=None,
+                    stream_id=None)
     assert sorted(map(tuple, ams.collect())) == sorted(
         map(tuple, read_ams(spark, one_batch).collect())
     )
