@@ -275,9 +275,6 @@ class Catalog:
     def __contains__(self, name: str) -> bool:
         return name in self._tables
 
-    def names(self) -> list[str]:
-        return list(self._tables)
-
 
 def load_csv_datasets(
     spark: SparkSession, dataset_paths: dict[str, str]

@@ -7,7 +7,6 @@ column expressions so the whole pipeline stays inside whole-stage codegen.
 
 from .ip import ip_to_int, int_to_ip
 from .time import (
-    epoch_seconds,
     hour_of_day,
     day_of_week,
     time_since_seconds,
@@ -31,7 +30,6 @@ __all__ = [
     "round_floor",
     "ip_to_int",
     "int_to_ip",
-    "epoch_seconds",
     "hour_of_day",
     "day_of_week",
     "time_since_seconds",

@@ -10,7 +10,7 @@ DuckDB oracle twin (keep in sync with any rule change here)::
 
     FLOOR(x * 10000 + 0.5) / 10000        -- dp = 4
 
-Used by: streaming/anomaly.py (batch + streaming z-scores),
+Used by: streaming/anomaly.py (expanding z-scores),
 operators/similarity.py:quantize_int8 (the same rule at scale=1/s),
 queries.py decode profiles. Note the asymmetry for negatives
 (floor(+0.5) rounds -0.5 up to 0) — fine, because every consumer

@@ -23,11 +23,6 @@ def to_timestamp_coerce(col: Column | str) -> Column:
     return F.try_to_timestamp(_c(col))
 
 
-def epoch_seconds(col: Column | str) -> Column:
-    """Timestamp → epoch seconds as LongType (truncating)."""
-    return _c(col).cast("long")
-
-
 def hour_of_day(col: Column | str) -> Column:
     """0-23 (``transform_data.py:54``; pandas ``.dt.hour``)."""
     return F.hour(_c(col))

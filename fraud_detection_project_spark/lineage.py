@@ -187,8 +187,3 @@ def is_bounded_ckpt_scan(plan_line: str) -> bool:
     :func:`_nonce_name` for the rewrite and collision rationale)."""
     m = _SCAN_RE.search(plan_line)
     return bool(m) and _normalize_sig(m.group(1)) in _BOUNDED_CKPT_SIGS
-
-
-def registered() -> dict[str, str]:
-    """Snapshot of the registry (signature -> reason), for tests."""
-    return dict(_BOUNDED_CKPT_SIGS)

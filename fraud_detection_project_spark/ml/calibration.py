@@ -10,7 +10,7 @@ BINNED form used by large-scale ranking systems: aggregate (weight,
 positive-rate) into ``n_bins`` fixed-width score bins — one map-side
 shuffle to ``n_bins`` rows — then run exact PAV over the ≤ ``n_bins``
 bin summaries on the driver (bounded, O(n_bins), NOT O(rows)), and
-broadcast the monotone step function back as a mapping frame. Binning
+return the monotone step function as a mapping frame. Binning
 cost: calibration within a bin is constant, an error bounded by bin
 width — the same trade ``auc_roc_binned`` documents.
 
@@ -61,8 +61,8 @@ def isotonic_bins(
     One ``groupBy(bin)`` exchange to ≤ ``n_bins`` rows; exact PAV over
     the collected bin summaries (driver work bounded by ``n_bins``,
     never row count); the result re-enters the cluster via
-    ``createDataFrame`` — broadcast-join it onto a scored frame with
-    :func:`apply_calibration` to transform. Deterministic: fixed-width
+    ``createDataFrame``, small enough to broadcast-join onto a scored
+    frame by bin id. Deterministic: fixed-width
     bins on the raw score, no quantile pass, no RNG.
     """
     s = F.col(score) if isinstance(score, str) else score
@@ -91,26 +91,3 @@ def isotonic_bins(
     return df.sparkSession.createDataFrame(
         out, "bin long, n long, mean_score double, frac_pos double, calibrated double"
     )
-
-
-def apply_calibration(
-    scored: DataFrame,
-    mapping: DataFrame,
-    score: str,
-    lo: float,
-    hi: float,
-    n_bins: int = 100,
-) -> DataFrame:
-    """Map raw scores through a fitted isotonic mapping: same bin
-    arithmetic as the fit, broadcast join on the bin id (mapping is
-    ≤ n_bins rows — never a shuffle of the scored frame); the result
-    lands in ``calibrated``."""
-    bin_w = (hi - lo) / n_bins
-    key = F.least(
-        F.greatest(F.floor((F.col(score) - F.lit(lo)) / F.lit(bin_w)), F.lit(0)),
-        F.lit(n_bins - 1),
-    ).cast("long")
-    m = mapping.select("bin", "calibrated")
-    return scored.withColumn("__bin", key).join(
-        F.broadcast(m), F.col("__bin") == m["bin"], "left"
-    ).drop("bin", "__bin")

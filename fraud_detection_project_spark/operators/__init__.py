@@ -22,7 +22,7 @@ from .aggregates import (
     numeric_profile,
     histogram,
 )
-from .diff import diff_rows, diff_summary, make_changeset
+from .diff import diff_rows, diff_summary
 from .merge import merge_apply
 from .indexing import dense_global_index
 from .dedup import (
@@ -37,7 +37,7 @@ from .dedup import (
 from .search import bm25_search, tfidf_weights, feature_hash_vectors, lm_perplexity
 from .graph import co_occurrence_edges, pagerank, triangle_count
 from .scd import build_scd2
-from .skew import advise_join_strategy, salted_agg, salted_join_hot_keys, skew_report
+from .skew import advise_join_strategy, salted_agg, skew_report
 from .curation import curation_funnel, remove_boilerplate_lines
 from .sketches import count_min_estimate, count_min_table, hash_filter_semijoin
 from .similarity import random_project, semantic_dedup
@@ -63,7 +63,6 @@ __all__ = [
     "histogram",
     "diff_rows",
     "diff_summary",
-    "make_changeset",
     "merge_apply",
     "lm_perplexity",
     "build_scd2",
@@ -90,6 +89,5 @@ __all__ = [
     "semantic_dedup",
     "advise_join_strategy",
     "salted_agg",
-    "salted_join_hot_keys",
     "skew_report",
 ]

@@ -10,7 +10,7 @@ entire cost; the per-row classification is a codegen expression (no
 UDF), and the output is either the one-row summary aggregate or the
 classified row stream for a dead-letter sink. At 100 TB vs 100 TB this
 is the canonical two-big-tables join: co-partition both sides by key
-(bucketing, sources/bucketing.py) and the Exchange disappears.
+(bucketed tables) and the Exchange disappears.
 """
 
 from __future__ import annotations
@@ -81,66 +81,6 @@ def diff_rows(
         ],
         status.alias("diff_status"),
         *eqs,
-    )
-
-
-def make_changeset(
-    left: DataFrame,
-    right: DataFrame,
-    keys: Sequence[str],
-) -> DataFrame:
-    """The CDC changeset that transforms ``left`` into ``right``:
-    right-only keys become inserts, left-only keys deletes, differing
-    keys updates (``op`` 'U' for inserts and updates, 'D' for deletes,
-    all at ``seq`` 1); equal keys emit nothing. Closes the algebra with
-    MERGE — ``merge_apply(left, make_changeset(left, right, k)) ≡
-    right`` (property-tested) — which is exactly snapshot
-    reconciliation-repair: diff two replicas, ship the minimal
-    changeset, converge.
-
-    Payload columns come from ``right`` (NULL for deletes). One
-    full-outer join (shared with diff_rows' plan shape); the changeset
-    is minimal — |inserts| + |deletes| + |updates| rows.
-    """
-    compare_cols = [
-        c for c in right.columns if c in set(left.columns) and c not in set(keys)
-    ]
-    l = left.withColumn("__in_l", F.lit(True)).alias("l")
-    r = right.withColumn("__in_r", F.lit(True)).alias("r")
-    in_left = F.col("l.__in_l").isNotNull()
-    in_right = F.col("r.__in_r").isNotNull()
-    all_eq = (
-        F.lit(True)
-        if not compare_cols
-        else F.array_min(
-            F.array(
-                *[F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}")) for c in compare_cols]
-            )
-        )
-    )
-    cond = None
-    for k in keys:
-        c = F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
-        cond = c if cond is None else (cond & c)
-    joined = l.join(r, cond, "full_outer")
-    op = (
-        F.when(~in_right, F.lit("D"))
-        .when(~in_left, F.lit("U"))
-        .when(~all_eq, F.lit("U"))
-    )  # equal → NULL → filtered out
-    return (
-        joined.select(
-            *[
-                F.when(in_right, F.col(f"r.{k}"))
-                .otherwise(F.col(f"l.{k}"))
-                .alias(k)
-                for k in keys
-            ],
-            *[F.col(f"r.{c}").alias(c) for c in compare_cols],
-            op.alias("op"),
-        )
-        .filter(F.col("op").isNotNull())
-        .withColumn("seq", F.lit(1).cast("long"))
     )
 
 

@@ -18,8 +18,8 @@ Scale design (100 TB base, much smaller changeset):
   two modes use different shapes:
 
   * ``broadcast_changes=False``: one full-outer sort-merge join on the
-    key. If the base is bucketed by the key (sources/bucketing.py) the
-    base-side shuffle disappears.
+    key. If the base is bucketed by the key the base-side shuffle
+    disappears.
   * ``broadcast_changes=True`` (a day's changes fit in memory even when
     the base is 100 TB): a broadcast LEFT OUTER join carries every base
     row — the base payload NEVER shuffles — and inserts (change keys

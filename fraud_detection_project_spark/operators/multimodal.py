@@ -1,8 +1,7 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Design: media are opaque ``BinaryType`` columns with a typed metadata
-struct alongside (mime, width/height/duration, codec). Decode /
-feature-extract / resize / frame-sample run as Arrow-batched
+Design: media are opaque ``BinaryType`` columns. Decode /
+feature-extract / frame-sample run as Arrow-batched
 ``mapInPandas`` stages so bytes never round-trip through Python
 row-at-a-time.
 
@@ -14,13 +13,9 @@ PNM (P5 gray / P6 RGB, hand-parsed, :func:`decode_pnm`) — plus an
 decode is honest end-to-end for those formats. Codecs the container
 lacks (JPEG/libav/...) stay behind ``register_decoder``; without a
 match, the deterministic fake (:func:`_fake_decode`) produces
-shape-correct output so the Spark-side plumbing — schema, batching,
-partition sizing — remains real and tested, or ``strict=True`` raises
+shape-correct output so the Spark-side plumbing — schema and
+batching — remains real and tested, or ``strict=True`` raises
 ``NotImplementedError`` at the decode site.
-
-At 100 TB: binary payloads dominate partition size, so
-``media_repartition`` sizes partitions by *bytes* (payload length), not
-row count — the thing row-count-based partitioning gets wrong for media.
 """
 
 from __future__ import annotations
@@ -31,18 +26,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("codec", T.StringType()),
-    ]
-)
 
 # name → decoder(bytes) -> np.ndarray; installed by the host env.
 _DECODERS: dict[str, Callable[[bytes], np.ndarray]] = {}
@@ -169,31 +153,6 @@ register_decoder("pnm", decode_pnm)
 register_decoder("auto", decode_auto)
 
 
-def attach_media_meta(
-    df: DataFrame, payload_col: str = "payload", mime: str = "application/octet-stream"
-) -> DataFrame:
-    """Attach the typed metadata struct for an opaque binary column."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(mime).alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("string").alias("codec"),
-        ),
-    ).withColumn("payload_bytes", F.length(F.col(payload_col)).cast("long"))
-
-
-def media_repartition(df: DataFrame, payload_col: str) -> DataFrame:
-    """Repartition so each partition holds ~128 MiB of payload.
-    Row-count partitioning under-splits large media; this sizes by the
-    actual byte column."""
-    total = df.select(F.sum(F.length(payload_col)).alias("b")).first()["b"] or 0
-    n = max(1, int(total // (128 * 1024 * 1024)) + 1)
-    return df.repartition(n)
-
-
 def extract_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -272,88 +231,3 @@ def frame_sample(
             yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame_feat": feats})
 
     return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
-
-
-def read_tar_shards(
-    spark,
-    path: str,
-    suffixes: tuple[str, ...] = (),
-) -> DataFrame:
-    """WebDataset-style tar-shard ingestion: a directory of ``.tar``
-    files → one row per member ``(shard, member, suffix, payload,
-    payload_bytes)``.
-
-    Tar shards are the de-facto container for multimodal training
-    corpora (WebDataset/img2dataset lay out ``{key}.jpg`` +
-    ``{key}.txt`` + ``{key}.json`` members back-to-back): sequential
-    reads, object-store-friendly, one shard per task. Plan: Spark's
-    ``binaryFile`` source lists and assigns WHOLE shards to tasks
-    (locality + sequential IO), and a ``mapInPandas`` kernel unpacks
-    members with stdlib ``tarfile`` — payload bytes never leave the
-    executor except as the returned binary column. Downstream:
-    ``attach_media_meta`` / ``extract_features`` / ``media_repartition``
-    for byte-aware splits; group members by key prefix to reassemble
-    samples.
-
-    ``suffixes``: keep only members ending in one of these (e.g.
-    ``('.txt', '.json')``) — filtering inside the kernel avoids
-    materializing unwanted payloads in Arrow batches.
-
-    At 100 TB: shards are the parallelism unit (the standard contract —
-    shard count >> executor count); a pathologically large single shard
-    bounds a task exactly as it would any tar consumer, which is why
-    dataset builders cap shard sizes at write time.
-    """
-    import io
-    import tarfile
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(path)
-        .select(
-            F.col("path").alias("shard"),
-            F.col("content").alias("__tar"),
-        )
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("shard", T.StringType()),
-            T.StructField("member", T.StringType()),
-            T.StructField("suffix", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("payload_bytes", T.LongType()),
-        ]
-    )
-    keep = tuple(suffixes)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "shard": [],
-                "member": [],
-                "suffix": [],
-                "payload": [],
-                "payload_bytes": [],
-            }
-            for i in range(len(pdf)):
-                shard = pdf["shard"].iloc[i]
-                with tarfile.open(
-                    fileobj=io.BytesIO(bytes(pdf["__tar"].iloc[i]))
-                ) as tf:
-                    for m in tf:
-                        if not m.isfile():
-                            continue
-                        dot = m.name.rfind(".")
-                        suffix = m.name[dot:] if dot >= 0 else ""
-                        if keep and suffix not in keep:
-                            continue
-                        payload = tf.extractfile(m).read()
-                        rows["shard"].append(shard)
-                        rows["member"].append(m.name)
-                        rows["suffix"].append(suffix)
-                        rows["payload"].append(payload)
-                        rows["payload_bytes"].append(len(payload))
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(kernel, out_schema)

@@ -60,34 +60,3 @@ def with_dim_marker(
         .withColumn(marker, F.lit(1))
     )
     return fact.join(F.broadcast(keys), fact_key, "left_outer")
-
-
-def expect_schema(df: DataFrame, ddl: str, allow_extra: bool = False) -> DataFrame:
-    """Schema contract gate: raise ``ValueError`` unless ``df`` matches
-    the DDL (names + types; order-insensitive). ``allow_extra=True``
-    tolerates additional columns (widening-compatible producers).
-
-    The fail-fast half of schema governance — sources/schema-evolution
-    handles the read side (mergeSchema), this guards the boundary where
-    a pipeline PROMISES a shape downstream. Pure metadata check: no
-    jobs run, so it is free to call at every stage boundary.
-    """
-    from pyspark.sql.types import StructType
-
-    want = {f.name: f.dataType.simpleString()
-            for f in StructType.fromDDL(ddl).fields}
-    got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    missing = {k: v for k, v in want.items() if got.get(k) != v}
-    extra = sorted(set(got) - set(want))
-    problems = []
-    if missing:
-        problems.append(
-            "missing/mistyped: "
-            + ", ".join(f"{k} (want {v}, got {got.get(k, 'absent')})"
-                        for k, v in sorted(missing.items()))
-        )
-    if extra and not allow_extra:
-        problems.append("unexpected: " + ", ".join(extra))
-    if problems:
-        raise ValueError("schema contract violated — " + "; ".join(problems))
-    return df

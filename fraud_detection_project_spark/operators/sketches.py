@@ -194,32 +194,26 @@ def histogram_sketch(
     df: DataFrame,
     col: str,
     n_bins: int = 256,
-    lo: float | None = None,
-    hi: float | None = None,
 ) -> DataFrame:
     """Fixed-range equal-width histogram — the simplest MERGEABLE
     quantile sketch: per-partition bin counts combine by addition (the
     groupBy's partial aggregation IS the shard merge), so shards /
-    days / clusters union by summing counts per bin. Returns one row
-    per non-empty bin: ``(bin, cnt, lo, hi, n_bins)`` with bin ∈
-    [0, n_bins) clamped at the range edges.
+    days / clusters built over the same range union by summing counts
+    per bin. Returns one row per non-empty bin: ``(bin, cnt, lo, hi,
+    n_bins)`` with bin ∈ [0, n_bins) clamped at the range edges.
 
-    When ``lo``/``hi`` are omitted they come from one min/max
-    aggregate (two passes total — callers that maintain the sketch
-    incrementally should pin the range instead). Shuffle is bounded by
-    ``n_bins`` rows forever, like the CMS/HLL contracts in this
-    module."""
+    ``lo``/``hi`` come from one min/max aggregate (two passes total).
+    Shuffle is bounded by ``n_bins`` rows forever, like the CMS/HLL
+    contracts in this module."""
     d = df.select(F.col(col).cast("double").alias("__v")).filter(
         F.col("__v").isNotNull()
     )
-    if lo is None or hi is None:
-        r = d.agg(F.min("__v").alias("lo"), F.max("__v").alias("hi")).first()
-        if r["lo"] is None:  # no non-null values: empty sketch
-            return df.sparkSession.createDataFrame(
-                [], "bin int, cnt bigint, lo double, hi double, n_bins int"
-            )
-        lo = float(r["lo"]) if lo is None else lo
-        hi = float(r["hi"]) if hi is None else hi
+    r = d.agg(F.min("__v").alias("lo"), F.max("__v").alias("hi")).first()
+    if r["lo"] is None:  # no non-null values: empty sketch
+        return df.sparkSession.createDataFrame(
+            [], "bin int, cnt bigint, lo double, hi double, n_bins int"
+        )
+    lo, hi = float(r["lo"]), float(r["hi"])
     width = (hi - lo) / n_bins if hi > lo else 1.0
     bin_ = F.least(
         F.lit(n_bins - 1),
@@ -370,30 +364,28 @@ def misra_gries(
 # remultiplied so dense integer keys don't map monotonically.
 _BLOOM_HASHES = ((1000003, 7), (1012003, 11), (1030003, 13))
 _BLOOM_P = 999983
+_BLOOM_REMUL = 40503
 
 _INTEGRAL_KEY_TYPES = frozenset({"tinyint", "smallint", "int", "bigint"})
 
 
 def sketch_key_expr(df, col: str):
-    """Long-valued key expression shared by the SQL-replicable affine
-    hash families (bloom positions, AMS signs): integral keys keep the
+    """Long-valued key expression for the SQL-replicable affine AMS
+    sign hash (streaming/sketches.py): integral keys keep the
     bit-exact ``cast('long')`` path the audit oracles replicate;
     everything else pre-hashes through ``pmod(xxhash64(col), 999983)``
     so the downstream modular arithmetic never sees NULL (a raw
     ``cast('long')`` of a string is NULL)
     or a negative operand."""
-    from pyspark.sql import functions as F
-
     dt = df.schema[col].dataType.simpleString()
     if dt in _INTEGRAL_KEY_TYPES:
         return F.col(col).cast("long")
     return F.pmod(F.xxhash64(F.col(col)), F.lit(_BLOOM_P))
-_BLOOM_REMUL = 40503
 
 
 def _bloom_positions(key_col, m_col):
-    from pyspark.sql import functions as F
-
+    """The 3 Bloom hash positions of ``key_col`` in an ``m_col``-bit
+    filter (the bloom_semi_join_audit query and its oracle)."""
     return F.array(
         *[
             (
@@ -405,68 +397,4 @@ def _bloom_positions(key_col, m_col):
             )
             for a, b in _BLOOM_HASHES
         ]
-    )
-
-
-def bloom_semi_join(
-    probe: "DataFrame",
-    probe_col: str,
-    build: "DataFrame",
-    build_col: str,
-) -> "DataFrame":
-    """Bloom-filter semi-join: keep probe rows whose key *may* appear
-    in the build side — no false negatives ever; false-positive rate
-    ≈ (1 − e^{−kn/m})^k with k=3 and m = 32·n sized from
-    the MEASURED build cardinality, so the rate is scale-free.  The
-    "bitmap" is relational: the distinct set of hash positions
-    (3·n_build longs, shuffled like any semi-join build side, never
-    collected).  A probe key passes iff every one of its distinct
-    positions is present.  The affine-mod-prime hash family is
-    deliberately SQL-replicable so a DuckDB oracle can rebuild the
-    filter bit-for-bit (see the bloom_semi_join_audit query) — swap in
-    xxhash64 for production entropy if oracle parity is not needed.
-
-    Non-integral key types are pre-hashed through ``xxhash64`` (pmod'd
-    into the prime field) before the affine family — a raw
-    ``cast('long')`` of a string is NULL, which would make every probe
-    position NULL and silently return EMPTY, violating the
-    no-false-negative guarantee. Integral keys keep the
-    bit-exact affine path the audit oracle replicates."""
-    from pyspark.sql import functions as F
-
-    _key_expr = sketch_key_expr
-
-    bkeys = build.select(_key_expr(build, build_col).alias("__k")).distinct()
-    mrow = bkeys.agg(
-        (F.count(F.lit(1)) * 32).cast("long").alias("__m")
-    )
-    set_pos = (
-        bkeys.crossJoin(F.broadcast(mrow))
-        .select(F.explode(_bloom_positions(F.col("__k"), F.col("__m"))).alias("pos"))
-        .distinct()
-    )
-    ppos = (
-        probe.select(
-            F.col(probe_col).alias("__k"),
-            _key_expr(probe, probe_col).alias("__kh"),
-        )
-        .distinct()
-        .crossJoin(F.broadcast(mrow))
-        .select(
-            "__k",
-            F.explode(_bloom_positions(F.col("__kh"), F.col("__m"))).alias("pos"),
-        )
-        .distinct()
-    )
-    passing = (
-        ppos.join(set_pos.withColumn("__hit", F.lit(1)), "pos", "left")
-        .groupBy("__k")
-        .agg(
-            (F.count(F.lit(1)) == F.count("__hit")).alias("__all")
-        )
-        .filter(F.col("__all"))
-        .select("__k")
-    )
-    return probe.join(
-        passing, probe[probe_col] == passing["__k"], "left_semi"
     )

@@ -1,23 +1,19 @@
-"""Skew mitigation: salted aggregation and salted broadcast-side join.
+"""Skew mitigation: salted aggregation, skew diagnostics, join advice.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
-runtime, but two shapes still need explicit salting at 100 TB:
-
-- a groupBy where one key holds a double-digit percentage of all rows
-  (a single reducer gets that key no matter how AQE splits scans), and
-- a shuffle join against a *hot* key set too large to broadcast whole
-  but with a known/estimable hot-key head.
-
-Both helpers keep the two-phase shape: per-(key, salt) partial
-aggregation (parallel across ``salt_buckets`` reducers) → final merge
-per key. For algebraic aggregates the result is exact.
+runtime, but a groupBy where one key holds a double-digit percentage of
+all rows still needs explicit salting: a single reducer gets that key
+no matter how AQE splits scans. :func:`salted_agg` keeps the two-phase
+shape: per-(key, salt) partial aggregation (parallel across
+``salt_buckets`` reducers) → final merge per key. For algebraic
+aggregates the result is exact.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -55,47 +51,9 @@ def salted_agg(
     )
 
 
-def salted_join_hot_keys(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    hot_keys: Sequence,
-) -> DataFrame:
-    """Equi-join where ``hot_keys`` of ``key`` are pathologically
-    frequent on the fact side: hot fact rows get a random salt and the
-    hot dim rows are replicated across every salt value, so the hot
-    keys' rows spread over 16 reducers instead of one. Cold keys join
-    normally (inner). Result = salted-hot ∪ cold.
-    """
-    hot_lit = F.array(*[F.lit(k) for k in hot_keys])
-    is_hot = F.array_contains(hot_lit, F.col(key))
-
-    fact_hot = fact.filter(is_hot).withColumn(
-        "__salt", (F.rand(seed=42) * 16).cast("int")
-    )
-    fact_cold = fact.filter(~is_hot)
-
-    dim_hot = (
-        dim.filter(is_hot)
-        .crossJoin(
-            F.broadcast(
-                fact.sparkSession.range(16).select(
-                    F.col("id").cast("int").alias("__salt")
-                )
-            )
-        )
-    )
-    dim_cold = dim.filter(~is_hot)
-
-    joined_hot = fact_hot.join(dim_hot, [key, "__salt"], "inner").drop("__salt")
-    joined_cold = fact_cold.join(dim_cold, [key], "inner")
-    return joined_hot.unionByName(joined_cold)
-
-
 def skew_report(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Key-distribution diagnostic — the measurement that decides
-    between plain hash partitioning, salting (:func:`salted_agg` /
-    :func:`salted_join_hot_keys`), and AQE skew handling: one row with
+    between plain hash partitioning, salting (:func:`salted_agg`), and AQE skew handling: one row with
     the group-size distribution over ``keys``.
 
     ``skew_ratio`` = max group / mean group: ~1 is uniform; a ratio of
@@ -129,7 +87,7 @@ def advise_join_strategy(
     1. ``dim`` at most 100k rows → **broadcast** (no fact shuffle);
     2. else if the fact key distribution is skewed
        (:func:`skew_report` ratio >= 20) → **shuffle+salt**
-       (:func:`salted_join_hot_keys` / AQE skew join);
+       (:func:`salted_agg` / AQE skew join);
     3. else plain **shuffle** hash join.
 
     Returns ONE row: ``(fact_rows, dim_rows, skew_ratio,

@@ -136,8 +136,7 @@ def sessionize(
 
     One window shuffle on the key (lag + running sum over the same
     ordering — a single Sort+Window stage). The streaming equivalent is
-    ``F.session_window`` (see streaming/windows.py:session_event_counts);
-    this batch form is its oracle.
+    ``F.session_window``.
     """
     keys = [key] if isinstance(key, str) else list(key)
     t = (F.col(time_col) if isinstance(time_col, str) else time_col).cast("long")

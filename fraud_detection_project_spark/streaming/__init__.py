@@ -9,4 +9,3 @@ feature (W1) as a stateful operator, and micro-batch model scoring.
 from .velocity import streaming_velocity  # noqa: F401
 from .windows import sliding_event_counts, tumbling_event_counts  # noqa: F401
 from .scoring import score_stream  # noqa: F401
-from .dedup import dedup_stream  # noqa: F401

@@ -13,12 +13,10 @@ manifest pointing at a deleted version.
 
 Several sinks may share one directory: each owns a manifest name and a
 version prefix (a :class:`Layout`), and GC lists only its own prefix.
-The JSON-manifest sinks (streaming/sketches.py,
-streaming/incremental.py) go through :func:`apply`; the CDC sink
-(streaming/upsert.py) keeps its text pointer and fixed-width version
-names and reuses :func:`write_atomic` and :func:`gc`.
+The AMS sketch sink (streaming/sketches.py) and the aggregate sink
+(streaming/incremental.py) both commit through :func:`apply`.
 
-``foreachBatch`` is at-least-once, so the JSON manifest also records
+``foreachBatch`` is at-least-once, so the manifest also records
 the last applied ``(stream_id, epoch)`` and :func:`apply` skips a
 replay of it (see :func:`_is_replay`).
 """
@@ -40,8 +38,6 @@ class Layout(NamedTuple):
 
     manifest: str
     prefix: str
-    # legacy (old, new) column names, renamed on read
-    renames: tuple = ()
     # extra (key, value) pairs recorded in every manifest commit
     fields: tuple = ()
 
@@ -121,11 +117,7 @@ def read(spark, path: str, layout: Layout, schema: str) -> DataFrame:
     version = manifest_state(path, layout)["version"]
     if version < 0:
         return spark.createDataFrame([], schema)
-    df = spark.read.parquet(os.path.join(path, f"{layout.prefix}{version}"))
-    for old, new in layout.renames:
-        if old in df.columns and new not in df.columns:
-            df = df.withColumnRenamed(old, new)
-    return df
+    return spark.read.parquet(os.path.join(path, f"{layout.prefix}{version}"))
 
 
 def commit(

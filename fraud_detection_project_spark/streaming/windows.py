@@ -78,27 +78,3 @@ def sliding_event_counts(
             "n_events",
         )
     )
-
-
-def session_event_counts(
-    stream: DataFrame,
-    keys: Sequence[str],
-    gap: str = "30 minutes",
-) -> DataFrame:
-    """Per-key session aggregation with a dynamic-length session window
-    (``F.session_window``): a session closes after ``gap`` of silence.
-    State per (key, open session) only; the watermark finalizes and
-    evicts closed sessions. Batch oracle:
-    ``operators.windows.sessionize`` + groupBy(key, session_id).
-    """
-    return (
-        _watermarked(stream)
-        .groupBy(F.session_window(F.col("ts"), gap).alias("win"), *keys)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            *keys,
-            "n_events",
-        )
-    )

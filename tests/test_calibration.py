@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from fraud_detection_project_spark.ml.calibration import (
     _pav,
-    apply_calibration,
     isotonic_bins,
 )
 
@@ -84,19 +83,6 @@ class TestIsotonicBins:
         assert math.isclose(mass_fit, mass_raw, rel_tol=1e-12)
         assert len(m) <= 25
         assert sum(r.n for r in m) == df.count()
-
-    def test_apply_joins_every_row(self, spark):
-        df = self._scored(spark, 500)
-        m = isotonic_bins(df, "s", "y", 0.0, 1.0, n_bins=10)
-        out = apply_calibration(df, m, "s", 0.0, 1.0, n_bins=10)
-        assert out.filter(F.col("calibrated").isNull()).count() == 0
-        # calibrated values come only from the mapping
-        allowed = {round(r.calibrated, 12) for r in m.collect()}
-        got = {
-            round(r.calibrated, 12)
-            for r in out.select("calibrated").distinct().collect()
-        }
-        assert got <= allowed
 
     def test_out_of_range_scores_clamp(self, spark):
         df = spark.createDataFrame(

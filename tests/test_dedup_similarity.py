@@ -15,7 +15,6 @@ from fraud_detection_project_spark.operators.dedup import (
     word_shingles,
 )
 from fraud_detection_project_spark.operators.multimodal import (
-    attach_media_meta,
     extract_features,
     frame_sample,
 )
@@ -260,12 +259,6 @@ class TestMultimodal:
         out = frame_sample(df, "payload", id_col="media_id", every_n=4).collect()
         assert [r["frame_idx"] for r in out] == [0, 4]
         assert all(len(r["frame_feat"]) == 8 for r in out)
-
-    def test_attach_meta(self, spark):
-        df = spark.createDataFrame([Row(media_id=1, payload=b"abc")])
-        r = attach_media_meta(df, "payload", mime="image/png").first()
-        assert r["media_meta"]["mime"] == "image/png"
-        assert r["payload_bytes"] == 3
 
 
 class TestStdlibCodecs:
@@ -698,89 +691,6 @@ class TestSemanticDedup:
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         out = semantic_dedup(df, k=3, threshold=0.999).collect()
         assert all(r["keep"] for r in out) and len(out) == 20
-
-
-class TestTarShards:
-    def _make_shards(self, tmp_path):
-        import io
-        import tarfile
-
-        d = tmp_path / "shards"
-        d.mkdir()
-        contents = {}
-        for s in range(2):
-            p = d / f"shard-{s:05d}.tar"
-            with tarfile.open(p, "w") as tf:
-                for k in range(3):
-                    key = f"{s}_{k:04d}"
-                    for suffix, payload in [
-                        (".txt", f"caption {key}".encode()),
-                        (".bin", bytes([s, k]) * 10),
-                    ]:
-                        name = key + suffix
-                        info = tarfile.TarInfo(name)
-                        info.size = len(payload)
-                        tf.addfile(info, io.BytesIO(payload))
-                        contents[name] = payload
-        return str(d), contents
-
-    def test_members_roundtrip_byte_exact(self, spark, tmp_path):
-        from fraud_detection_project_spark.operators.multimodal import (
-            read_tar_shards,
-        )
-
-        path, want = self._make_shards(tmp_path)
-        got = {
-            r["member"]: bytes(r["payload"])
-            for r in read_tar_shards(spark, path).collect()
-        }
-        assert got == want
-
-    def test_suffix_filter_and_sizes(self, spark, tmp_path):
-        from fraud_detection_project_spark.operators.multimodal import (
-            read_tar_shards,
-        )
-
-        path, want = self._make_shards(tmp_path)
-        rows = read_tar_shards(spark, path, suffixes=(".txt",)).collect()
-        assert len(rows) == 6
-        assert all(r["suffix"] == ".txt" for r in rows)
-        assert all(
-            r["payload_bytes"] == len(want[r["member"]]) for r in rows
-        )
-
-    def test_composes_with_feature_extraction(self, spark, tmp_path):
-        """Tar members flow straight into the decode/feature kernel."""
-        import io
-        import tarfile
-
-        import numpy as np
-
-        from fraud_detection_project_spark.operators.multimodal import (
-            extract_features,
-            ppm_bytes,
-            read_tar_shards,
-        )
-
-        d = tmp_path / "imgshards"
-        d.mkdir()
-        rng = np.random.RandomState(3)
-        with tarfile.open(d / "s.tar", "w") as tf:
-            for k in range(2):
-                payload = ppm_bytes(
-                    rng.randint(0, 255, size=(4, 4, 3)).astype(np.uint8)
-                )
-                info = tarfile.TarInfo(f"img{k}.ppm")
-                info.size = len(payload)
-                tf.addfile(info, io.BytesIO(payload))
-        members = read_tar_shards(spark, str(d)).withColumnRenamed(
-            "member", "media_id"
-        )
-        feats = extract_features(
-            members, payload_col="payload", id_col="media_id", decoder="pnm"
-        ).collect()
-        assert len(feats) == 2
-        assert all(len(r["feat"]) > 0 for r in feats)
 
 
 class TestContainmentPairs:

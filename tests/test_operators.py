@@ -978,39 +978,3 @@ class TestMergeableMoments:
             ).collect()
         }
         assert got == {"a": (1, 2.0), "b": (1, 7.0)}
-
-
-class TestExpectSchema:
-    def test_pass_is_identity_and_order_insensitive(self, spark):
-        from fraud_detection_project_spark.operators.quality import (
-            expect_schema,
-        )
-
-        df = spark.createDataFrame([(1, "x")], "a long, b string")
-        out = expect_schema(df, "b string, a bigint")
-        assert out is df
-
-    def test_missing_and_mistyped_raise(self, spark):
-        import pytest
-
-        from fraud_detection_project_spark.operators.quality import (
-            expect_schema,
-        )
-
-        df = spark.createDataFrame([(1,)], "a long")
-        with pytest.raises(ValueError, match="missing/mistyped"):
-            expect_schema(df, "a bigint, b string")
-        with pytest.raises(ValueError, match="want string"):
-            expect_schema(df.withColumn("b", df.a), "a bigint, b string")
-
-    def test_extra_columns_gated_by_flag(self, spark):
-        import pytest
-
-        from fraud_detection_project_spark.operators.quality import (
-            expect_schema,
-        )
-
-        df = spark.createDataFrame([(1, "x")], "a long, b string")
-        with pytest.raises(ValueError, match="unexpected"):
-            expect_schema(df, "a bigint")
-        assert expect_schema(df, "a bigint", allow_extra=True) is df

@@ -1,16 +1,17 @@
-"""Option budget for every engine module.
+"""Option budget and reachability for every engine module.
 
-A defaulted parameter that no caller passes is a setting with one value
-in use: it only adds branches nobody runs. This test collects the
-arguments passed at every call site (matched by function name; a
-``functools.partial(f, *a, **kw)`` binding counts as a call to ``f`` with
-those arguments) and fails on any public function or method of a module
-under the package with a defaulted parameter no caller passes, unless
-the setting is in ``KEPT`` with its reason.
-
-The callers of a function are the call sites in the package,
-``tools/``, ``perfbench/`` and ``bench.py``; for a public entry point
-that only ``tests/`` calls, the test call sites count instead.
+A public function that nothing outside ``tests/`` calls is code no
+traffic runs, and a defaulted parameter that no caller passes is a
+setting with one value in use: both only add branches nobody runs.
+These tests collect the arguments passed at every call site in the
+package, ``tools/``, ``perfbench/``, ``bench.py`` and
+``__spark_entry__.py`` (matched by function name; a
+``functools.partial(f, *a, **kw)`` binding counts as a call to ``f``
+with those arguments). They fail on any public function or method of a
+module under the package that no such call site reaches, unless a
+registration looks it up (a ``@register`` query, or an entry in
+``REGISTERED`` with its reason), and on any defaulted parameter no
+call site passes, unless the setting is in ``KEPT`` with its reason.
 """
 
 import ast
@@ -40,12 +41,13 @@ KEPT = {
     ("operators.similarity", "cosine_all_pairs_exact", "block_rows"):
         "tests split a small frame into several blocks, the cross-block path "
         "production runs above 4096 rows",
-    ("streaming.anomaly", "expanding_zscore", "round_dp"):
-        "the stream-vs-batch test rounds both at 6 dp, so Welford and two-pass "
-        "moments cannot straddle a rounding step",
-    ("streaming.upsert", "plan_batch_merge", "broadcast_threshold_rows"):
-        "tests reach the sort-merge shape, which production takes above 2M "
-        "change rows",
+}
+
+# Public functions no call site names, because a registry looks them up.
+REGISTERED = {
+    ("operators.multimodal", "decode_auto"):
+        "register_decoder installs it as the 'auto' media decoder at import; "
+        "extract_features resolves decoders by that name",
 }
 
 
@@ -92,15 +94,19 @@ def _defaulted(fn, is_method):
     return out
 
 
-def unpassed_settings():
-    engine = _calls_by_name([
+def _engine_calls():
+    return _calls_by_name([
         *(ROOT / PKG).rglob("*.py"),
         *(ROOT / "tools").rglob("*.py"),
         *(ROOT / "perfbench").rglob("*.py"),
         ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
     ])
-    tests = _calls_by_name((ROOT / "tests").rglob("*.py"))
-    hits = set()
+
+
+def _public_defs():
+    """(module, def node, is_method) for each public function of every
+    module and each public method of its public classes."""
     for module, path in _modules():
         tree = ast.parse(path.read_text())
         defs = [(n, False) for n in tree.body if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
@@ -109,15 +115,34 @@ def unpassed_settings():
                 defs += [(n, True) for n in cls.body
                          if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
         for fn, is_method in defs:
-            if fn.name.startswith("_"):
-                continue
-            callers = engine.get(fn.name) or tests.get(fn.name, ())
-            for param, pos in _defaulted(fn, is_method):
-                passed = any(
-                    param in kws or kwstar or (pos is not None and (star or n_pos > pos))
-                    for n_pos, kws, star, kwstar in callers)
-                if not passed:
-                    hits.add((module, fn.name, param))
+            if not fn.name.startswith("_"):
+                yield module, fn, is_method
+
+
+def _is_registered_query(fn):
+    return any(isinstance(d, ast.Call) and _name(d.func) == "register"
+               for d in fn.decorator_list)
+
+
+def uncalled_functions():
+    engine = _engine_calls()
+    return {
+        (module, fn.name) for module, fn, _ in _public_defs()
+        if fn.name not in engine and not _is_registered_query(fn)
+    }
+
+
+def unpassed_settings():
+    engine = _engine_calls()
+    hits = set()
+    for module, fn, is_method in _public_defs():
+        callers = engine.get(fn.name, ())
+        for param, pos in _defaulted(fn, is_method):
+            passed = any(
+                param in kws or kwstar or (pos is not None and (star or n_pos > pos))
+                for n_pos, kws, star, kwstar in callers)
+            if not passed:
+                hits.add((module, fn.name, param))
     return hits
 
 
@@ -128,3 +153,9 @@ def test_only_kept_settings_go_unpassed():
 
 def test_every_kept_setting_still_exists():
     assert set(KEPT) <= unpassed_settings(), sorted(set(KEPT) - unpassed_settings())
+
+
+def test_every_public_function_has_a_caller_outside_tests():
+    hits = uncalled_functions()
+    assert hits - set(REGISTERED) == set(), sorted(hits - set(REGISTERED))
+    assert set(REGISTERED) <= hits, sorted(set(REGISTERED) - hits)

@@ -481,53 +481,6 @@ class TestWinsorizeProperties:
         assert set(np.round(clipped_out, 12)) <= set(np.round(clipped_in, 12))
 
 
-class TestChangesetClosure:
-    def test_merge_of_derived_changeset_reconstructs_target(self, spark):
-        """merge_apply(left, make_changeset(left, right)) ≡ right, for
-        random keyed frames — the diff/merge algebra closes: the derived
-        changeset is exactly the repair that converges replicas."""
-        import random
-
-        from fraud_detection_project_spark.operators.diff import make_changeset
-        from fraud_detection_project_spark.operators.merge import merge_apply
-
-        rng = random.Random(19)
-        for trial in range(3):
-            lk = rng.sample(range(60), rng.randint(10, 40))
-            rk = rng.sample(range(60), rng.randint(10, 40))
-            left = spark.createDataFrame(
-                [(k, f"v{k % 7}", float(k) if k % 5 else None) for k in lk],
-                "k long, a string, b double",
-            )
-            right = spark.createDataFrame(
-                [(k, f"v{k % 4}", float(k % 9) if k % 3 else None) for k in rk],
-                "k long, a string, b double",
-            )
-            ch = make_changeset(left, right, ["k"])
-            merged = merge_apply(left, ch, ["k"], "seq")
-            want = {tuple(r) for r in right.collect()}
-            got = {tuple(r) for r in merged.collect()}
-            assert got == want, f"trial {trial}"
-
-    def test_changeset_is_minimal(self, spark):
-        from fraud_detection_project_spark.operators.diff import (
-            diff_summary,
-            make_changeset,
-        )
-
-        left = spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-        )
-        right = spark.createDataFrame(
-            [(1, "a"), (2, "B"), (4, "d")], "k long, v string"
-        )
-        ch = {(r["k"], r["op"]) for r in make_changeset(left, right, ["k"]).collect()}
-        assert ch == {(2, "U"), (3, "D"), (4, "U")}  # equal key 1 absent
-        s = diff_summary(left, right, ["k"]).first()
-        n_min = s["n_only_left"] + s["n_only_right"] + s["n_differing"]
-        assert len(ch) == n_min
-
-
 class TestBoilerplateProperties:
     docs_strategy = st.lists(
         st.lists(

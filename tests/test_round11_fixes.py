@@ -1,8 +1,6 @@
 """Round-11 fixes: the VERDICT r10 / ADVICE r10 items.
 
-- streaming count-min state survives the pre-round-10 ``d`` column
-  layout (ADVICE r10 medium: read_sketch returned the parquet's stored
-  schema, so old sketch directories raised on merge after the rename);
+- every sketch manifest commit records the state schema version;
 - the census fails CLOSED on a forced broadcast over a materialized
   checkpoint (VERDICT r10 item 3: ``Scan ExistingRDD`` carries no table
   name and used to classify bounded);
@@ -89,9 +87,8 @@ class TestCheckpointCensusFailClosed:
         # census even under a hint, an untagged twin must not
         from pyspark.sql import functions as F
 
-        from fraud_detection_project_spark.lineage import (
-            bounded_checkpoint, registered,
-        )
+        from fraud_detection_project_spark import lineage
+        from fraud_detection_project_spark.lineage import bounded_checkpoint
 
         def mk(agg_name):
             # the registry keys on the attribute-NAME signature (expr-
@@ -119,7 +116,8 @@ class TestCheckpointCensusFailClosed:
         assert pa.fact_forced_broadcasts(p_ok) == []
         offs = pa.fact_forced_broadcasts(p_bad)
         assert len(offs) == 1 and offs[0].startswith("checkpoint via")
-        assert any("literal key domain" in r for r in registered().values())
+        assert any("literal key domain" in r
+                   for r in lineage._BOUNDED_CKPT_SIGS.values())
 
     def test_bounded_checkpoint_rejects_empty_reason(self, spark):
         import pytest as _pytest
@@ -199,57 +197,15 @@ class TestGenericTokenDemotion:
 
 
 class TestSketchSchemaMigration:
-    def test_old_d_layout_readable_and_mergeable(self, spark, tmp_path):
-        # simulate a pre-round-10 sketch directory: column named `d`,
-        # manifest without a schema version
-        from fraud_detection_project_spark.streaming.sketches import (
-            merge_sketch_batch, read_sketch,
-        )
-
-        path = str(tmp_path / "sketch")
-        os.makedirs(os.path.join(path, "v=0"))
-        old = spark.createDataFrame(
-            [(0, 7, 3), (1, 7, 3)], "d INT, bucket BIGINT, cnt BIGINT"
-        )
-        old.write.mode("overwrite").parquet(os.path.join(path, "v=0"))
-        with open(os.path.join(path, "MANIFEST.json"), "w") as f:
-            json.dump({"version": 0, "epoch": 0}, f)
-
-        st = read_sketch(spark, path)
-        assert "depth" in st.columns and "d" not in st.columns
-
-        batch = spark.createDataFrame([("u1",), ("u2",)], "k STRING")
-        merge_sketch_batch(spark, batch, "k", path, width=8,
-                           epoch=1, stream_id=None)
-        merged = read_sketch(spark, path)
-        assert "depth" in merged.columns
-        # the old counters survived the merge (cell (0,7) still >= 3)
-        row = merged.filter("depth = 0 AND bucket = 7").collect()
-        assert row and row[0]["cnt"] >= 3
-
     def test_new_manifest_records_schema_version(self, spark, tmp_path):
         from fraud_detection_project_spark.streaming import sketches as sk
 
         path = str(tmp_path / "sketch2")
         batch = spark.createDataFrame([("u1",)], "k STRING")
-        sk.merge_sketch_batch(spark, batch, "k", path, width=8,
-                              epoch=0, stream_id=None)
-        with open(os.path.join(path, "MANIFEST.json")) as f:
+        sk.merge_ams_batch(spark, batch, "k", path, epoch=0, stream_id=None)
+        with open(os.path.join(path, "AMS_MANIFEST.json")) as f:
             m = json.load(f)
         assert m["schema"] == sk._STATE_SCHEMA_VERSION
-
-    def test_new_layout_roundtrip_unchanged(self, spark, tmp_path):
-        from fraud_detection_project_spark.streaming.sketches import (
-            merge_sketch_batch, read_sketch,
-        )
-
-        path = str(tmp_path / "sketch3")
-        batch = spark.createDataFrame([("a",), ("a",), ("b",)], "k STRING")
-        merge_sketch_batch(spark, batch, "k", path, width=8,
-                           epoch=0, stream_id=None)
-        st = read_sketch(spark, path)
-        assert set(st.columns) == {"depth", "bucket", "cnt"}
-        assert st.agg({"cnt": "sum"}).collect()[0][0] == 12  # 3 rows × 4 depths
 
 
 class TestFingerprintDiffPure:
@@ -364,70 +320,6 @@ class TestDecadeMergePure:
         assert parts == expect
 
 
-class TestCdcBatchBroadcastGate:
-    """streaming/upsert.plan_batch_merge: the CDC sink's merge shape is
-    picked from the MEASURED batch size — an availableNow catch-up
-    batch (unbounded by the trigger) must not force-broadcast months of
-    backlog (the census's offence class, in a foreachBatch plan the
-    census cannot see)."""
-
-    @staticmethod
-    def _frames(spark):
-        base = spark.createDataFrame(
-            [(1, "a", 1), (2, "b", 1)], "k INT, v STRING, seq INT"
-        )
-        changes = spark.createDataFrame(
-            [(2, "B", 2, "U"), (3, "c", 2, "U")],
-            "k INT, v STRING, seq INT, op STRING",
-        )
-        return base, changes
-
-    def test_small_batch_takes_broadcast_shape(self, spark):
-        from fraud_detection_project_spark.streaming.upsert import (
-            plan_batch_merge,
-        )
-
-        base, changes = self._frames(spark)
-        merged = plan_batch_merge(
-            base, changes, keys=["k"], seq_col="seq",
-            broadcast_threshold_rows=1_000,
-        )
-        plan = merged._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in plan
-
-    def test_backlog_batch_falls_back_to_smj(self, spark):
-        from fraud_detection_project_spark.streaming.upsert import (
-            plan_batch_merge,
-        )
-
-        base, changes = self._frames(spark)
-        merged = plan_batch_merge(
-            base, changes, keys=["k"], seq_col="seq",
-            broadcast_threshold_rows=1,  # batch of 2 counts as backlog
-        )
-        plan = merged._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan
-        assert "SortMergeJoin FullOuter" in plan or "FullOuter" in plan
-
-    def test_both_shapes_produce_identical_snapshots(self, spark):
-        from fraud_detection_project_spark.streaming.upsert import (
-            plan_batch_merge,
-        )
-
-        base, changes = self._frames(spark)
-        small = plan_batch_merge(
-            base, changes, keys=["k"], seq_col="seq",
-            broadcast_threshold_rows=1_000,
-        )
-        big = plan_batch_merge(
-            base, changes, keys=["k"], seq_col="seq",
-            broadcast_threshold_rows=1,
-        )
-        assert sorted(map(tuple, small.collect())) == sorted(
-            map(tuple, big.collect())
-        )
-
-
 class TestStreamStateReplayAndGc:
     """Round-11 audit of the versioned-manifest state sinks: (1) the
     aggregate-maintenance sink ignored the foreachBatch epoch id, so an
@@ -494,14 +386,13 @@ class TestStreamStateReplayAndGc:
         import os
 
         from fraud_detection_project_spark.streaming.sketches import (
-            merge_sketch_batch, read_sketch,
+            merge_ams_batch, read_ams,
         )
 
-        path = str(tmp_path / "cm")
+        path = str(tmp_path / "ams")
         b = spark.createDataFrame([(1,), (2,), (2,)], "uid BIGINT")
         for e in range(4):
-            merge_sketch_batch(spark, b, "uid", path, width=8,
-                               epoch=e, stream_id=None)
-        dirs = sorted(d for d in os.listdir(path) if d.startswith("v="))
-        assert dirs == ["v=2", "v=3"]
-        assert read_sketch(spark, path).count() > 0
+            merge_ams_batch(spark, b, "uid", path, epoch=e, stream_id=None)
+        dirs = sorted(d for d in os.listdir(path) if d.startswith("av="))
+        assert dirs == ["av=2", "av=3"]
+        assert read_ams(spark, path).count() == 8

@@ -11,11 +11,7 @@
 - a prior batch-mode commit (epoch=None) json-round-trips to null and
   used to TypeError the sketch paths' ``epoch <= state['epoch']``
   comparison on the next stream merge (ADVICE r11 low) — nulls now
-  normalize to -1 at the manifest read boundary;
-- plan_batch_merge's size probe picks the join shape without
-  materializing the batch (ADVICE r11 low; the probe form was
-  re-measured and simplified to a plain zero-column ``count()`` in
-  round 13 — see TestBoundedSizeProbe and the docstring).
+  normalize to -1 at the manifest read boundary.
 """
 
 from __future__ import annotations
@@ -27,13 +23,20 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _sketch_totals(spark, path):
-    from fraud_detection_project_spark.streaming.sketches import read_sketch
+def _ams_state(spark, path):
+    from fraud_detection_project_spark.streaming.sketches import read_ams
 
-    return {
-        (r["depth"], r["bucket"]): r["cnt"]
-        for r in read_sketch(spark, path).collect()
-    }
+    return {r["j"]: r["z"] for r in read_ams(spark, path).collect()}
+
+
+def _merge_ams(spark, batch, path, epoch, stream_id):
+    from fraud_detection_project_spark.streaming.sketches import merge_ams_batch
+
+    merge_ams_batch(spark, batch, "k", path, epoch=epoch, stream_id=stream_id)
+
+
+def _doubled(state):
+    return {j: 2 * z for j, z in state.items()}
 
 
 class TestReplayGuardStreamIdentity:
@@ -42,35 +45,23 @@ class TestReplayGuardStreamIdentity:
         with the manifest holding epoch 5 from the old checkpoint, the
         epoch-only guard treated the new batch as a replay and dropped
         it. Keyed on (stream_id, epoch) the new identity must apply."""
-        from fraud_detection_project_spark.streaming.sketches import (
-            merge_sketch_batch,
-        )
-
+        # 5 keys x 8 rows: every signed sum is 8 x an odd number, never 0
         b = spark.createDataFrame([(i % 5,) for i in range(40)], "k long")
         path = str(tmp_path / "state")
-        merge_sketch_batch(spark, b, "k", path, width=64, epoch=5,
-                           stream_id="ckpt-A")
-        before = _sketch_totals(spark, path)
+        _merge_ams(spark, b, path, 5, "ckpt-A")
+        before = _ams_state(spark, path)
         # restart against a fresh checkpoint: epochs reset to 0
-        merge_sketch_batch(spark, b, "k", path, width=64, epoch=0,
-                           stream_id="ckpt-B")
-        after = _sketch_totals(spark, path)
-        assert after != before
-        assert sum(after.values()) == 2 * sum(before.values())
+        _merge_ams(spark, b, path, 0, "ckpt-B")
+        assert all(before.values())
+        assert _ams_state(spark, path) == _doubled(before)
 
     def test_replay_under_same_identity_is_still_noop(self, spark, tmp_path):
-        from fraud_detection_project_spark.streaming.sketches import (
-            merge_sketch_batch,
-        )
-
         b = spark.createDataFrame([(i % 5,) for i in range(40)], "k long")
         path = str(tmp_path / "state")
-        merge_sketch_batch(spark, b, "k", path, width=64, epoch=0,
-                           stream_id="ckpt-A")
-        before = _sketch_totals(spark, path)
-        merge_sketch_batch(spark, b, "k", path, width=64, epoch=0,
-                           stream_id="ckpt-A")  # at-least-once replay
-        assert _sketch_totals(spark, path) == before
+        _merge_ams(spark, b, path, 0, "ckpt-A")
+        before = _ams_state(spark, path)
+        _merge_ams(spark, b, path, 0, "ckpt-A")  # at-least-once replay
+        assert _ams_state(spark, path) == before
 
     def test_aggregate_sink_same_semantics(self, spark, tmp_path):
         """The aggregate-maintenance sink carries the identical guard:
@@ -105,26 +96,19 @@ class TestReplayGuardStreamIdentity:
         instead of being dropped by a stale epoch comparison."""
         import json
 
-        from fraud_detection_project_spark.streaming.sketches import (
-            merge_sketch_batch,
-        )
-
         b = spark.createDataFrame([(i % 3,) for i in range(30)], "k long")
         path = str(tmp_path / "state")
-        merge_sketch_batch(spark, b, "k", path, width=64, epoch=9,
-                           stream_id="ckpt-A")
-        manifest = os.path.join(path, "MANIFEST.json")
+        _merge_ams(spark, b, path, 9, "ckpt-A")
+        manifest = os.path.join(path, "AMS_MANIFEST.json")
         with open(manifest) as f:
             m = json.load(f)
         del m["stream_id"]  # simulate a pre-upgrade manifest
         with open(manifest, "w") as f:
             json.dump(m, f)
-        before = _sketch_totals(spark, path)
-        merge_sketch_batch(spark, b, "k", path, width=64, epoch=0,
-                           stream_id="ckpt-A")
-        assert sum(_sketch_totals(spark, path).values()) == 2 * sum(
-            before.values()
-        )
+        before = _ams_state(spark, path)
+        _merge_ams(spark, b, path, 0, "ckpt-A")
+        assert all(before.values())
+        assert _ams_state(spark, path) == _doubled(before)
 
 
 class TestNullEpochManifest:
@@ -133,43 +117,15 @@ class TestNullEpochManifest:
     ):
         """A batch-mode commit records epoch=None (json null); the next
         STREAM merge's ``epoch <= state['epoch']`` used to TypeError in
-        the three sketch paths (incremental.py already guarded). The
-        null normalizes to -1, so the stream batch applies."""
-        from fraud_detection_project_spark.streaming.sketches import (
-            merge_ams_batch,
-            merge_histogram_batch,
-            merge_sketch_batch,
-            read_ams,
-            read_histogram,
-        )
-
+        the sketch paths (incremental.py already guarded). The null
+        normalizes to -1, so the stream batch applies."""
         b = spark.createDataFrame([(i % 5,) for i in range(20)], "k long")
-        path = str(tmp_path / "cms")
-        # batch: epoch null
-        merge_sketch_batch(spark, b, "k", path, width=64, epoch=None,
-                           stream_id=None)
-        before = sum(_sketch_totals(spark, path).values())
-        merge_sketch_batch(spark, b, "k", path, width=64, epoch=0,
-                           stream_id="ckpt")
-        assert sum(_sketch_totals(spark, path).values()) == 2 * before
-
-        hb = spark.createDataFrame([(float(i % 4),) for i in range(20)],
-                                   "v double")
-        hpath = str(tmp_path / "hist")
-        merge_histogram_batch(spark, hb, "v", hpath, lo=0.0, hi=4.0, n_bins=8,
-                              epoch=None, stream_id=None)
-        merge_histogram_batch(spark, hb, "v", hpath, lo=0.0, hi=4.0, n_bins=8,
-                              epoch=0, stream_id="ckpt")
-        total = sum(r["cnt"] for r in read_histogram(spark, hpath).collect())
-        assert total == 40
-
-        apath = str(tmp_path / "ams")
-        merge_ams_batch(spark, b, "k", apath, n_estimators=4, epoch=None,
-                        stream_id=None)
-        merge_ams_batch(spark, b, "k", apath, n_estimators=4, epoch=0,
-                        stream_id="ckpt")
-        zs = {r["j"]: r["z"] for r in read_ams(spark, apath).collect()}
-        assert len(zs) == 4  # applied twice without raising
+        path = str(tmp_path / "ams")
+        _merge_ams(spark, b, path, None, None)  # batch: epoch null
+        before = _ams_state(spark, path)
+        _merge_ams(spark, b, path, 0, "ckpt")
+        assert all(before.values())
+        assert _ams_state(spark, path) == _doubled(before)
 
     def test_aggregate_sink_null_epoch_manifest(self, spark, tmp_path):
         from fraud_detection_project_spark.streaming.incremental import (
@@ -276,55 +232,9 @@ class TestLineageNonceSalting:
             bounded_literal(spark, [(1,)], ["a"], "  ")
 
     def test_nonce_signature_recorded(self, spark):
-        from fraud_detection_project_spark.lineage import (
-            bounded_literal,
-            registered,
-        )
+        from fraud_detection_project_spark import lineage
 
-        bounded_literal(spark, [(1,)], ["zq_unique_col"], "1-row probe")
-        sigs = [s for s in registered() if s.startswith("zq_unique_col")]
+        lineage.bounded_literal(spark, [(1,)], ["zq_unique_col"], "1-row probe")
+        sigs = [s for s in lineage._BOUNDED_CKPT_SIGS
+                if s.startswith("zq_unique_col")]
         assert sigs and all("__bnd" in s for s in sigs)
-
-
-class TestBoundedSizeProbe:
-    def test_threshold_boundary_exact(self, spark):
-        """A batch of EXACTLY threshold rows still broadcasts and
-        threshold+1 does not — whatever probe implementation picks the
-        shape must not flip the boundary decision."""
-        from fraud_detection_project_spark.streaming.upsert import (
-            plan_batch_merge,
-        )
-
-        base = spark.createDataFrame([(1, "a", 1)], "k INT, v STRING, seq INT")
-        changes = spark.createDataFrame(
-            [(i, "c", 2, "U") for i in range(3)],
-            "k INT, v STRING, seq INT, op STRING",
-        )
-        at = plan_batch_merge(base, changes, keys=["k"], seq_col="seq",
-                              broadcast_threshold_rows=3)
-        over = plan_batch_merge(base, changes, keys=["k"], seq_col="seq",
-                                broadcast_threshold_rows=2)
-        at_plan = at._jdf.queryExecution().executedPlan().toString()
-        over_plan = over._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in at_plan
-        assert "BroadcastExchange" not in over_plan
-        assert sorted(map(tuple, at.collect())) == sorted(
-            map(tuple, over.collect())
-        )
-
-    def test_probe_is_plain_count(self, spark):
-        """The probe is a plain zero-column ``count()`` — measured in
-        round 13 (see plan_batch_merge's docstring) to beat both the
-        round-12 ``limit(threshold+1).count()`` form (whose plan
-        materializes up to threshold+1 ROWS per partition into a
-        single-partition GlobalLimit shuffle — ADVICE r12) and a
-        persist()/unpersist() bracket, at small AND backlog batch
-        sizes. No limit, no persist in the probe path."""
-        import inspect
-
-        from fraud_detection_project_spark.streaming import upsert
-
-        src = inspect.getsource(upsert.plan_batch_merge)
-        assert "probe = batch.count()" in src
-        assert "batch.limit(" not in src
-        assert "batch.persist(" not in src

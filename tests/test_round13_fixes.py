@@ -10,8 +10,8 @@
   incarnation, so the guard is now STRICT EQUALITY — a strictly lower
   epoch under a matching identity is a new incarnation and applies
   (the merge rolls the manifest epoch to the new counter, so the new
-  incarnation's own replays are still caught). Covered here for all
-  four manifest sinks: count-min, histogram, AMS, aggregate.
+  incarnation's own replays are still caught). Covered here for both
+  manifest sinks: AMS and aggregate.
 - ``bounded_literal`` with an empty data list and a column-name-list
   schema used to raise "can not infer schema" (ADVICE r12 low): the
   names-list path now requires/synthesizes explicit types so an empty
@@ -28,75 +28,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _sketch_totals(spark, path):
-    from fraud_detection_project_spark.streaming.sketches import read_sketch
-
-    return {
-        (r["depth"], r["bucket"]): r["cnt"]
-        for r in read_sketch(spark, path).collect()
-    }
-
-
 class TestSamePathCheckpointLossRestart:
     """Delete-checkpoint/keep-state restart at the SAME path: the new
     incarnation's epochs restart at 0 under an UNCHANGED stream_id.
     Every batch 0..N of the new incarnation must apply (the old ``<=``
     guard dropped all of them), while a genuine same-epoch replay
     within the new incarnation still no-ops."""
-
-    def test_count_min_sink(self, spark, tmp_path):
-        from fraud_detection_project_spark.streaming.sketches import (
-            merge_sketch_batch,
-        )
-
-        path = str(tmp_path / "state")
-        b1 = spark.createDataFrame([(i % 5,) for i in range(40)], "k long")
-        b2 = spark.createDataFrame([(i % 7,) for i in range(30)], "k long")
-        b3 = spark.createDataFrame([(i % 3,) for i in range(20)], "k long")
-        # incarnation 1: epochs 0..2 under checkpoint path "ckpt"
-        for e, b in enumerate([b1, b2, b3]):
-            merge_sketch_batch(spark, b, "k", path, width=64, epoch=e,
-                               stream_id="ckpt")
-        before = _sketch_totals(spark, path)
-        assert sum(before.values()) == 4 * 90  # default depth 4
-        # checkpoint dir deleted, state dir kept, restart at SAME path:
-        # incarnation 2 re-issues epochs 0, 1, 2 over NEW data
-        for e, b in enumerate([b3, b1, b2]):
-            merge_sketch_batch(spark, b, "k", path, width=64, epoch=e,
-                               stream_id="ckpt")
-        after = _sketch_totals(spark, path)
-        assert sum(after.values()) == 2 * sum(before.values()), (
-            "incarnation-2 batches were dropped by the replay guard"
-        )
-        # a real at-least-once replay WITHIN incarnation 2 still no-ops
-        merge_sketch_batch(spark, b2, "k", path, width=64, epoch=2,
-                           stream_id="ckpt")
-        assert _sketch_totals(spark, path) == after
-
-    def test_histogram_sink(self, spark, tmp_path):
-        from fraud_detection_project_spark.streaming.sketches import (
-            merge_histogram_batch, read_histogram,
-        )
-
-        path = str(tmp_path / "hstate")
-        b = spark.createDataFrame(
-            [(float(i % 10),) for i in range(50)], "v double"
-        )
-        for e in range(2):
-            merge_histogram_batch(spark, b, "v", path, lo=0.0, hi=10.0,
-                                  n_bins=16, epoch=e, stream_id="ckpt")
-        # same-path restart after checkpoint loss: epoch 0 again
-        merge_histogram_batch(spark, b, "v", path, lo=0.0, hi=10.0,
-                              n_bins=16, epoch=0, stream_id="ckpt")
-        counts = {r["bin"]: r["cnt"]
-                  for r in read_histogram(spark, path).collect()}
-        assert sum(counts.values()) == 150
-        # replay of the incarnation-2 epoch no-ops
-        merge_histogram_batch(spark, b, "v", path, lo=0.0, hi=10.0,
-                              n_bins=16, epoch=0, stream_id="ckpt")
-        counts2 = {r["bin"]: r["cnt"]
-                   for r in read_histogram(spark, path).collect()}
-        assert sum(counts2.values()) == 150
 
     def test_ams_sink(self, spark, tmp_path):
         from fraud_detection_project_spark.streaming.sketches import (
@@ -224,62 +161,38 @@ class TestSamePathCheckpointLossRestart:
 
 
 class TestAvailableNowDrainMode:
-    """Round-13 API parity: streaming_count_min / streaming_histogram /
-    streaming_aggregate accept available_now=True (drain the backlog,
-    terminate by themselves) — previously only the AMS and CDC sinks
-    had the batch-parity trigger, so callers had to hand-roll
-    writeStream plumbing (as the incarnation query's first draft did)."""
+    """Round-13 API parity: every ``foreachBatch`` state sink accepts
+    available_now=True (drain the backlog, terminate by itself), so
+    callers never hand-roll writeStream plumbing (as the incarnation
+    query's first draft did)."""
 
-    def test_count_min_and_histogram_drain(self, spark, tmp_path):
-        from fraud_detection_project_spark.operators.sketches import (
-            count_min_table,
-        )
+    def test_ams_sink_drains_and_terminates(self, spark, tmp_path):
         from fraud_detection_project_spark.streaming.sketches import (
-            read_histogram, read_sketch, streaming_count_min,
-            streaming_histogram,
+            _ams_batch_delta, read_ams, streaming_ams_f2,
         )
 
         src = str(tmp_path / "src")
         spark.createDataFrame(
-            [(i % 7, float(i % 10)) for i in range(60)], "k long, v double"
+            [(i % 7,) for i in range(60)], "k long"
         ).repartition(2).write.mode("overwrite").parquet(src)
 
         stream = (
-            spark.readStream.schema("k long, v double")
+            spark.readStream.schema("k long")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = streaming_count_min(
-            stream, "k", str(tmp_path / "cms"), str(tmp_path / "cms_ck"),
-            width=64, available_now=True,
+        q = streaming_ams_f2(
+            stream, "k", str(tmp_path / "ams"), str(tmp_path / "ams_ck"),
+            available_now=True,
         )
         q.awaitTermination()
-        got = {
-            (r["depth"], r["bucket"]): r["cnt"]
-            for r in read_sketch(spark, str(tmp_path / "cms")).collect()
-        }
-        batch = spark.read.parquet(src)
+        got = {r["j"]: r["z"]
+               for r in read_ams(spark, str(tmp_path / "ams")).collect()}
         want = {
-            (r["depth"], r["bucket"]): r["cnt"]
-            for r in count_min_table(batch, "k", width=64).collect()
+            r["j"]: r["z"]
+            for r in _ams_batch_delta(spark.read.parquet(src), "k", 8).collect()
         }
-        assert got == want  # stream ≡ batch cell-wise
-
-        stream2 = (
-            spark.readStream.schema("k long, v double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q2 = streaming_histogram(
-            stream2, "v", str(tmp_path / "h"), str(tmp_path / "h_ck"),
-            lo=0.0, hi=10.0, n_bins=16, available_now=True,
-        )
-        q2.awaitTermination()
-        counts = {
-            r["bin"]: r["cnt"]
-            for r in read_histogram(spark, str(tmp_path / "h")).collect()
-        }
-        assert sum(counts.values()) == 60
+        assert got == want and len(got) == 8  # stream ≡ batch
 
 
 class TestThreeCellFit:
@@ -390,16 +303,15 @@ class TestBoundedLiteralEmptyData:
             bounded_literal(spark, [], ["a", "b"], "empty grid")
 
     def test_empty_data_with_ddl_schema_works(self, spark):
-        from fraud_detection_project_spark.lineage import (
-            bounded_literal, registered,
-        )
+        from fraud_detection_project_spark import lineage
+        from fraud_detection_project_spark.lineage import bounded_literal
 
         df = bounded_literal(spark, [], "a INT, b LONG", "empty grid")
         assert df.columns == ["a", "b"]
         assert df.count() == 0
         # the nonce-salted signature still registers (the census must
         # recognize the scan even when the literal is empty)
-        assert any("__bnd" in s for s in registered())
+        assert any("__bnd" in s for s in lineage._BOUNDED_CKPT_SIGS)
 
     def test_non_empty_names_schema_still_works(self, spark):
         from fraud_detection_project_spark.lineage import bounded_literal

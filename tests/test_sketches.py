@@ -153,17 +153,17 @@ class TestHistogramSketch:
             histogram_sketch,
         )
 
+        # both shards hold v = 0 (ids 0, 977) and v = 976 * 1.5 (ids 976,
+        # 1953), so each one's measured range is the full build's
         base = spark.range(0, 2000).select(
             "id", (F.col("id") % 977 * 1.5).alias("v")
         )
-        lo, hi = 0.0, 977 * 1.5
-        h_full = histogram_sketch(base, "v", n_bins=64, lo=lo, hi=hi)
-        h_a = histogram_sketch(
-            base.filter(F.col("id") % 2 == 0), "v", n_bins=64, lo=lo, hi=hi
-        )
-        h_b = histogram_sketch(
-            base.filter(F.col("id") % 2 == 1), "v", n_bins=64, lo=lo, hi=hi
-        )
+        h_full = histogram_sketch(base, "v", n_bins=64)
+        h_a = histogram_sketch(base.filter(F.col("id") % 2 == 0), "v", n_bins=64)
+        h_b = histogram_sketch(base.filter(F.col("id") % 2 == 1), "v", n_bins=64)
+        assert {(r["lo"], r["hi"]) for r in h_a.union(h_b).collect()} == {
+            (0.0, 976 * 1.5)
+        }
         merged = (
             h_a.unionByName(h_b)
             .groupBy("bin", "lo", "hi", "n_bins")
@@ -224,8 +224,8 @@ class TestHistogramSketch:
         )
 
         df = spark.range(0, 100).select(F.col("id").cast("double").alias("v"))
-        a = histogram_sketch(df, "v", n_bins=8, lo=0.0, hi=100.0)
-        b = histogram_sketch(df, "v", n_bins=8, lo=0.0, hi=50.0)
+        a = histogram_sketch(df, "v", n_bins=8)
+        b = histogram_sketch(df.filter(F.col("v") < 50), "v", n_bins=8)
         with _pytest.raises(ValueError, match="configurations"):
             quantiles_from_histogram(a.unionByName(b), [0.5])
 

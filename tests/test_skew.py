@@ -1,5 +1,5 @@
-"""Salted aggregation / join: exactness vs the unsalted plan, and the
-fan-out property that motivates them."""
+"""Salted aggregation: exactness vs the unsalted plan, and the
+fan-out property that motivates it."""
 
 from __future__ import annotations
 
@@ -46,28 +46,6 @@ def test_salted_agg_rejects_non_algebraic(spark):
     ev = load_table(spark, SF_SMOKE, "events")
     with pytest.raises(ValueError, match="non-algebraic"):
         salted_agg(ev, ["event_type"], {"x": ("value", "avg")})
-
-
-def test_salted_join_matches_plain_join(spark):
-    from fraud_detection_project_spark.catalog import load_table
-    from fraud_detection_project_spark.operators.skew import salted_join_hot_keys
-
-    ev = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id", "value")
-    users = (
-        load_table(spark, SF_SMOKE, "events")
-        .select("user_id")
-        .distinct()
-        .withColumn("user_tag", F.concat(F.lit("u"), F.col("user_id")))
-    )
-    hot = [r["user_id"] for r in
-           ev.groupBy("user_id").count().orderBy(F.desc("count")).limit(3).collect()]
-
-    got = salted_join_hot_keys(ev, users, "user_id", hot)
-    want = ev.join(users, "user_id")
-    assert got.count() == want.count()
-    assert got.select("event_id", "user_tag").exceptAll(
-        want.select("event_id", "user_tag")
-    ).count() == 0
 
 
 def test_salted_agg_fans_out_hot_key(spark):

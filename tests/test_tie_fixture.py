@@ -95,43 +95,18 @@ def tie_dir(tmp_path_factory):
 
 
 def test_carried_value_queries_deterministic_under_ts_ties(spark, tie_dir):
-    import duckdb
-
     import __spark_entry__ as entrymod
-    from verify_local import frame_key
+    from verify_local import duck_views, frame_diff
 
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        p = os.path.join(tie_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-
+    con = duck_views(tie_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name in CARRIED_VALUE_QUERIES:
         assert name in qs, f"{name} not registered"
         assert name in oracles, f"{name} has no SQL oracle"
-        spdf = qs[name](spark, tie_dir).toPandas()
-        opdf = con.sql(oracles[name]).df()
-        scols, srows = frame_key(spdf)
-        ocols, orows = frame_key(opdf)
-        if scols != ocols:
-            failures.append(f"{name}: columns {scols} != {ocols}")
-        elif len(srows) != len(orows):
-            failures.append(
-                f"{name}: rowcount {len(srows)} != {len(orows)}"
-            )
-        else:
-            for a, b in zip(srows, orows):
-                if a != b:
-                    failures.append(
-                        f"{name}: value diff spark={a} duck={b}"
-                    )
-                    break
+        diff = frame_diff(qs[name](spark, tie_dir).toPandas(),
+                          con.sql(oracles[name]).df())
+        if diff:
+            failures.append(f"{name}: {diff}")
     assert not failures, "\n".join(failures)

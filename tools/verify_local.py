@@ -50,14 +50,7 @@ def main():
     from fraud_detection_project_spark.session import get_spark
 
     spark = get_spark("verify-local")
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = duck_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -82,30 +75,44 @@ def main():
             failures.append(name)
             print(f"FAIL  {name}: oracle error: {str(e)[:400]}")
             continue
-        scols, srows = frame_key(spdf)
-        ocols, orows = frame_key(opdf)
-        if scols != ocols:
+        diff = frame_diff(spdf, opdf)
+        if diff:
             failures.append(name)
-            print(f"FAIL  {name}: columns {scols} != {ocols}")
-            continue
-        if len(srows) != len(orows):
-            failures.append(name)
-            print(f"FAIL  {name}: rowcount {len(srows)} != {len(orows)}")
-            continue
-        bad = None
-        for i, (a, b) in enumerate(zip(srows, orows)):
-            if a != b:
-                bad = (i, a, b)
-                break
-        if bad:
-            failures.append(name)
-            print(f"FAIL  {name}: first diff at sorted row {bad[0]}:\n  spark={bad[1]}\n  duck ={bad[2]}")
+            print(f"FAIL  {name}: {diff}")
         else:
-            print(f"PASS  {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS  {name} ({len(spdf)} rows, {time.time()-t0:.1f}s)")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     spark.stop()
     sys.exit(1 if failures else 0)
+
+
+def duck_views(sf_dir):
+    """A DuckDB connection with one view per parquet table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in [
+        "region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings",
+    ]:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def frame_diff(spdf, opdf):
+    """None when the Spark and oracle frames match, else the first
+    difference: columns, row count, or the first differing sorted row."""
+    scols, srows = frame_key(spdf)
+    ocols, orows = frame_key(opdf)
+    if scols != ocols:
+        return f"columns {scols} != {ocols}"
+    if len(srows) != len(orows):
+        return f"rowcount {len(srows)} != {len(orows)}"
+    for i, (a, b) in enumerate(zip(srows, orows)):
+        if a != b:
+            return f"first diff at sorted row {i}:\n  spark={a}\n  duck ={b}"
+    return None
 
 
 if __name__ == "__main__":
